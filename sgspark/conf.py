@@ -2,7 +2,8 @@
 
 The reference exposes a module-level `config` dict selecting runner
 objects (reference conf.py:76-90: rtree_runner / overlay_runner /
-union_runner / n_jobs); engine twins of those knobs live here.  Values
+union_runner / n_jobs); engine twins of the runner knobs live here (Spark's
+task scheduler owns parallelism, so n_jobs has none).  Values
 are resolved DRIVER-SIDE at plan-construction time (the chosen callable
 is captured into the Arrow kernel closure), so overrides apply to
 DataFrames built after the change, like the reference's runner objects
@@ -10,8 +11,13 @@ apply to calls made after assignment.
 
 Keys:
   use_jvm_pip      True/False force the compiled whole-stage-codegen
-                   point x polygon join on/off; None (default) defers to
-                   the `SGSPARK_DISABLE_JVM_PIP` env kill switch.
+                   point x polygon joins on/off.  None (default): the
+                   distributed point x polygon join takes the compiled
+                   route only when its estimated candidate pairs reach
+                   joins.PIP_COMPILED_MIN_PAIRS (or the left row count is
+                   unknown), else the Arrow-kernel refine; the broadcast
+                   compiled routes stay on.  `SGSPARK_DISABLE_JVM_PIP=1`
+                   turns every compiled point route off while this is None.
   use_jvm_poly2    True force the compiled polygon x polygon
                    `intersects` composition (verified equal to the
                    kernel but measured slower — see joins._poly2_wanted);
@@ -23,8 +29,6 @@ Keys:
   union_runner     callable(list[wkb]) -> wkb — replaces the per-group
                    geometry union (reference UnionRunner seam,
                    runners.py:50-120).
-  n_jobs           accepted for reference-signature parity; Spark's task
-                   scheduler owns parallelism, so it is ignored.
 """
 
 from __future__ import annotations
@@ -38,7 +42,6 @@ config: dict[str, Any] = {
     "use_jvm_poly2": None,
     "refine_runner": None,
     "union_runner": None,
-    "n_jobs": None,
 }
 
 

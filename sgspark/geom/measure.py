@@ -51,29 +51,6 @@ def dist_to_ring(px: np.ndarray, py: np.ndarray,
                           axis=1))
 
 
-def ring_max_inradius(ring: np.ndarray, pitch: float) -> float:
-    """Approximate max inscribed circle radius of a simple closed ring.
-    Deterministic (no randomness); 0.0 when no sample lands inside."""
-    minx, miny = ring[:, 0].min(), ring[:, 1].min()
-    maxx, maxy = ring[:, 0].max(), ring[:, 1].max()
-    if maxx <= minx or maxy <= miny:
-        return 0.0
-    xs = np.arange(minx + pitch / 2, maxx, pitch)
-    ys = np.arange(miny + pitch / 2, maxy, pitch)
-    if len(xs) == 0 or len(ys) == 0:
-        xs = np.array([(minx + maxx) / 2])
-        ys = np.array([(miny + maxy) / 2])
-    if len(xs) * len(ys) > 4_000_000:
-        raise ValueError("inradius grid too fine for this extent; "
-                         "raise pitch")
-    PX = np.repeat(xs, len(ys))
-    PY = np.tile(ys, len(xs))
-    inside = points_in_ring(PX, PY, ring)
-    if not inside.any():
-        return 0.0
-    return float(dist_to_ring(PX[inside], PY[inside], ring).max())
-
-
 def ring_thin(ring: np.ndarray, pitch: float, thr: float) -> bool:
     """True iff max inscribed radius < thr — THRESHOLD-AWARE fast path for
     the thinness classifiers.  Sound prefilters (bbox min-side and area
@@ -160,35 +137,6 @@ def _parts_sample_max(rings: list[np.ndarray], pitch: float,
         best = max(best, float(d.max()))
         if stop_at is not None and best >= stop_at:
             return best
-    return best
-
-
-def parts_max_inradius(parts: list[list[np.ndarray]], pitch: float) -> float:
-    """Max inscribed radius over polygon parts (holes respected: a sample
-    inside a hole doesn't count; its distance uses all rings)."""
-    best = 0.0
-    for rings in parts:
-        ext = rings[0]
-        minx, miny = ext[:, 0].min(), ext[:, 1].min()
-        maxx, maxy = ext[:, 0].max(), ext[:, 1].max()
-        if maxx <= minx or maxy <= miny:
-            continue
-        xs = np.arange(minx + pitch / 2, maxx, pitch)
-        ys = np.arange(miny + pitch / 2, maxy, pitch)
-        if len(xs) == 0 or len(ys) == 0:
-            xs = np.array([(minx + maxx) / 2])
-            ys = np.array([(miny + maxy) / 2])
-        PX = np.repeat(xs, len(ys))
-        PY = np.tile(ys, len(xs))
-        inside = points_in_ring(PX, PY, ext)
-        for h in rings[1:]:
-            inside &= ~points_in_ring(PX, PY, h)
-        if not inside.any():
-            continue
-        d = dist_to_ring(PX[inside], PY[inside], ext)
-        for h in rings[1:]:
-            d = np.minimum(d, dist_to_ring(PX[inside], PY[inside], h))
-        best = max(best, float(d.max()))
     return best
 
 

@@ -363,14 +363,18 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
                                           assume_left_points=assume_left_points,
                                           assume_left_lines=assume_left_lines)
 
-    from .conf import jvm_pip_enabled
+    from .conf import config, jvm_pip_enabled
     if assume_left_points and (
             (expand == 0.0 and not keep_distance
              and predicate in ("within", "intersects", "covered_by"))
             or predicate == "dwithin") and jvm_pip_enabled():
+        # use_jvm_pip=True forces the compiled route; None (default) lets
+        # the estimated pair count choose it
         jvm = _points_vs_polygons_distributed(
             left, right, left_id=left_id, right_id=right_id,
-            gridsize=gridsize, predicate=predicate, distance=distance)
+            gridsize=gridsize, predicate=predicate, distance=distance,
+            min_pairs=0 if config.get("use_jvm_pip")
+            else PIP_COMPILED_MIN_PAIRS)
         if jvm is not None:
             PATH_STATS["jvm_polys_dist"] += 1
             return jvm
@@ -892,8 +896,9 @@ def _pip_dispatch_sql(E: str, x: str, y: str, isrect: str,
     """Tiered PIP predicate: rectangles are already decided by the
     upstream closed-bbox filter (axis-aligned rect PIP == bbox test);
     small polygons take an unrolled codegen expression SIZED IN TIERS
-    (<=8 terms for simple shapes, <=32 for the rest — a fixed 32-term
-    unroll made 6-edge L-shape joins pay 5x the arithmetic they needed);
+    (<=PIP_UNROLL_SMALL terms for simple shapes, <=PIP_UNROLL_EDGES for
+    the rest — a fixed 32-term unroll made 6-edge L-shape joins pay 5x
+    the arithmetic they needed);
     the rare complex ones the interpreted lambda form.  CASE branches
     evaluate lazily, so hot rows never touch the oversized or fallback
     paths.  With the round-5 cell-subset pack, high-vertex polygons land
@@ -1009,7 +1014,8 @@ def _seg_touch_term(acc, sx, sy, tx, ty) -> str:
 
 def _seg_cross_sql(E: str, sx, sy, tx, ty) -> str:
     """Any packed edge of {E} intersects segment (S,T): tier-unrolled
-    whole-stage-codegen within <=8 / <=32 edges, interpreted exists()
+    whole-stage-codegen within <=PIP_UNROLL_SMALL / <=PIP_UNROLL_EDGES
+    edges, interpreted exists()
     above (subcell packs keep real layers inside the tiers)."""
     sz = _esz(E)
 
@@ -1345,9 +1351,9 @@ _SUBCELL_FILTER = (
     "cast(__km1 as double)) as int) = __sj")
 
 # subcell subset-size target and subdivision cap: a cell whose edge
-# subset exceeds the 32-term unroll tier splits into K^2 subcells with
-# K = ceil(sqrt(size/8)) (aiming ~8-edge subsets); K doubles until every
-# subcell fits the 32-term tier or the cap — curvature hotspots (circle
+# subset exceeds the PIP_UNROLL_EDGES-term unroll tier splits into K^2
+# subcells with K = ceil(sqrt(size/8)) (aiming ~8-edge subsets); K doubles
+# until every subcell fits that tier or the cap — curvature hotspots (circle
 # apexes) concentrate edges, so the initial estimate can undershoot
 _SUBCELL_TARGET = 8
 _SUBCELL_MAX_K = 32
@@ -1692,11 +1698,44 @@ def _tuned_gridsize(spark, g0: float, st, expand: float) -> float:
     return min(g0, g)
 
 
+# Size rule of the distributed point x polygon join: below this many
+# estimated candidate pairs the compiled route's fixed cost (generating,
+# compiling and JIT-warming a ~250 KB predicate class) outweighs what it
+# saves per pair over the Arrow-kernel refine.  Placed inside the measured
+# band where both routes' warm CPU per call is at parity and the kernel's
+# first call is still cheaper (BENCH/PIP_ROUTE.md, tools/pip_route.py).
+PIP_COMPILED_MIN_PAIRS = 1_000_000
+
+
+def _plan_row_count(df: DataFrame) -> int | None:
+    """The row count Catalyst already knows for `df` (materialized cached
+    relations, local relations, checkpoints of either), else None.  No
+    job runs."""
+    try:
+        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+        return int(str(rc.get())) if rc.isDefined() else None
+    except Exception:
+        return None
+
+
+def _pip_pairs_estimate(n_left: int | None, st, expand: float) -> float:
+    """Candidate pairs of `n_left` points spread evenly over the right
+    layer's world bbox: n_left x summed right bbox area / world bbox area,
+    every bbox grown by the dwithin distance.  An unknown left count or a
+    degenerate world reads as unbounded."""
+    world = ((st["wx1"] - st["wx0"] + 2 * expand)
+             * (st["wy1"] - st["wy0"] + 2 * expand))
+    if n_left is None or not world > 0:
+        return float("inf")
+    return n_left * st["area"] / world
+
+
 def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
                                     left_id: str, right_id: str,
                                     gridsize: float,
                                     predicate: str = "within",
-                                    distance: float | None = None
+                                    distance: float | None = None,
+                                    min_pairs: float = 0
                                     ) -> DataFrame | None:
     """Fully-distributed all-JVM point x polygon join (no driver collect,
     no broadcast): rights are packed ONCE by an Arrow pass into per-row
@@ -1708,7 +1747,10 @@ def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
     Returns None (caller falls back to the Arrow kernel) when the right
     side is not provably all-polygon: the type probe is one header-byte
     aggregate, only run when the right's plan is Python-free so the extra
-    pass is scan-cheap."""
+    pass is scan-cheap.  Also returns None when `_pip_pairs_estimate` is
+    below `min_pairs`; the left row count comes from Catalyst statistics
+    or, for a Python-free left, a count folded into the probe's job, and
+    without either the estimate is unbounded."""
     if not plan_is_python_free(right):
         return None
     g0 = float(gridsize)
@@ -1718,10 +1760,15 @@ def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
     else:
         from .geometry_types import wkb_gtype_col
         type_ok = wkb_gtype_col("geometry").isin(3, 6)
+    n_left = _plan_row_count(left) if min_pairs else None
+    count_left = bool(min_pairs) and n_left is None \
+        and plan_is_python_free(left)
     # ONE columnar pass over the right: the null-safe type probe (a NULL
     # geom_kind must count as "not ok" — coalesce forces NULL -> kernel
-    # fallback) fused with the bbox stats the gridsize tuner needs.
-    st = right.agg(
+    # fallback) fused with the bbox stats the gridsize tuner and the size
+    # rule need; a left count rides in the same job as a second row.
+    probe = right.agg(
+        F.lit(0).alias("side"),
         F.max((~F.coalesce(type_ok, F.lit(False))).cast("int")).alias("bad"),
         F.count(F.lit(1)).alias("n"),
         F.min("minx").alias("wx0"), F.max("maxx").alias("wx1"),
@@ -1729,9 +1776,21 @@ def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
         F.avg(F.col("maxx") - F.col("minx")).alias("aex"),
         F.avg(F.col("maxy") - F.col("miny")).alias("aey"),
         F.max(F.col("maxx") - F.col("minx")).alias("mex"),
-        F.max(F.col("maxy") - F.col("miny")).alias("mey")).first()
+        F.max(F.col("maxy") - F.col("miny")).alias("mey"),
+        F.sum((F.col("maxx") - F.col("minx") + 2 * expand)
+              * (F.col("maxy") - F.col("miny") + 2 * expand)).alias("area"))
+    if count_left:
+        probe = probe.unionByName(
+            left.agg(F.lit(1).alias("side"), F.count(F.lit(1)).alias("n")),
+            allowMissingColumns=True)
+    rows = sorted(probe.collect(), key=lambda r: r["side"])
+    st = rows[0]
+    if count_left:
+        n_left = rows[1]["n"]
     if not st["n"] or st["bad"]:
         return None  # mixed types (or empty right): kernel path
+    if _pip_pairs_estimate(n_left, st, expand) < min_pairs:
+        return None  # too few pairs to repay compilation: kernel path
     spark = left.sparkSession
     g = _tuned_gridsize(spark, g0, st, expand)
     # country-sized rights: conservative cross-max bound on the per-zone

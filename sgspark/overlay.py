@@ -68,15 +68,6 @@ def _parts_to_wkb(parts: list[list[np.ndarray]]) -> bytes | None:
     return to_wkb(from_rings([parts], [MULTIPOLYGON]))[0]
 
 
-def _pairs_with_geoms(df1, df2, id1, id2, gridsize):
-    pairs = sjoin_pairs(df1, df2, "intersects", left_id=id1, right_id=id2,
-                        gridsize=gridsize, assume_left_points=False)
-    rid = pairs.columns[1]
-    g1 = df1.select(F.col(id1), F.col("geometry").alias("__g1"))
-    g2 = df2.select(F.col(id2).alias(rid), F.col("geometry").alias("__g2"))
-    return pairs.join(g1, id1).join(g2, rid), rid
-
-
 def _intersect_batch(pdf: pd.DataFrame, id1: str, rid: str,
                      g1col: str = "__g1", g2col: str = "__g2"
                      ) -> pd.DataFrame | None:

@@ -8,6 +8,10 @@ across all three execution paths:
   kernel       broadcast_right=False, no point hint  -> mapInPandas refine
   jvm-bcast    broadcast right, point hint           -> _points_vs_polygons_jvm
   jvm-dist     no broadcast, point hint              -> _points_vs_polygons_distributed
+
+These fixtures sit far below `joins.PIP_COMPILED_MIN_PAIRS`, where the
+default size rule sends jvm-dist calls to the Arrow kernel, so the tests
+that exercise the compiled executor pin it with `compiled()`.
 """
 
 import numpy as np
@@ -15,6 +19,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from sgspark.conf import config_override
 from sgspark.geom.wkb import from_wkt, to_wkb
 from sgspark.joins import sjoin_pairs
 
@@ -85,6 +90,11 @@ def pair_set(df):
     return {(r[0], r[1]) for r in df.collect()}
 
 
+def compiled():
+    """Force the compiled point x polygon route regardless of size."""
+    return config_override(use_jvm_pip=True)
+
+
 @pytest.mark.parametrize("predicate", ["within", "intersects"])
 def test_three_paths_agree(spark, predicate):
     zones = zones_df(spark)
@@ -92,9 +102,10 @@ def test_three_paths_agree(spark, predicate):
     kernel = pair_set(sjoin_pairs(
         pts, zones, predicate, left_id="pid", right_id="zid",
         gridsize=7.0, broadcast_right=False))
-    jvm_d = pair_set(sjoin_pairs(
-        pts, zones, predicate, left_id="pid", right_id="zid",
-        gridsize=7.0, broadcast_right=False, assume_left_points=True))
+    with compiled():
+        jvm_d = pair_set(sjoin_pairs(
+            pts, zones, predicate, left_id="pid", right_id="zid",
+            gridsize=7.0, broadcast_right=False, assume_left_points=True))
     jvm_b = pair_set(sjoin_pairs(
         pts, zones, predicate, left_id="pid", right_id="zid",
         gridsize=7.0, assume_left_points=True))
@@ -112,12 +123,55 @@ def test_distributed_jvm_plan_is_python_free_on_pairs(spark):
     Arrow stage (the O(|right|) edge pack), none after the join."""
     zones = zones_df(spark)
     pts = points_df(spark)
-    out = sjoin_pairs(pts, zones, "within", left_id="pid", right_id="zid",
-                      gridsize=7.0, broadcast_right=False,
-                      assume_left_points=True)
+    with compiled():
+        out = sjoin_pairs(pts, zones, "within", left_id="pid",
+                          right_id="zid", gridsize=7.0,
+                          broadcast_right=False, assume_left_points=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # one MapInPandas total (rights pack); the join + PIP filter are JVM
     assert plan.count("MapInPandas") == 1
+
+
+def test_size_rule_picks_route(spark, monkeypatch, tmp_path):
+    """Default config: the distributed point x polygon join refines with
+    the Arrow kernel below PIP_COMPILED_MIN_PAIRS estimated pairs, with
+    the compiled PIP above it, and with the compiled PIP when the left's
+    row count is unknown."""
+    import sgspark.joins as J
+    zones, pts = zones_df(spark), points_df(spark)
+
+    def plan(left):
+        out = sjoin_pairs(left, zones, "within", left_id="pid",
+                          right_id="zid", gridsize=7.0,
+                          broadcast_right=False, assume_left_points=True)
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    # small: the row count from Catalyst (local relation) or, for a
+    # parquet scan without statistics, from the count folded into the
+    # stats job
+    pts.write.parquet(str(tmp_path / "pts"))
+    scanned = spark.read.parquet(str(tmp_path / "pts"))
+    assert J._plan_row_count(pts) == 318
+    assert J._plan_row_count(scanned) is None
+    assert "kernel(" in plan(pts)
+    assert "kernel(" in plan(scanned)
+    # large: 10x the constant in rows over a right layer whose bboxes
+    # cover a tenth of its world estimates exactly the constant, which
+    # takes the compiled route; so does a synthetic Catalyst row count of
+    # that size on the fixture
+    st = {"wx0": 0.0, "wx1": 100.0, "wy0": 0.0, "wy1": 100.0,
+          "area": 1000.0}
+    assert J._pip_pairs_estimate(10 * J.PIP_COMPILED_MIN_PAIRS, st, 0.0) \
+        == J.PIP_COMPILED_MIN_PAIRS
+    monkeypatch.setattr(J, "_plan_row_count",
+                        lambda df: 10 * J.PIP_COMPILED_MIN_PAIRS)
+    assert "kernel(" not in plan(pts)
+    monkeypatch.undo()
+    # unknown: a Python-produced left has no Catalyst count and is not
+    # counted by the probe
+    py_left = pts.mapInPandas(lambda it: it, pts.schema)
+    assert J._plan_row_count(py_left) is None
+    assert "kernel(" not in plan(py_left)
 
 
 def test_declines_on_mixed_or_huge_rights(spark):
@@ -130,9 +184,10 @@ def test_declines_on_mixed_or_huge_rights(spark):
             for i, w in enumerate(to_wkb(ga))]
     zones = spark.createDataFrame(rows, zones_df(spark).schema)
     pts = points_df(spark)
-    out = sjoin_pairs(pts, zones, "intersects", left_id="pid",
-                      right_id="zid", gridsize=7.0, broadcast_right=False,
-                      assume_left_points=True)
+    with compiled():
+        out = sjoin_pairs(pts, zones, "intersects", left_id="pid",
+                          right_id="zid", gridsize=7.0,
+                          broadcast_right=False, assume_left_points=True)
     got = pair_set(out)
     assert (0, 1) in got          # (1,1) inside the L polygon (zid=1 here)
     assert (2, 0) in got and (2, 1) in got  # (2,2) on the line AND in L
@@ -150,10 +205,11 @@ def test_dwithin_three_paths_agree(spark):
     kernel = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
                               right_id="zid", distance=1.25, gridsize=7.0,
                               broadcast_right=False))
-    jvm_d = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
-                             right_id="zid", distance=1.25, gridsize=7.0,
-                             broadcast_right=False,
-                             assume_left_points=True))
+    with compiled():
+        jvm_d = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
+                                 right_id="zid", distance=1.25,
+                                 gridsize=7.0, broadcast_right=False,
+                                 assume_left_points=True))
     jvm_b = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
                              right_id="zid", distance=1.25, gridsize=7.0,
                              assume_left_points=True))
@@ -231,9 +287,10 @@ def test_high_vertex_three_paths_agree(spark, gridsize):
     kw = dict(left_id="pid", right_id="zid", gridsize=gridsize)
     kernel = pair_set(sjoin_pairs(pts, zones, "within",
                                   broadcast_right=False, **kw))
-    jvm_d = pair_set(sjoin_pairs(pts, zones, "within",
-                                 broadcast_right=False,
-                                 assume_left_points=True, **kw))
+    with compiled():
+        jvm_d = pair_set(sjoin_pairs(pts, zones, "within",
+                                     broadcast_right=False,
+                                     assume_left_points=True, **kw))
     jvm_b = pair_set(sjoin_pairs(pts, zones, "within",
                                  assume_left_points=True, **kw))
     assert kernel == jvm_d == jvm_b and len(kernel) > 0
@@ -253,8 +310,10 @@ def test_high_vertex_dwithin_paths_agree(spark):
     kw = dict(left_id="pid", right_id="zid", gridsize=6.0, distance=2.5)
     kernel = rows(sjoin_pairs(pts, zones, "dwithin",
                               broadcast_right=False, **kw))
-    jvm_d = rows(sjoin_pairs(pts, zones, "dwithin", broadcast_right=False,
-                             assume_left_points=True, **kw))
+    with compiled():
+        jvm_d = rows(sjoin_pairs(pts, zones, "dwithin",
+                                 broadcast_right=False,
+                                 assume_left_points=True, **kw))
     jvm_b = rows(sjoin_pairs(pts, zones, "dwithin",
                              assume_left_points=True, **kw))
     assert kernel == jvm_d == jvm_b and len(kernel) > 0
@@ -358,9 +417,10 @@ def test_concave_zone_variant_paths_agree(spark, monkeypatch):
     geo = extract_geometries(docs).cache()
     geo.count()
     pts = geo.where("geom_kind = 'point' AND span_pos = 1")
-    jvm = pair_set(sjoin_pairs(
-        pts, zones, "within", left_id="doc_index", right_id="zone_id",
-        broadcast_right=False, assume_left_points=True))
+    with compiled():
+        jvm = pair_set(sjoin_pairs(
+            pts, zones, "within", left_id="doc_index", right_id="zone_id",
+            broadcast_right=False, assume_left_points=True))
     monkeypatch.setenv("SGSPARK_DISABLE_JVM_PIP", "1")
     kern = pair_set(sjoin_pairs(
         pts, zones, "within", left_id="doc_index", right_id="zone_id",
