@@ -347,7 +347,9 @@ def _bounded_rows(df: DataFrame, cap: int) -> list:
 def _shortest_paths_local(erows: list, e: DataFrame, origins: DataFrame
                           ) -> DataFrame | None:
     """Driver-side Bellman-Ford over a collected (bounded) edge list —
-    bit-identical to the distributed plain-BF fixpoint:
+    the same fixpoint as distributed plain Bellman-Ford (the default
+    distributed path sums costs through min-plus shortcuts, whose float
+    association can differ by an ulp for non-representable weights):
 
       * relaxation arithmetic is the same IEEE ops in the same order
         (cand = cost(u) + w; keep the min), iterated to the fixpoint, so
@@ -511,6 +513,8 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
                 return fast
         del erows
 
+    # NULL preds carry the node type, as the driver path's pred does
+    node_t = origins.schema["node"].dataType
     e = e.localCheckpoint()
     n_edges = e.count()
 
@@ -560,7 +564,7 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
             F.col("u").alias("pred"))
         origin0 = origins.select(
             "oid", F.col("node").alias("u"), F.lit(0.0).alias("cost"),
-            F.lit(None).cast("string").alias("pred"))
+            F.lit(None).cast(node_t).alias("pred"))
         fin = (cand.unionByName(origin0)
                .groupBy("oid", "u")
                .agg(F.min(F.struct("cost", "pred")).alias("s"))
@@ -570,7 +574,7 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
 
     dist = origins.select(F.col("oid"), F.col("node").alias("u"),
                           F.lit(0.0).alias("cost"),
-                          F.lit(None).cast("string").alias("pred"))
+                          F.lit(None).cast(node_t).alias("pred"))
     dist = dist.localCheckpoint()
     for _ in range(max_iter):
         rel = dist.join(e, "u")
@@ -621,16 +625,18 @@ def _od_matrix_local(spark, dist_pdf, origins: DataFrame,
     left-joined on (oid, did); unreachable pairs NULL) without the two
     shuffle joins + crossJoin over driver-local data.  Bounded: skips to
     the distributed plan when origins or destinations exceed the probe
-    caps."""
+    caps, or when a collected oid, did or node is NULL: pandas merges
+    match NULL keys, the distributed equi-joins do not."""
     import pandas as pd
 
     dd = _bounded_rows(destinations.select("did", "node"), 1_000_000)
     if len(dd) > 1_000_000:
         return None
     if orows is None:
-        orows = [(r[0],) for r in
-                 _bounded_rows(origins.select("oid", "node"), 100_000)]
+        orows = _bounded_rows(origins.select("oid", "node"), 100_000)
     if len(orows) > 100_000 or len(orows) * len(dd) > _LOCAL_ORIGIN_CELLS:
+        return None
+    if any(v is None for r in (*orows, *dd) for v in r):
         return None
     dd_df = pd.DataFrame({"did": pd.Series([r[0] for r in dd], dtype=object),
                           "node": pd.Series([r[1] for r in dd],

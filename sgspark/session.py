@@ -43,6 +43,9 @@ def get_spark(app: str = "sgspark", cores: int | None = None,
         # masters (the local stand-in for spark-submit --py-files)
         .config("spark.executorEnv.PYTHONPATH",
                 repo + os.pathsep + os.environ.get("PYTHONPATH", ""))
+        # forks the Python workers from sgspark/_pydaemon.py, which stops
+        # every task re-reading pyspark.zip's directory (ARCHITECTURE.md)
+        .config("spark.python.daemon.module", "sgspark._pydaemon")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
