@@ -134,7 +134,7 @@ def diss(df: DataFrame, by: list[str] | None = None, *,
 
     pre = geo_in.mapInPandas(partial, schema=out_schema)
 
-    def union_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def union_group(key, pdf):
         blobs = pdf[geometry].tolist()
         wkb = blobs[0] if len(blobs) == 1 else union_runner(blobs)
         row = {k: [v] for k, v in zip(key_cols, key)}

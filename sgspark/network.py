@@ -304,7 +304,9 @@ def _local_graph_max_edges() -> int:
     return int(os.environ.get("SGSPARK_LOCAL_GRAPH_EDGES", "2000000"))
 
 
-_LOCAL_ORIGIN_CELLS = 50_000_000  # |origins| x |nodes| driver matrix cap
+# cap on the driver route's dense per-origin arrays: |origins| x |nodes|
+# costs and |origins| x |edges| relaxation temporaries
+_LOCAL_ORIGIN_CELLS = 50_000_000
 
 
 def _plan_maybe_small(df: DataFrame, cap_rows: int) -> bool:
@@ -360,7 +362,9 @@ def _shortest_paths_local(erows: list, e: DataFrame, origins: DataFrame
         distributed min(struct(cost, pred)).
 
     Returns None (caller falls back to the distributed path) when the
-    origin set is over-budget for a dense driver matrix."""
+    origin set is over-budget for the dense driver arrays: the cost
+    matrix (origins x nodes) or the relaxation temporaries (origins x
+    edges)."""
     import numpy as np
     import pandas as pd
 
@@ -377,7 +381,7 @@ def _shortest_paths_local(erows: list, e: DataFrame, origins: DataFrame
     n_nodes = len(nodes)
     oids = pd.unique(pd.Series([o[0] for o in orows], dtype=object))
     oidx = pd.Series(np.arange(len(oids)), index=oids)
-    if len(oids) * max(n_nodes, 1) > _LOCAL_ORIGIN_CELLS:
+    if len(oids) * max(n_nodes, len(erows), 1) > _LOCAL_ORIGIN_CELLS:
         return None
     src = nid.loc[src_l].to_numpy() if erows else np.zeros(0, dtype=np.int64)
     dst = nid.loc[dst_l].to_numpy() if erows else np.zeros(0, dtype=np.int64)

@@ -289,7 +289,7 @@ def _erase_rows(left_geoms: DataFrame, pairs: DataFrame,
     memb = memb.join(right_geoms, rid)
     union_schema = f"__pset array<{rid_t}>, __ug binary"
 
-    def union_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def union_group(key, pdf):
         pset = list(key[0])
         if len(pdf) == 1:  # O7: singleton set -> partner geometry as-is
             return pd.DataFrame({"__pset": [pset],

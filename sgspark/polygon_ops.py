@@ -484,7 +484,7 @@ def split_polygons_by_lines(polys: DataFrame, lines: DataFrame, *,
             if f.name == id_col][0]
     schema = f"{id_col} {id_t}, geometry binary"
 
-    def split_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def split_group(key, pdf):
         pa = from_wkb(pdf["__pg"].iloc[:1].tolist())
         parts = [[r for r in pa.rings_of_geom(0)]]
         la = from_wkb(pdf["__lg"].tolist())

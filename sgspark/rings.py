@@ -84,7 +84,7 @@ def rings_to_polygons_df(rings: DataFrame, *, id_col: str) -> DataFrame:
             if f.name == id_col][0]
     schema = f"{id_col} {id_t}, geometry binary"
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         pdf = pdf.sort_values(["part_idx", "ring_idx"])
         ga = from_wkb(pdf["ring"].tolist())
         parts: list[list[np.ndarray]] = []

@@ -12,6 +12,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+# HotSpot's tier-4 (C2) thresholds raised 10x: Spark's planner runs a long,
+# flat profile of lukewarm methods that C1 code serves well, and compiling
+# them with C2 cost over a third of a warm pass's CPU; hot data loops still
+# cross these thresholds within milliseconds (ARCHITECTURE.md, BENCH/JIT.md)
+JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=50000 "
+               "-XX:Tier4CompileThreshold=150000 "
+               "-XX:Tier4BackEdgeThreshold=400000")
+
 
 def get_spark(app: str = "sgspark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -46,6 +54,11 @@ def get_spark(app: str = "sgspark", cores: int | None = None,
         # forks the Python workers from sgspark/_pydaemon.py, which stops
         # every task re-reading pyspark.zip's directory (ARCHITECTURE.md)
         .config("spark.python.daemon.module", "sgspark._pydaemon")
+        # defaultJavaOptions, not extraJavaOptions: Spark puts them first
+        # on the JVM command line and SGSPARK_EXTRA_CONF users set
+        # extraJavaOptions, which would otherwise overwrite them.  Driver
+        # only: the planner runs there; executor JVMs keep stock thresholds
+        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

@@ -199,7 +199,7 @@ def gridloop(df: DataFrame, func: Callable[[pd.DataFrame], pd.DataFrame],
         base = own.unionByName(halo).drop("__cn")
         group_cols = ["__cell_key", "__salt"]
 
-    def run_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run_cell(key, pdf):
         res = func(pdf.drop(columns=["__salt"], errors="ignore"))
         res = res.copy()
         res["__cell_key"] = key[0]
@@ -285,7 +285,7 @@ def gridloop_geoms(df: DataFrame, func: Callable[[pd.DataFrame], pd.DataFrame],
                     F.expr(f"cast(floor(maxy / {g}) as bigint)")))))
             .drop("__bx0", "__bx1", "__by0", "__by1", "__cx", "__cy"))
 
-    def run_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run_cell(key, pdf):
         res = func(pdf)
         res = res.copy()
         res["__cell_key"] = key[0]

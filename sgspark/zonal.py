@@ -372,7 +372,7 @@ def merge_tiles(tiles: DataFrame, by: list[str], how: str = "mean"
         for f in tiles.schema.fields if f.name in group) + \
         ", values array<double>"
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key, pdf):
         arrs = np.stack([np.asarray(v, dtype=np.float64)
                          for v in pdf["values"]])
         if how == "mean":

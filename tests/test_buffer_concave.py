@@ -180,3 +180,21 @@ def test_buffdissexp_concave_spark(spark):
         cov |= _pts_in_ring(pts, Lr) | (d <= 0.5)
     cell = (xs[1] - xs[0]) * (ys[1] - ys[0])
     assert areas[1] == pytest.approx(cov.sum() * cell, abs=0.05)
+
+
+def test_buffdissexp_raises_no_user_warning(spark):
+    """The grouped-map functions carry no partial type hints, so
+    applyInPandas does not warn that it cannot infer their eval type."""
+    import warnings
+
+    from sgspark.dissolve import buffdissexp
+    from sgspark.io import wkt_to_wkb_df
+
+    df = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
+        "pid": [0, 1], "grp": ["a", "a"],
+        "geometry_wkt": ["POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))",
+                         "POLYGON ((2.5 0, 4 0, 4 2, 2.5 2, 2.5 0))"]})))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        out = buffdissexp(df, 0.5, by=["grp"], quad_segs=QS).toPandas()
+    assert len(out) == 1

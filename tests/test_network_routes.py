@@ -89,3 +89,31 @@ def test_od_matrix_null_keys_match_distributed(spark):
     assert _rows(local) == _rows(dist)
     costs = {(r[0], r[1]): r[2] for r in _rows(local)}
     assert costs[("a", "x")] == 4.0 and costs[("a", "z")] is None
+
+
+def test_origin_edge_cap_falls_back_on_multigraph(spark, monkeypatch):
+    """|origins| x |edges| over the driver cap (|origins| x |nodes| under
+    it) sends a parallel-edge multigraph to the distributed route, with
+    the driver route's rows and schema."""
+    from sgspark import network
+    edges = spark.createDataFrame(pd.DataFrame(
+        {"source": ["1", "1", "2", "2", "3", "1"],
+         "target": ["2", "2", "3", "3", "4", "4"],
+         "length": [1.0, 0.5, 2.0, 2.0, 1.0, 5.0]}))
+    origins = spark.createDataFrame(pd.DataFrame(
+        {"oid": ["a", "b"], "node": ["1", "3"]}))
+    local = network.shortest_paths(edges, origins)
+    assert network.last_run_stats.get("local_graph")
+
+    fast = []
+    real = network._shortest_paths_local
+    monkeypatch.setattr(network, "_shortest_paths_local",
+                        lambda *a: fast.append(real(*a)) or fast[-1])
+    # 2 origins x 4 nodes = 8 cells fit; 2 x 12 directed edges do not
+    monkeypatch.setattr(network, "_LOCAL_ORIGIN_CELLS", 10)
+    capped = network.shortest_paths(edges, origins)
+    assert fast == [None]
+    assert not network.last_run_stats.get("local_graph")
+    assert capped.schema == local.schema
+    assert _rows(capped) == _rows(local)
+    assert ("a", "2", 0.5, "1") in _rows(local)

@@ -1,8 +1,12 @@
 """Session set-up: the worker daemon's zip-directory guard
-(sgspark/_pydaemon.py) and the conf in `get_spark` that installs it."""
+(sgspark/_pydaemon.py) and the conf in `get_spark` that installs it, and
+the driver JVM's raised C2 thresholds (`session.JIT_OPTIONS`)."""
 
 import importlib.util
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
@@ -68,3 +72,39 @@ def test_workers_run_the_guard(spark):
         assert files == {"<frozen zipimport>"}
     else:
         assert len(files) == 1 and files.pop().endswith("_pydaemon.py")
+
+
+def _tier4_invocation_threshold(spark) -> str:
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    return bean.getVMOption("Tier4InvocationThreshold").getValue()
+
+
+def test_driver_jvm_defers_c2(spark):
+    assert _tier4_invocation_threshold(spark) == "50000"
+
+
+def test_extra_java_options_keep_the_c2_thresholds(tmp_path):
+    """A session whose SGSPARK_EXTRA_CONF sets
+    spark.driver.extraJavaOptions (as perfbench/run.py does) keeps the
+    thresholds, which get_spark sets under defaultJavaOptions."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent("""
+        from sgspark.session import get_spark
+        from test_session import _tier4_invocation_threshold
+        spark = get_spark("c2-probe", cores=1)
+        print("TIER4", _tier4_invocation_threshold(spark))
+        spark.stop()
+    """)
+    env = dict(os.environ,
+               SGSPARK_EXTRA_CONF="spark.driver.extraJavaOptions="
+                                  "-XX:-UsePerfData",
+               PYTHONPATH=os.pathsep.join(
+                   [os.path.join(repo, "tests"), repo,
+                    os.environ.get("PYTHONPATH", "")]))
+    out = subprocess.run([sys.executable, "-c", script], env=env,
+                         cwd=tmp_path, capture_output=True, text=True,
+                         timeout=300)
+    assert "TIER4 50000" in out.stdout, out.stderr[-2000:]
