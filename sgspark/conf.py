@@ -16,8 +16,7 @@ Keys:
                    route only when its estimated candidate pairs reach
                    joins.PIP_COMPILED_MIN_PAIRS (or the left row count is
                    unknown), else the Arrow-kernel refine; the broadcast
-                   compiled routes stay on.  `SGSPARK_DISABLE_JVM_PIP=1`
-                   turns every compiled point route off while this is None.
+                   compiled routes stay on.
   use_jvm_poly2    True force the compiled polygon x polygon
                    `intersects` composition (verified equal to the
                    kernel but measured slower — see joins._poly2_wanted);
@@ -33,7 +32,6 @@ Keys:
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 from typing import Any, Callable, Iterator
 
@@ -46,12 +44,9 @@ config: dict[str, Any] = {
 
 
 def jvm_pip_enabled() -> bool:
-    """The JVM point x polygon path gate: explicit config wins, else the
-    env kill switch (kept for spark-submit --conf style control)."""
-    v = config.get("use_jvm_pip")
-    if v is None:
-        return os.environ.get("SGSPARK_DISABLE_JVM_PIP") != "1"
-    return bool(v)
+    """The compiled point/segment x polygon route gate: off only when
+    `use_jvm_pip` is False."""
+    return config.get("use_jvm_pip") is not False
 
 
 def get_runner(key: str, default: Callable) -> Callable:

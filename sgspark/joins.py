@@ -11,10 +11,10 @@ Plan shape (SURVEY.md §2.4, §3.1):
     left  ─ bbox→cell-cover explode (pure SQL sequence(), JVM-side) ─┐
                                                                      ├─ equi-join on cell_key
     right ─ bbox→cell-cover explode ────────────────────────────────┘
+         → anchor-cell dedup, JVM-side (a pair is kept only from the cell
+           that contains the lower-left corner of its bbox intersection,
+           so no global dropDuplicates shuffle is ever needed)
          → Arrow-batched refine kernel (numpy predicates)
-         → anchor-cell dedup (a pair is emitted only from the cell that
-           contains the lower-left corner of its bbox intersection, so no
-           global dropDuplicates shuffle is ever needed)
          → assemble attributes by id joins
 
 Scale levers: the cell join is a plain equi-join Catalyst can broadcast /
@@ -58,22 +58,22 @@ def _cover_cells(df: DataFrame, gridsize: float, expand: float = 0.0,
     JVM-side before any Arrow transfer."""
     g = float(gridsize)
     e = float(expand)
-    df = (df
-          .withColumn(f"{prefix}cminx", F.col("minx") - e)
-          .withColumn(f"{prefix}cminy", F.col("miny") - e)
-          .withColumn(f"{prefix}cmaxx", F.col("maxx") + e)
-          .withColumn(f"{prefix}cmaxy", F.col("maxy") + e)
-          .withColumn("__cx0", F.expr(f"cast(floor((minx - {e} + {FALSE_EASTING}) / {g}) as bigint)"))
-          .withColumn("__cx1", F.expr(f"cast(floor((maxx + {e} + {FALSE_EASTING}) / {g}) as bigint)"))
-          .withColumn("__cy0", F.expr(f"cast(floor((miny - {e}) / {g}) as bigint)"))
-          .withColumn("__cy1", F.expr(f"cast(floor((maxy + {e}) / {g}) as bigint)")))
-    df = (df
-          .withColumn("__cx", F.explode(F.expr("sequence(__cx0, __cx1)")))
-          .withColumn("__cy", F.explode(F.expr("sequence(__cy0, __cy1)")))
-          .withColumn("cell_key",
-                      F.expr(f"__cx * {1 << Y_BITS} + __cy"))
-          .drop("__cx0", "__cx1", "__cy0", "__cy1", "__cx", "__cy"))
-    return df
+    # four projections, not one withColumn per column: every DataFrame
+    # call is a Py4J round trip plus an analyzer pass at plan time
+    cover = [f"{prefix}cminx", f"{prefix}cminy", f"{prefix}cmaxx",
+             f"{prefix}cmaxy"]
+    keep = df.columns + cover
+    df = df.select(
+        "*",
+        (F.col("minx") - e).alias(cover[0]), (F.col("miny") - e).alias(cover[1]),
+        (F.col("maxx") + e).alias(cover[2]), (F.col("maxy") + e).alias(cover[3]),
+        F.expr(f"cast(floor((minx - {e} + {FALSE_EASTING}) / {g}) as bigint)").alias("__cx0"),
+        F.expr(f"cast(floor((maxx + {e} + {FALSE_EASTING}) / {g}) as bigint)").alias("__cx1"),
+        F.expr(f"cast(floor((miny - {e}) / {g}) as bigint)").alias("__cy0"),
+        F.expr(f"cast(floor((maxy + {e}) / {g}) as bigint)").alias("__cy1"))
+    df = df.select("*", F.explode(F.expr("sequence(__cx0, __cx1)")).alias("__cx"))
+    df = df.select("*", F.explode(F.expr("sequence(__cy0, __cy1)")).alias("__cy"))
+    return df.select(*keep, F.expr(f"__cx * {1 << Y_BITS} + __cy").alias("cell_key"))
 
 
 BROADCAST_RIGHT_MAX_BYTES = 64 << 20  # byte cap for driver-side right layer
@@ -151,7 +151,9 @@ def plan_is_python_free(df: DataFrame) -> bool:
 def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
                          expand: float = 0.0,
                          assume_left_points: bool | None = None,
-                         probe_big: bool | None = False) -> DataFrame:
+                         probe_big: bool | None = False,
+                         right_bounds: np.ndarray | None = None
+                         ) -> DataFrame:
     """Shared candidate generator for every cell-join kernel (sjoin_pairs and
     the fused clean_overlay path): cover-cells equi-join with the bbox
     overlap as a JVM join filter, plus HUGE-GEOMETRY ROUTING.
@@ -160,16 +162,23 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
     make the sequence() cover explode blow up (a country-sized polygon at a
     city-sized gridsize).  Such rows are rare by nature, so they take a lazy
     broadcast bbox-join branch against the ENTIRE other side (no cells); the
-    branch synthesizes cell_key = the anchor expression, so the downstream
-    kernel's anchor dedup passes each pair through exactly once.
+    branch synthesizes cell_key = the anchor expression, so the anchor dedup
+    passes each pair through exactly once.
 
     Inputs: l0 = (__lid, __lg, minx, miny, maxx, maxy), r0 likewise with
-    __rid/__rg.  Output columns: (__lid, __lg, __lminx, __lminy, __rid,
-    __rg, __rminx, __rminy, cell_key) honoring the anchor-dedup contract
-    (cell_key == cell of the lower-left corner of the cover-bbox
-    intersection exactly once per true candidate pair)."""
+    __rid/__rg.  Either geometry column may be absent (a kernel that holds
+    that side's geometries elsewhere).  Output columns: (__lid, __lg, __rid,
+    __rg) of the columns given, each true candidate pair exactly once
+    (anchor dedup: the copy whose cell_key is the cell of the lower-left
+    corner of the cover-bbox intersection).
+
+    `right_bounds` (n x 4 minx/miny/maxx/maxy of r0's rows) marks r0 as a
+    small driver-local frame: it joins under F.broadcast, the left keeps
+    its partitioning (no pin, no Exchange), and the huge-right split is
+    read from these bounds instead of a probe."""
     g = float(gridsize)
     e = float(expand)
+    bcast = right_bounds is not None
 
     def _ncells(pre_e: float):
         return (f"((cast(floor((maxx + {pre_e} + {FALSE_EASTING}) / {g}) as bigint)"
@@ -185,7 +194,13 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
     # overlay.  Sides with kernel-derived inputs pay one extra upstream
     # pass, so call-sites choose (overlay probes; point sjoins skip).
     l_has_big, r_has_big = True, True
-    if probe_big is None:  # auto: probe iff the extra pass runs no Python
+    if bcast:
+        rb = right_bounds
+        ncells_r = ((np.floor((rb[:, 2] + FALSE_EASTING) / g)
+                     - np.floor((rb[:, 0] + FALSE_EASTING) / g) + 1)
+                    * (np.floor(rb[:, 3] / g) - np.floor(rb[:, 1] / g) + 1))
+        r_has_big = bool((ncells_r > MAX_COVER_CELLS).any())
+    elif probe_big is None:  # auto: probe iff the extra pass runs no Python
         probe_big = plan_is_python_free(l0) and plan_is_python_free(r0)
     if probe_big:
         stats = (l0.select(F.max(F.expr(_ncells(e))).alias("m"))
@@ -204,12 +219,15 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
         r_small = r0.where(F.expr(f"{_ncells(0.0)} <= {MAX_COVER_CELLS}"))
         r_big = r0.where(F.expr(f"{_ncells(0.0)} > {MAX_COVER_CELLS}"))
 
+    bbox = ("minx", "miny", "maxx", "maxy")
+    lcols = [c for c in l0.columns if c not in bbox]
+    rcols = [c for c in r0.columns if c not in bbox]
     l = _cover_cells(l_small, gridsize, expand=expand, prefix="l_") \
-        .select("__lid", "__lg", "cell_key",
+        .select(*lcols, "cell_key",
                 F.col("l_cminx").alias("__lminx"), F.col("l_cminy").alias("__lminy"),
                 F.col("l_cmaxx").alias("__lmaxx"), F.col("l_cmaxy").alias("__lmaxy"))
     r = _cover_cells(r_small, gridsize, prefix="r_") \
-        .select("__rid", "__rg", "cell_key",
+        .select(*rcols, "cell_key",
                 F.col("r_cminx").alias("__rminx"), F.col("r_cminy").alias("__rminy"),
                 F.col("r_cmaxx").alias("__rmaxx"), F.col("r_cmaxy").alias("__rmaxy"))
     # pin the join shuffle at the configured width (round 7): the pair
@@ -226,6 +244,7 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
     # scheduling latency.  Size estimates BELOW Python kernels are not
     # trustworthy (Spark propagates the child's bytes through
     # MapInPandas), so any python-producing side pins regardless.
+    # A broadcast right needs no shuffle at all.
     def _est(df):
         try:
             v = int(df._jdf.queryExecution().optimizedPlan()
@@ -233,18 +252,21 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
             return v if 0 < v < (1 << 62) else None
         except Exception:
             return None
-    el, er = _est(l0), _est(r0)
-    tiny = (el is not None and er is not None
-            and el < (4 << 20) and er < (4 << 20)
-            and plan_is_python_free(l0) and plan_is_python_free(r0))
-    if not tiny:
-        try:
-            nparts = int(
-                l0.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            nparts = 64
-        l = l.repartition(nparts, "cell_key")
-        r = r.repartition(nparts, "cell_key")
+    if bcast:
+        r = F.broadcast(r)
+    else:
+        el, er = _est(l0), _est(r0)
+        tiny = (el is not None and er is not None
+                and el < (4 << 20) and er < (4 << 20)
+                and plan_is_python_free(l0) and plan_is_python_free(r0))
+        if not tiny:
+            try:
+                nparts = int(
+                    l0.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            except Exception:
+                nparts = 64
+            l = l.repartition(nparts, "cell_key")
+            r = r.repartition(nparts, "cell_key")
 
     # equi-join on cell + bbox-overlap as a JVM join filter: bbox-disjoint
     # cell cohabitants never reach the Python kernel
@@ -266,50 +288,46 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
         # LAZY: broadcast-hint join (BroadcastNestedLoop on the bbox theta
         # condition).  No driver collect, no extra jobs at plan time; an
         # empty big side costs one cheap filtered scan.  Huge-bbox rows are
-        # rare by nature, so the nested-loop side stays tiny.
-        bdf = F.broadcast(big_side)
+        # rare by nature, so the nested-loop side stays tiny — unless the
+        # right is the broadcast one anyway, which then stays the build side.
+        bcols = lcols if big_is_left else rcols  # __lid -> id, __lg -> g
+        b = big_side.selectExpr(*[f"{c} AS {c[3:]}" for c in bcols],
+                                "minx AS bx0", "miny AS by0",
+                                "maxx AS bx1", "maxy AS by1")
+        if big_is_left and bcast:
+            j = b.crossJoin(F.broadcast(other))
+        else:
+            j = other.crossJoin(F.broadcast(b))
         if big_is_left:
-            j = other.crossJoin(bdf).where(
+            j = j.where(
                 (F.col("bx0") - e <= F.col("maxx")) &
                 (F.col("bx1") + e >= F.col("minx")) &
                 (F.col("by0") - e <= F.col("maxy")) &
                 (F.col("by1") + e >= F.col("miny")))
-            out = j.select(F.col("id").alias("__lid"),
-                           F.col("g").alias("__lg"),
-                           (F.col("bx0") - e).alias("__lminx"),
-                           (F.col("by0") - e).alias("__lminy"),
-                           F.col("__rid"), F.col("__rg"),
-                           F.col("minx").alias("__rminx"),
-                           F.col("miny").alias("__rminy"))
+            mins = [(F.col("bx0") - e).alias("__lminx"),
+                    (F.col("by0") - e).alias("__lminy"),
+                    F.col("minx").alias("__rminx"),
+                    F.col("miny").alias("__rminy")]
         else:
-            j = other.crossJoin(bdf).where(
+            j = j.where(
                 (F.col("bx0") <= F.col("maxx") + e) &
                 (F.col("bx1") >= F.col("minx") - e) &
                 (F.col("by0") <= F.col("maxy") + e) &
                 (F.col("by1") >= F.col("miny") - e))
-            out = j.select(F.col("__lid"), F.col("__lg"),
-                           (F.col("minx") - e).alias("__lminx"),
-                           (F.col("miny") - e).alias("__lminy"),
-                           F.col("id").alias("__rid"),
-                           F.col("g").alias("__rg"),
-                           F.col("bx0").alias("__rminx"),
-                           F.col("by0").alias("__rminy"))
-        return out.withColumn("cell_key", F.expr(anchor_sql))
+            mins = [(F.col("minx") - e).alias("__lminx"),
+                    (F.col("miny") - e).alias("__lminy"),
+                    F.col("bx0").alias("__rminx"),
+                    F.col("by0").alias("__rminy")]
+        return j.select(*[F.col(c[3:]).alias(c) if c in bcols else c
+                          for c in lcols + rcols], *mins) \
+                .withColumn("cell_key", F.expr(anchor_sql))
 
-    cand = cand.select("__lid", "__lg", "__lminx", "__lminy",
-                       "__rid", "__rg", "__rminx", "__rminy", "cell_key")
+    cand = cand.select(*lcols, *rcols, "__lminx", "__lminy",
+                       "__rminx", "__rminy", "cell_key")
     if l_big is not None:
-        cand = cand.unionByName(_big_branch(
-            l_big.selectExpr("__lid AS id", "__lg AS g", "minx AS bx0",
-                             "miny AS by0", "maxx AS bx1", "maxy AS by1"),
-            r0.select("__rid", "__rg", "minx", "miny", "maxx", "maxy"),
-            True))
+        cand = cand.unionByName(_big_branch(l_big, r0, True))
     if r_big is not None:
-        cand = cand.unionByName(_big_branch(
-            r_big.selectExpr("__rid AS id", "__rg AS g", "minx AS bx0",
-                             "miny AS by0", "maxx AS bx1", "maxy AS by1"),
-            l_small.select("__lid", "__lg", "minx", "miny", "maxx", "maxy"),
-            False))
+        cand = cand.unionByName(_big_branch(r_big, l_small, False))
     # ANCHOR DEDUP, JVM-SIDE: a pair appears once per shared cover cell;
     # keep only the copy whose cell holds the lower-left corner of the
     # cover-bbox intersection.  Pure codegen — duplicate pairs die before
@@ -317,7 +335,7 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
     # columns (round 3: was a Python-side filter shipping 5 extra columns
     # per row through Arrow).
     return cand.where(F.expr(f"({anchor_sql}) = cell_key")) \
-               .select("__lid", "__lg", "__rid", "__rg")
+               .select(*lcols, *rcols)
 
 
 def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects",
@@ -344,7 +362,6 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
     from .crs import require_same_crs
     require_same_crs(left, right)  # analysis-time; untagged frames pass
 
-    need_dist = keep_distance or predicate == "dwithin"
     expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
 
     if broadcast_right is not False:
@@ -387,48 +404,63 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
                       "minx", "miny", "maxx", "maxy")
     cand = cell_candidate_pairs(l0, r0, gridsize, expand=expand,
                                 assume_left_points=assume_left_points)
+    return _refine_kernel(cand, left, right, predicate, left_id=left_id,
+                          right_id=right_id, distance=distance,
+                          keep_distance=keep_distance)
 
-    lid_t = dict(zip(left.schema.names, [f.dataType.simpleString() for f in left.schema.fields]))[left_id]
-    rid_t = dict(zip(right.schema.names, [f.dataType.simpleString() for f in right.schema.fields]))[right_id]
+
+def _refine_kernel(cand: DataFrame, left: DataFrame, right: DataFrame,
+                   predicate: str, *, left_id: str, right_id: str,
+                   distance: float | None, keep_distance: bool,
+                   right_geoms=None) -> DataFrame:
+    """The ONE Arrow refine kernel of sjoin_pairs' cell-join routes, over
+    `cell_candidate_pairs` output (anchor dedup already done JVM-side, so
+    batches carry only ids and geometries).  Left geometries decode from
+    WKB once per unique value per batch; right geometries likewise from
+    `__rg`, or — on the broadcast route — come from `right_geoms`, a
+    Spark broadcast of (rid -> index Series, parsed GeomArray), so
+    candidate rows carry only the right id.  The pair predicate is the
+    configured `refine_runner` (default `refine_pairs`), resolved here on
+    the driver; `dwithin` refines by pair distance instead."""
+    need_dist = keep_distance or predicate == "dwithin"
+    lid_t = left.schema[left_id].dataType.simpleString()
+    rid_t = right.schema[right_id].dataType.simpleString()
     out_right = right_id if right_id != left_id else right_id + "_2"
     out_schema = f"{left_id} {lid_t}, {out_right} {rid_t}"
     if need_dist:
         out_schema += ", distance double"
 
-    pred = predicate
-    dist_cap = distance
     from .conf import get_runner
     refine = get_runner("refine_runner", refine_pairs)  # driver-resolved
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # anchor dedup already happened JVM-side (cell_candidate_pairs);
-        # batches carry only (id, geom) per side
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             # unique-geometry decode per side
             lcodes, lu = pd.factorize(pdf["__lg"], use_na_sentinel=False)
-            rcodes, ru = pd.factorize(pdf["__rg"], use_na_sentinel=False)
             la = from_wkb(list(lu))
-            ra = from_wkb(list(ru))
             li = np.asarray(lcodes, dtype=np.int64)
-            ri = np.asarray(rcodes, dtype=np.int64)
-            if pred == "dwithin":
-                d = geom_pair_distance(la, ra, li, ri)
-                ok = d <= float(dist_cap)
-                out = pd.DataFrame({left_id: pdf["__lid"].to_numpy()[ok],
-                                    out_right: pdf["__rid"].to_numpy()[ok]})
-                if need_dist:
-                    out["distance"] = d[ok]
+            if right_geoms is None:
+                rcodes, ru = pd.factorize(pdf["__rg"], use_na_sentinel=False)
+                ra = from_wkb(list(ru))
+                ri = np.asarray(rcodes, dtype=np.int64)
             else:
-                ok = refine(la, ra, li, ri, pred)
-                out = pd.DataFrame({left_id: pdf["__lid"].to_numpy()[ok],
-                                    out_right: pdf["__rid"].to_numpy()[ok]})
-                if need_dist:
-                    out["distance"] = geom_pair_distance(la, ra, li[ok], ri[ok])
+                rid_map, ra = right_geoms.value
+                ri = rid_map.loc[pdf["__rid"]].to_numpy()
+            if predicate == "dwithin":
+                d = geom_pair_distance(la, ra, li, ri)
+                ok = d <= float(distance)
+            else:
+                ok = refine(la, ra, li, ri, predicate)
+            out = pd.DataFrame({left_id: pdf["__lid"].to_numpy()[ok],
+                                out_right: pdf["__rid"].to_numpy()[ok]})
+            if need_dist:
+                out["distance"] = d[ok] if predicate == "dwithin" else \
+                    geom_pair_distance(la, ra, li[ok], ri[ok])
             yield out
 
-    PATH_STATS["kernel_dist"] += 1
+    PATH_STATS["kernel_dist" if right_geoms is None else "kernel_bcast"] += 1
     return cand.mapInPandas(kernel, schema=out_schema)
 
 
@@ -442,16 +474,15 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
     """Small-right refine: right geometries (pre-collected under a byte cap
     by the caller) parsed once, broadcast as a GeomArray; candidates carry
     ids only."""
-    import pandas as _pd
-    need_dist = keep_distance or predicate == "dwithin"
     expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
     spark = left.sparkSession
+    lid_t = left.schema[left_id].dataType.simpleString()
+    rid_t = right.schema[right_id].dataType.simpleString()
 
     rids = np.array([r[0] for r in rows])
     ra = from_wkb([r[1] for r in rows])
     rb = np.array([[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64) \
         if rows else np.zeros((0, 4))
-    rid_to_idx = _pd.Series(np.arange(len(rids)), index=rids)
 
     # PREDICATE COMPILATION: point-left x rectangle-right evaluates fully
     # JVM-side (between-filters after the cell join — zero Python, full
@@ -495,8 +526,6 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
                 gridsize=gridsize, keep_distance=keep_distance)
         if left_is_points and poly_ok:
             PATH_STATS["jvm_polys_bcast"] += 1
-            rid_t = [f.dataType.simpleString() for f in right.schema.fields
-                     if f.name == right_id][0]
             return _points_vs_polygons_jvm(
                 spark, left, rids, ra, rb, left_id=left_id,
                 right_id=right_id, rid_t=rid_t, gridsize=gridsize,
@@ -521,10 +550,6 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
             left_is_lines = False
         if left_is_lines:
             PATH_STATS["jvm_segs_bcast"] += 1
-            lid_t = [f.dataType.simpleString() for f in left.schema.fields
-                     if f.name == left_id][0]
-            rid_t = [f.dataType.simpleString() for f in right.schema.fields
-                     if f.name == right_id][0]
             return _segments_vs_polygons_jvm(
                 spark, left, rids, ra, rb, r_rect, left_id=left_id,
                 right_id=right_id, rid_t=rid_t, lid_t=lid_t,
@@ -563,158 +588,28 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
             # such layers keep the kernel path, like the distributed
             # point-join's huge-right fallback)
             PATH_STATS["jvm_polys2_bcast"] += 1
-            lid_t = [f.dataType.simpleString() for f in left.schema.fields
-                     if f.name == left_id][0]
-            rid_t = [f.dataType.simpleString() for f in right.schema.fields
-                     if f.name == right_id][0]
             return _polys_vs_polys_jvm(
                 spark, left, rids, ra, rb, r_rect, left_id=left_id,
                 right_id=right_id, rid_t=rid_t, lid_t=lid_t,
                 gridsize=gridsize, left_max_cover=int(st["mc"]))
 
-    bc = spark.sparkContext.broadcast((rid_to_idx, ra))
-
-    g = float(gridsize)
-    # split rights by cell-cover size: huge-bbox rows would explode the
-    # cover table, so they join by a plain bbox condition instead
-    ncells_r = ((np.floor((rb[:, 2] + FALSE_EASTING) / g)
-                 - np.floor((rb[:, 0] + FALSE_EASTING) / g) + 1)
-                * (np.floor(rb[:, 3] / g) - np.floor(rb[:, 1] / g) + 1)) \
-        if len(rb) else np.zeros(0)
-    small_m = ncells_r <= MAX_COVER_CELLS
-    rb_s, rids_s = rb[small_m], rids[small_m]
-    rb_b, rids_b = rb[~small_m], rids[~small_m]
-
-    gi, keys = cover_cell_keys(rb_s[:, 0], rb_s[:, 1], rb_s[:, 2],
-                               rb_s[:, 3], gridsize,
-                               max_cells_per_geom=MAX_COVER_CELLS)
-    rcells = spark.createDataFrame(_pd.DataFrame({
-        "__rid": rids_s[gi] if len(gi) else rids_s[:0],
-        "cell_key": keys,
-        "__rminx": rb_s[gi, 0] if len(gi) else np.zeros(0),
-        "__rminy": rb_s[gi, 1] if len(gi) else np.zeros(0),
-        "__rmaxx": rb_s[gi, 2] if len(gi) else np.zeros(0),
-        "__rmaxy": rb_s[gi, 3] if len(gi) else np.zeros(0)}))
-
-    # left side: huge-bbox lefts take a bbox join vs ALL rights (no cells)
-    ncells_l_sql = (
-        f"((cast(floor((maxx + {expand} + {FALSE_EASTING}) / {g}) as bigint)"
-        f" - cast(floor((minx - {expand} + {FALSE_EASTING}) / {g}) as bigint) + 1)"
-        f" * (cast(floor((maxy + {expand}) / {g}) as bigint)"
-        f" - cast(floor((miny - {expand}) / {g}) as bigint) + 1))")
+    # Arrow kernel: the right enters the shared candidate generator as a
+    # driver-local (id, bbox) frame joined under broadcast; the kernel
+    # reads right geometries from the broadcast GeomArray, not from WKB
     l0 = left.select(F.col(left_id).alias("__lid"),
                      F.col("geometry").alias("__lg"),
                      "minx", "miny", "maxx", "maxy")
-    if assume_left_points and expand == 0.0:
-        # points cover exactly one cell — no big-left branch, no extra scan
-        l_small_b, l_big_b = l0, None
-    else:
-        l_small_b = l0.where(F.expr(f"{ncells_l_sql} <= {MAX_COVER_CELLS}"))
-        l_big_b = l0.where(F.expr(f"{ncells_l_sql} > {MAX_COVER_CELLS}"))
-
-    l = _cover_cells(l_small_b, gridsize, expand=expand, prefix="l_") \
-        .select("__lid", "__lg", "cell_key",
-                F.col("l_cminx").alias("__lminx"), F.col("l_cminy").alias("__lminy"),
-                F.col("l_cmaxx").alias("__lmaxx"), F.col("l_cmaxy").alias("__lmaxy"))
-    rc = F.broadcast(rcells)
-    cand = l.join(rc, (l["cell_key"] == rcells["cell_key"]) &
-                  (F.col("__lminx") <= F.col("__rmaxx")) &
-                  (F.col("__lmaxx") >= F.col("__rminx")) &
-                  (F.col("__lminy") <= F.col("__rmaxy")) &
-                  (F.col("__lmaxy") >= F.col("__rminy")), "inner") \
-        .drop(rcells["cell_key"]) \
-        .drop("__lmaxx", "__lmaxy", "__rmaxx", "__rmaxy")
-    cand = cand.select("__lid", "__lg", "__lminx", "__lminy",
-                       "__rid", "__rminx", "__rminy", "cell_key")
-
-    anchor_sql_b = (
-        f"cast(floor((greatest(__lminx, __rminx) + {FALSE_EASTING}) / {g}) "
-        f"as bigint) * {1 << Y_BITS}"
-        f" + cast(floor(greatest(__lminy, __rminy) / {g}) as bigint)")
-    extra = []
-    if len(rids_b):
-        rb_big_df = F.broadcast(spark.createDataFrame(_pd.DataFrame({
-            "__rid": rids_b, "__rbx0": rb_b[:, 0], "__rby0": rb_b[:, 1],
-            "__rbx1": rb_b[:, 2], "__rby1": rb_b[:, 3]})))
-        jb = l0.crossJoin(rb_big_df).where(
-            (F.col("__rbx0") <= F.col("maxx") + expand) &
-            (F.col("__rbx1") >= F.col("minx") - expand) &
-            (F.col("__rby0") <= F.col("maxy") + expand) &
-            (F.col("__rby1") >= F.col("miny") - expand))
-        extra.append(jb.select(
-            "__lid", "__lg",
-            (F.col("minx") - expand).alias("__lminx"),
-            (F.col("miny") - expand).alias("__lminy"),
-            "__rid", F.col("__rbx0").alias("__rminx"),
-            F.col("__rby0").alias("__rminy"))
-            .withColumn("cell_key", F.expr(anchor_sql_b)))
-    # big lefts vs SMALL rights only (big-right pairs already covered above)
-    if len(rids_s) and l_big_b is not None:
-        rs_df = F.broadcast(spark.createDataFrame(_pd.DataFrame({
-            "__rid": rids_s, "__rbx0": rb_s[:, 0], "__rby0": rb_s[:, 1],
-            "__rbx1": rb_s[:, 2], "__rby1": rb_s[:, 3]})))
-        jb2 = l_big_b.crossJoin(rs_df).where(
-            (F.col("__rbx0") <= F.col("maxx") + expand) &
-            (F.col("__rbx1") >= F.col("minx") - expand) &
-            (F.col("__rby0") <= F.col("maxy") + expand) &
-            (F.col("__rby1") >= F.col("miny") - expand))
-        extra.append(jb2.select(
-            "__lid", "__lg",
-            (F.col("minx") - expand).alias("__lminx"),
-            (F.col("miny") - expand).alias("__lminy"),
-            "__rid", F.col("__rbx0").alias("__rminx"),
-            F.col("__rby0").alias("__rminy"))
-            .withColumn("cell_key", F.expr(anchor_sql_b)))
-    for x in extra:
-        cand = cand.unionByName(x)
-
-    lid_t = dict(zip(left.schema.names,
-                     [f.dataType.simpleString() for f in left.schema.fields]))[left_id]
-    rid_t = dict(zip(right.schema.names,
-                     [f.dataType.simpleString() for f in right.schema.fields]))[right_id]
-    out_right = right_id if right_id != left_id else right_id + "_2"
-    out_schema = f"{left_id} {lid_t}, {out_right} {rid_t}"
-    if need_dist:
-        out_schema += ", distance double"
-
-    g = float(gridsize)
-    pred = predicate
-    dist_cap = distance
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rid_map, ra_b = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ax = np.maximum(pdf["__lminx"].to_numpy(), pdf["__rminx"].to_numpy())
-            ay = np.maximum(pdf["__lminy"].to_numpy(), pdf["__rminy"].to_numpy())
-            anchor = (np.floor((ax + FALSE_EASTING) / g).astype(np.int64)
-                      * np.int64(1 << Y_BITS)
-                      + np.floor(ay / g).astype(np.int64))
-            pdf = pdf.loc[anchor == pdf["cell_key"].to_numpy()]
-            if len(pdf) == 0:
-                continue
-            lcodes, lu = pd.factorize(pdf["__lg"], use_na_sentinel=False)
-            la = from_wkb(list(lu))
-            li = np.asarray(lcodes, dtype=np.int64)
-            ri = rid_map.loc[pdf["__rid"]].to_numpy()
-            if pred == "dwithin":
-                d = geom_pair_distance(la, ra_b, li, ri)
-                ok = d <= float(dist_cap)
-                out = pd.DataFrame({left_id: pdf["__lid"].to_numpy()[ok],
-                                    out_right: pdf["__rid"].to_numpy()[ok]})
-                if need_dist:
-                    out["distance"] = d[ok]
-            else:
-                ok = refine_pairs(la, ra_b, li, ri, pred)
-                out = pd.DataFrame({left_id: pdf["__lid"].to_numpy()[ok],
-                                    out_right: pdf["__rid"].to_numpy()[ok]})
-                if need_dist:
-                    out["distance"] = geom_pair_distance(la, ra_b, li[ok], ri[ok])
-            yield out
-
-    PATH_STATS["kernel_bcast"] += 1
-    return cand.mapInPandas(kernel, schema=out_schema)
+    r0 = spark.createDataFrame(pd.DataFrame({
+        "__rid": rids, "minx": rb[:, 0], "miny": rb[:, 1],
+        "maxx": rb[:, 2], "maxy": rb[:, 3]}))
+    cand = cell_candidate_pairs(l0, r0, gridsize, expand=expand,
+                                assume_left_points=assume_left_points,
+                                right_bounds=rb)
+    rid_to_idx = pd.Series(np.arange(len(rids)), index=rids)
+    return _refine_kernel(
+        cand, left, right, predicate, left_id=left_id, right_id=right_id,
+        distance=distance, keep_distance=keep_distance,
+        right_geoms=spark.sparkContext.broadcast((rid_to_idx, ra)))
 
 
 def _esz(E: str) -> str:
@@ -1233,22 +1128,22 @@ def _poly2_wanted(left: DataFrame) -> bool:
     """Routing dial for the compiled polygon x polygon composition:
     OPT-IN ONLY (config `use_jvm_poly2=True` or env `SGSPARK_POLY2=1`).
 
-    Measured round 5 (BENCH/BASELINE.md "negative result"): the Arrow
-    kernel beats the compiled composition at every tested configuration —
-    best-vs-best 5.4 s vs 11.9 s on 200k 6-edge lefts x 2k 6-edge rights,
-    and 2.8 s vs 48 s on 100k lefts x 1k 256-edge rights — with
-    pair-for-pair identical output.  Two structural causes: (a) candidate
-    amplification — the segment explode multiplies left rows by segments
-    and the K x K subcell refinement multiplies broadcast cover rows, so
-    the hash join streams segments x cover-rows row-pairs where the
-    kernel evaluates once per (geometry, geometry) pair with vectorized
-    numpy; (b) the match predicate lands in the BroadcastHashJoin's
-    RESIDUAL condition, whose generated code exceeds JIT method limits
-    for the seg-touch unroll tiers and silently evaluates interpreted.
-    The kernel's polygon x polygon refine is Arrow-vectorized columnar
-    batches (never per-row Python), so it is already the scalable
-    default; the compiled path stays as a verified-equal seam for
-    workloads where per-pair edge products dominate."""
+    Which side wins depends on the pair count (BENCH/BASELINE.md,
+    negative-result section, single runs on 4 cores, CPU-s cold/warm):
+    at 2k 8-gon lefts x 180 8-gon zones the composition costs 86/25
+    against the Arrow kernel's 22/8; at 50k x 1800 (0.88M pairs) it
+    costs 195/97 against 360/301.  Round 5 had measured the kernel ahead
+    at 200k x 2k 6-edge (5.4 s vs 11.9 s) and 100k x 1k 256-vertex rights
+    (2.8 s vs 48 s).  The composition pays for (a) candidate
+    amplification: the segment explode multiplies left rows by segments,
+    and the K x K subcell refinement multiplies broadcast cover rows; and
+    (b) a match predicate in the BroadcastHashJoin's RESIDUAL condition,
+    whose generated code exceeds JIT method limits for the seg-touch
+    unroll tiers and runs interpreted.  The kernel pays per pair in
+    Python: its general line/polygon `intersects` refine
+    (`predicates._intersects_pairs`) calls `_geom_geom_intersects` once
+    per candidate pair in a loop.  No size rule picks between the two
+    yet (ROADMAP.md)."""
     from .conf import config
     v = config.get("use_jvm_poly2")
     if v is not None:
@@ -1673,9 +1568,7 @@ def _tuned_gridsize(spark, g0: float, st, expand: float) -> float:
     per-zone cover stays bounded (avg extent / 8) and no zone exceeds
     MAX_COVER_CELLS (max extent / 32).  Never grows g beyond the caller's
     value; join results are gridsize-invariant, so tuning is semantics-
-    free.  SGSPARK_CELL_TUNE=0 disables (A/B kill switch)."""
-    if os.environ.get("SGSPARK_CELL_TUNE") == "0":
-        return g0
+    free."""
     try:
         nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -1801,8 +1694,7 @@ def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
             * ((st["mey"] + 2 * expand) / g + 2)) > MAX_COVER_CELLS:
         return None
     out_right = right_id if right_id != left_id else right_id + "_2"
-    rid_t = [f.dataType.simpleString() for f in right.schema.fields
-             if f.name == right_id][0]
+    rid_t = right.schema[right_id].dataType.simpleString()
 
     rect_fast = predicate != "dwithin"  # distance needs edges for ALL rows
 
@@ -2108,10 +2000,8 @@ def get_all_distances(left: DataFrame, right: DataFrame, *,
                     "minx", "miny", "maxx", "maxy")
     r = F.broadcast(right.select(F.col(right_id), F.col("geometry").alias("__rg")))
     cand = l.crossJoin(r)
-    lid_t = [f.dataType.simpleString() for f in left.schema.fields
-             if f.name == left_id][0]
-    rid_t = [f.dataType.simpleString() for f in right.schema.fields
-             if f.name == right_id][0]
+    lid_t = left.schema[left_id].dataType.simpleString()
+    rid_t = right.schema[right_id].dataType.simpleString()
 
     def kernel(batches):
         for pdf in batches:

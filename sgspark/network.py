@@ -1206,120 +1206,106 @@ class NetworkAnalysis:
         return nn.where(F.col("distance") <= tol) \
                  .select(out_id, F.col("neighbor_index").alias("node"))
 
-    # ---- log ----------------------------------------------------------
-    def _runlog(self, method: str, res_pdf, t0: float, *,
-                n_orig: int, n_dest, cost_col: str | None) -> None:
-        if not self._log_enabled:
-            return
+    # ---- runs + log ---------------------------------------------------
+    def _run(self, method: str, fn, origins: DataFrame,
+             destinations: DataFrame | None, *args, max_iter: int,
+             cost_col: str | None = "cost") -> DataFrame:
+        """Snap the inputs, run `fn(edges, o[, d], *args)` under the rules,
+        checkpoint the result and, when logging is on, append its log row
+        (reference _runlog).  The row's counts and cost statistics come
+        from ONE Spark aggregate; with logging off no job runs here beyond
+        the checkpoint."""
         import time as _time
-        import datetime as _dt
-        import pandas as _pd
-        row = {
-            "endtime": _dt.datetime.now().replace(microsecond=0),
-            "minutes_elapsed": round((_time.time() - t0) / 60, 3),
-            "method": method,
-            "origins_count": n_orig,
-            "destinations_count": n_dest,
-            "percent_missing": _pd.NA,
-            "cost_mean": _pd.NA,
-        }
-        if cost_col is not None and cost_col in res_pdf.columns:
-            col = res_pdf[cost_col]
-            row["percent_missing"] = float(col.isna().mean() * 100) \
-                if len(col) else 100.0
-            row["cost_mean"] = float(col.mean()) if col.notna().any() \
-                else _pd.NA
-        if self.detailed_log:
-            for k, v in vars(self.rules).items():
-                if not k.startswith("_"):
-                    row[k] = v
-        self.log = _pd.concat([self.log, _pd.DataFrame([row])],
-                              ignore_index=True)
-
-    # ---- analyses ------------------------------------------------------
-    def _od_inputs(self, origins, destinations):
+        t0 = _time.time()
         e = self._edges()
         o = self._snap(origins, e, origins.columns[0], "oid")
         d = self._snap(destinations, e, destinations.columns[0], "did") \
             if destinations is not None else None
-        return e, o, d
+        out = fn(e, o, *([] if d is None else [d]), *args,
+                 weight=self.rules.weight, directed=self.rules.directed,
+                 max_iter=max_iter).localCheckpoint()
+        if self._log_enabled:
+            self._log_row(method, t0, out, o, d, cost_col)
+        return out
 
+    def _log_row(self, method: str, t0: float, out: DataFrame,
+                 o: DataFrame, d: DataFrame | None,
+                 cost_col: str | None) -> None:
+        import time as _time
+        import datetime as _dt
+        import pandas as _pd
+        nul = F.lit(None).cast("double")
+        has_cost = cost_col is not None and cost_col in out.columns
+        rows = out.select(F.lit(0).alias("k"), (
+            F.col(cost_col).cast("double") if has_cost else nul).alias("c"))
+        for k, side in ((1, o), (2, d)):
+            if side is not None:
+                rows = rows.unionByName(
+                    side.select(F.lit(k).alias("k"), nul.alias("c")))
+        k, c = F.col("k"), F.col("c")
+        res = k == 0
+        miss = res & (c.isNull() | F.isnan(c))
+        st = rows.agg(*[F.sum(x.cast("long")).alias(a) for x, a in (
+            (res, "n"), (k == 1, "n_orig"), (k == 2, "n_dest"),
+            (miss, "miss"))],
+            F.avg(F.when(res & ~miss, c)).alias("mean")).first()
+        n = int(st["n"] or 0)
+        row = {
+            "endtime": _dt.datetime.now().replace(microsecond=0),
+            "minutes_elapsed": round((_time.time() - t0) / 60, 3),
+            "method": method,
+            "origins_count": int(st["n_orig"] or 0),
+            "destinations_count": None if d is None
+            else int(st["n_dest"] or 0),
+            "percent_missing": _pd.NA,
+            "cost_mean": _pd.NA,
+        }
+        if has_cost:
+            row["percent_missing"] = float(st["miss"] / n * 100) if n \
+                else 100.0
+            row["cost_mean"] = float(st["mean"]) \
+                if st["mean"] is not None else _pd.NA
+        if self.detailed_log:
+            for key, v in vars(self.rules).items():
+                if not key.startswith("_"):
+                    row[key] = v
+        self.log = _pd.concat([self.log, _pd.DataFrame([row])],
+                              ignore_index=True)
+
+    # ---- analyses ------------------------------------------------------
     def od_cost_matrix(self, origins: DataFrame, destinations: DataFrame,
                        *, max_iter: int = 50) -> DataFrame:
-        import time as _time
-        t0 = _time.time()
-        e, o, d = self._od_inputs(origins, destinations)
-        out = od_cost_matrix(e, o, d, weight=self.rules.weight,
-                             directed=self.rules.directed,
-                             max_iter=max_iter).localCheckpoint()
-        self._runlog("od_cost_matrix", out.toPandas(), t0,
-                     n_orig=o.count(), n_dest=d.count(), cost_col="cost")
-        return out
+        return self._run("od_cost_matrix", od_cost_matrix, origins,
+                         destinations, max_iter=max_iter)
 
     def get_route(self, origins: DataFrame, destinations: DataFrame,
                   *, max_iter: int = 50) -> DataFrame:
-        import time as _time
-        t0 = _time.time()
-        e, o, d = self._od_inputs(origins, destinations)
-        out = get_route(e, o, d, weight=self.rules.weight,
-                        directed=self.rules.directed,
-                        max_iter=max_iter).localCheckpoint()
-        self._runlog("get_route", out.toPandas(), t0,
-                     n_orig=o.count(), n_dest=d.count(), cost_col="cost")
-        return out
+        return self._run("get_route", get_route, origins, destinations,
+                         max_iter=max_iter)
 
     def get_k_routes(self, origins: DataFrame, destinations: DataFrame,
                      *, k: int = 3, drop_middle_percent: int = 0,
                      max_iter: int = 50) -> DataFrame:
-        import time as _time
-        t0 = _time.time()
-        e, o, d = self._od_inputs(origins, destinations)
-        out = get_k_routes(e, o, d, int(k), weight=self.rules.weight,
-                           directed=self.rules.directed,
-                           max_iter=max_iter).localCheckpoint()
-        self._runlog("get_k_routes", out.toPandas(), t0,
-                     n_orig=o.count(), n_dest=d.count(), cost_col="cost")
-        return out
+        return self._run("get_k_routes", get_k_routes, origins,
+                         destinations, int(k), max_iter=max_iter)
 
     def get_route_frequencies(self, origins: DataFrame,
                               destinations: DataFrame, *,
                               max_iter: int = 50) -> DataFrame:
-        import time as _time
-        t0 = _time.time()
-        e, o, d = self._od_inputs(origins, destinations)
-        out = get_route_frequencies(
-            e, o, d, weight=self.rules.weight,
-            directed=self.rules.directed,
-            max_iter=max_iter).localCheckpoint()
-        self._runlog("get_route_frequencies", out.toPandas(), t0,
-                     n_orig=o.count(), n_dest=d.count(), cost_col=None)
-        return out
+        return self._run("get_route_frequencies", get_route_frequencies,
+                         origins, destinations, max_iter=max_iter,
+                         cost_col=None)
 
     def service_area(self, origins: DataFrame, breaks: float, *,
                      max_iter: int = 50) -> DataFrame:
-        import time as _time
-        t0 = _time.time()
-        e, o, _ = self._od_inputs(origins, None)
-        out = service_area_nodes(e, o, float(breaks),
-                                 weight=self.rules.weight,
-                                 directed=self.rules.directed,
-                                 max_iter=max_iter).localCheckpoint()
-        self._runlog("service_area", out.toPandas(), t0,
-                     n_orig=o.count(), n_dest=None, cost_col="cost")
-        return out
+        return self._run("service_area", service_area_nodes, origins, None,
+                         float(breaks), max_iter=max_iter)
 
     def precice_service_area(self, origins: DataFrame, breaks: float, *,
                              max_iter: int = 50) -> DataFrame:
-        import time as _time
-        t0 = _time.time()
-        e, o, _ = self._od_inputs(origins, None)
-        out = service_area_edges(e, o, float(breaks),
-                                 weight=self.rules.weight,
-                                 directed=self.rules.directed,
-                                 max_iter=max_iter).localCheckpoint()
-        self._runlog("precice_service_area", out.toPandas(), t0,
-                     n_orig=o.count(), n_dest=None, cost_col=None)
-        return out
+        return self._run("precice_service_area", service_area_edges,
+                         origins, None, float(breaks), max_iter=max_iter,
+                         cost_col=None)
 
     def __repr__(self) -> str:
         return (f"NetworkAnalysis(weight={self.rules.weight!r}, "

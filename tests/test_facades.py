@@ -131,6 +131,30 @@ class TestNetworkAnalysisFacade:
         nwa.rules.weight = "length"  # unchanged -> still cached
         assert nwa._edges() is nwa._edges()
 
+    def test_log_off_pulls_no_result(self, spark, monkeypatch):
+        """log=False computes no log statistics, so no method brings its
+        result to the driver."""
+        from sgspark.io import wkt_to_wkb_df
+        from sgspark.network import NetworkAnalysis
+        lines = wkt_to_wkb_df(spark.createDataFrame(
+            [(1, "LINESTRING (0 0, 10 0)"), (2, "LINESTRING (10 0, 20 0)")],
+            "lid int, geometry_wkt string"))
+        nwa = NetworkAnalysis(lines, {"weight": "length"}, log=False)
+        origins = spark.createDataFrame([(1, "0.0_0.0")], ["oid", "node"])
+        dests = spark.createDataFrame([(1, "20.0_0.0")], ["did", "node"])
+
+        def no_pull(self):
+            raise AssertionError("toPandas ran with log=False")
+
+        # the concrete DataFrame class (pyspark.sql.DataFrame is its base)
+        monkeypatch.setattr(type(origins), "toPandas", no_pull)
+        od = nwa.od_cost_matrix(origins, dests)
+        sa = nwa.service_area(origins, 15.0)
+        monkeypatch.undo()
+        assert [r.cost for r in od.collect()] == [20.0]
+        assert sa.count() >= 2
+        assert len(nwa.log) == 0
+
     def test_snapping_with_tolerance(self, spark):
         from sgspark.io import wkt_to_wkb_df
         from sgspark.network import NetworkAnalysis

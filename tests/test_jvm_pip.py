@@ -421,10 +421,10 @@ def test_concave_zone_variant_paths_agree(spark, monkeypatch):
         jvm = pair_set(sjoin_pairs(
             pts, zones, "within", left_id="doc_index", right_id="zone_id",
             broadcast_right=False, assume_left_points=True))
-    monkeypatch.setenv("SGSPARK_DISABLE_JVM_PIP", "1")
-    kern = pair_set(sjoin_pairs(
-        pts, zones, "within", left_id="doc_index", right_id="zone_id",
-        broadcast_right=False, assume_left_points=True))
+    with config_override(use_jvm_pip=False):
+        kern = pair_set(sjoin_pairs(
+            pts, zones, "within", left_id="doc_index", right_id="zone_id",
+            broadcast_right=False, assume_left_points=True))
     assert jvm == kern and len(jvm) > 0
     zones.unpersist()
     geo.unpersist()

@@ -199,8 +199,9 @@ def test_huge_bbox_rows_routed(spark):
                                  broadcast_right=bcast).collect())
         assert got == want, (bcast, got)
     # huge LEFT geometry too
-    got2 = sorted((x.zid, x.pid) for x in
-                  sjoin_pairs(r, l, "intersects", left_id="zid",
-                              right_id="pid", gridsize=1.0,
-                              broadcast_right=False).collect())
-    assert got2 == [(0, 0), (0, 1), (1, 0)]
+    for bcast in (False, True):
+        got2 = sorted((x.zid, x.pid) for x in
+                      sjoin_pairs(r, l, "intersects", left_id="zid",
+                                  right_id="pid", gridsize=1.0,
+                                  broadcast_right=bcast).collect())
+        assert got2 == [(0, 0), (0, 1), (1, 0)], (bcast, got2)

@@ -366,6 +366,33 @@ class TestConfigSeam:
             sup = run()
         assert real <= sup and len(sup) > len(real)
 
+        # polygon lefts on the default (broadcast) route: the runner is
+        # honoured there too
+        import pandas as pd
+        from sgspark.io import wkt_to_wkb_df
+        from sgspark.joins import PATH_STATS
+        xy = pts.select("pid", "minx", "miny").toPandas()
+        sq = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
+            "pid": xy.pid,
+            "geometry_wkt": [
+                f"POLYGON (({x - .1!r} {y - .1!r}, {x + .1!r} {y - .1!r}, "
+                f"{x + .1!r} {y + .1!r}, {x - .1!r} {y + .1!r}, "
+                f"{x - .1!r} {y - .1!r}))" for x, y in zip(xy.minx, xy.miny)]})))
+
+        def run_polys():
+            return pair_set(sjoin_pairs(
+                sq, zones, "intersects", left_id="pid", right_id="zid",
+                gridsize=7.0))
+
+        before = PATH_STATS["kernel_bcast"]
+        real = run_polys()
+        assert PATH_STATS["kernel_bcast"] == before + 1
+        with config_override(refine_runner=none_pass):
+            assert run_polys() == set()
+        with config_override(refine_runner=all_pass):
+            sup = run_polys()
+        assert real <= sup and len(sup) > len(real)
+
     def test_union_runner_override(self, spark):
         """The configured union_runner replaces the dissolve union: a
         first-blob runner makes multi-row groups dissolve to their first
@@ -458,11 +485,6 @@ class TestTunedGridsize:
         assert g == 2000.0  # floor (16000/8=2000) == caller value
         st2 = self._st(aex=17_600.0, aey=17_600.0)
         assert _tuned_gridsize(spark, 2000.0, st2, 0.0) == 2000.0  # capped
-
-    def test_kill_switch(self, spark, monkeypatch):
-        from sgspark.joins import _tuned_gridsize
-        monkeypatch.setenv("SGSPARK_CELL_TUNE", "0")
-        assert _tuned_gridsize(spark, 2000.0, self._st(), 0.0) == 2000.0
 
     def test_degenerate_stats_keep_caller_value(self, spark):
         from sgspark.joins import _tuned_gridsize

@@ -81,12 +81,25 @@ def main():
                      "chained-vertex PIP residual (no Python on the "
                      "pair path)", cap(pip_ngon)))
 
-    # fused overlay intersection: ONE Arrow kernel after the cell equi-join
-    from sgspark.overlay import _intersection_rows
     z = zones.select(F.col("zone_id"), "geometry", "minx", "miny",
                      "maxx", "maxy")
     a = z.where("zone_id % 2 = 0").withColumnRenamed("zone_id", "aid")
     b = z.where("zone_id % 2 = 1").withColumnRenamed("zone_id", "bid")
+
+    # polygon lefts x a small polygon right: the broadcast Arrow route —
+    # right bboxes broadcast into the cell join, anchor dedup JVM-side,
+    # right geometries read from the broadcast GeomArray in the kernel
+    ng = wkt_to_wkb_df(zones_from_customer(spark, SF, shape="ngon8"))
+    pp = sjoin_pairs(ng.where("zone_id % 2 = 0"), ng.where("zone_id % 2 = 1"),
+                     "intersects", left_id="zone_id", right_id="zone_id")
+    sections.append(("polygon x polygon sjoin, broadcast Arrow route — "
+                     "left cover-cell explode BroadcastHashJoin'd against "
+                     "the driver-built right cover (no left Exchange), "
+                     "JVM anchor dedup, ONE MapInPandas refine",
+                     cap(pp)))
+
+    # fused overlay intersection: ONE Arrow kernel after the cell equi-join
+    from sgspark.overlay import _intersection_rows
     inter = _intersection_rows(a, b, "aid", "bid", 2000.0)
     sections.append(("overlay intersection — FUSED plan: cover-cell "
                      "equi-join (JVM, bbox join filter) feeding ONE "
