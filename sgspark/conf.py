@@ -17,11 +17,6 @@ Keys:
                    joins.PIP_COMPILED_MIN_PAIRS (or the left row count is
                    unknown), else the Arrow-kernel refine; the broadcast
                    compiled routes stay on.
-  use_jvm_poly2    True force the compiled polygon x polygon
-                   `intersects` composition (verified equal to the
-                   kernel but measured slower — see joins._poly2_wanted);
-                   None/False (default) keep the Arrow kernel, or defer
-                   to `SGSPARK_POLY2=1`.
   refine_runner    callable(la, ra, li, ri, predicate) -> bool ndarray —
                    replaces the pair-refine kernel (reference
                    RTreeQueryRunner.query seam, runners.py:160-200).
@@ -37,14 +32,13 @@ from typing import Any, Callable, Iterator
 
 config: dict[str, Any] = {
     "use_jvm_pip": None,
-    "use_jvm_poly2": None,
     "refine_runner": None,
     "union_runner": None,
 }
 
 
 def jvm_pip_enabled() -> bool:
-    """The compiled point/segment x polygon route gate: off only when
+    """The compiled point x polygon route gate: off only when
     `use_jvm_pip` is False."""
     return config.get("use_jvm_pip") is not False
 

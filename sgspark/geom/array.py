@@ -110,15 +110,15 @@ class GeomArray:
         new_geom_offsets = np.zeros(len(idx) + 1, dtype=np.int64)
         np.cumsum(parts_per[idx], out=new_geom_offsets[1:])
         # expand part indices
-        part_idx = _expand_ranges(self.geom_offsets[idx], self.geom_offsets[idx + 1])
+        part_idx, _ = expand_ranges(self.geom_offsets[idx], self.geom_offsets[idx + 1])
         rings_per = np.diff(self.part_offsets)
         new_part_offsets = np.zeros(len(part_idx) + 1, dtype=np.int64)
         np.cumsum(rings_per[part_idx], out=new_part_offsets[1:])
-        ring_idx = _expand_ranges(self.part_offsets[part_idx], self.part_offsets[part_idx + 1])
+        ring_idx, _ = expand_ranges(self.part_offsets[part_idx], self.part_offsets[part_idx + 1])
         pts_per = np.diff(self.ring_offsets)
         new_ring_offsets = np.zeros(len(ring_idx) + 1, dtype=np.int64)
         np.cumsum(pts_per[ring_idx], out=new_ring_offsets[1:])
-        coord_idx = _expand_ranges(self.ring_offsets[ring_idx], self.ring_offsets[ring_idx + 1])
+        coord_idx, _ = expand_ranges(self.ring_offsets[ring_idx], self.ring_offsets[ring_idx + 1])
         return GeomArray(kinds, self.coords[coord_idx], new_ring_offsets,
                          new_part_offsets, new_geom_offsets)
 
@@ -153,11 +153,7 @@ class GeomArray:
         return self.ring_offsets[fr]
 
     def coords_count_per_geom(self) -> np.ndarray:
-        starts = self.coords_start_per_geom()
-        ends = np.empty_like(starts)
-        ends[:-1] = starts[1:]
-        ends[-1] = len(self.coords)
-        return ends - starts
+        return np.diff(self.coords_start_per_geom(), append=len(self.coords))
 
     def area(self) -> np.ndarray:
         """Signed-magnitude shoelace area per geometry (holes subtract)."""
@@ -273,18 +269,16 @@ class GeomArray:
         return part_geom[ring_part]
 
 
-def _expand_ranges(starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
-    """Concatenate [s,e) ranges into one index array, vectorized."""
-    lens = ends - starts
-    total = int(lens.sum())
-    if total == 0:
-        return np.zeros(0, dtype=np.int64)
-    out = np.ones(total, dtype=np.int64)
-    pos = np.zeros(len(starts) + 1, dtype=np.int64)
-    np.cumsum(lens, out=pos[1:])
-    out[pos[:-1]] = starts
-    out[pos[1:-1]] -= starts[:-1] + lens[:-1] - 1
-    return np.cumsum(out)
+def expand_ranges(starts: np.ndarray, ends: np.ndarray
+                  ) -> tuple[np.ndarray, np.ndarray]:
+    """(flat, owner): the [starts[i], ends[i]) ranges concatenated into one
+    index array, and for each entry the i it came from.  Empty ranges
+    contribute nothing."""
+    starts = np.asarray(starts, dtype=np.int64)
+    lens = np.asarray(ends, dtype=np.int64) - starts
+    owner = np.repeat(np.arange(len(starts), dtype=np.int64), lens)
+    first = np.cumsum(lens) - lens  # output position of each range's start
+    return np.arange(len(owner), dtype=np.int64) + (starts - first)[owner], owner
 
 
 # ---------------------------------------------------------------------- #

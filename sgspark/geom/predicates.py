@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .array import (FAMILY_OF, GeomArray)
+from .array import FAMILY_OF, GeomArray, expand_ranges
 
 
 # ---------------------------------------------------------------------- #
@@ -159,22 +159,6 @@ def points_segments_min_dist(px, py, chain: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------- #
 # fully-vectorized pair kernels (no per-geometry python loop)
 # ---------------------------------------------------------------------- #
-def _expand(starts: np.ndarray, ends: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(flat_index, owner) arrays concatenating [s,e) ranges."""
-    lens = ends - starts
-    total = int(lens.sum())
-    owner = np.repeat(np.arange(len(starts), dtype=np.int64), lens)
-    if total == 0:
-        return np.zeros(0, dtype=np.int64), owner
-    out = np.ones(total, dtype=np.int64)
-    pos = np.zeros(len(starts) + 1, dtype=np.int64)
-    np.cumsum(lens, out=pos[1:])
-    out[pos[:-1]] = starts
-    nz = pos[1:-1]
-    out[nz] -= starts[:-1] + lens[:-1] - 1
-    return np.cumsum(out), owner
-
-
 def pip_pairs_vectorized(px: np.ndarray, py: np.ndarray, ra: GeomArray,
                          ri: np.ndarray) -> np.ndarray:
     """Crossing-number PIP for k candidate pairs (point[k] vs ra[ri[k]]),
@@ -189,7 +173,7 @@ def pip_pairs_vectorized(px: np.ndarray, py: np.ndarray, ra: GeomArray,
     gcount = ra.coords_count_per_geom()
     cstart = gstart[ri]
     cend = cstart + gcount[ri]
-    flat, owner = _expand(cstart, cend - 1)  # edges = consecutive coord pairs
+    flat, owner = expand_ranges(cstart, cend - 1)  # edge = coord pair
     if len(flat) == 0:
         return np.zeros(len(ri), dtype=bool)
     x1 = ra.coords[flat, 0]
@@ -242,7 +226,7 @@ def point_geom_distance_vectorized(px: np.ndarray, py: np.ndarray,
         idx = np.nonzero(multi)[0]
         cstart = gstart[ri[idx]]
         cend = cstart + gcount[ri[idx]]
-        flat, owner = _expand(cstart, cend - 1)
+        flat, owner = expand_ranges(cstart, cend - 1)
         ring_starts = ra.ring_offsets[:-1]
         is_ring_start = np.zeros(len(ra.coords) + 1, dtype=bool)
         is_ring_start[ring_starts] = True
@@ -390,10 +374,111 @@ def _intersects_pairs(la, ra, li, ri) -> np.ndarray:
                       (np.minimum(lb[li[i], 3], rb[ri[i], 3]) >=
                        np.maximum(lb[li[i], 1], rb[ri[i], 1])))
             hard_mask = hard_mask & ~rr
-    # general path: per-pair geometry test (line/polygon lefts)
-    for k in np.nonzero(hard_mask)[0].tolist():
-        out[k] = _geom_geom_intersects(la, int(li[k]), ra, int(ri[k]))
+    if hard_mask.any():
+        i = np.nonzero(hard_mask)[0]
+        out[i] = _general_intersects(la, ra, li[i], ri[i])
     return out
+
+
+# Upper bound on the entries of one expansion in `_general_intersects`
+# (pair x edge and edge x edge): its arrays cost ~110 bytes per entry, so
+# a full chunk peaks at ~28 MB per Python worker.
+MAX_EDGE_PAIRS = 1 << 18
+
+
+def _edge_table(ga: GeomArray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(a, b, off): edge k runs from coords[a[k]] to coords[b[k]], and the
+    edges of geometry g are off[g]:off[g + 1].  A 1-coordinate ring (a
+    point or a multipoint member) is one degenerate (P, P) edge."""
+    n = np.diff(ga.ring_offsets)
+    cnt = np.where(n >= 2, n - 1, n)
+    a, ring = expand_ranges(ga.ring_offsets[:-1], ga.ring_offsets[:-1] + cnt)
+    ring_off = np.concatenate(([0], np.cumsum(cnt)))
+    return a, a + (n[ring] >= 2), ring_off[ga.part_offsets[ga.geom_offsets]]
+
+
+def _general_intersects(la: GeomArray, ra: GeomArray, li: np.ndarray,
+                        ri: np.ndarray) -> np.ndarray:
+    """Exact `intersects` for pairs of any families, batched: A meets B iff
+    an edge of A touches an edge of B, or, with no touching edges, the
+    first vertex of some part of one lies in the other (a polygon).
+    Pairs run in chunks whose unfiltered edge expansion stays within
+    MAX_EDGE_PAIRS; a pair above the bound runs alone."""
+    ledges, redges = _edge_table(la), _edge_table(ra)
+    lbox, rbox = la.bounds(), ra.bounds()
+    nl = np.diff(ledges[2])[li]
+    nr = np.diff(redges[2])[ri]
+    cum = np.cumsum(np.maximum(nl * nr, nl + nr))
+    out = np.zeros(len(li), dtype=bool)
+    s = 0
+    while s < len(li):
+        base = cum[s - 1] if s else 0
+        e = max(int(np.searchsorted(cum, base + MAX_EDGE_PAIRS, "right")),
+                s + 1)
+        l, r = li[s:e], ri[s:e]
+        hit = _edges_touch(la, ledges, l, rbox[r], ra, redges, r, lbox[l])
+        for ga, g, other, og in ((la, l, ra, r), (ra, r, la, l)):
+            probe = ~hit & np.isin(other.kinds[og], (3, 6))
+            if probe.any():
+                hit[probe] = _part_heads_inside(ga, g[probe], other, og[probe])
+        out[s:e] = hit
+        s = e
+    return out
+
+
+def _edges_near(ga, edges, g, box):
+    """(pair, edge) for the edges of ga[g[k]] whose bbox meets box[k]."""
+    a, b, off = edges
+    e, pair = expand_ranges(off[g], off[g + 1])
+    x1, y1 = ga.coords[a[e], 0], ga.coords[a[e], 1]
+    x2, y2 = ga.coords[b[e], 0], ga.coords[b[e], 1]
+    keep = ((np.minimum(x1, x2) <= box[pair, 2])
+            & (np.maximum(x1, x2) >= box[pair, 0])
+            & (np.minimum(y1, y2) <= box[pair, 3])
+            & (np.maximum(y1, y2) >= box[pair, 1]))
+    return pair[keep], e[keep]
+
+
+def _edges_touch(la, ledges, li, lnear, ra, redges, ri, rnear) -> np.ndarray:
+    """bool[k]: some edge of la[li[k]] touches some edge of ra[ri[k]] —
+    `_seg_seg_touch` over the (pair x near left edge x near right edge)
+    expansion."""
+    lp, lx = _edges_near(la, ledges, li, lnear)
+    rp, rx = _edges_near(ra, redges, ri, rnear)
+    cnt = np.bincount(rp, minlength=len(li))
+    first = np.cumsum(cnt) - cnt
+    j, k = expand_ranges(first[lp], first[lp] + cnt[lp])
+    pair, lx, rx = lp[k], lx[k], rx[j]
+    p1, p2 = la.coords[ledges[0][lx]], la.coords[ledges[1][lx]]
+    p3, p4 = ra.coords[redges[0][rx]], ra.coords[redges[1][rx]]
+    d1 = _orient(p3[:, 0], p3[:, 1], p4[:, 0], p4[:, 1], p1[:, 0], p1[:, 1])
+    d2 = _orient(p3[:, 0], p3[:, 1], p4[:, 0], p4[:, 1], p2[:, 0], p2[:, 1])
+    d3 = _orient(p1[:, 0], p1[:, 1], p2[:, 0], p2[:, 1], p3[:, 0], p3[:, 1])
+    d4 = _orient(p1[:, 0], p1[:, 1], p2[:, 0], p2[:, 1], p4[:, 0], p4[:, 1])
+    touch = ((((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)))
+             | ((d1 == 0) & _on_segs(p3, p4, p1))
+             | ((d2 == 0) & _on_segs(p3, p4, p2))
+             | ((d3 == 0) & _on_segs(p1, p2, p3))
+             | ((d4 == 0) & _on_segs(p1, p2, p4)))
+    return np.bincount(pair[touch], minlength=len(li)) > 0
+
+
+def _on_segs(p, q, r) -> np.ndarray:
+    """Vectorized `_on_seg`: r lies in the bbox of segment (p, q)."""
+    return ((np.minimum(p[:, 0], q[:, 0]) <= r[:, 0])
+            & (r[:, 0] <= np.maximum(p[:, 0], q[:, 0]))
+            & (np.minimum(p[:, 1], q[:, 1]) <= r[:, 1])
+            & (r[:, 1] <= np.maximum(p[:, 1], q[:, 1])))
+
+
+def _part_heads_inside(ga, g, poly, pg) -> np.ndarray:
+    """bool[k]: the first vertex of some part of ga[g[k]] lies in (or on)
+    polygon poly[pg[k]]."""
+    part, k = expand_ranges(ga.geom_offsets[g], ga.geom_offsets[g + 1])
+    head = ga.ring_offsets[ga.part_offsets[part]]
+    inside = pip_pairs_vectorized(ga.coords[head, 0], ga.coords[head, 1],
+                                  poly, pg[k])
+    return np.bincount(k[inside], minlength=len(g)) > 0
 
 
 def rect_flags(ga: GeomArray) -> tuple[np.ndarray, np.ndarray]:
@@ -441,6 +526,8 @@ def convex_flags(ga: GeomArray) -> np.ndarray:
 
 
 def _geom_geom_intersects(la, lg, ra, rg) -> bool:
+    """Per-pair `intersects`: the reference the tests hold
+    `_general_intersects` to."""
     lfam = FAMILY_OF.get(int(la.kinds[lg]), "point")
     rfam = FAMILY_OF.get(int(ra.kinds[rg]), "point")
     lchains = la.rings_of_geom(lg)
@@ -452,14 +539,16 @@ def _geom_geom_intersects(la, lg, ra, rg) -> bool:
         for b in rchains:
             if len(a) >= 2 and len(b) >= 2 and segments_intersect_any(a, b):
                 return True
-    # containment without crossing
+    # containment without crossing: the first vertex of every part
     if rfam == "polygon":
-        a0 = lchains[0][:1]
-        if points_in_polygon_geom(a0[:, 0], a0[:, 1], ra, rg)[0]:
+        a0 = la.coords[la.ring_offsets[la.part_offsets[
+            la.geom_offsets[lg]:la.geom_offsets[lg + 1]]]]
+        if points_in_polygon_geom(a0[:, 0], a0[:, 1], ra, rg).any():
             return True
     if lfam == "polygon":
-        b0 = rchains[0][:1]
-        if points_in_polygon_geom(b0[:, 0], b0[:, 1], la, lg)[0]:
+        b0 = ra.coords[ra.ring_offsets[ra.part_offsets[
+            ra.geom_offsets[rg]:ra.geom_offsets[rg + 1]]]]
+        if points_in_polygon_geom(b0[:, 0], b0[:, 1], la, lg).any():
             return True
     if lfam == "point" or rfam == "point":
         # point vs line/point handled by distance==0

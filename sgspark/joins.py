@@ -27,8 +27,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -343,8 +341,7 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
                 distance: float | None = None, gridsize: float = DEFAULT_GRIDSIZE,
                 keep_distance: bool = False,
                 broadcast_right: bool | None = None,
-                assume_left_points: bool | None = None,
-                assume_left_lines: bool | None = None) -> DataFrame:
+                assume_left_points: bool | None = None) -> DataFrame:
     """Candidate generation + refine.  Inputs must carry
     (id, geometry WKB, minx, miny, maxx, maxy); ids must be unique.
 
@@ -377,8 +374,7 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
                                           distance=distance,
                                           gridsize=gridsize,
                                           keep_distance=keep_distance,
-                                          assume_left_points=assume_left_points,
-                                          assume_left_lines=assume_left_lines)
+                                          assume_left_points=assume_left_points)
 
     from .conf import config, jvm_pip_enabled
     if assume_left_points and (
@@ -409,6 +405,17 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
                           keep_distance=keep_distance)
 
 
+def _pairs_schema(left: DataFrame, right: DataFrame, left_id: str,
+                  right_id: str, need_dist: bool) -> str:
+    """DDL of sjoin_pairs' output: (left_id, right_id or right_id_2 on a
+    self-named join, distance double when kept)."""
+    lid_t = left.schema[left_id].dataType.simpleString()
+    rid_t = right.schema[right_id].dataType.simpleString()
+    out_right = right_id if right_id != left_id else right_id + "_2"
+    return (f"{left_id} {lid_t}, {out_right} {rid_t}"
+            + (", distance double" if need_dist else ""))
+
+
 def _refine_kernel(cand: DataFrame, left: DataFrame, right: DataFrame,
                    predicate: str, *, left_id: str, right_id: str,
                    distance: float | None, keep_distance: bool,
@@ -423,12 +430,8 @@ def _refine_kernel(cand: DataFrame, left: DataFrame, right: DataFrame,
     configured `refine_runner` (default `refine_pairs`), resolved here on
     the driver; `dwithin` refines by pair distance instead."""
     need_dist = keep_distance or predicate == "dwithin"
-    lid_t = left.schema[left_id].dataType.simpleString()
-    rid_t = right.schema[right_id].dataType.simpleString()
     out_right = right_id if right_id != left_id else right_id + "_2"
-    out_schema = f"{left_id} {lid_t}, {out_right} {rid_t}"
-    if need_dist:
-        out_schema += ", distance double"
+    out_schema = _pairs_schema(left, right, left_id, right_id, need_dist)
 
     from .conf import get_runner
     refine = get_runner("refine_runner", refine_pairs)  # driver-resolved
@@ -468,21 +471,21 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
                            rows: list, *, left_id: str, right_id: str,
                            distance: float | None, gridsize: float,
                            keep_distance: bool,
-                           assume_left_points: bool | None = None,
-                           assume_left_lines: bool | None = None
+                           assume_left_points: bool | None = None
                            ) -> DataFrame:
     """Small-right refine: right geometries (pre-collected under a byte cap
     by the caller) parsed once, broadcast as a GeomArray; candidates carry
     ids only."""
     expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
     spark = left.sparkSession
-    lid_t = left.schema[left_id].dataType.simpleString()
+    if not rows:  # empty right layer: no pairs, no job
+        return spark.createDataFrame([], _pairs_schema(
+            left, right, left_id, right_id,
+            keep_distance or predicate == "dwithin"))
     rid_t = right.schema[right_id].dataType.simpleString()
-
     rids = np.array([r[0] for r in rows])
     ra = from_wkb([r[1] for r in rows])
-    rb = np.array([[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64) \
-        if rows else np.zeros((0, 4))
+    rb = np.array([[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64)
 
     # PREDICATE COMPILATION: point-left x rectangle-right evaluates fully
     # JVM-side (between-filters after the cell join — zero Python, full
@@ -495,15 +498,14 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
     _nc = ((np.floor((rb[:, 2] + _exp0 + FALSE_EASTING) / _g0)
             - np.floor((rb[:, 0] - _exp0 + FALSE_EASTING) / _g0) + 1)
            * (np.floor((rb[:, 3] + _exp0) / _g0)
-              - np.floor((rb[:, 1] - _exp0) / _g0) + 1)) \
-        if len(rb) else np.zeros(0)
+              - np.floor((rb[:, 1] - _exp0) / _g0) + 1))
     rights_all_small = bool((_nc <= MAX_COVER_CELLS).all())
-    rect_ok = (len(ra) == 0 or bool(r_rect.all())) and rights_all_small and \
+    rect_ok = bool(r_rect.all()) and rights_all_small and \
         predicate in ("within", "intersects", "covered_by", "dwithin")
     # GENERAL polygons (concave/holed/multipart) also compile JVM-side:
     # ray-cast PIP as a higher-order SQL expression (round-4; VERDICT r3
     # directive 1b) — distance variants still take the Arrow kernel
-    poly_ok = (len(ra) > 0 and bool(np.isin(ra.kinds, (3, 6)).all())
+    poly_ok = (bool(np.isin(ra.kinds, (3, 6)).all())
                and (predicate in ("within", "intersects", "covered_by")
                     and not keep_distance or predicate == "dwithin"))
     if (rect_ok or poly_ok) and assume_left_points is not False:
@@ -530,68 +532,6 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
                 spark, left, rids, ra, rb, left_id=left_id,
                 right_id=right_id, rid_t=rid_t, gridsize=gridsize,
                 predicate=predicate, distance=distance)
-
-    # LINE lefts x polygon/rect rights, plain `intersects`: compiled
-    # segment-crossing/head-PIP path (round 5, directive 8) — hinted via
-    # assume_left_lines, or detected from a uniform geom_kind column
-    from .conf import jvm_pip_enabled
-    lines_ok = (len(ra) > 0 and bool(np.isin(ra.kinds, (3, 6)).all())
-                and predicate == "intersects" and not keep_distance
-                and assume_left_points is not True
-                and assume_left_lines is not False and jvm_pip_enabled())
-    if lines_ok:
-        if assume_left_lines:
-            left_is_lines = True
-        elif "geom_kind" in left.columns:
-            kk = left.agg(F.min("geom_kind").alias("a"),
-                          F.max("geom_kind").alias("b")).first()
-            left_is_lines = kk["a"] == "line" and kk["b"] == "line"
-        else:
-            left_is_lines = False
-        if left_is_lines:
-            PATH_STATS["jvm_segs_bcast"] += 1
-            return _segments_vs_polygons_jvm(
-                spark, left, rids, ra, rb, r_rect, left_id=left_id,
-                right_id=right_id, rid_t=rid_t, lid_t=lid_t,
-                gridsize=gridsize)
-
-    # POLYGON lefts x polygon/rect rights, plain `intersects`: compiled
-    # crossing/containment composition (round 5) — byte-gated so small
-    # layers keep the latency-optimal Arrow kernel while large layers
-    # (where per-pair cost dominates) take whole-stage codegen.  One
-    # fused columnar probe checks left-family purity (null-safe) and the
-    # bbox-cover bound; mixed/huge lefts fall back to the kernel.
-    if (len(ra) > 0 and bool(np.isin(ra.kinds, (3, 6)).all())
-            and predicate == "intersects" and not keep_distance
-            and assume_left_points is not True
-            and assume_left_lines is not True and jvm_pip_enabled()
-            and _poly2_wanted(left)):
-        gq = float(gridsize)
-        ncells_sql = (
-            f"((cast(floor((maxx + {FALSE_EASTING}) / {gq}) as bigint)"
-            f" - cast(floor((minx + {FALSE_EASTING}) / {gq}) as bigint) + 1)"
-            f" * (cast(floor(maxy / {gq}) as bigint)"
-            f" - cast(floor(miny / {gq}) as bigint) + 1))")
-        if "geom_kind" in left.columns:
-            type_ok = F.col("geom_kind") == "polygon"
-        else:
-            from .geometry_types import wkb_gtype_col
-            type_ok = wkb_gtype_col("geometry").isin(3, 6)
-        st = left.agg(
-            F.max((~F.coalesce(type_ok, F.lit(False))).cast("int"))
-            .alias("bad"),
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.expr(ncells_sql)).alias("mc")).first()
-        if (st["n"] and not st["bad"] and st["mc"] is not None
-                and int(st["mc"]) <= MAX_COVER_CELLS):
-            # (country-sized LEFT rows would explode the term-3 pack;
-            # such layers keep the kernel path, like the distributed
-            # point-join's huge-right fallback)
-            PATH_STATS["jvm_polys2_bcast"] += 1
-            return _polys_vs_polys_jvm(
-                spark, left, rids, ra, rb, r_rect, left_id=left_id,
-                right_id=right_id, rid_t=rid_t, lid_t=lid_t,
-                gridsize=gridsize, left_max_cover=int(st["mc"]))
 
     # Arrow kernel: the right enters the shared candidate generator as a
     # driver-local (id, bbox) frame joined under broadcast; the kernel
@@ -858,367 +798,6 @@ def _chain_cols_of(ga, skip_mask) -> tuple[list, list, list]:
         skips.append(words)
         sk0s.append(words[0] if words else 0)
     return vxs, vys, skips, sk0s
-
-
-# ---------------------------------------------------------------------------
-# Compiled segment(line-left) x polygon-right `intersects` (round 5,
-# VERDICT r4 directive 8): the roads/clip_lines family rides the same
-# cover-cell/edge-subset pack as the point path.  A line intersects a
-# polygon iff any of its segments crosses a boundary edge, or the line's
-# first vertex lies inside (connected chains inside without crossing ARE
-# wholly inside; mirrors _geom_geom_intersects, predicates.py:443, which
-# containment-tests only chains[0][:1]).  Each (segment, zone, cell) row
-# evaluates crossings against that cell's edge subset — a real crossing
-# lies in some covered cell whose subset provably contains the crossed
-# edge, and subsets only hold true polygon edges, so no false positives —
-# plus a head-PIP term gated to the row whose region contains the head.
-
-
-def _seg_onseg_sql(px, py, qx, qy, rx, ry) -> str:
-    """Collinear point-on-segment bbox test — mirrors predicates._on_seg:
-    min(px,qx) <= rx <= max(px,qx) and likewise for y."""
-    return (f"(least({px}, {qx}) <= {rx} AND {rx} <= greatest({px}, {qx})"
-            f" AND least({py}, {qy}) <= {ry} AND {ry} <= "
-            f"greatest({py}, {qy}))")
-
-
-def _seg_touch_term(acc, sx, sy, tx, ty) -> str:
-    """Segment (S,T) x edge (A,B) intersection — the exact boolean of
-    predicates._seg_seg_touch with (p1,p2)=(S,T), (p3,p4)=(A,B): proper
-    straddle via orientation signs, else collinear endpoint-touch.  Same
-    `(bx-ax)*(cy-ay)-(by-ay)*(cx-ax)` operation order, so sign decisions
-    agree bit-for-bit with the Arrow kernel (and are invariant under the
-    coordinate swap vert rows store, since swapping exactly negates the
-    cross product)."""
-    ax, ay, bx, by = acc
-
-    def o(a0, a1, b0, b1, c0, c1):
-        return (f"(({b0} - {a0}) * ({c1} - {a1}) - "
-                f"({b1} - {a1}) * ({c0} - {a0}))")
-    d1 = o(ax, ay, bx, by, sx, sy)
-    d2 = o(ax, ay, bx, by, tx, ty)
-    d3 = o(sx, sy, tx, ty, ax, ay)
-    d4 = o(sx, sy, tx, ty, bx, by)
-    return (f"(((({d1} > 0D) != ({d2} > 0D)) AND "
-            f"(({d3} > 0D) != ({d4} > 0D)))"
-            f" OR (({d1} = 0D) AND {_seg_onseg_sql(ax, ay, bx, by, sx, sy)})"
-            f" OR (({d2} = 0D) AND {_seg_onseg_sql(ax, ay, bx, by, tx, ty)})"
-            f" OR (({d3} = 0D) AND {_seg_onseg_sql(sx, sy, tx, ty, ax, ay)})"
-            f" OR (({d4} = 0D) AND {_seg_onseg_sql(sx, sy, tx, ty, bx, by)}))")
-
-
-def _seg_cross_sql(E: str, sx, sy, tx, ty) -> str:
-    """Any packed edge of {E} intersects segment (S,T): tier-unrolled
-    whole-stage-codegen within <=PIP_UNROLL_SMALL / <=PIP_UNROLL_EDGES
-    edges, interpreted exists()
-    above (subcell packs keep real layers inside the tiers)."""
-    sz = _esz(E)
-
-    def unroll(k):
-        terms = [f"(({i} <= {sz}) AND (NOT {_eskip(E, i)}) AND "
-                 f"{_seg_touch_term(_eacc(E, i), sx, sy, tx, ty)})"
-                 for i in range(1, k + 1)]
-        return f"({' OR '.join(terms)})"
-    lam = (f"exists(sequence(1, {sz}), i -> (NOT {_eskip(E, 'i')}) AND "
-           f"{_seg_touch_term(_eacc(E, 'i'), sx, sy, tx, ty)})")
-    mid = ("" if PIP_UNROLL_EDGES == PIP_UNROLL_SMALL else
-           f"WHEN {sz} <= {PIP_UNROLL_EDGES} "
-           f"THEN {unroll(PIP_UNROLL_EDGES)} ")
-    return (f"(CASE WHEN {sz} <= {PIP_UNROLL_SMALL} "
-            f"THEN {unroll(PIP_UNROLL_SMALL)} "
-            f"{mid}ELSE {lam} END)")
-
-
-def _seg_rect_cross_sql(x0, y0, x1, y1, sx, sy, tx, ty) -> str:
-    """Segment x axis-aligned rectangle boundary: the four synthesized
-    edges through the same touch term.  Edge direction/start is
-    irrelevant — the per-edge boolean is invariant under endpoint swap
-    (exact negation of each orientation), so any ring orientation the
-    kernel stores gives the same answer."""
-    edges = [(x0, y0, x1, y0), (x1, y0, x1, y1),
-             (x1, y1, x0, y1), (x0, y1, x0, y0)]
-    return ("(" + " OR ".join(
-        _seg_touch_term(e, sx, sy, tx, ty) for e in edges) + ")")
-
-
-def _explode_segments(left: DataFrame, left_id: str, lid_t: str) -> DataFrame:
-    """O(|left|) Arrow pass (NOT per-pair): lines -> one row per segment
-    (head flag on the first segment of the first chain, whose start is
-    the containment probe chains[0][0]).  Single-vertex chains emit a
-    degenerate (P,P) segment so the head probe survives."""
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(list(pdf["geometry"]))
-            lids, sxs, sys_, txs, tys, heads = [], [], [], [], [], []
-            for gi in range(len(ga)):
-                lid = pdf.iloc[gi, 0]
-                first = True
-                for chain in ga.rings_of_geom(gi):
-                    if len(chain) == 1:
-                        a = b = chain
-                    else:
-                        a, b = chain[:-1], chain[1:]
-                    n = len(a)
-                    lids.extend([lid] * n)
-                    sxs.extend(a[:, 0].tolist())
-                    sys_.extend(a[:, 1].tolist())
-                    txs.extend(b[:, 0].tolist())
-                    tys.extend(b[:, 1].tolist())
-                    heads.extend([first] + [False] * (n - 1))
-                    first = False
-            yield pd.DataFrame({left_id: lids, "__sx": sxs, "__sy": sys_,
-                                "__tx": txs, "__ty": tys, "__head": heads})
-
-    return left.select(left_id, "geometry").mapInPandas(
-        explode, schema=(f"{left_id} {lid_t}, __sx double, __sy double, "
-                         "__tx double, __ty double, __head boolean"))
-
-
-def _seg_match_sql(g: float) -> str:
-    """Per-(segment, cover-row) match predicate over the packed columns.
-    Vert rows store swapped edge coordinates, so the crossing/PIP terms
-    read swapped probe coordinates; the rect branch and all gates use the
-    unswapped originals."""
-    ssx = "(CASE WHEN __vert THEN __sy ELSE __sx END)"
-    ssy = "(CASE WHEN __vert THEN __sx ELSE __sy END)"
-    stx = "(CASE WHEN __vert THEN __ty ELSE __tx END)"
-    sty = "(CASE WHEN __vert THEN __tx ELSE __ty END)"
-    head_in_rect = ("(__sx >= __rminx AND __sx <= __rmaxx AND "
-                    "__sy >= __rminy AND __sy <= __rmaxy)")
-    # head-PIP validity gate: the subset/base are exact only for probes
-    # inside the row's region — the cell (non-subdivided rows: rect is
-    # the whole zone bbox, so require the head's cell = this row's cell)
-    # or the subcell rect + clipped-floor assignment (subdivided rows)
-    head_cell = (f"(cast(floor((__sx + {FALSE_EASTING}) / {g}) as bigint) "
-                 f"* {1 << Y_BITS} + cast(floor(__sy / {g}) as bigint))")
-    sub_f = _SUBCELL_FILTER.replace("__x", "__sx").replace("__y", "__sy")
-    head_gate = (f"(__head AND {head_in_rect} AND {sub_f} AND "
-                 f"(__km1 > 0 OR {head_cell} = cell_key))")
-    return (
-        "CASE WHEN __isrect THEN "
-        f"((__head AND {head_in_rect}) OR "
-        f"{_seg_rect_cross_sql('__rminx', '__rminy', '__rmaxx', '__rmaxy', '__sx', '__sy', '__tx', '__ty')}) "
-        f"ELSE ({_seg_cross_sql('__e', ssx, ssy, stx, sty)} OR "
-        f"({head_gate} AND "
-        f"{_pip_sql_any('__e', ssx, ssy, '__base')})) END")
-
-
-def _segments_vs_polygons_jvm(spark, left, rids, ra, rb, r_rect, *,
-                              left_id, right_id, rid_t, lid_t,
-                              gridsize, raw_pairs: bool = False,
-                              left_max_cover: int | None = None
-                              ) -> DataFrame:
-    """All-JVM refine for line-left x polygon/rect-right `intersects`:
-    segment explode (one O(|left|) Arrow pass) -> JVM cell-cover explode
-    -> broadcast cell join against the subset pack -> codegen
-    crossing/head-PIP -> distinct pairs.  No Python on the pair path.
-
-    `raw_pairs=True` returns the pre-distinct (left_id, __rid) matches —
-    the polygon x polygon composition unions its head-containment term in
-    before the single distinct.  `left_max_cover` skips the left-side
-    bbox-cover probe job when the caller already aggregated it."""
-    import pandas as _pd
-    g = float(gridsize)
-    out_right = right_id if right_id != left_id else right_id + "_2"
-    rids = np.asarray(rids)
-    edge_rows = _edge_rows_of(ra)
-
-    ncells = ((np.floor((rb[:, 2] + FALSE_EASTING) / g)
-               - np.floor((rb[:, 0] + FALSE_EASTING) / g) + 1)
-              * (np.floor(rb[:, 3] / g) - np.floor(rb[:, 1] / g) + 1)) \
-        if len(rb) else np.zeros(0)
-    small = ncells <= MAX_COVER_CELLS
-    sm = np.nonzero(small)[0]
-    rcells = spark.createDataFrame(
-        _pack_cover_rows([edge_rows[i] for i in sm], rids[sm], rb[sm],
-                         r_rect[sm], g, 0.0),
-        schema=f"__rid {rid_t}" + _COVER_SCHEMA_TAIL)
-
-    # split LINES (not segments) by cover size BEFORE the explode: a
-    # segment's bbox is contained in its line's bbox, so every segment of
-    # a small line is itself small — the split is a pure column filter and
-    # the common case (no country-sized line) runs the Arrow explode
-    # exactly once.  The existence probe is one cheap columnar agg.
-    ncells_sql = (
-        f"((cast(floor((maxx + {FALSE_EASTING}) / {g}) as bigint)"
-        f" - cast(floor((minx + {FALSE_EASTING}) / {g}) as bigint) + 1)"
-        f" * (cast(floor(maxy / {g}) as bigint)"
-        f" - cast(floor(miny / {g}) as bigint) + 1))")
-    mx = left_max_cover if left_max_cover is not None else \
-        left.agg(F.max(F.expr(ncells_sql)).alias("m")).first()["m"]
-    has_big_lines = mx is not None and mx > MAX_COVER_CELLS
-    l_small = left.where(F.expr(f"{ncells_sql} <= {MAX_COVER_CELLS}")) \
-        if has_big_lines else left
-
-    def explode(src):
-        return _explode_segments(src, left_id, lid_t) \
-            .withColumn("minx", F.least("__sx", "__tx")) \
-            .withColumn("miny", F.least("__sy", "__ty")) \
-            .withColumn("maxx", F.greatest("__sx", "__tx")) \
-            .withColumn("maxy", F.greatest("__sy", "__ty"))
-
-    s_small = explode(l_small)
-
-    seg_cols = [left_id, "__sx", "__sy", "__tx", "__ty", "__head"]
-    sc = _cover_cells(s_small, g).select(*seg_cols, "cell_key",
-                                         F.col("minx").alias("__sminx"),
-                                         F.col("miny").alias("__sminy"),
-                                         F.col("maxx").alias("__smaxx"),
-                                         F.col("maxy").alias("__smaxy"))
-    cand = sc.join(F.broadcast(rcells), "cell_key") \
-        .where((F.col("__sminx") <= F.col("__rmaxx")) &
-               (F.col("__smaxx") >= F.col("__rminx")) &
-               (F.col("__sminy") <= F.col("__rmaxy")) &
-               (F.col("__smaxy") >= F.col("__rminy")))
-    matched = cand.where(F.expr(_seg_match_sql(g))) \
-        .select(F.col(left_id), F.col("__rid"))
-
-    # full-edge fallback rows (base 0, unswapped, whole-geometry rect):
-    # big segments x ALL rights, and remaining segments x big rights —
-    # rare country-sized cases; correctness identical, interpreted tier
-    def full_edge_df(idx):
-        vx, vy, skips, sk0 = _chain_cols_of(ra, r_rect)
-        return F.broadcast(spark.createDataFrame(
-            [(rids[i].item() if hasattr(rids[i], "item") else rids[i],
-              bool(r_rect[i]), 0, False, 0.0, 0.0, float(g), float(g),
-              0, 0, 0,
-              float(rb[i, 0]), float(rb[i, 1]),
-              float(rb[i, 2]), float(rb[i, 3]),
-              vx[i], vy[i], skips[i], sk0[i]) for i in idx],
-            schema=(f"__rid {rid_t}, __isrect boolean, __base int, "
-                    "__vert boolean, __cx0 double, __cy0 double, "
-                    "__swx double, __swy double, "
-                    "__si int, __sj int, __km1 int, "
-                    "__rminx double, __rminy double, "
-                    "__rmaxx double, __rmaxy double, "
-                    + _CHAIN_COLS_SQL)))
-
-    def bbox_branch(seg_df, right_df):
-        c = seg_df.crossJoin(right_df) \
-            .where((F.col("minx") <= F.col("__rmaxx")) &
-                   (F.col("maxx") >= F.col("__rminx")) &
-                   (F.col("miny") <= F.col("__rmaxy")) &
-                   (F.col("maxy") >= F.col("__rminy"))) \
-            .withColumn("cell_key", F.expr(
-                f"cast(floor((__sx + {FALSE_EASTING}) / {g}) as bigint) "
-                f"* {1 << Y_BITS} + cast(floor(__sy / {g}) as bigint)"))
-        return c.where(F.expr(_seg_match_sql(g))) \
-            .select(F.col(left_id), F.col("__rid"))
-
-    if has_big_lines:
-        s_big = explode(left.where(
-            F.expr(f"{ncells_sql} > {MAX_COVER_CELLS}")))
-        matched = matched.unionByName(
-            bbox_branch(s_big, full_edge_df(range(len(rids)))))
-    if (~small).any():
-        # big rights re-consume s_small: one extra O(|left|) Arrow pass,
-        # accepted because country-sized rights are rare and persisting
-        # the exploded segments would pin executor memory per call
-        matched = matched.unionByName(
-            bbox_branch(s_small, full_edge_df(np.nonzero(~small)[0])))
-    if raw_pairs:
-        return matched
-    return matched.distinct() \
-        .select(F.col(left_id), F.col("__rid").alias(out_right))
-
-
-def _poly2_wanted(left: DataFrame) -> bool:
-    """Routing dial for the compiled polygon x polygon composition:
-    OPT-IN ONLY (config `use_jvm_poly2=True` or env `SGSPARK_POLY2=1`).
-
-    Which side wins depends on the pair count (BENCH/BASELINE.md,
-    negative-result section, single runs on 4 cores, CPU-s cold/warm):
-    at 2k 8-gon lefts x 180 8-gon zones the composition costs 86/25
-    against the Arrow kernel's 22/8; at 50k x 1800 (0.88M pairs) it
-    costs 195/97 against 360/301.  Round 5 had measured the kernel ahead
-    at 200k x 2k 6-edge (5.4 s vs 11.9 s) and 100k x 1k 256-vertex rights
-    (2.8 s vs 48 s).  The composition pays for (a) candidate
-    amplification: the segment explode multiplies left rows by segments,
-    and the K x K subcell refinement multiplies broadcast cover rows; and
-    (b) a match predicate in the BroadcastHashJoin's RESIDUAL condition,
-    whose generated code exceeds JIT method limits for the seg-touch
-    unroll tiers and runs interpreted.  The kernel pays per pair in
-    Python: its general line/polygon `intersects` refine
-    (`predicates._intersects_pairs`) calls `_geom_geom_intersects` once
-    per candidate pair in a loop.  No size rule picks between the two
-    yet (ROADMAP.md)."""
-    from .conf import config
-    v = config.get("use_jvm_poly2")
-    if v is not None:
-        return bool(v)
-    return os.environ.get("SGSPARK_POLY2") == "1"
-
-
-def _heads_in_left_polys(spark, heads_pdf: pd.DataFrame, left: DataFrame,
-                         left_id: str, lid_t: str, hid_t: str,
-                         g: float) -> DataFrame:
-    """(left_id, __hid) pairs where the head point of a (collected) right
-    geometry lies inside a LEFT polygon — the B-in-A containment term of
-    the compiled polygon x polygon join.  LEFT stays distributed: one
-    O(|left|) Arrow pack pass (per-cover-cell edge subsets), then the
-    tiny head set broadcasts onto it (no shuffle of the pack) and the
-    boundary-inclusive PIP evaluates in whole-stage codegen — the same
-    expression test_jvm_pip proves bit-identical to the kernel PIP."""
-    pack = _polys_pack_df(left, left_id, lid_t, g, 0.0, rect_fast=True)
-    h = spark.createDataFrame(heads_pdf,
-                              schema=f"__hid {hid_t}, __x double, __y double")
-    h = h.withColumn("cell_key", F.expr(
-        f"cast(floor((__x + {FALSE_EASTING}) / {g}) as bigint) * {1 << Y_BITS}"
-        f" + cast(floor(__y / {g}) as bigint)"))
-    cand = pack.join(F.broadcast(h), "cell_key") \
-        .where((F.col("__x") >= F.col("__rminx")) &
-               (F.col("__x") <= F.col("__rmaxx")) &
-               (F.col("__y") >= F.col("__rminy")) &
-               (F.col("__y") <= F.col("__rmaxy")) &
-               F.expr(_SUBCELL_FILTER))
-    cand = cand.withColumn(
-        "__px", F.expr("CASE WHEN __vert THEN __y ELSE __x END")) \
-        .withColumn(
-        "__py", F.expr("CASE WHEN __vert THEN __x ELSE __y END"))
-    return cand.where(
-        F.expr(_pip_dispatch_sql("__e", "__px", "__py", "__isrect",
-                                 "__base"))) \
-        .select(F.col("__rid").alias(left_id), "__hid")
-
-
-def _polys_vs_polys_jvm(spark, left, rids, ra, rb, r_rect, *, left_id,
-                        right_id, rid_t, lid_t, gridsize,
-                        left_max_cover: int) -> DataFrame:
-    """Compiled polygon-left x polygon/rect-right `intersects` (round 5):
-    mirrors the kernel's `_geom_geom_intersects` (geom/predicates.py:443)
-    for the polygon x polygon family —
-
-      A intersects B  <=>  any ring segment of A touches any edge of B
-                           OR head(A) = chains[0][0] of A inside B
-                           OR head(B) = chains[0][0] of B inside A
-
-    — where the first two terms ARE the compiled segment x polygon path
-    (`_segments_vs_polygons_jvm`: polygon rings explode to the same closed
-    ring segments the kernel crossing-tests, head flag on chains[0][0]),
-    and the third is a broadcast of the collected right's head points
-    onto a per-cover-cell edge-subset pack of the LEFT
-    (`_heads_in_left_polys`).  Every term evaluates in whole-stage
-    codegen; Python touches each side once, O(|rows|), never per pair."""
-    out_right = right_id if right_id != left_id else right_id + "_2"
-    g = float(gridsize)
-    segs = _segments_vs_polygons_jvm(
-        spark, left, rids, ra, rb, r_rect, left_id=left_id,
-        right_id=right_id, rid_t=rid_t, lid_t=lid_t, gridsize=gridsize,
-        raw_pairs=True, left_max_cover=left_max_cover)
-    starts = ra.coords_start_per_geom()
-    counts = ra.coords_count_per_geom()
-    ok = counts > 0
-    rids = np.asarray(rids)
-    heads_pdf = pd.DataFrame({"__hid": rids[ok],
-                              "__x": ra.coords[starts[ok], 0],
-                              "__y": ra.coords[starts[ok], 1]})
-    term3 = _heads_in_left_polys(spark, heads_pdf, left, left_id, lid_t,
-                                 rid_t, g) \
-        .select(F.col(left_id), F.col("__hid").alias("__rid"))
-    return segs.unionByName(term3).distinct() \
-        .select(F.col(left_id), F.col("__rid").alias(out_right))
 
 
 _COVER_COLS = ["__rid", "cell_key", "__rminx", "__rminy", "__rmaxx",

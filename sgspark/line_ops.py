@@ -197,8 +197,7 @@ def clip_lines_by_polygons(lines: DataFrame, polys: DataFrame, *,
     from .polygon_ops import _chain_crossing_params
     from .geom.measure import points_in_ring
     pairs = sjoin_pairs(lines, polys, "intersects", left_id=line_id,
-                        right_id=poly_id, gridsize=gridsize,
-                        assume_left_lines=True)
+                        right_id=poly_id, gridsize=gridsize)
     rid = pairs.columns[1]
     lg = lines.select(F.col(line_id), F.col("geometry").alias("__lg"))
     pg = polys.select(F.col(poly_id).alias(rid),

@@ -38,7 +38,7 @@ def _nearest_on_pairs(la: GeomArray, ra: GeomArray, li, ri):
     out_y = py.copy()
     gstart = ra.coords_start_per_geom()
     gcount = ra.coords_count_per_geom()
-    from .geom.predicates import _expand
+    from .geom.array import expand_ranges
     cstart = gstart[ri]
     cend = cstart + np.maximum(gcount[ri] - 1, 1)
     single = gcount[ri] == 1
@@ -50,7 +50,7 @@ def _nearest_on_pairs(la: GeomArray, ra: GeomArray, li, ri):
         out_y[single] = ra.coords[s, 1]
     multi = np.nonzero(~single)[0]
     if len(multi):
-        flat, owner = _expand(cstart[multi], cend[multi])
+        flat, owner = expand_ranges(cstart[multi], cend[multi])
         ring_starts = ra.ring_offsets[:-1]
         is_rs = np.zeros(len(ra.coords) + 1, dtype=bool)
         is_rs[ring_starts] = True

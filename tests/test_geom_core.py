@@ -50,6 +50,20 @@ def test_wkt_roundtrip_and_measures():
     assert np.array_equal(ga.ring_offsets, ga3.ring_offsets)
 
 
+def test_take_and_expand_ranges_skip_empty():
+    """Empty geometries and empty ranges contribute nothing: `take` over
+    a POLYGON EMPTY keeps the geometries after it aligned."""
+    ga = from_wkt(["POINT (0 0)", "POINT (1 1)", "POLYGON EMPTY",
+                   "POINT (3 3)"])
+    assert to_wkt(ga.take(np.array([0, 2, 3])))[2] == "POINT (3 3)"
+    from sgspark.geom.array import expand_ranges
+    flat, owner = expand_ranges(np.array([0, 5, 10, 3]),
+                                np.array([2, 5, 12, 3]))
+    assert flat.tolist() == [0, 1, 10, 11]
+    assert owner.tolist() == [0, 0, 2, 2]
+    assert len(from_wkt([]).coords_count_per_geom()) == 0
+
+
 def test_centroid():
     ga = from_wkt([SQ, "POINT (3 4)"])
     c = ga.centroid()

@@ -98,6 +98,19 @@ def main():
                      "JVM anchor dedup, ONE MapInPandas refine",
                      cap(pp)))
 
+    # line lefts (each zone's bbox diagonal) x the same right: the same
+    # broadcast Arrow route — non-point lefts share one refine kernel
+    lines = wkt_to_wkb_df(ng.where("zone_id % 2 = 0").selectExpr(
+        "zone_id", "format_string('LINESTRING (%s %s, %s %s)', "
+        "minx, miny, maxx, maxy) AS geometry_wkt"))
+    lp = sjoin_pairs(lines, ng.where("zone_id % 2 = 1"), "intersects",
+                     left_id="zone_id", right_id="zone_id")
+    sections.append(("line x polygon sjoin, broadcast Arrow route — the "
+                     "polygon-left plan shape: cover-cell explode "
+                     "BroadcastHashJoin'd against the right bboxes, JVM "
+                     "anchor dedup, ONE MapInPandas refine",
+                     cap(lp)))
+
     # fused overlay intersection: ONE Arrow kernel after the cell equi-join
     from sgspark.overlay import _intersection_rows
     inter = _intersection_rows(a, b, "aid", "bid", 2000.0)
