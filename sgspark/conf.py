@@ -9,14 +9,11 @@ is captured into the Arrow kernel closure), so overrides apply to
 DataFrames built after the change, like the reference's runner objects
 apply to calls made after assignment.
 
+Routes are not keys here: `sjoin_pairs` picks its executor from the
+inputs alone (the distributed point x polygon join by its estimated pair
+count against the module constant `joins.PIP_COMPILED_MIN_PAIRS`).
+
 Keys:
-  use_jvm_pip      True/False force the compiled whole-stage-codegen
-                   point x polygon joins on/off.  None (default): the
-                   distributed point x polygon join takes the compiled
-                   route only when its estimated candidate pairs reach
-                   joins.PIP_COMPILED_MIN_PAIRS (or the left row count is
-                   unknown), else the Arrow-kernel refine; the broadcast
-                   compiled routes stay on.
   refine_runner    callable(la, ra, li, ri, predicate) -> bool ndarray —
                    replaces the pair-refine kernel (reference
                    RTreeQueryRunner.query seam, runners.py:160-200).
@@ -31,16 +28,9 @@ from contextlib import contextmanager
 from typing import Any, Callable, Iterator
 
 config: dict[str, Any] = {
-    "use_jvm_pip": None,
     "refine_runner": None,
     "union_runner": None,
 }
-
-
-def jvm_pip_enabled() -> bool:
-    """The compiled point x polygon route gate: off only when
-    `use_jvm_pip` is False."""
-    return config.get("use_jvm_pip") is not False
 
 
 def get_runner(key: str, default: Callable) -> Callable:

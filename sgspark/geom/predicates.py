@@ -140,22 +140,6 @@ def _seg_seg_touch(p1, p2, p3, p4) -> bool:
     return False
 
 
-def points_segments_min_dist(px, py, chain: np.ndarray) -> np.ndarray:
-    """Min distance from each point to polyline chain. float64[n]."""
-    x1, y1 = chain[:-1, 0], chain[:-1, 1]
-    x2, y2 = chain[1:, 0], chain[1:, 1]
-    dx = (x2 - x1)[None, :]
-    dy = (y2 - y1)[None, :]
-    rx = px[:, None] - x1[None, :]
-    ry = py[:, None] - y1[None, :]
-    ll = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.clip(np.where(ll > 0, (rx * dx + ry * dy) / ll, 0.0), 0.0, 1.0)
-    cx = rx - t * dx
-    cy = ry - t * dy
-    return np.sqrt((cx * cx + cy * cy).min(axis=1))
-
-
 # ---------------------------------------------------------------------- #
 # fully-vectorized pair kernels (no per-geometry python loop)
 # ---------------------------------------------------------------------- #
@@ -167,6 +151,12 @@ def pip_pairs_vectorized(px: np.ndarray, py: np.ndarray, ra: GeomArray,
     even-odd counting (exterior + holes all toggle parity — equivalent to
     the per-ring logic for valid nested rings).  Boundary points count as
     inside (on-edge test included)."""
+    inside, on = _pip_parity_and_edge(px, py, ra, ri)
+    return inside | on
+
+
+def _pip_parity_and_edge(px, py, ra, ri) -> tuple[np.ndarray, np.ndarray]:
+    """(odd crossing parity, on some edge) for point[k] vs ra[ri[k]]."""
     ri = np.asarray(ri, dtype=np.int64)
     # per-geometry contiguous coordinate span (geoms store rings contiguously)
     gstart = ra.coords_start_per_geom()
@@ -175,7 +165,7 @@ def pip_pairs_vectorized(px: np.ndarray, py: np.ndarray, ra: GeomArray,
     cend = cstart + gcount[ri]
     flat, owner = expand_ranges(cstart, cend - 1)  # edge = coord pair
     if len(flat) == 0:
-        return np.zeros(len(ri), dtype=bool)
+        return np.zeros(len(ri), dtype=bool), np.zeros(len(ri), dtype=bool)
     x1 = ra.coords[flat, 0]
     y1 = ra.coords[flat, 1]
     x2 = ra.coords[flat + 1, 0]
@@ -203,8 +193,7 @@ def pip_pairs_vectorized(px: np.ndarray, py: np.ndarray, ra: GeomArray,
     dot = rx * dx + ry * dy
     ll = dx * dx + dy * dy
     on = (cross == 0) & (dot >= 0) & (dot <= ll) & valid
-    on_any = np.bincount(owner[on], minlength=len(ri)) > 0
-    return inside | on_any
+    return inside, np.bincount(owner[on], minlength=len(ri)) > 0
 
 
 def point_geom_distance_vectorized(px: np.ndarray, py: np.ndarray,
@@ -259,32 +248,8 @@ def point_geom_distance_vectorized(px: np.ndarray, py: np.ndarray,
 
 
 # ---------------------------------------------------------------------- #
-# pairwise predicate dispatcher (batch: group by right geometry)
+# pairwise predicate dispatcher
 # ---------------------------------------------------------------------- #
-def _geom_chains(ga: GeomArray, g: int) -> list[np.ndarray]:
-    return ga.rings_of_geom(g)
-
-
-def _geom_distance_to_points(ga: GeomArray, g: int, px, py, fam: str) -> np.ndarray:
-    chains = _geom_chains(ga, g)
-    if not chains:
-        return np.full(len(px), np.inf)
-    if fam == "point":
-        pts = np.concatenate(chains)
-        d2 = (px[:, None] - pts[None, :, 0]) ** 2 + (py[:, None] - pts[None, :, 1]) ** 2
-        return np.sqrt(d2.min(axis=1))
-    d = np.full(len(px), np.inf)
-    for c in chains:
-        if len(c) == 1:
-            d = np.minimum(d, np.hypot(px - c[0, 0], py - c[0, 1]))
-        else:
-            d = np.minimum(d, points_segments_min_dist(px, py, c))
-    if fam == "polygon":
-        inside = points_in_polygon_geom(px, py, ga, g)
-        d = np.where(inside, 0.0, d)
-    return d
-
-
 def geom_pair_distance(la: GeomArray, ra: GeomArray,
                        li: np.ndarray, ri: np.ndarray) -> np.ndarray:
     """Distance for candidate pairs (la[li[k]], ra[ri[k]]).  Left side must be
@@ -302,7 +267,7 @@ def geom_pair_distance(la: GeomArray, ra: GeomArray,
 def refine_pairs(la: GeomArray, ra: GeomArray, li: np.ndarray, ri: np.ndarray,
                  predicate: str = "intersects", distance: float | None = None
                  ) -> np.ndarray:
-    """bool[k] — evaluate predicate for candidate pairs, grouped by right geom.
+    """bool[k] — evaluate predicate for candidate pairs, batched.
 
     Supported predicates (superset used by the reference's joins):
     intersects, within, contains, covers, covered_by, dwithin.
@@ -325,18 +290,6 @@ def refine_pairs(la: GeomArray, ra: GeomArray, li: np.ndarray, ri: np.ndarray,
     raise ValueError(f"unsupported predicate: {predicate}")
 
 
-def _group_by_right(ri: np.ndarray):
-    order = np.argsort(ri, kind="stable")
-    k = 0
-    while k < len(order):
-        j = k
-        g = ri[order[k]]
-        while j < len(order) and ri[order[j]] == g:
-            j += 1
-        yield int(g), order[k:j]
-        k = j
-
-
 def _intersects_pairs(la, ra, li, ri) -> np.ndarray:
     out = np.zeros(len(li), dtype=bool)
     starts = la.coords_start_per_geom()
@@ -346,23 +299,14 @@ def _intersects_pairs(la, ra, li, ri) -> np.ndarray:
         if len(la.coords) else np.zeros(len(la))
     py_all = la.coords[np.minimum(starts, max(len(la.coords) - 1, 0)), 1] \
         if len(la.coords) else np.zeros(len(la))
-    simple = left_is_single_point[li]
-    rfam_poly = np.isin(ra.kinds[ri], (3, 6))
-    # HOT PATH: point-left pairs, fully vectorized (PIP for polygon rights,
-    # distance==0 for line/point rights)
-    vec = simple & rfam_poly
+    # HOT PATH: point-left x polygon-right pairs, vectorized PIP
+    vec = left_is_single_point[li] & np.isin(ra.kinds[ri], (3, 6))
     if vec.any():
         idx = np.nonzero(vec)[0]
         out[idx] = pip_pairs_vectorized(px_all[li[idx]], py_all[li[idx]],
                                         ra, ri[idx])
-    vec2 = simple & ~rfam_poly
-    if vec2.any():
-        idx = np.nonzero(vec2)[0]
-        d = point_geom_distance_vectorized(px_all[li[idx]], py_all[li[idx]],
-                                           ra, ri[idx])
-        out[idx] = d == 0.0
     # rectangle x rectangle: intersects == closed bbox overlap (exact)
-    hard_mask = ~simple
+    hard_mask = ~vec
     if hard_mask.any():
         l_rect, lb = rect_flags(la)
         r_rect, rb = rect_flags(ra)
@@ -380,9 +324,10 @@ def _intersects_pairs(la, ra, li, ri) -> np.ndarray:
     return out
 
 
-# Upper bound on the entries of one expansion in `_general_intersects`
-# (pair x edge and edge x edge): its arrays cost ~110 bytes per entry, so
-# a full chunk peaks at ~28 MB per Python worker.
+# Upper bound on the entries of one expansion in `_general_intersects` and
+# `_covers_general` (pair x edge and edge x edge): their arrays cost ~110
+# and ~170 bytes per entry, so a full chunk peaks at ~28 and ~44 MB per
+# Python worker.
 MAX_EDGE_PAIRS = 1 << 18
 
 
@@ -397,24 +342,30 @@ def _edge_table(ga: GeomArray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return a, a + (n[ring] >= 2), ring_off[ga.part_offsets[ga.geom_offsets]]
 
 
+def _edge_chunks(nl: np.ndarray, nr: np.ndarray):
+    """(start, end) slices of pairs with nl and nr edges per side, whose
+    unfiltered edge expansion stays within MAX_EDGE_PAIRS; a pair above
+    the bound runs alone."""
+    cum = np.cumsum(np.maximum(nl * nr, nl + nr))
+    s = 0
+    while s < len(cum):
+        base = cum[s - 1] if s else 0
+        e = max(int(np.searchsorted(cum, base + MAX_EDGE_PAIRS, "right")),
+                s + 1)
+        yield s, e
+        s = e
+
+
 def _general_intersects(la: GeomArray, ra: GeomArray, li: np.ndarray,
                         ri: np.ndarray) -> np.ndarray:
     """Exact `intersects` for pairs of any families, batched: A meets B iff
     an edge of A touches an edge of B, or, with no touching edges, the
     first vertex of some part of one lies in the other (a polygon).
-    Pairs run in chunks whose unfiltered edge expansion stays within
-    MAX_EDGE_PAIRS; a pair above the bound runs alone."""
+    Pairs run in `_edge_chunks`."""
     ledges, redges = _edge_table(la), _edge_table(ra)
     lbox, rbox = la.bounds(), ra.bounds()
-    nl = np.diff(ledges[2])[li]
-    nr = np.diff(redges[2])[ri]
-    cum = np.cumsum(np.maximum(nl * nr, nl + nr))
     out = np.zeros(len(li), dtype=bool)
-    s = 0
-    while s < len(li):
-        base = cum[s - 1] if s else 0
-        e = max(int(np.searchsorted(cum, base + MAX_EDGE_PAIRS, "right")),
-                s + 1)
+    for s, e in _edge_chunks(np.diff(ledges[2])[li], np.diff(redges[2])[ri]):
         l, r = li[s:e], ri[s:e]
         hit = _edges_touch(la, ledges, l, rbox[r], ra, redges, r, lbox[l])
         for ga, g, other, og in ((la, l, ra, r), (ra, r, la, l)):
@@ -422,7 +373,6 @@ def _general_intersects(la: GeomArray, ra: GeomArray, li: np.ndarray,
             if probe.any():
                 hit[probe] = _part_heads_inside(ga, g[probe], other, og[probe])
         out[s:e] = hit
-        s = e
     return out
 
 
@@ -445,22 +395,35 @@ def _edges_touch(la, ledges, li, lnear, ra, redges, ri, rnear) -> np.ndarray:
     expansion."""
     lp, lx = _edges_near(la, ledges, li, lnear)
     rp, rx = _edges_near(ra, redges, ri, rnear)
-    cnt = np.bincount(rp, minlength=len(li))
-    first = np.cumsum(cnt) - cnt
-    j, k = expand_ranges(first[lp], first[lp] + cnt[lp])
+    k, j = _cross_expand(lp, rp, len(li))
     pair, lx, rx = lp[k], lx[k], rx[j]
     p1, p2 = la.coords[ledges[0][lx]], la.coords[ledges[1][lx]]
     p3, p4 = ra.coords[redges[0][rx]], ra.coords[redges[1][rx]]
-    d1 = _orient(p3[:, 0], p3[:, 1], p4[:, 0], p4[:, 1], p1[:, 0], p1[:, 1])
-    d2 = _orient(p3[:, 0], p3[:, 1], p4[:, 0], p4[:, 1], p2[:, 0], p2[:, 1])
-    d3 = _orient(p1[:, 0], p1[:, 1], p2[:, 0], p2[:, 1], p3[:, 0], p3[:, 1])
-    d4 = _orient(p1[:, 0], p1[:, 1], p2[:, 0], p2[:, 1], p4[:, 0], p4[:, 1])
+    d1, d2, d3, d4 = _orients(p1, p2, p3, p4)
     touch = ((((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)))
              | ((d1 == 0) & _on_segs(p3, p4, p1))
              | ((d2 == 0) & _on_segs(p3, p4, p2))
              | ((d3 == 0) & _on_segs(p1, p2, p3))
              | ((d4 == 0) & _on_segs(p1, p2, p4)))
     return np.bincount(pair[touch], minlength=len(li)) > 0
+
+
+def _cross_expand(lp: np.ndarray, rp: np.ndarray, n: int):
+    """(k, j): every combination of an entry lp[k] and an entry rp[j] of
+    the same pair; rp must be sorted (as `_edges_near` returns it)."""
+    cnt = np.bincount(rp, minlength=n)
+    first = np.cumsum(cnt) - cnt
+    j, k = expand_ranges(first[lp], first[lp] + cnt[lp])
+    return k, j
+
+
+def _orients(p1, p2, p3, p4):
+    """The four orientations of segments (p1, p2) and (p3, p4): p1 and p2
+    against line p3p4, then p3 and p4 against line p1p2."""
+    return (_orient(p3[:, 0], p3[:, 1], p4[:, 0], p4[:, 1], p1[:, 0], p1[:, 1]),
+            _orient(p3[:, 0], p3[:, 1], p4[:, 0], p4[:, 1], p2[:, 0], p2[:, 1]),
+            _orient(p1[:, 0], p1[:, 1], p2[:, 0], p2[:, 1], p3[:, 0], p3[:, 1]),
+            _orient(p1[:, 0], p1[:, 1], p2[:, 0], p2[:, 1], p4[:, 0], p4[:, 1]))
 
 
 def _on_segs(p, q, r) -> np.ndarray:
@@ -551,56 +514,113 @@ def _geom_geom_intersects(la, lg, ra, rg) -> bool:
         if points_in_polygon_geom(b0[:, 0], b0[:, 1], la, lg).any():
             return True
     if lfam == "point" or rfam == "point":
-        # point vs line/point handled by distance==0
-        if lfam == "point":
-            pts = np.concatenate(lchains)
-            d = _geom_distance_to_points(ra, rg, pts[:, 0], pts[:, 1], rfam)
-            return bool((d == 0.0).any())
-        pts = np.concatenate(rchains)
-        d = _geom_distance_to_points(la, lg, pts[:, 0], pts[:, 1], lfam)
-        return bool((d == 0.0).any())
+        # a point meets a line or point iff it equals one of its vertices
+        # or lies on one of its nonzero-length segments (exact orientation
+        # test)
+        pts, chains = ((np.concatenate(lchains), rchains) if lfam == "point"
+                       else (np.concatenate(rchains), lchains))
+        for c in chains:
+            a, b = c[:-1], c[1:]
+            seg = (a != b).any(axis=1)
+            if (pts[:, None] == c[None]).all(axis=2).any() or \
+                    _points_on_segments(pts[:, 0], pts[:, 1], a[seg, 0],
+                                        a[seg, 1], b[seg, 0], b[seg, 1]).any():
+                return True
     return False
 
 
 def _contains_pairs(outer: GeomArray, inner: GeomArray,
                     oi: np.ndarray, ii: np.ndarray) -> np.ndarray:
-    """outer[oi[k]] contains inner[ii[k]] (closed semantics ~ covers)."""
+    """outer[oi[k]] contains inner[ii[k]] (closed semantics ~ covers);
+    only polygon outers contain anything."""
     out = np.zeros(len(oi), dtype=bool)
+    poly = np.isin(outer.kinds[oi], (3, 6))
     # HOT PATH: single-point inners vs polygon outers — vectorized PIP
-    inner_counts = inner.coords_count_per_geom()
-    pt_inner = (inner_counts[ii] == 1) & np.isin(outer.kinds[oi], (3, 6))
+    pt_inner = (inner.coords_count_per_geom()[ii] == 1) & poly
     if pt_inner.any():
         idx = np.nonzero(pt_inner)[0]
         s = inner.coords_start_per_geom()[ii[idx]]
         out[idx] = pip_pairs_vectorized(inner.coords[s, 0], inner.coords[s, 1],
                                         outer, oi[idx])
-    rest = np.nonzero(~pt_inner)[0]
-    if len(rest) == 0:
-        return out
-    oi_r = oi[rest]
-    ii_r = ii[rest]
-    for g, sel in _group_by_right(oi_r):
-        if FAMILY_OF.get(int(outer.kinds[g]), "point") != "polygon":
-            # only polygon containers supported (reference joins use the same)
-            continue
-        for k in sel.tolist():
-            chains = inner.rings_of_geom(int(ii_r[k]))
-            if not chains:
-                continue
-            pts = np.concatenate(chains)
-            res = points_in_polygon_geom(pts[:, 0], pts[:, 1], outer, g)
-            ok = bool(res.all())
-            if ok and FAMILY_OF.get(int(inner.kinds[int(ii_r[k])])) == "polygon":
-                # vertices inside is not sufficient if boundaries cross
-                for a in chains:
-                    for b in outer.rings_of_geom(g):
-                        if segments_intersect_any(a, b):
-                            ok = _all_edge_midpoints_inside(a, outer, g)
-                            break
-            out[rest[k]] = ok
+    rest = np.nonzero(poly & ~pt_inner)[0]
+    if len(rest):
+        out[rest] = _covers_general(outer, inner, oi[rest], ii[rest])
     return out
 
 
-def _all_edge_midpoints_inside(chain, outer, g) -> bool:
-    mid = (chain[:-1] + chain[1:]) / 2.0
-    return bool(points_in_polygon_geom(mid[:, 0], mid[:, 1], outer, g).all())
+def _covers_general(outer, inner, oi, ii) -> np.ndarray:
+    """Polygon outer[oi[k]] covers inner[ii[k]] of any family, batched.
+    Every vertex of the inner lies in the outer, and every piece of an
+    inner edge, split where it meets an outer ring, has its midpoint in
+    the outer.  A polygon inner must also not have an outer hole in it:
+    no piece of a hole ring, split where it meets the inner's rings, has
+    its midpoint strictly inside the inner.  Pairs run in
+    `_edge_chunks`."""
+    oedges, iedges = _edge_table(outer), _edge_table(inner)
+    obox, ibox = outer.bounds(), inner.bounds()
+    ring = np.searchsorted(outer.ring_offsets, oedges[0], "right") - 1
+    part = np.searchsorted(outer.part_offsets, ring, "right") - 1
+    hole_edge = ring != outer.part_offsets[part]
+    cstart = inner.coords_start_per_geom()
+    ccount = inner.coords_count_per_geom()
+    out = np.zeros(len(oi), dtype=bool)
+    for s, e in _edge_chunks(np.diff(oedges[2])[oi], np.diff(iedges[2])[ii]):
+        o, i = oi[s:e], ii[s:e]
+        flat, k = expand_ranges(cstart[i], cstart[i] + ccount[i])
+        bad = ~pip_pairs_vectorized(inner.coords[flat, 0],
+                                    inner.coords[flat, 1], outer, o[k])
+        ip, ix = _edges_near(inner, iedges, i, obox[o])
+        op, ox = _edges_near(outer, oedges, o, ibox[i])
+        mx, my, m = _piece_midpoints(inner, iedges, ip, ix,
+                                     outer, oedges, op, ox, len(o))
+        outside = ~pip_pairs_vectorized(mx, my, outer, o[m])
+        ok = (ccount[i] > 0) & ~_any_per_pair(k[bad], len(o)) \
+            & ~_any_per_pair(m[outside], len(o))
+        h = np.isin(inner.kinds[i[op]], (3, 6)) & hole_edge[ox]
+        if h.any():
+            mx, my, m = _piece_midpoints(outer, oedges, op[h], ox[h],
+                                         inner, iedges, ip, ix, len(o))
+            parity, on = _pip_parity_and_edge(mx, my, inner, i[m])
+            ok &= ~_any_per_pair(m[parity & ~on], len(o))
+        out[s:e] = ok
+    return out
+
+
+def _any_per_pair(owner: np.ndarray, n: int) -> np.ndarray:
+    return np.bincount(owner, minlength=n) > 0
+
+
+def _piece_midpoints(a, aedges, ap, ax, b, bedges, bp, bx, n):
+    """(x, y, pair) of the midpoint of every piece that the edges ax of
+    a (owned by pairs ap) split into where they meet the edges bx of b
+    (pairs bp, sorted): at proper crossings and where an endpoint of a b
+    edge lies on the a edge.  Split points at b vertices are those
+    vertices' own coordinates, so a piece along a b edge keeps its
+    midpoint on that edge in the usual exact cases."""
+    k, j = _cross_expand(ap, bp, n)
+    p1, p2 = a.coords[aedges[0][ax]], a.coords[aedges[1][ax]]
+    q1, q2 = b.coords[bedges[0][bx[j]]], b.coords[bedges[1][bx[j]]]
+    d1, d2, d3, d4 = _orients(p1[k], p2[k], q1, q2)
+    v = p2 - p1
+    ll = (v * v).sum(axis=1)
+    proper = (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+              & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0))
+    on3 = (d3 == 0) & _on_segs(p1[k], p2[k], q1)
+    on4 = (d4 == 0) & _on_segs(p1[k], p2[k], q2)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        tc = d1[proper] / (d1[proper] - d2[proper])
+
+        def t_of(q, sel):
+            return np.where(ll[k[sel]] > 0, ((q[sel] - p1[k[sel]])
+                            * v[k[sel]]).sum(axis=1) / ll[k[sel]], 0.0)
+        t3, t4 = t_of(q1, on3), t_of(q2, on4)
+    entry = np.arange(len(ax))
+    ent = np.concatenate((entry, entry, k[proper], k[on3], k[on4]))
+    t = np.concatenate((np.zeros(len(ax)), np.ones(len(ax)), tc, t3, t4))
+    pt = np.concatenate((p1, p2, p1[k[proper]] + tc[:, None]
+                         * v[k[proper]], q1[on3], q2[on4]))
+    order = np.lexsort((t, ent))
+    ent, t, pt = ent[order], t[order], pt[order]
+    piece = (ent[1:] == ent[:-1]) & (t[1:] > t[:-1])
+    mid = (pt[:-1][piece] + pt[1:][piece]) / 2.0
+    return mid[:, 0], mid[:, 1], ap[ent[:-1][piece]]

@@ -376,18 +376,15 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
                                           keep_distance=keep_distance,
                                           assume_left_points=assume_left_points)
 
-    from .conf import config, jvm_pip_enabled
     if assume_left_points and (
             (expand == 0.0 and not keep_distance
              and predicate in ("within", "intersects", "covered_by"))
-            or predicate == "dwithin") and jvm_pip_enabled():
-        # use_jvm_pip=True forces the compiled route; None (default) lets
-        # the estimated pair count choose it
+            or predicate == "dwithin"):
+        # the estimated pair count chooses the compiled route
         jvm = _points_vs_polygons_distributed(
             left, right, left_id=left_id, right_id=right_id,
             gridsize=gridsize, predicate=predicate, distance=distance,
-            min_pairs=0 if config.get("use_jvm_pip")
-            else PIP_COMPILED_MIN_PAIRS)
+            min_pairs=PIP_COMPILED_MIN_PAIRS)
         if jvm is not None:
             PATH_STATS["jvm_polys_dist"] += 1
             return jvm
@@ -482,7 +479,6 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
         return spark.createDataFrame([], _pairs_schema(
             left, right, left_id, right_id,
             keep_distance or predicate == "dwithin"))
-    rid_t = right.schema[right_id].dataType.simpleString()
     rids = np.array([r[0] for r in rows])
     ra = from_wkb([r[1] for r in rows])
     rb = np.array([[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64)
@@ -500,15 +496,12 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
            * (np.floor((rb[:, 3] + _exp0) / _g0)
               - np.floor((rb[:, 1] - _exp0) / _g0) + 1))
     rights_all_small = bool((_nc <= MAX_COVER_CELLS).all())
-    rect_ok = bool(r_rect.all()) and rights_all_small and \
-        predicate in ("within", "intersects", "covered_by", "dwithin")
-    # GENERAL polygons (concave/holed/multipart) also compile JVM-side:
-    # ray-cast PIP as a higher-order SQL expression (round-4; VERDICT r3
-    # directive 1b) — distance variants still take the Arrow kernel
-    poly_ok = (bool(np.isin(ra.kinds, (3, 6)).all())
-               and (predicate in ("within", "intersects", "covered_by")
-                    and not keep_distance or predicate == "dwithin"))
-    if (rect_ok or poly_ok) and assume_left_points is not False:
+    # the between-filters emit no distance: keep_distance outside dwithin
+    # takes the Arrow kernel, which computes it
+    rect_ok = bool(r_rect.all()) and rights_all_small and (
+        predicate in ("within", "intersects", "covered_by")
+        and not keep_distance or predicate == "dwithin")
+    if rect_ok and assume_left_points is not False:
         if assume_left_points:
             left_is_points = True  # caller vouches (e.g. geom_kind filter)
         else:
@@ -520,18 +513,11 @@ def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
             left_is_points = (ext["ex"] is not None
                               and float(ext["ex"] or 0) == 0.0
                               and float(ext["ey"] or 0) == 0.0)
-        if left_is_points and rect_ok:
+        if left_is_points:
             PATH_STATS["jvm_rects_bcast"] += 1
             return _points_vs_rects_jvm(
                 spark, left, rids, rb, predicate, left_id=left_id,
-                right_id=right_id, rid_t_source=right, distance=distance,
-                gridsize=gridsize, keep_distance=keep_distance)
-        if left_is_points and poly_ok:
-            PATH_STATS["jvm_polys_bcast"] += 1
-            return _points_vs_polygons_jvm(
-                spark, left, rids, ra, rb, left_id=left_id,
-                right_id=right_id, rid_t=rid_t, gridsize=gridsize,
-                predicate=predicate, distance=distance)
+                right_id=right_id, distance=distance, gridsize=gridsize)
 
     # Arrow kernel: the right enters the shared candidate generator as a
     # driver-local (id, bbox) frame joined under broadcast; the kernel
@@ -760,44 +746,6 @@ def _skip_words(skip_slots: list, n_slots: int) -> list:
 
 _CHAIN_COLS_SQL = ("__evx array<double>, __evy array<double>, "
                    "__eskip array<bigint>, __esk0 bigint")
-
-
-def _chain_cols_of(ga, skip_mask) -> tuple[list, list, list]:
-    """Per-geometry CHAINED vertex arrays (vx, vy, skip words, first
-    word scalar): each ring
-    is one closed chain (its consecutive vertex pairs reproduce exactly
-    the edge set _edge_rows_of carried as 4 arrays, bit-for-bit); the
-    connector slot between rings is flagged in the skip mask.  Halves
-    pack bytes per edge vs the round-5 4-array form (VERDICT r5 #1).
-    Geometries flagged in `skip_mask` get empty arrays."""
-    vxs, vys, skips, sk0s = [], [], [], []
-    for i in range(len(ga)):
-        if skip_mask[i]:
-            vxs.append([]); vys.append([]); skips.append([])
-            sk0s.append(0)
-            continue
-        vx_parts, vy_parts, skip = [], [], []
-        nv = 0
-        for ring in ga.rings_of_geom(i):
-            if len(ring) < 2:
-                continue
-            if nv:
-                # connector = the implicit vertex pair across the ring
-                # boundary; it occupies slot nv-1 and adds no vertex
-                skip.append(nv - 1)
-            vx_parts.append(ring[:, 0])
-            vy_parts.append(ring[:, 1])
-            nv += len(ring)
-        if nv == 0:
-            vxs.append([]); vys.append([]); skips.append([])
-            sk0s.append(0)
-            continue
-        words = _skip_words(skip, nv - 1)
-        vxs.append(np.concatenate(vx_parts).tolist())
-        vys.append(np.concatenate(vy_parts).tolist())
-        skips.append(words)
-        sk0s.append(words[0] if words else 0)
-    return vxs, vys, skips, sk0s
 
 
 _COVER_COLS = ["__rid", "cell_key", "__rminx", "__rminy", "__rmaxx",
@@ -1096,8 +1044,7 @@ def _polys_pack_df(right: DataFrame, right_id: str, rid_t: str, g: float,
                    expand: float, rect_fast: bool) -> DataFrame:
     """Distributed O(|right|) Arrow pack pass: one row per (right
     geometry, cover cell) carrying that cell's edge SUBSET + base parity
-    (`_pack_cover_rows`).  Shared by the distributed point x polygon join
-    and the compiled polygon x polygon head-containment term."""
+    (`_pack_cover_rows`) for the distributed point x polygon join."""
     pack_schema = f"__rid {rid_t}" + _COVER_SCHEMA_TAIL
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1322,108 +1269,13 @@ def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
                       F.col("__rid").alias(out_right))
 
 
-def _points_vs_polygons_jvm(spark, left, rids, ra, rb, *, left_id,
-                            right_id, rid_t, gridsize,
-                            predicate: str = "within",
-                            distance: float | None = None) -> DataFrame:
-    """All-JVM refine for point-left x GENERAL polygon-right (concave,
-    holed, multipart): cell join + ray-cast PIP via `_pip_sql` over
-    broadcast per-polygon edge arrays — the whole refine stays in
-    whole-stage codegen, no Python worker on the pair path.  Valid for
-    within / covered_by / intersects, which coincide for point lefts with
-    boundary-inclusive PIP (reference sfilter.py:311-328 rewrite)."""
-    import pandas as _pd
-    g = float(gridsize)
-    out_right = right_id if right_id != left_id else right_id + "_2"
-
-    from .geom.predicates import rect_flags
-    r_rect, _ = rect_flags(ra)
-    expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
-    if predicate == "dwithin":  # distance needs edges for ALL rows
-        r_rect = np.zeros(len(ra), dtype=bool)
-    rids = np.asarray(rids)
-    edge_rows = _edge_rows_of(ra)
-
-    ncells = ((np.floor((rb[:, 2] + expand + FALSE_EASTING) / g)
-               - np.floor((rb[:, 0] - expand + FALSE_EASTING) / g) + 1)
-              * (np.floor((rb[:, 3] + expand) / g)
-                 - np.floor((rb[:, 1] - expand) / g) + 1)) \
-        if len(rb) else np.zeros(0)
-    small = ncells <= MAX_COVER_CELLS
-    sm = np.nonzero(small)[0]
-    # small rights: ONE broadcast of per-(right, cover-cell) rows carrying
-    # that cell's edge SUBSET + base parity — same pack as the distributed
-    # path, so high-vertex rights ride the codegen unroll tiers here too
-    rcells = spark.createDataFrame(
-        _pack_cover_rows([edge_rows[i] for i in sm], rids[sm], rb[sm],
-                         r_rect[sm], g, expand),
-        schema=f"__rid {rid_t}" + _COVER_SCHEMA_TAIL)
-    l = left.select(F.col(left_id), F.col("minx").alias("__x"),
-                    F.col("miny").alias("__y"))
-    l = l.withColumn("cell_key", F.expr(
-        f"cast(floor((__x + {FALSE_EASTING}) / {g}) as bigint) * {1 << Y_BITS}"
-        f" + cast(floor(__y / {g}) as bigint)"))
-    pair_cols = [F.col(left_id), F.col("__rid"), F.col("__x"), F.col("__y"),
-                 F.col("__isrect"), F.col("__base"), F.col("__vert"),
-                 F.col("__evx"), F.col("__evy"), F.col("__eskip"),
-                 F.col("__esk0")]
-    cand = l.join(F.broadcast(rcells), "cell_key") \
-        .where((F.col("__x") >= F.col("__rminx")) &
-               (F.col("__x") <= F.col("__rmaxx")) &
-               (F.col("__y") >= F.col("__rminy")) &
-               (F.col("__y") <= F.col("__rmaxy")) &
-               F.expr(_SUBCELL_FILTER)) \
-        .select(*pair_cols)
-    if (~small).any():
-        # country-sized rights: plain bbox theta-join with FULL edge
-        # arrays (no cell to subset by), base parity 0
-        bg = np.nonzero(~small)[0]
-        vx, vy, skips, sk0 = _chain_cols_of(ra, r_rect)
-        big_df = F.broadcast(spark.createDataFrame(
-            [(rids[i].item() if hasattr(rids[i], "item") else rids[i],
-              bool(r_rect[i]), 0, False, 0.0, 0.0, float(g), float(g),
-              0, 0, 0,
-              float(rb[i, 0] - expand), float(rb[i, 1] - expand),
-              float(rb[i, 2] + expand), float(rb[i, 3] + expand),
-              vx[i], vy[i], skips[i], sk0[i]) for i in bg],
-            schema=(f"__rid {rid_t}, __isrect boolean, __base int, "
-                    "__vert boolean, __cx0 double, __cy0 double, "
-                    "__swx double, __swy double, "
-                    "__si int, __sj int, __km1 int, "
-                    "__rminx double, __rminy double, "
-                    "__rmaxx double, __rmaxy double, "
-                    + _CHAIN_COLS_SQL)))
-        cand = cand.unionByName(
-            l.crossJoin(big_df)
-            .where((F.col("__x") >= F.col("__rminx")) &
-                   (F.col("__x") <= F.col("__rmaxx")) &
-                   (F.col("__y") >= F.col("__rminy")) &
-                   (F.col("__y") <= F.col("__rmaxy")))
-            .select(*pair_cols))
-    if predicate == "dwithin":
-        out = (cand.withColumn("distance", F.expr(
-                   _point_poly_dist_sql("__e", "__x", "__y", "__base")))
-               .where(F.col("distance") <= float(distance)))
-        return out.select(left_id, F.col("__rid").alias(out_right),
-                          "distance")
-    cand = cand.withColumn(
-        "__px", F.expr("CASE WHEN __vert THEN __y ELSE __x END")) \
-        .withColumn(
-        "__py", F.expr("CASE WHEN __vert THEN __x ELSE __y END"))
-    out = cand.where(
-        F.expr(_pip_dispatch_sql("__e", "__px", "__py", "__isrect",
-                                 "__base")))
-    return out.select(left_id, F.col("__rid").alias(out_right))
-
-
 def _points_vs_rects_jvm(spark, left, rids, rb, predicate, *, left_id,
-                         right_id, rid_t_source, distance, gridsize,
-                         keep_distance) -> DataFrame:
+                         right_id, distance, gridsize) -> DataFrame:
     """All-JVM refine for point-left x rectangle-right: cell join +
-    between-filters (dwithin: clamped-axis distance expression).  Points
-    live in exactly one cell, so no anchor dedup is needed."""
+    between-filters (dwithin: clamped-axis distance expression, kept as
+    the `distance` column).  Points live in exactly one cell, so no
+    anchor dedup is needed."""
     import pandas as _pd
-    need_dist = keep_distance or predicate == "dwithin"
     expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
     g = float(gridsize)
     gi, keys = cover_cell_keys(rb[:, 0] - expand, rb[:, 1] - expand,
@@ -1449,11 +1301,8 @@ def _points_vs_rects_jvm(spark, left, rids, rb, predicate, *, left_id,
                      " + pow(greatest(__rminy - __y, __y - __rmaxy, 0D), 2))")
         cand = cand.withColumn("__dist", F.expr(dist_expr)) \
                    .where(F.col("__dist") <= float(distance))
-        cols = [left_id, out_right] + (["__dist"] if need_dist else [])
-        out = cand.select(*cols)
-        if need_dist:
-            out = out.withColumnRenamed("__dist", "distance")
-        return out
+        return cand.select(left_id, out_right,
+                           F.col("__dist").alias("distance"))
     out = cand.where((F.col("__x") >= F.col("__rminx")) &
                      (F.col("__x") <= F.col("__rmaxx")) &
                      (F.col("__y") >= F.col("__rminy")) &

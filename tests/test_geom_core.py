@@ -101,6 +101,26 @@ def test_contains_polygon_pairs():
                       "POLYGON ((8 8, 12 8, 12 12, 8 12, 8 8))"])
     res = refine_pairs(inner, outer, np.array([0, 1]), np.array([0, 0]), "within")
     assert list(res) == [True, False]
+    # vertices inside is not enough: an edge crossing the L's notch, an
+    # edge poking into it, a polygon enclosing the hole, a line crossing it
+    outer = from_wkt(["POLYGON ((0 0, 4 0, 4 2, 2 2, 2 4, 0 4, 0 0))",
+                      "POLYGON ((10 0, 20 0, 20 10, 10 10, 10 0), "
+                      "(13 3, 17 3, 17 7, 13 7, 13 3))"])
+    inner = from_wkt(["LINESTRING (1 3.5, 3.5 1)",
+                      "POLYGON ((0.5 3.9, 0.5 0.1, 3.9 0.1, 0.5 3.9))",
+                      "POLYGON ((11 1, 19 1, 19 9, 11 9, 11 1))",
+                      "LINESTRING (11 5, 19 5)",
+                      # covered: along the boundary, sharing the hole's rim,
+                      # holed around the hole
+                      "LINESTRING (0 0, 4 0, 4 2)",
+                      "POLYGON ((12 2, 18 2, 18 3, 12 3, 12 2))",
+                      "POLYGON ((11 1, 19 1, 19 9, 11 9, 11 1), "
+                      "(12 2, 18 2, 18 8, 12 8, 12 2))"])
+    oi = np.array([0, 0, 1, 1, 0, 1, 1])
+    res = refine_pairs(inner, outer, np.arange(7), oi, "within")
+    assert list(res) == [False] * 4 + [True] * 3
+    assert list(refine_pairs(outer, inner, oi, np.arange(7), "contains")) \
+        == list(res)
 
 
 def test_segments_intersect():

@@ -13,7 +13,7 @@ directions."""
 
 import numpy as np
 import pytest
-from hypothesis import assume, given, settings, strategies as st
+from hypothesis import assume, example, given, settings, strategies as st
 from pyspark.sql import types as T
 
 import sgspark.geom.predicates as predicates
@@ -219,10 +219,8 @@ def test_chunked_refine_identical(monkeypatch):
 # ---------------------------------------------------------------------- #
 # hypothesis differential on an integer lattice: small coordinates make
 # shared edges, vertex touches and collinear overlaps common.  Single
-# points stay off the left: they take the point fast path, not the
-# batched test.  The oracle decides point-vs-line by distance == 0, exact
-# on this lattice but not for every segment (POINT (1 0) vs
-# LINESTRING (0 0, 49 0) rounds to a nonzero distance).
+# points on the left take the PIP fast path against polygons and the
+# batched test against lines and points.
 # ---------------------------------------------------------------------- #
 c = st.integers(min_value=0, max_value=12)
 
@@ -263,9 +261,8 @@ def polygon(draw, x0=0):
 
 @st.composite
 def geometry(draw, left):
-    kinds = ["multipoint", "line", "multiline", "polygon", "multipolygon"]
-    if not left:
-        kinds.append("point")
+    kinds = ["point", "multipoint", "line", "multiline", "polygon",
+             "multipolygon"]
     kind = draw(st.sampled_from(kinds))
     pt = st.tuples(c, c)
     if kind == "point":
@@ -297,6 +294,30 @@ def test_refine_matches_oracle_property(lefts, rights):
     want = [_geom_geom_intersects(la, int(i), ra, int(j))
             for i, j in zip(li, ri)]
     assert got.tolist() == want
+
+
+@settings(max_examples=200, deadline=None)
+@example(x0=0, y0=0, dx=1, dy=0, n=49, k=1)
+@given(x0=c, y0=c, dx=st.integers(-3, 3), dy=st.integers(-3, 3),
+       n=st.integers(2, 60), k=st.integers(1, 59))
+def test_point_on_segment_property(x0, y0, dx, dy, n, k):
+    """A lattice point at a non-lattice parameter k/n of a segment lies on
+    it, for a point or multipoint on either side and the segment as a line
+    or as one part of a multiline."""
+    assume((dx, dy) != (0, 0) and k < n)
+    a, b = (x0, y0), (x0 + n * dx, y0 + n * dy)
+    p = (x0 + k * dx, y0 + k * dy)
+    pts = ["POINT ({} {})".format(*p), f"MULTIPOINT ((50 50), ({_wkt_xy([p])}))"]
+    segs = [f"LINESTRING ({_wkt_xy([a, b])})",
+            f"MULTILINESTRING ((90 90, 91 95), ({_wkt_xy([a, b])}))"]
+    for lw, rw in [(q, g) for q in pts for g in segs] + \
+            [(g, q) for q in pts for g in segs]:
+        la, ra = from_wkt([lw]), from_wkt([rw])
+        z = np.zeros(1, dtype=np.int64)
+        assert refine_pairs(la, ra, z, z, "intersects").tolist() == [True], \
+            (lw, rw)
+        assert _geom_geom_intersects(la, 0, ra, 0), (lw, rw)
+
 
 
 @pytest.mark.parametrize("left_kind", ["point", "polygon"])

@@ -1,25 +1,28 @@
-"""JVM-compiled general point-in-polygon joins (round 4, VERDICT r3 #1b).
+"""JVM-compiled general point-in-polygon joins.
 
-The ray-cast PIP SQL expression (_pip_sql) must agree pair-for-pair with
-the Arrow kernel (pip_pairs_vectorized) on concave, holed and multipart
-polygons — including points exactly on edges, vertices and hole rims —
-across all three execution paths:
+The ray-cast PIP SQL expression (_pip_sql) of the distributed compiled
+route must agree pair-for-pair with the Arrow kernel
+(pip_pairs_vectorized) on concave, holed and multipart polygons —
+including points exactly on edges, vertices and hole rims — across all
+three execution paths:
 
-  kernel       broadcast_right=False, no point hint  -> mapInPandas refine
-  jvm-bcast    broadcast right, point hint           -> _points_vs_polygons_jvm
-  jvm-dist     no broadcast, point hint              -> _points_vs_polygons_distributed
+  kernel-dist       broadcast_right=False, no point hint -> mapInPandas refine
+  compiled-dist     broadcast_right=False, point hint    -> _points_vs_polygons_distributed
+  broadcast-kernel  broadcast right, point hint          -> mapInPandas refine
 
 These fixtures sit far below `joins.PIP_COMPILED_MIN_PAIRS`, where the
-default size rule sends jvm-dist calls to the Arrow kernel, so the tests
-that exercise the compiled executor pin it with `compiled()`.
+default size rule sends compiled-dist calls to the Arrow kernel, so the
+tests that exercise the compiled executor pin it with `compiled()`.
 """
+
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from sgspark.conf import config_override
+import sgspark.joins as joins
 from sgspark.geom.wkb import from_wkt, to_wkb
 from sgspark.joins import sjoin_pairs
 
@@ -42,8 +45,8 @@ POLYS = [
 ]
 
 
-def zones_df(spark):
-    ga = from_wkt(POLYS)
+def zones_df(spark, wkts=POLYS):
+    ga = from_wkt(wkts)
     b = ga.bounds()
     rows = [(i, bytearray(w), float(b[i, 0]), float(b[i, 1]),
              float(b[i, 2]), float(b[i, 3]))
@@ -90,9 +93,22 @@ def pair_set(df):
     return {(r[0], r[1]) for r in df.collect()}
 
 
+@contextmanager
+def pip_route_min_pairs(n):
+    """Pin the distributed point x polygon route's size rule at n pairs."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(joins, "PIP_COMPILED_MIN_PAIRS", n)
+        yield
+
+
 def compiled():
     """Force the compiled point x polygon route regardless of size."""
-    return config_override(use_jvm_pip=True)
+    return pip_route_min_pairs(0)
+
+
+def kernel_route():
+    """Force the Arrow-kernel point x polygon route regardless of size."""
+    return pip_route_min_pairs(float("inf"))
 
 
 @pytest.mark.parametrize("predicate", ["within", "intersects"])
@@ -106,16 +122,36 @@ def test_three_paths_agree(spark, predicate):
         jvm_d = pair_set(sjoin_pairs(
             pts, zones, predicate, left_id="pid", right_id="zid",
             gridsize=7.0, broadcast_right=False, assume_left_points=True))
-    jvm_b = pair_set(sjoin_pairs(
+    bcast = pair_set(sjoin_pairs(
         pts, zones, predicate, left_id="pid", right_id="zid",
         gridsize=7.0, assume_left_points=True))
-    assert kernel == jvm_d == jvm_b
+    assert kernel == jvm_d == bcast
     # sanity on the hand-placed boundary cases (boundary counts as inside)
     for pid, zid in [(0, 0), (2, 0), (3, 0), (4, 0), (6, 1), (7, 1),
                      (8, 1), (9, 2), (10, 2), (12, 3), (13, 3), (14, 3)]:
         assert (pid, zid) in kernel
     for pid in (1, 5, 11, 15):
         assert not any(p == pid for p, _ in kernel)
+
+
+def test_rect_keep_distance_routes_agree(spark):
+    """keep_distance against rectangles: the auto broadcast route (whose
+    compiled rect filters emit no distance, so it refines with the kernel
+    here) and broadcast_right=False return the same columns and rows."""
+    zones = zones_df(spark, ["POLYGON ((0 0, 4 0, 4 2, 0 2, 0 0))",
+                             "POLYGON ((10 0, 20 0, 20 10, 10 10, 10 0))",
+                             "POLYGON ((3 1, 12 1, 12 5, 3 5, 3 1))"])
+    pts = points_df(spark)
+    for predicate in ("within", "intersects", "covered_by"):
+        outs = [sjoin_pairs(pts, zones, predicate, left_id="pid",
+                            right_id="zid", gridsize=7.0,
+                            keep_distance=True, **kw)
+                for kw in ({"assume_left_points": True}, {},
+                           {"broadcast_right": False})]
+        assert all(o.schema == outs[-1].schema for o in outs)
+        assert outs[-1].columns == ["pid", "zid", "distance"]
+        rows = [sorted(tuple(r) for r in o.collect()) for o in outs]
+        assert rows[0] == rows[1] == rows[2] and len(rows[0]) > 0
 
 
 def test_distributed_jvm_plan_is_python_free_on_pairs(spark):
@@ -194,8 +230,8 @@ def test_declines_on_mixed_or_huge_rights(spark):
 
 
 def test_dwithin_three_paths_agree(spark):
-    """dwithin against general polygons: kernel / jvm-broadcast / jvm-dist
-    must agree on pairs AND bit-exact distances (same IEEE op order)."""
+    """dwithin against general polygons: kernel-dist / compiled-dist /
+    broadcast-kernel must agree on pairs AND bit-exact distances (same IEEE op order)."""
     zones = zones_df(spark)
     pts = points_df(spark)
 
@@ -210,10 +246,10 @@ def test_dwithin_three_paths_agree(spark):
                                  right_id="zid", distance=1.25,
                                  gridsize=7.0, broadcast_right=False,
                                  assume_left_points=True))
-    jvm_b = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
+    bcast = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
                              right_id="zid", distance=1.25, gridsize=7.0,
                              assume_left_points=True))
-    assert kernel == jvm_d == jvm_b
+    assert kernel == jvm_d == bcast
     assert len(kernel) > 0
     d = {(a, b): dist for a, b, dist in kernel}
     assert d[(0, 0)] == 0.0          # inside -> 0
@@ -279,7 +315,8 @@ def high_vertex_points_df(spark):
 @pytest.mark.parametrize("gridsize", [4.0, 11.0, 50000.0])
 def test_high_vertex_three_paths_agree(spark, gridsize):
     """Round 5 (VERDICT r4 #1): >32-edge rights ride the cell-subset pack;
-    pair sets must stay identical across kernel / jvm-dist / jvm-bcast at
+    pair sets must stay identical across kernel-dist / compiled-dist /
+    broadcast-kernel at
     gridsizes that produce many cover cells per polygon (4.0), a few
     (11.0), and one (50000.0, where subsetting is a no-op)."""
     zones = high_vertex_zones_df(spark)
@@ -291,9 +328,9 @@ def test_high_vertex_three_paths_agree(spark, gridsize):
         jvm_d = pair_set(sjoin_pairs(pts, zones, "within",
                                      broadcast_right=False,
                                      assume_left_points=True, **kw))
-    jvm_b = pair_set(sjoin_pairs(pts, zones, "within",
+    bcast = pair_set(sjoin_pairs(pts, zones, "within",
                                  assume_left_points=True, **kw))
-    assert kernel == jvm_d == jvm_b and len(kernel) > 0
+    assert kernel == jvm_d == bcast and len(kernel) > 0
     # hand-placed sanity: C-notch point outside, body/top-bar inside
     assert not any(p == 6 for p, _ in kernel)
     assert (7, 3) in kernel and (8, 3) in kernel
@@ -314,9 +351,9 @@ def test_high_vertex_dwithin_paths_agree(spark):
         jvm_d = rows(sjoin_pairs(pts, zones, "dwithin",
                                  broadcast_right=False,
                                  assume_left_points=True, **kw))
-    jvm_b = rows(sjoin_pairs(pts, zones, "dwithin",
+    bcast = rows(sjoin_pairs(pts, zones, "dwithin",
                              assume_left_points=True, **kw))
-    assert kernel == jvm_d == jvm_b and len(kernel) > 0
+    assert kernel == jvm_d == bcast and len(kernel) > 0
 
 
 def test_cell_subsets_are_small(spark):
@@ -421,7 +458,7 @@ def test_concave_zone_variant_paths_agree(spark, monkeypatch):
         jvm = pair_set(sjoin_pairs(
             pts, zones, "within", left_id="doc_index", right_id="zone_id",
             broadcast_right=False, assume_left_points=True))
-    with config_override(use_jvm_pip=False):
+    with kernel_route():
         kern = pair_set(sjoin_pairs(
             pts, zones, "within", left_id="doc_index", right_id="zone_id",
             broadcast_right=False, assume_left_points=True))

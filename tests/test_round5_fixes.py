@@ -316,26 +316,32 @@ class TestNetworkAdditions:
 
 
 class TestConfigSeam:
-    def test_use_jvm_pip_override(self, spark):
-        from sgspark.conf import config_override
+    def test_pip_route_pinned_by_constant(self, spark, monkeypatch):
+        """The distributed point x polygon route is chosen by the module
+        constant `PIP_COMPILED_MIN_PAIRS` alone, so pinning it at 0 or
+        infinity forces the compiled or the kernel route."""
+        import sgspark.joins as J
         from test_jvm_pip import zones_df, points_df, pair_set
-        from sgspark.joins import sjoin_pairs
         zones, pts = zones_df(spark), points_df(spark)
-        with config_override(use_jvm_pip=True):
-            jvm = pair_set(sjoin_pairs(
-                pts, zones, "within", left_id="pid", right_id="zid",
-                gridsize=7.0, broadcast_right=False,
-                assume_left_points=True))
-        with config_override(use_jvm_pip=False):
-            kern = sjoin_pairs(
+
+        def run():
+            return J.sjoin_pairs(
                 pts, zones, "within", left_id="pid", right_id="zid",
                 gridsize=7.0, broadcast_right=False,
                 assume_left_points=True)
-            # config forced the Arrow kernel: the refine kernel (named
-            # `kernel`) is in the plan, not just the JVM path's edge pack
-            plan = kern._jdf.queryExecution().executedPlan().toString()
-            assert "kernel(" in plan
-            assert pair_set(kern) == jvm
+
+        monkeypatch.setattr(J, "PIP_COMPILED_MIN_PAIRS", 0)
+        jvm = run()
+        assert "kernel(" not in \
+            jvm._jdf.queryExecution().executedPlan().toString()
+        jvm = pair_set(jvm)
+        monkeypatch.setattr(J, "PIP_COMPILED_MIN_PAIRS", float("inf"))
+        kern = run()
+        # the constant forced the Arrow kernel: the refine kernel (named
+        # `kernel`) is in the plan, not just the JVM path's edge pack
+        plan = kern._jdf.queryExecution().executedPlan().toString()
+        assert "kernel(" in plan
+        assert pair_set(kern) == jvm
 
     def test_refine_runner_override(self, spark):
         """The configured refine_runner is really what executes: an
@@ -360,9 +366,9 @@ class TestConfigSeam:
                 gridsize=7.0, broadcast_right=False))
 
         real = run()
-        with config_override(use_jvm_pip=False, refine_runner=none_pass):
+        with config_override(refine_runner=none_pass):
             assert run() == set()
-        with config_override(use_jvm_pip=False, refine_runner=all_pass):
+        with config_override(refine_runner=all_pass):
             sup = run()
         assert real <= sup and len(sup) > len(real)
 

@@ -81,6 +81,17 @@ def main():
                      "chained-vertex PIP residual (no Python on the "
                      "pair path)", cap(pip_ngon)))
 
+    # point lefts x a small general-polygon right: the broadcast route
+    # has no compiled executor for non-rectangles, so the points take the
+    # shared cell join and the Arrow refine kernel
+    ng = wkt_to_wkb_df(zones_from_customer(spark, SF, shape="ngon8"))
+    pip_bcast = sjoin_pairs(pts, ng, "within", left_id="doc_index",
+                            right_id="zone_id", assume_left_points=True)
+    sections.append(("point x polygon sjoin, broadcast route — point "
+                     "cells BroadcastHashJoin'd against the driver-built "
+                     "right cover, ONE MapInPandas refine reading the "
+                     "broadcast GeomArray", cap(pip_bcast)))
+
     z = zones.select(F.col("zone_id"), "geometry", "minx", "miny",
                      "maxx", "maxy")
     a = z.where("zone_id % 2 = 0").withColumnRenamed("zone_id", "aid")
@@ -89,7 +100,6 @@ def main():
     # polygon lefts x a small polygon right: the broadcast Arrow route —
     # right bboxes broadcast into the cell join, anchor dedup JVM-side,
     # right geometries read from the broadcast GeomArray in the kernel
-    ng = wkt_to_wkb_df(zones_from_customer(spark, SF, shape="ngon8"))
     pp = sjoin_pairs(ng.where("zone_id % 2 = 0"), ng.where("zone_id % 2 = 1"),
                      "intersects", left_id="zone_id", right_id="zone_id")
     sections.append(("polygon x polygon sjoin, broadcast Arrow route — "

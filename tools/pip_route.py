@@ -1,21 +1,32 @@
-"""Compiled PIP vs Arrow-kernel refine of the distributed point x polygon
-join: CPU seconds per call across input sizes, the evidence behind
+"""Compiled PIP vs Arrow-kernel refine of the point x polygon join: CPU
+seconds per call across input sizes, the evidence behind
 `joins.PIP_COMPILED_MIN_PAIRS` (BENCH/PIP_ROUTE.md).
 
 A cell is one (size, route) pair measured in its own fresh process on
 local[4]: N synthetic document points (the first point of docs 0..N-1,
-cached and materialized, as the pip_tile pipeline leaves them) joined
-"within" M ngon64 zones through `sjoin_pairs(..., broadcast_right=False,
-assume_left_points=True)`, the route forced by `config["use_jvm_pip"]`
-("default" leaves it unset, so the size rule chooses).
+cached and materialized, as the pip_tile pipeline leaves them) joined to
+M ngon64 zones through `sjoin_pairs(..., assume_left_points=True)`.
+
+- Distributed cells (the default) pass `broadcast_right=False`.  The route
+  is pinned through `joins.PIP_COMPILED_MIN_PAIRS`: "compiled" sets it to
+  0, "kernel" to infinity, and "default" leaves it, so the size rule
+  chooses.
+- `--broadcast` cells leave `broadcast_right` unset, so the auto
+  broadcast route runs; only "default" applies there.  With `--base DIR`
+  each size is also measured on the checkout at DIR (its `sgspark` and
+  `perfbench`), and the table sets the two defaults side by side.
+
 The first call is "cold"; "warm" is the cheaper of the next two.  CPU is
 that of the driver, the Spark JVM and its Python workers, read from /proc
 (`perfbench/run.py:tree_cpu_s`).  Each call is timed to its materialized
-output (pair count + XOR checksum), and both routes must give the same.
+output (pair count + XOR checksum), and both sides of a row must give
+the same.
 
     python tools/pip_route.py                     # all cells -> markdown
     python tools/pip_route.py 64000x900 128000x1800   # chosen sizes
     python tools/pip_route.py --cell 8000 90 kernel   # one cell -> JSON
+    python tools/pip_route.py --broadcast --base ../parent 8000x90
+    python tools/pip_route.py --broadcast --predicate dwithin 8000x90
 """
 
 from __future__ import annotations
@@ -28,13 +39,13 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 
 # (docs, zones): zones are every (1800 // M)-th key of range(1800), so the
 # 90-zone layer is the pip_tile ngon layer's density
 SIZES = [(8_000, 90), (64_000, 90), (64_000, 450), (64_000, 900),
          (64_000, 1800), (256_000, 1800)]
-ROUTES = {"compiled": True, "kernel": False, "default": None}
+ROUTES = {"compiled": 0, "kernel": float("inf"), "default": None}
+DWITHIN_DISTANCE = 100.0
 
 
 def inputs(n_docs: int, n_zones: int):
@@ -65,7 +76,8 @@ def inputs(n_docs: int, n_zones: int):
     return pts, zones, st
 
 
-def cell(n_docs: int, n_zones: int, route: str) -> dict:
+def cell(n_docs: int, n_zones: int, route: str, *, broadcast: bool,
+         predicate: str) -> dict:
     from inputs import KEY_MULT
     from run import configure_env, stop_session, tree_cpu_s
 
@@ -74,10 +86,11 @@ def cell(n_docs: int, n_zones: int, route: str) -> dict:
     configure_env(work, trace=False)
     try:
         from pyspark.sql import functions as F
-        from sgspark.conf import config_override
-        from sgspark.joins import _pip_pairs_estimate, sjoin_pairs
+        from sgspark import joins
         from sgspark.session import get_spark
 
+        if ROUTES[route] is not None:
+            joins.PIP_COMPILED_MIN_PAIRS = ROUTES[route]
         pts_pdf, zones_pdf, st = inputs(n_docs, n_zones)
         spark = get_spark("pip_route", cores=4)
         spark.sparkContext.setLogLevel("ERROR")
@@ -85,14 +98,14 @@ def cell(n_docs: int, n_zones: int, route: str) -> dict:
             pts = spark.createDataFrame(pts_pdf).cache()
             pts.count()
             zones = spark.createDataFrame(zones_pdf)
+            dist = DWITHIN_DISTANCE if predicate == "dwithin" else None
 
             def call():
-                with config_override(use_jvm_pip=ROUTES[route]):
-                    out = sjoin_pairs(pts, zones, "within",
-                                      left_id="doc_index",
-                                      right_id="zone_id",
-                                      broadcast_right=False,
-                                      assume_left_points=True)
+                out = joins.sjoin_pairs(
+                    pts, zones, predicate, left_id="doc_index",
+                    right_id="zone_id", distance=dist,
+                    broadcast_right=None if broadcast else False,
+                    assume_left_points=True)
                 r = out.agg(F.count("*"), F.expr(
                     f"coalesce(bit_xor(doc_index * {KEY_MULT} + zone_id),"
                     f" 0)")).first()
@@ -110,33 +123,56 @@ def cell(n_docs: int, n_zones: int, route: str) -> dict:
     assert len(res) == 1, res
     (pairs, xor), = res
     return {"docs": n_docs, "zones": n_zones, "route": route,
+            "broadcast": broadcast, "predicate": predicate,
             "pairs": pairs, "xor": xor,
-            "estimate": _pip_pairs_estimate(n_docs, st, 0.0),
+            "estimate": joins._pip_pairs_estimate(
+                n_docs, st, DWITHIN_DISTANCE if predicate == "dwithin"
+                else 0.0),
             "cold_cpu_s": cpu[0], "warm_cpu_s": min(cpu[1:])}
 
 
-def table(sizes) -> str:
+def run_cell(src: str, n: int, m: int, route: str, a) -> dict:
+    """One cell in a fresh process on the checkout at `src`."""
+    cmd = [sys.executable, __file__, "--cell", str(n), str(m), route,
+           "--src", src, "--predicate", a.predicate]
+    if a.broadcast:
+        cmd.append("--broadcast")
+    p = subprocess.run(cmd, capture_output=True, text=True, check=True)
+    got = json.loads(p.stdout.strip().splitlines()[-1])
+    print(json.dumps(got), file=sys.stderr, flush=True)
+    return got
+
+
+def table(sizes, a) -> str:
     from sgspark.joins import PIP_COMPILED_MIN_PAIRS
-    lines = ["| docs × zones | pairs | estimate | compiled cold / warm "
-             "CPU-s | kernel cold / warm CPU-s | size rule picks |",
-             "|---|---|---|---|---|---|"]
+    if a.broadcast:
+        # side by side: the base checkout's default vs this one's
+        sides = {"base": a.base, "change": REPO} if a.base \
+            else {"change": REPO}
+        route = {k: "default" for k in sides}
+        head = " | ".join(f"{k} default cold / warm CPU-s" for k in sides)
+    else:
+        sides = {"compiled": REPO, "kernel": REPO}
+        route = {k: k for k in sides}
+        head = ("compiled cold / warm CPU-s | kernel cold / warm CPU-s | "
+                "size rule picks")
+    lines = [f"| docs × zones | pairs | estimate | {head} |",
+             "|---" * (3 + len(sides) + (not a.broadcast)) + "|"]
     for i, (n, m) in enumerate(sizes):
-        got = {}
-        # alternate which route runs first from size to size
-        for route in ("compiled", "kernel")[::1 if i % 2 == 0 else -1]:
-            p = subprocess.run(
-                [sys.executable, __file__, "--cell", str(n), str(m), route],
-                capture_output=True, text=True, check=True)
-            got[route] = json.loads(p.stdout.strip().splitlines()[-1])
-            print(json.dumps(got[route]), file=sys.stderr, flush=True)
-        c, k = got["compiled"], got["kernel"]
-        assert (c["pairs"], c["xor"]) == (k["pairs"], k["xor"]), (c, k)
-        pick = ("compiled" if c["estimate"] >= PIP_COMPILED_MIN_PAIRS
-                else "kernel")
-        lines.append(
-            f"| {n:,} × {m:,} | {c['pairs']:,} | {c['estimate']:,.0f} | "
-            f"{c['cold_cpu_s']:.1f} / {c['warm_cpu_s']:.1f} | "
-            f"{k['cold_cpu_s']:.1f} / {k['warm_cpu_s']:.1f} | {pick} |")
+        # alternate which side runs first from size to size
+        order = list(sides)[::1 if i % 2 == 0 else -1]
+        got = {k: run_cell(sides[k], n, m, route[k], a) for k in order}
+        first, *rest = got.values()
+        for o in rest:
+            assert (first["pairs"], first["xor"]) == (o["pairs"], o["xor"]), \
+                (first, o)
+        cols = [f"{got[k]['cold_cpu_s']:.1f} / {got[k]['warm_cpu_s']:.1f}"
+                for k in sides]
+        if not a.broadcast:
+            cols.append("compiled" if first["estimate"]
+                        >= PIP_COMPILED_MIN_PAIRS else "kernel")
+        lines.append(f"| {n:,} × {m:,} | {first['pairs']:,} | "
+                     f"{first['estimate']:,.0f} | " + " | ".join(cols) + " |")
     return "\n".join(lines)
 
 
@@ -145,15 +181,30 @@ def main(argv=None) -> int:
     p.add_argument("sizes", nargs="*", metavar="DOCSxZONES",
                    help=f"default: {' '.join(f'{n}x{m}' for n, m in SIZES)}")
     p.add_argument("--cell", nargs=3, metavar=("DOCS", "ZONES", "ROUTE"))
+    p.add_argument("--broadcast", action="store_true",
+                   help="auto broadcast route instead of the distributed one")
+    p.add_argument("--predicate", choices=("within", "dwithin"),
+                   default="within",
+                   help=f"dwithin uses distance {DWITHIN_DISTANCE:g}")
+    p.add_argument("--base", metavar="DIR",
+                   help="with --broadcast: also measure the checkout at DIR")
+    p.add_argument("--src", default=REPO, help=argparse.SUPPRESS)
     a = p.parse_args(argv)
+    src = os.path.abspath(a.src)
+    sys.path[:0] = [src, os.path.join(src, "perfbench")]
     if a.cell:
         n, m, route = int(a.cell[0]), int(a.cell[1]), a.cell[2]
-        if route not in ROUTES:
-            p.error(f"ROUTE must be one of {sorted(ROUTES)}")
-        print(json.dumps(cell(n, m, route)), flush=True)
+        if route not in ROUTES or (a.broadcast and route != "default"):
+            p.error("ROUTE must be default with --broadcast, else one of "
+                    f"{sorted(ROUTES)}")
+        print(json.dumps(cell(n, m, route, broadcast=a.broadcast,
+                              predicate=a.predicate)), flush=True)
     else:
+        if a.base and not a.broadcast:
+            p.error("--base needs --broadcast")
+        a.base = a.base and os.path.abspath(a.base)
         sizes = [tuple(int(v) for v in s.split("x")) for s in a.sizes]
-        print(table(sizes or SIZES), flush=True)
+        print(table(sizes or SIZES, a), flush=True)
     return 0
 
 
