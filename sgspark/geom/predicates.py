@@ -58,7 +58,7 @@ def _points_on_segments(px, py, x1, y1, x2, y2) -> np.ndarray:
     cross = dx * ry - dy * rx
     dot = rx * dx + ry * dy
     ll = dx * dx + dy * dy
-    on = (cross == 0) & (dot >= 0) & (dot <= ll)
+    on = (cross == 0) & (dot >= 0) & (dot <= ll) & (ll > 0)
     return on.any(axis=1)
 
 
@@ -192,7 +192,9 @@ def _pip_parity_and_edge(px, py, ra, ri) -> tuple[np.ndarray, np.ndarray]:
     cross = dx * ry - dy * rx
     dot = rx * dx + ry * dy
     ll = dx * dx + dy * dy
-    on = (cross == 0) & (dot >= 0) & (dot <= ll) & valid
+    # a zero-length edge (a repeated vertex) would pass the first three
+    # tests for every point; its vertex is on the ring's next edge
+    on = (cross == 0) & (dot >= 0) & (dot <= ll) & (ll > 0) & valid
     return inside, np.bincount(owner[on], minlength=len(ri)) > 0
 
 
@@ -446,7 +448,10 @@ def _part_heads_inside(ga, g, poly, pg) -> np.ndarray:
 
 def rect_flags(ga: GeomArray) -> tuple[np.ndarray, np.ndarray]:
     """(is_axis_aligned_rect bool[n], bounds float[n,4]) — single-ring
-    5-point polygons whose vertices all sit on the bbox edges."""
+    5-point polygons whose vertices are the four bbox corners in ring
+    order: every vertex on the bbox edges, every edge changes exactly one
+    coordinate, and vertices 0/2 and 1/3 are opposite corners (so a
+    repeated vertex, a bow tie or a back-and-forth path is no rect)."""
     counts = ga.coords_count_per_geom()
     starts = ga.coords_start_per_geom()
     b = ga.bounds()
@@ -459,7 +464,11 @@ def rect_flags(ga: GeomArray) -> tuple[np.ndarray, np.ndarray]:
         cy = ga.coords[gather.ravel(), 1].reshape(-1, 5)
         on_x = ((cx == b[idx, 0][:, None]) | (cx == b[idx, 2][:, None])).all(axis=1)
         on_y = ((cy == b[idx, 1][:, None]) | (cy == b[idx, 3][:, None])).all(axis=1)
-        is_r[idx] = on_x & on_y
+        axis = ((np.diff(cx, axis=1) != 0) != (np.diff(cy, axis=1) != 0)
+                ).all(axis=1)
+        opposite = ((cx[:, 2] != cx[:, 0]) & (cy[:, 2] != cy[:, 0])
+                    & (cx[:, 3] != cx[:, 1]) & (cy[:, 3] != cy[:, 1]))
+        is_r[idx] = on_x & on_y & axis & opposite
     return is_r, b
 
 
@@ -531,8 +540,9 @@ def _geom_geom_intersects(la, lg, ra, rg) -> bool:
 
 def _contains_pairs(outer: GeomArray, inner: GeomArray,
                     oi: np.ndarray, ii: np.ndarray) -> np.ndarray:
-    """outer[oi[k]] contains inner[ii[k]] (closed semantics ~ covers);
-    only polygon outers contain anything."""
+    """outer[oi[k]] contains inner[ii[k]] (closed semantics ~ covers).
+    A polygon outer may contain anything; a line or point outer contains
+    points and lines, never a polygon."""
     out = np.zeros(len(oi), dtype=bool)
     poly = np.isin(outer.kinds[oi], (3, 6))
     # HOT PATH: single-point inners vs polygon outers — vectorized PIP
@@ -542,20 +552,41 @@ def _contains_pairs(outer: GeomArray, inner: GeomArray,
         s = inner.coords_start_per_geom()[ii[idx]]
         out[idx] = pip_pairs_vectorized(inner.coords[s, 0], inner.coords[s, 1],
                                         outer, oi[idx])
-    rest = np.nonzero(poly & ~pt_inner)[0]
+    rest = np.nonzero((poly & ~pt_inner)
+                      | (~poly & ~np.isin(inner.kinds[ii], (3, 6))))[0]
     if len(rest):
         out[rest] = _covers_general(outer, inner, oi[rest], ii[rest])
     return out
 
 
+def _in_outer(px, py, outer, oedges, o) -> np.ndarray:
+    """bool[n]: point (px[n], py[n]) lies in (or on) polygon outer[o[n]],
+    or on an edge of a line or point outer[o[n]] (exact orientation; the
+    (P, P) edge of a point holds only P)."""
+    res = np.zeros(len(px), dtype=bool)
+    poly = np.isin(outer.kinds[o], (3, 6))
+    if poly.any():
+        res[poly] = pip_pairs_vectorized(px[poly], py[poly], outer, o[poly])
+    n = np.nonzero(~poly)[0]
+    if len(n):
+        a, b, off = oedges
+        e, k = expand_ranges(off[o[n]], off[o[n] + 1])
+        p, q = outer.coords[a[e]], outer.coords[b[e]]
+        r = np.c_[px[n][k], py[n][k]]
+        on = (_orient(p[:, 0], p[:, 1], q[:, 0], q[:, 1], r[:, 0], r[:, 1])
+              == 0) & _on_segs(p, q, r)
+        res[n] = _any_per_pair(k[on], len(n))
+    return res
+
+
 def _covers_general(outer, inner, oi, ii) -> np.ndarray:
-    """Polygon outer[oi[k]] covers inner[ii[k]] of any family, batched.
-    Every vertex of the inner lies in the outer, and every piece of an
-    inner edge, split where it meets an outer ring, has its midpoint in
-    the outer.  A polygon inner must also not have an outer hole in it:
-    no piece of a hole ring, split where it meets the inner's rings, has
-    its midpoint strictly inside the inner.  Pairs run in
-    `_edge_chunks`."""
+    """outer[oi[k]] covers inner[ii[k]], batched: every vertex of the
+    inner lies in the outer (`_in_outer`), and every piece of an inner
+    edge, split where it meets an outer edge, has its midpoint in the
+    outer.  A polygon inner of a polygon outer must also not have an
+    outer hole in it: no piece of a hole ring, split where it meets the
+    inner's rings, has its midpoint strictly inside the inner.  Pairs run
+    in `_edge_chunks`."""
     oedges, iedges = _edge_table(outer), _edge_table(inner)
     obox, ibox = outer.bounds(), inner.bounds()
     ring = np.searchsorted(outer.ring_offsets, oedges[0], "right") - 1
@@ -567,13 +598,13 @@ def _covers_general(outer, inner, oi, ii) -> np.ndarray:
     for s, e in _edge_chunks(np.diff(oedges[2])[oi], np.diff(iedges[2])[ii]):
         o, i = oi[s:e], ii[s:e]
         flat, k = expand_ranges(cstart[i], cstart[i] + ccount[i])
-        bad = ~pip_pairs_vectorized(inner.coords[flat, 0],
-                                    inner.coords[flat, 1], outer, o[k])
+        bad = ~_in_outer(inner.coords[flat, 0], inner.coords[flat, 1],
+                         outer, oedges, o[k])
         ip, ix = _edges_near(inner, iedges, i, obox[o])
         op, ox = _edges_near(outer, oedges, o, ibox[i])
         mx, my, m = _piece_midpoints(inner, iedges, ip, ix,
                                      outer, oedges, op, ox, len(o))
-        outside = ~pip_pairs_vectorized(mx, my, outer, o[m])
+        outside = ~_in_outer(mx, my, outer, oedges, o[m])
         ok = (ccount[i] > 0) & ~_any_per_pair(k[bad], len(o)) \
             & ~_any_per_pair(m[outside], len(o))
         h = np.isin(inner.kinds[i[op]], (3, 6)) & hole_edge[ox]

@@ -80,6 +80,16 @@ def test_pip_with_hole():
     assert list(res) == [False, True, False, True]  # (5,5) in hole
 
 
+def test_zero_length_edge_holds_only_its_vertex():
+    """A repeated vertex is a zero-length edge: it holds that vertex,
+    not every point (the per-ring PIP the oracles use)."""
+    ring = from_wkt(["POLYGON ((0 0, 10 0, 10 0, 0 10, 0 0))"]) \
+        .rings_of_geom(0)[0]
+    px, py = np.array([9.0, 10.0, 2.0, 11.0]), np.array([9.0, 0.0, 2.0, 0.0])
+    assert points_in_ring(px, py, ring).tolist() == [False, True, True,
+                                                     False]
+
+
 def test_refine_pairs_pip_and_dwithin():
     polys = from_wkt([SQ, TRI])
     pts = points(np.array([[5.0, 5.0], [25.0, 22.0], [50.0, 50.0]]))
@@ -121,6 +131,68 @@ def test_contains_polygon_pairs():
     assert list(res) == [False] * 4 + [True] * 3
     assert list(refine_pairs(outer, inner, oi, np.arange(7), "contains")) \
         == list(res)
+
+
+def test_within_line_and_point_containers():
+    """Line and point outers cover with the closed semantics polygon
+    outers use: a point on a segment or equal to a point, a line whose
+    vertices and split edge pieces all lie on the outer."""
+    outer = from_wkt(["LINESTRING (0 0, 4 0)",
+                      "MULTILINESTRING ((0 0, 2 0), (2 0, 2 3))",
+                      "MULTILINESTRING ((0 0, 1 0), (3 0, 4 0))",
+                      "MULTILINESTRING ((0 -1, 0 1), (4 -1, 4 1), "
+                      "(2 -1, 2 1))",
+                      "POINT (1 0)",
+                      "MULTIPOINT ((1 0), (2 0))"])
+    cases = [  # (inner, outer index, within?)
+        ("POINT (1 0)", 0, True),                 # on the segment
+        ("POINT (4 0)", 0, True),                 # at an endpoint
+        ("POINT (1 1)", 0, False),                # off the line
+        ("POINT (5 0)", 0, False),                # on its extension
+        ("MULTIPOINT ((1 0), (3 0))", 0, True),
+        ("MULTIPOINT ((1 0), (1 1))", 0, False),
+        ("LINESTRING (0 0, 2 0)", 0, True),       # collinear sub-line
+        ("LINESTRING (1 0, 3 0)", 0, True),
+        ("LINESTRING (0 0, 4 0)", 0, True),       # equal
+        ("LINESTRING (1 0, 5 0)", 0, False),      # leaves past the end
+        ("LINESTRING (1 0, 3 0, 3 1)", 0, False),  # leaves sideways
+        ("LINESTRING (1 0, 2 0, 2 2)", 1, True),  # bends with the parts
+        ("POINT (2 3)", 1, True),
+        ("LINESTRING (1 0, 2 1)", 1, False),      # cuts the corner
+        ("LINESTRING (0 0, 4 0)", 2, False),      # spans the parts' gap
+        ("LINESTRING (0.5 0, 1 0)", 2, True),
+        ("LINESTRING (0 0, 4 0)", 3, False),      # only crosses (2 0)
+        ("POINT (1 0)", 4, True),                 # equals the point
+        ("POINT (1 1)", 4, False),
+        ("MULTIPOINT ((2 0), (1 0))", 5, True),
+        ("LINESTRING (1 0, 2 0)", 5, False),
+        ("POLYGON ((0 0, 1 0, 1 1, 0 0))", 0, False),  # polygon inner
+    ]
+    inner = from_wkt([c[0] for c in cases])
+    oi = np.array([c[1] for c in cases])
+    want = [c[2] for c in cases]
+    n = len(cases)
+    assert refine_pairs(inner, outer, np.arange(n), oi, "within").tolist() \
+        == want
+    assert refine_pairs(outer, inner, oi, np.arange(n), "contains") \
+        .tolist() == want
+
+
+def test_rect_flags_needs_the_four_bbox_corners():
+    """A 5-point ring whose vertices all sit on bbox corners is a rect
+    only when it walks the four corners in order."""
+    from sgspark.geom.predicates import rect_flags
+    ga = from_wkt(["POLYGON ((0 0, 4 0, 4 2, 0 2, 0 0))",
+                   "POLYGON ((4 2, 4 0, 0 0, 0 2, 4 2))",
+                   "POLYGON ((0 0, 4 0, 4 2, 4 2, 0 0))",   # repeated vertex
+                   "POLYGON ((0 0, 4 2, 4 0, 0 2, 0 0))",   # bow tie
+                   "POLYGON ((0 0, 4 0, 4 2, 4 0, 0 0))"])  # back and forth
+    assert rect_flags(ga)[0].tolist() == [True, True, False, False, False]
+    # the repeated-vertex triangle is not its bbox
+    pts = points(np.array([[1.0, 1.5], [3.0, 1.0]]))
+    hit = refine_pairs(ga, pts, np.array([2, 2]), np.array([0, 1]),
+                       "intersects")
+    assert hit.tolist() == [False, True]
 
 
 def test_segments_intersect():

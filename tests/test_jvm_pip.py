@@ -13,6 +13,8 @@ three execution paths:
 These fixtures sit far below `joins.PIP_COMPILED_MIN_PAIRS`, where the
 default size rule sends compiled-dist calls to the Arrow kernel, so the
 tests that exercise the compiled executor pin it with `compiled()`.
+`dwithin` has no compiled executor: its compiled-dist call refines with
+the Arrow kernel even when pinned.
 """
 
 from contextlib import contextmanager
@@ -42,6 +44,9 @@ POLYS = [
         f"{70 + 5 * np.cos(2 * np.pi * i / 40)!r} "
         f"{5 + 5 * np.sin(2 * np.pi * i / 40)!r}"
         for i in list(range(40)) + [0]) + "))",
+    # triangle with a repeated vertex (a zero-length edge at (36 5.5));
+    # the probe point (35 5) lies in its bbox but outside it
+    "POLYGON ((34.5 4, 36 4, 36 5.5, 36 5.5, 34.5 4))",
 ]
 
 
@@ -68,6 +73,7 @@ def points_df(spark):
         (15.0, 5.0), (11.0, 1.0),          # inside hole (out) / in annulus
         (13.0, 3.0), (13.0, 5.0),          # hole vertex / hole edge (in)
         (32.0, 2.0), (38.0, 8.0), (35.0, 5.0),  # island A / B / between
+                                                # (in zid 5's bbox, out)
         (55.0, 5.0), (52.5, 5.0), (55.0, 10.0),  # tri in / on diag / apex
         (100.0, 100.0),                    # far outside
     ]
@@ -197,7 +203,7 @@ def test_size_rule_picks_route(spark, monkeypatch, tmp_path):
     # that size on the fixture
     st = {"wx0": 0.0, "wx1": 100.0, "wy0": 0.0, "wy1": 100.0,
           "area": 1000.0}
-    assert J._pip_pairs_estimate(10 * J.PIP_COMPILED_MIN_PAIRS, st, 0.0) \
+    assert J._pip_pairs_estimate(10 * J.PIP_COMPILED_MIN_PAIRS, st) \
         == J.PIP_COMPILED_MIN_PAIRS
     monkeypatch.setattr(J, "_plan_row_count",
                         lambda df: 10 * J.PIP_COMPILED_MIN_PAIRS)
@@ -229,9 +235,17 @@ def test_declines_on_mixed_or_huge_rights(spark):
     assert (2, 0) in got and (2, 1) in got  # (2,2) on the line AND in L
 
 
+def refines_with_kernel(df) -> bool:
+    """The plan of `df` refines its pairs in the Arrow kernel's
+    mapInPandas stage."""
+    return "kernel(" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_dwithin_three_paths_agree(spark):
-    """dwithin against general polygons: kernel-dist / compiled-dist /
-    broadcast-kernel must agree on pairs AND bit-exact distances (same IEEE op order)."""
+    """dwithin against general polygons: kernel-dist / point-hinted dist
+    / broadcast-kernel must agree on pairs AND bit-exact distances.
+    dwithin has no compiled executor: the point-hinted distributed call
+    refines with the Arrow kernel even with the compiled route pinned."""
     zones = zones_df(spark)
     pts = points_df(spark)
 
@@ -242,10 +256,11 @@ def test_dwithin_three_paths_agree(spark):
                               right_id="zid", distance=1.25, gridsize=7.0,
                               broadcast_right=False))
     with compiled():
-        jvm_d = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
-                                 right_id="zid", distance=1.25,
-                                 gridsize=7.0, broadcast_right=False,
-                                 assume_left_points=True))
+        out = sjoin_pairs(pts, zones, "dwithin", left_id="pid",
+                          right_id="zid", distance=1.25, gridsize=7.0,
+                          broadcast_right=False, assume_left_points=True)
+        assert refines_with_kernel(out)
+        jvm_d = rows(out)
     bcast = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
                              right_id="zid", distance=1.25, gridsize=7.0,
                              assume_left_points=True))
@@ -255,6 +270,7 @@ def test_dwithin_three_paths_agree(spark):
     assert d[(0, 0)] == 0.0          # inside -> 0
     assert d[(4, 0)] == 0.0          # on the L's edge -> boundary = 0
     assert (11, 2) not in d          # (35,5): corner dist sqrt(2) > 1.25
+    assert 0.35 < d[(11, 5)] < 0.36  # outside zid 5, 0.5/sqrt(2) away
     wider = rows(sjoin_pairs(pts, zones, "dwithin", left_id="pid",
                              right_id="zid", distance=1.5, gridsize=7.0,
                              assume_left_points=True))
@@ -348,9 +364,10 @@ def test_high_vertex_dwithin_paths_agree(spark):
     kernel = rows(sjoin_pairs(pts, zones, "dwithin",
                               broadcast_right=False, **kw))
     with compiled():
-        jvm_d = rows(sjoin_pairs(pts, zones, "dwithin",
-                                 broadcast_right=False,
-                                 assume_left_points=True, **kw))
+        out = sjoin_pairs(pts, zones, "dwithin", broadcast_right=False,
+                          assume_left_points=True, **kw)
+        assert refines_with_kernel(out)
+        jvm_d = rows(out)
     bcast = rows(sjoin_pairs(pts, zones, "dwithin",
                              assume_left_points=True, **kw))
     assert kernel == jvm_d == bcast and len(kernel) > 0
@@ -369,7 +386,7 @@ def test_cell_subsets_are_small(spark):
             for i in list(range(200)) + [0]) + "))"])
     b = ga.bounds()
     pdf = _pack_cover_rows(_edge_rows_of(ga), np.array([0]), b,
-                           np.array([False]), 4.0, 0.0)
+                           np.array([False]), 4.0)
 
     def real_edges(row):
         # decode the round-6 chained-vertex pack: edge k (0-based) =
@@ -400,7 +417,7 @@ def test_cell_subsets_are_small(spark):
     # of the ngon bench regression) must also compile: subcells shrink
     # its 200-edge subset below the tier
     p1 = _pack_cover_rows(_edge_rows_of(ga), np.array([0]), b,
-                          np.array([False]), 50000.0, 0.0)
+                          np.array([False]), 50000.0)
     assert p1["__evx"].map(lambda v: max(len(v) - 1, 0)).max() <= 32
     assert (p1["__km1"] > 0).all()
     # base-parity folding engages on LONG band-spanning edges — the
@@ -409,7 +426,7 @@ def test_cell_subsets_are_small(spark):
     gc = from_wkt(["POLYGON ((170 0, 180 0, 180 30, 150 30, 150 20, "
                    "170 20, 170 0))"])
     pc = _pack_cover_rows(_edge_rows_of(gc), np.array([0]), gc.bounds(),
-                          np.array([False]), 4.0, 0.0)
+                          np.array([False]), 4.0)
     assert (pc["__base"] > 0).any()
     # parity sanity vs numpy PIP at each cell center
     from sgspark.geom.predicates import refine_pairs

@@ -71,14 +71,14 @@ class TestNullSafeTypeProbe:
             .otherwise(F.lit("polygon")))
         out = _points_vs_polygons_distributed(
             points_df(spark), zones, left_id="pid", right_id="zid",
-            predicate="intersects", gridsize=7.0)
+            gridsize=7.0)
         assert out is None
         # all-polygon kinds (no NULL) still take the compiled path
         zones_ok = zones_df(spark).withColumn(
             "geom_kind", F.lit("polygon"))
         out2 = _points_vs_polygons_distributed(
             points_df(spark), zones_ok, left_id="pid", right_id="zid",
-            predicate="intersects", gridsize=7.0)
+            gridsize=7.0)
         assert out2 is not None
 
 
@@ -470,7 +470,7 @@ class TestTunedGridsize:
 
     def test_small_world_tunes_down(self, spark):
         from sgspark.joins import _tuned_gridsize, _CELLS_PER_PARTITION
-        g = _tuned_gridsize(spark, 2000.0, self._st(), 0.0)
+        g = _tuned_gridsize(spark, 2000.0, self._st())
         assert g < 2000.0
         nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         cells = (20_000.0 / g) * (18_000.0 / g)
@@ -480,19 +480,19 @@ class TestTunedGridsize:
     def test_country_world_untouched(self, spark):
         from sgspark.joins import _tuned_gridsize
         st = self._st(wx=1.5e6, wy=1.5e6)
-        assert _tuned_gridsize(spark, 2000.0, st, 0.0) == 2000.0
+        assert _tuned_gridsize(spark, 2000.0, st) == 2000.0
 
     def test_never_grows_and_respects_floors(self, spark):
         from sgspark.joins import _tuned_gridsize
         # huge average zones in a small world: pack floor must win
         st = self._st(aex=16_000.0, aey=16_000.0, mex=19_000.0,
                       mey=17_000.0)
-        g = _tuned_gridsize(spark, 2000.0, st, 0.0)
+        g = _tuned_gridsize(spark, 2000.0, st)
         assert g == 2000.0  # floor (16000/8=2000) == caller value
         st2 = self._st(aex=17_600.0, aey=17_600.0)
-        assert _tuned_gridsize(spark, 2000.0, st2, 0.0) == 2000.0  # capped
+        assert _tuned_gridsize(spark, 2000.0, st2) == 2000.0  # capped
 
     def test_degenerate_stats_keep_caller_value(self, spark):
         from sgspark.joins import _tuned_gridsize
         st = self._st(wx=0.0, wy=0.0, aex=0.0, aey=0.0, mex=0.0, mey=0.0)
-        assert _tuned_gridsize(spark, 2000.0, st, 0.0) == 2000.0
+        assert _tuned_gridsize(spark, 2000.0, st) == 2000.0

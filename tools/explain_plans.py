@@ -81,6 +81,17 @@ def main():
                      "chained-vertex PIP residual (no Python on the "
                      "pair path)", cap(pip_ngon)))
 
+    # the same inputs under dwithin: distance has no compiled executor,
+    # so the distance-expanded point covers take the shared cell join and
+    # the Arrow refine kernel at any size
+    dw_ngon = sjoin_pairs(pts1, ngon, "dwithin", left_id="doc_index",
+                          right_id="zone_id", distance=100.0,
+                          broadcast_right=False, assume_left_points=True)
+    sections.append(("point x polygon dwithin, distributed route — "
+                     "distance-expanded point covers, shuffle equi-join "
+                     "on cell_key, JVM anchor dedup, ONE MapInPandas "
+                     "refine (no edge pack)", cap(dw_ngon)))
+
     # point lefts x a small general-polygon right: the broadcast route
     # has no compiled executor for non-rectangles, so the points take the
     # shared cell join and the Arrow refine kernel
