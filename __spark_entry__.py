@@ -480,11 +480,10 @@ def q_coverage_clean(spark, sf_dir):
 
 
 def _coverage_fixture(spark, sf_dir):
-    """The dirty coverage layer q_coverage_clean cleans (also used by
-    tools/profile_coverage_clean.py): 5x5 tile coverage, 100-wide tiles at
-    pitch 101 (1-unit thin gaps), ENCLOSED by a hole-bearing frame so the
-    gap network is interior, plus one half-offset overlapper creating a
-    double surface."""
+    """The dirty coverage layer q_coverage_clean cleans: 5x5 tile
+    coverage, 100-wide tiles at pitch 101 (1-unit thin gaps), ENCLOSED by
+    a hole-bearing frame so the gap network is interior, plus one
+    half-offset overlapper creating a double surface."""
     from sgspark.io import wkt_to_wkb_df
     nat = spark.read.parquet(f"{sf_dir}/nation.parquet") \
         .select(F.col("n_nationkey").cast("long").alias("k"))

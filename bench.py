@@ -79,19 +79,10 @@ def main():
 
     timings: dict[str, float] = {}
 
-    path_stats = os.environ.get("SPARK_GRAFT_PATH_STATS") == "1"
-
     def run(name, fn):
-        if path_stats:
-            from sgspark import joins as _j
-            _j.PATH_STATS.clear()
         t0 = time.time()
         fn()
         timings[name] = round(time.time() - t0, 3)
-        if path_stats:
-            from sgspark import joins as _j
-            print(f"PATHSTATS {name} {timings[name]}s {dict(_j.PATH_STATS)}",
-                  file=sys.stderr)
 
     def spatial_pipeline():
         tiled = add_grid_id(pts.withColumnRenamed("minx", "x")

@@ -67,29 +67,10 @@ def _thin_flag(df: DataFrame, tolerance: float,
     return df.mapInPandas(kernel, schema=schema)
 
 
-def _with_area(df: DataFrame, id_col: str) -> DataFrame:
-    from .geom.wkb import from_wkb
-    id_t = [f.dataType.simpleString() for f in df.schema.fields
-            if f.name == id_col][0]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf["geometry"].tolist())
-            out = pdf[[id_col]].copy()
-            out["__area"] = ga.area()
-            yield out
-
-    return df.select(id_col, "geometry").mapInPandas(
-        kernel, schema=f"{id_col} {id_t}, __area double")
-
-
 def _bounds_and_area(df: DataFrame) -> DataFrame:
-    """bbox columns + `__area` in ONE Arrow pass (round 6): the previous
-    `with_bounds(df).join(_with_area(df))` shape executed the upstream
-    plan twice and paid a join exchange just to glue two per-row columns
-    back together."""
+    """bbox columns + `__area` in ONE Arrow pass: joining a bounds pass
+    to an area pass would run the upstream plan twice and pay a join
+    exchange just to glue two per-row columns back together."""
     from .geom.wkb import from_wkb
     base = df.drop("minx", "miny", "maxx", "maxy")
     schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"

@@ -435,19 +435,8 @@ def sort_large_first(df: DataFrame, geometry: str = "geometry",
     """orderBy polygon area, descending (reference `sort_large_first`,
     general.py:287-344): adds `area_col` then sorts — the priority-setting
     preamble to update_geometries/coverage cleaning."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + ", area_col double"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            out = pdf.copy()
-            out["area_col"] = ga.area()
-            yield out
-
-    out = df.mapInPandas(kernel, schema=schema)
+    from .polygon_ops import area_col
+    out = area_col(df, geometry, out_col="area_col")
     order = F.col("area_col").asc() if ascending else F.col("area_col").desc()
     return out.orderBy(order)
 

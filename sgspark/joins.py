@@ -31,20 +31,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from collections import Counter
-
 from .cells import FALSE_EASTING, Y_BITS, cover_cell_keys
+from .conf import Route, log_route
 from .geom.wkb import from_wkb
 from .geom.predicates import geom_pair_distance, refine_pairs
 
 DEFAULT_GRIDSIZE = 2000.0
-
-PATH_STATS: Counter = Counter()
-"""Driver-side refine-path tally (plan-time, one tick per sjoin_pairs
-call, not per row): which refine implementation the call compiled to —
-`jvm_*` = whole-stage-codegen SQL, `kernel_*` = Arrow/numpy mapInPandas.
-tools/path_share.py uses it to measure the Arrow-kernel family's share
-of the bench suite (BENCH/BASELINE.md, round-5 directive 8)."""
 
 
 def _cover_cells(df: DataFrame, gridsize: float, expand: float = 0.0,
@@ -78,9 +70,9 @@ BROADCAST_RIGHT_MAX_BYTES = 64 << 20  # byte cap for driver-side right layer
 MAX_COVER_CELLS = 4096  # bbox cover above this routes to the bbox-join branch
 
 
-def _collect_bounded(df: DataFrame, max_bytes: int, geom_pos: int = 1
-                     ) -> list | None:
-    """Collect rows IF the payload stays under a BYTE cap, else None.
+def _collect_bounded(df: DataFrame, max_bytes: int) -> list | None:
+    """Collect rows IF the `geometry` payload stays under a BYTE cap,
+    else None.
 
     Decision is byte-based, not row-based (VERDICT round 1: 300k large
     polygons can be GBs of driver heap):
@@ -100,11 +92,10 @@ def _collect_bounded(df: DataFrame, max_bytes: int, geom_pos: int = 1
     except Exception:
         pass
     from pyspark.storagelevel import StorageLevel
-    gcol = df.columns[geom_pos]
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         total = df.agg(F.sum(
-            F.coalesce(F.length(F.col(gcol)), F.lit(0))
+            F.coalesce(F.length(F.col("geometry")), F.lit(0))
             + F.lit(48))).first()[0]
         if int(total or 0) > max_bytes:
             return None
@@ -206,8 +197,11 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
                  .collect())
         l_has_big = (stats[0]["m"] or 0) > MAX_COVER_CELLS
         r_has_big = (stats[1]["m"] or 0) > MAX_COVER_CELLS
-    if (assume_left_points and e == 0.0) or not l_has_big:
-        l_small, l_big = l0, None  # points cover one cell; skip the branch
+    if (assume_left_points and (2 * e / g + 2) ** 2 <= MAX_COVER_CELLS) \
+            or not l_has_big:
+        # a point's cover spans at most 2e/g + 2 cells per axis: under the
+        # cap no left row is huge, so the branch is skipped without a probe
+        l_small, l_big = l0, None
     else:
         l_small = l0.where(F.expr(f"{_ncells(e)} <= {MAX_COVER_CELLS}"))
         l_big = l0.where(F.expr(f"{_ncells(e)} > {MAX_COVER_CELLS}"))
@@ -355,48 +349,199 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
     GeomArray; candidate rows then carry only ids — cutting Arrow traffic
     through the refine kernel by ~4x.  The big-right path ships WKB through
     the join instead (fully distributed, no driver materialization).
+    `_sjoin_route` picks the executor.
     """
     from .crs import require_same_crs
     require_same_crs(left, right)  # analysis-time; untagged frames pass
 
-    expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
-
-    if broadcast_right is not False:
-        sel = right.select(right_id, "geometry", "minx", "miny",
-                           "maxx", "maxy")
-        if broadcast_right:  # explicit: no cap, caller takes responsibility
-            rows = sel.collect()
-        else:  # auto: byte-bounded probe, no eager count job
-            rows = _collect_bounded(sel, BROADCAST_RIGHT_MAX_BYTES)
-        if rows is not None:
-            return _sjoin_pairs_broadcast(left, right, predicate, rows,
-                                          left_id=left_id, right_id=right_id,
-                                          distance=distance,
-                                          gridsize=gridsize,
-                                          keep_distance=keep_distance,
-                                          assume_left_points=assume_left_points)
-
-    if assume_left_points and not keep_distance and predicate in (
-            "within", "intersects", "covered_by"):
-        # the estimated pair count chooses the compiled route
-        jvm = _points_vs_polygons_distributed(
+    route = _sjoin_route(left, right, predicate, right_id=right_id,
+                         distance=distance, gridsize=gridsize,
+                         keep_distance=keep_distance,
+                         broadcast_right=broadcast_right,
+                         assume_left_points=assume_left_points)
+    log_route("sjoin_pairs", route)
+    facts = route.facts
+    spark = left.sparkSession
+    if route.name == "empty":  # no pairs, no job
+        return spark.createDataFrame([], _pairs_schema(
+            left, right, left_id, right_id,
+            keep_distance or predicate == "dwithin"))
+    if route.name == "compiled_dist":
+        return _points_vs_polygons_distributed(
             left, right, left_id=left_id, right_id=right_id,
-            gridsize=gridsize, min_pairs=PIP_COMPILED_MIN_PAIRS)
-        if jvm is not None:
-            PATH_STATS["jvm_polys_dist"] += 1
-            return jvm
+            gridsize=facts["gridsize"])
+    if route.name == "rect_bcast":
+        rids, _, rb = facts["right"]
+        return _points_vs_rects_jvm(
+            spark, left, rids, rb, predicate, left_id=left_id,
+            right_id=right_id, distance=distance, gridsize=gridsize)
 
     l0 = left.select(F.col(left_id).alias("__lid"),
                      F.col("geometry").alias("__lg"),
                      "minx", "miny", "maxx", "maxy")
-    r0 = right.select(F.col(right_id).alias("__rid"),
-                      F.col("geometry").alias("__rg"),
-                      "minx", "miny", "maxx", "maxy")
+    if route.name == "kernel_dist":
+        r0 = right.select(F.col(right_id).alias("__rid"),
+                          F.col("geometry").alias("__rg"),
+                          "minx", "miny", "maxx", "maxy")
+        rb = right_geoms = None
+    else:  # kernel_bcast: the right enters the candidate generator as a
+        # driver-local (id, bbox) frame joined under broadcast; the kernel
+        # reads right geometries from the broadcast GeomArray, not WKB
+        rids, ra, rb = facts["right"]
+        r0 = spark.createDataFrame(pd.DataFrame({
+            "__rid": rids, "minx": rb[:, 0], "miny": rb[:, 1],
+            "maxx": rb[:, 2], "maxy": rb[:, 3]}))
+        right_geoms = spark.sparkContext.broadcast(
+            (pd.Series(np.arange(len(rids)), index=rids), ra))
+    expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
     cand = cell_candidate_pairs(l0, r0, gridsize, expand=expand,
-                                assume_left_points=assume_left_points)
+                                assume_left_points=assume_left_points,
+                                right_bounds=rb)
     return _refine_kernel(cand, left, right, predicate, left_id=left_id,
                           right_id=right_id, distance=distance,
-                          keep_distance=keep_distance)
+                          keep_distance=keep_distance,
+                          right_geoms=right_geoms)
+
+
+def _sjoin_route(left: DataFrame, right: DataFrame, predicate: str, *,
+                 right_id: str, distance: float | None, gridsize: float,
+                 keep_distance: bool, broadcast_right: bool | None,
+                 assume_left_points: bool | None) -> Route:
+    """The ONE routing decision of `sjoin_pairs`, logged by it.  Probes:
+
+      1. unless broadcast_right=False, collect the right (all of it when
+         True, else under BROADCAST_RIGHT_MAX_BYTES).  Collected: `empty`;
+         `rect_bcast` for rectangle rights within MAX_COVER_CELLS cells,
+         a between-filter predicate and point lefts (assume_left_points,
+         else one extent aggregate over the left); else `kernel_bcast`;
+      2. point lefts (assume_left_points) under within / intersects /
+         covered_by without keep_distance, Python-free right: ONE
+         aggregate job (null-safe polygon type check, bbox stats, a left
+         count Catalyst lacks).  `compiled_dist` for all-polygon rights
+         whose estimated pairs reach PIP_COMPILED_MIN_PAIRS and whose
+         widest zone's cover fits MAX_COVER_CELLS at the tuned grid;
+      3. else `kernel_dist`.
+
+    Facts: `right` = (ids, GeomArray, n x 4 bounds) of a collected right;
+    from step 2's probe `st` (its right-layer row), `n_left`, `pairs_est`
+    and the tuned `gridsize`; `n_right` where known."""
+    why: list[str] = []
+    if broadcast_right is False:
+        why.append("broadcast_right=False")
+    else:
+        sel = right.select(right_id, "geometry", "minx", "miny",
+                           "maxx", "maxy")
+        if broadcast_right:  # explicit: no cap, caller takes responsibility
+            rows = sel.collect()
+            why.append("broadcast_right=True")
+        else:  # auto: byte-bounded probe, no eager count job
+            rows = _collect_bounded(sel, BROADCAST_RIGHT_MAX_BYTES)
+            why.append(f"right {'within' if rows is not None else 'over'} "
+                       f"the {BROADCAST_RIGHT_MAX_BYTES >> 20} MiB "
+                       "broadcast cap")
+        if rows is not None:
+            if not rows:
+                return Route("empty", (*why, "right layer is empty"),
+                             {"n_right": 0})
+            rids = np.array([r[0] for r in rows])
+            ra = from_wkb([r[1] for r in rows])
+            rb = np.array([[r[2], r[3], r[4], r[5]] for r in rows],
+                          dtype=np.float64)
+            facts = {"right": (rids, ra, rb), "n_right": len(rows)}
+            # PREDICATE COMPILATION: point-left x rectangle-right evaluates
+            # fully JVM-side (between-filters after the cell join — zero
+            # Python).  Detected, not hinted: rect_flags on the parsed
+            # rights; zero-extent left bboxes == points.  The
+            # between-filters emit no distance: keep_distance outside
+            # dwithin takes the Arrow kernel, which computes it.
+            from .geom.predicates import rect_flags
+            g = float(gridsize)
+            e = float(distance or 0.0) if predicate == "dwithin" else 0.0
+            nc = ((np.floor((rb[:, 2] + e + FALSE_EASTING) / g)
+                   - np.floor((rb[:, 0] - e + FALSE_EASTING) / g) + 1)
+                  * (np.floor((rb[:, 3] + e) / g)
+                     - np.floor((rb[:, 1] - e) / g) + 1))
+            if not rect_flags(ra)[0].all():
+                why.append("right not all rectangles")
+            elif (nc > MAX_COVER_CELLS).any():
+                why.append(f"a right covers over {MAX_COVER_CELLS} cells")
+            elif not (predicate == "dwithin" or not keep_distance and
+                      predicate in ("within", "intersects", "covered_by")):
+                why.append(f"no between-filter {predicate} with "
+                           f"keep_distance={keep_distance}")
+            elif assume_left_points is not None:
+                if assume_left_points:  # caller vouches (geom_kind filter)
+                    return Route("rect_bcast", (*why, "rectangle rights"),
+                                 facts)
+                why.append("assume_left_points=False")
+            else:
+                # detection scan only when the caller gave no hint — on
+                # big left sides pass assume_left_points to skip it
+                ext = left.agg(
+                    F.max(F.col("maxx") - F.col("minx")).alias("ex"),
+                    F.max(F.col("maxy") - F.col("miny")).alias("ey")).first()
+                if ext["ex"] == 0.0 and ext["ey"] == 0.0:
+                    return Route("rect_bcast", (*why, "rectangle rights",
+                                                "left extents are 0"), facts)
+                why.append("left is not points")
+            return Route("kernel_bcast", tuple(why), facts)
+
+    if not (assume_left_points and not keep_distance and predicate in (
+            "within", "intersects", "covered_by")):
+        return Route("kernel_dist", (*why, "no compiled executor"), {})
+    if not plan_is_python_free(right):
+        return Route("kernel_dist", (*why, "right plan runs Python"), {})
+    if "geom_kind" in right.columns:
+        type_ok = F.col("geom_kind") == "polygon"
+    else:
+        from .geometry_types import wkb_gtype_col
+        type_ok = wkb_gtype_col("geometry").isin(3, 6)
+    n_left = _plan_row_count(left)
+    count_left = n_left is None and plan_is_python_free(left)
+    # ONE columnar pass over the right: the null-safe type probe (a NULL
+    # geom_kind must count as "not ok" — coalesce forces NULL -> kernel
+    # route) fused with the bbox stats the gridsize tuner and the size
+    # rule need; a left count rides in the same job as a second row.
+    probe = right.agg(
+        F.lit(0).alias("side"),
+        F.max((~F.coalesce(type_ok, F.lit(False))).cast("int")).alias("bad"),
+        F.count(F.lit(1)).alias("n"),
+        F.min("minx").alias("wx0"), F.max("maxx").alias("wx1"),
+        F.min("miny").alias("wy0"), F.max("maxy").alias("wy1"),
+        F.avg(F.col("maxx") - F.col("minx")).alias("aex"),
+        F.avg(F.col("maxy") - F.col("miny")).alias("aey"),
+        F.max(F.col("maxx") - F.col("minx")).alias("mex"),
+        F.max(F.col("maxy") - F.col("miny")).alias("mey"),
+        F.sum((F.col("maxx") - F.col("minx"))
+              * (F.col("maxy") - F.col("miny"))).alias("area"))
+    if count_left:
+        probe = probe.unionByName(
+            left.agg(F.lit(1).alias("side"), F.count(F.lit(1)).alias("n")),
+            allowMissingColumns=True)
+    rows = sorted(probe.collect(), key=lambda r: r["side"])
+    st = rows[0]
+    if count_left:
+        n_left = rows[1]["n"]
+    facts = {"n_right": st["n"], "n_left": n_left}
+    if not st["n"] or st["bad"]:
+        return Route("kernel_dist", (*why, "right empty or not all "
+                                     "polygons"), facts)
+    est = facts["pairs_est"] = _pip_pairs_estimate(n_left, st)
+    if est < PIP_COMPILED_MIN_PAIRS:
+        return Route("kernel_dist", (*why, f"~{est:.3g} pairs under "
+                                     f"{PIP_COMPILED_MIN_PAIRS}"), facts)
+    g = facts["gridsize"] = _tuned_gridsize(left.sparkSession,
+                                            float(gridsize), st)
+    # country-sized rights: conservative cross-max bound on the per-zone
+    # cover (slightly stricter than a per-row check — a layer whose
+    # widest and tallest zones differ may take the kernel where a per-row
+    # check would not; the kernel is correct, just uncompiled)
+    if (st["mex"] / g + 2) * (st["mey"] / g + 2) > MAX_COVER_CELLS:
+        return Route("kernel_dist", (*why, f"widest right covers over "
+                                     f"{MAX_COVER_CELLS} cells"), facts)
+    return Route("compiled_dist", (*why, f"~{est:.3g} pairs, at least "
+                                   f"{PIP_COMPILED_MIN_PAIRS}"),
+                 {**facts, "st": st})
 
 
 def _pairs_schema(left: DataFrame, right: DataFrame, left_id: str,
@@ -457,82 +602,7 @@ def _refine_kernel(cand: DataFrame, left: DataFrame, right: DataFrame,
                     geom_pair_distance(la, ra, li[ok], ri[ok])
             yield out
 
-    PATH_STATS["kernel_dist" if right_geoms is None else "kernel_bcast"] += 1
     return cand.mapInPandas(kernel, schema=out_schema)
-
-
-def _sjoin_pairs_broadcast(left: DataFrame, right: DataFrame, predicate: str,
-                           rows: list, *, left_id: str, right_id: str,
-                           distance: float | None, gridsize: float,
-                           keep_distance: bool,
-                           assume_left_points: bool | None = None
-                           ) -> DataFrame:
-    """Small-right refine: right geometries (pre-collected under a byte cap
-    by the caller) parsed once, broadcast as a GeomArray; candidates carry
-    ids only."""
-    expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
-    spark = left.sparkSession
-    if not rows:  # empty right layer: no pairs, no job
-        return spark.createDataFrame([], _pairs_schema(
-            left, right, left_id, right_id,
-            keep_distance or predicate == "dwithin"))
-    rids = np.array([r[0] for r in rows])
-    ra = from_wkb([r[1] for r in rows])
-    rb = np.array([[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64)
-
-    # PREDICATE COMPILATION: point-left x rectangle-right evaluates fully
-    # JVM-side (between-filters after the cell join — zero Python, full
-    # whole-stage codegen).  Detected, not hinted: zero-extent left bboxes
-    # == points; rect_flags on the parsed right geometries.
-    from .geom.predicates import rect_flags
-    r_rect, _rbounds = rect_flags(ra)
-    _g0 = float(gridsize)
-    _exp0 = expand
-    _nc = ((np.floor((rb[:, 2] + _exp0 + FALSE_EASTING) / _g0)
-            - np.floor((rb[:, 0] - _exp0 + FALSE_EASTING) / _g0) + 1)
-           * (np.floor((rb[:, 3] + _exp0) / _g0)
-              - np.floor((rb[:, 1] - _exp0) / _g0) + 1))
-    rights_all_small = bool((_nc <= MAX_COVER_CELLS).all())
-    # the between-filters emit no distance: keep_distance outside dwithin
-    # takes the Arrow kernel, which computes it
-    rect_ok = bool(r_rect.all()) and rights_all_small and (
-        predicate in ("within", "intersects", "covered_by")
-        and not keep_distance or predicate == "dwithin")
-    if rect_ok and assume_left_points is not False:
-        if assume_left_points:
-            left_is_points = True  # caller vouches (e.g. geom_kind filter)
-        else:
-            # detection scan only when the caller gave no hint — on big
-            # left sides pass assume_left_points explicitly to skip it
-            ext = left.agg(
-                F.max(F.col("maxx") - F.col("minx")).alias("ex"),
-                F.max(F.col("maxy") - F.col("miny")).alias("ey")).first()
-            left_is_points = (ext["ex"] is not None
-                              and float(ext["ex"] or 0) == 0.0
-                              and float(ext["ey"] or 0) == 0.0)
-        if left_is_points:
-            PATH_STATS["jvm_rects_bcast"] += 1
-            return _points_vs_rects_jvm(
-                spark, left, rids, rb, predicate, left_id=left_id,
-                right_id=right_id, distance=distance, gridsize=gridsize)
-
-    # Arrow kernel: the right enters the shared candidate generator as a
-    # driver-local (id, bbox) frame joined under broadcast; the kernel
-    # reads right geometries from the broadcast GeomArray, not from WKB
-    l0 = left.select(F.col(left_id).alias("__lid"),
-                     F.col("geometry").alias("__lg"),
-                     "minx", "miny", "maxx", "maxy")
-    r0 = spark.createDataFrame(pd.DataFrame({
-        "__rid": rids, "minx": rb[:, 0], "miny": rb[:, 1],
-        "maxx": rb[:, 2], "maxy": rb[:, 3]}))
-    cand = cell_candidate_pairs(l0, r0, gridsize, expand=expand,
-                                assume_left_points=assume_left_points,
-                                right_bounds=rb)
-    rid_to_idx = pd.Series(np.arange(len(rids)), index=rids)
-    return _refine_kernel(
-        cand, left, right, predicate, left_id=left_id, right_id=right_id,
-        distance=distance, keep_distance=keep_distance,
-        right_geoms=spark.sparkContext.broadcast((rid_to_idx, ra)))
 
 
 def _esz(E: str) -> str:
@@ -1068,9 +1138,7 @@ def _pip_pairs_estimate(n_left: int | None, st) -> float:
 
 def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
                                     left_id: str, right_id: str,
-                                    gridsize: float,
-                                    min_pairs: float = 0
-                                    ) -> DataFrame | None:
+                                    gridsize: float) -> DataFrame:
     """Fully-distributed all-JVM point x polygon join (no driver collect,
     no broadcast): rights are packed ONCE by an Arrow pass into per-row
     edge arrays (O(|right|) Python, not O(|pairs|)), then the cell join,
@@ -1078,60 +1146,12 @@ def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
     the 100-TB general-geometry path: the per-pair refine — the term that
     grows with candidate count — no longer touches a Python worker.
 
-    Returns None (caller falls back to the Arrow kernel) when the right
-    side is not provably all-polygon: the type probe is one header-byte
-    aggregate, only run when the right's plan is Python-free so the extra
-    pass is scan-cheap.  Also returns None when `_pip_pairs_estimate` is
-    below `min_pairs`; the left row count comes from Catalyst statistics
-    or, for a Python-free left, a count folded into the probe's job, and
-    without either the estimate is unbounded."""
-    if not plan_is_python_free(right):
-        return None
-    g0 = float(gridsize)
-    if "geom_kind" in right.columns:
-        type_ok = F.col("geom_kind") == "polygon"
-    else:
-        from .geometry_types import wkb_gtype_col
-        type_ok = wkb_gtype_col("geometry").isin(3, 6)
-    n_left = _plan_row_count(left) if min_pairs else None
-    count_left = bool(min_pairs) and n_left is None \
-        and plan_is_python_free(left)
-    # ONE columnar pass over the right: the null-safe type probe (a NULL
-    # geom_kind must count as "not ok" — coalesce forces NULL -> kernel
-    # fallback) fused with the bbox stats the gridsize tuner and the size
-    # rule need; a left count rides in the same job as a second row.
-    probe = right.agg(
-        F.lit(0).alias("side"),
-        F.max((~F.coalesce(type_ok, F.lit(False))).cast("int")).alias("bad"),
-        F.count(F.lit(1)).alias("n"),
-        F.min("minx").alias("wx0"), F.max("maxx").alias("wx1"),
-        F.min("miny").alias("wy0"), F.max("maxy").alias("wy1"),
-        F.avg(F.col("maxx") - F.col("minx")).alias("aex"),
-        F.avg(F.col("maxy") - F.col("miny")).alias("aey"),
-        F.max(F.col("maxx") - F.col("minx")).alias("mex"),
-        F.max(F.col("maxy") - F.col("miny")).alias("mey"),
-        F.sum((F.col("maxx") - F.col("minx"))
-              * (F.col("maxy") - F.col("miny"))).alias("area"))
-    if count_left:
-        probe = probe.unionByName(
-            left.agg(F.lit(1).alias("side"), F.count(F.lit(1)).alias("n")),
-            allowMissingColumns=True)
-    rows = sorted(probe.collect(), key=lambda r: r["side"])
-    st = rows[0]
-    if count_left:
-        n_left = rows[1]["n"]
-    if not st["n"] or st["bad"]:
-        return None  # mixed types (or empty right): kernel path
-    if _pip_pairs_estimate(n_left, st) < min_pairs:
-        return None  # too few pairs to repay compilation: kernel path
+    The `compiled_dist` executor of `_sjoin_route`, whose probe proved the
+    right all polygons, each zone's cover under MAX_COVER_CELLS at
+    `gridsize` (the tuned grid), and the estimated pairs at or above
+    PIP_COMPILED_MIN_PAIRS."""
+    g = float(gridsize)
     spark = left.sparkSession
-    g = _tuned_gridsize(spark, g0, st)
-    # country-sized rights: conservative cross-max bound on the per-zone
-    # cover (slightly stricter than the old per-row check — a layer whose
-    # widest and tallest zones differ may fall back to the kernel where a
-    # per-row check would not; fallback is correct, just uncompiled)
-    if (st["mex"] / g + 2) * (st["mey"] / g + 2) > MAX_COVER_CELLS:
-        return None
     out_right = right_id if right_id != left_id else right_id + "_2"
     rid_t = right.schema[right_id].dataType.simpleString()
     r_pack = _polys_pack_df(right, right_id, rid_t, g)
@@ -1154,7 +1174,7 @@ def _points_vs_polygons_distributed(left: DataFrame, right: DataFrame, *,
     l = l.repartition(nparts, "cell_key")
     r_pack = r_pack.repartition(nparts, "cell_key")
     # points cover exactly one cell: no anchor dedup needed (huge-bbox
-    # rights were excluded by the probe above — they take the kernel path)
+    # rights were routed to the kernel by `_sjoin_route`)
     cand = l.join(r_pack, "cell_key") \
         .where((F.col("__x") >= F.col("__rminx")) &
                (F.col("__x") <= F.col("__rmaxx")) &
@@ -1179,19 +1199,15 @@ def _points_vs_rects_jvm(spark, left, rids, rb, predicate, *, left_id,
     between-filters (dwithin: clamped-axis distance expression, kept as
     the `distance` column).  Points live in exactly one cell, so no
     anchor dedup is needed."""
-    import pandas as _pd
     expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
     g = float(gridsize)
     gi, keys = cover_cell_keys(rb[:, 0] - expand, rb[:, 1] - expand,
                                rb[:, 2] + expand, rb[:, 3] + expand, g)
     out_right = right_id if right_id != left_id else right_id + "_2"
-    rcells = spark.createDataFrame(_pd.DataFrame({
-        out_right: rids[gi] if len(gi) else rids[:0],
-        "cell_key": keys,
-        "__rminx": rb[gi, 0] if len(gi) else np.zeros(0),
-        "__rminy": rb[gi, 1] if len(gi) else np.zeros(0),
-        "__rmaxx": rb[gi, 2] if len(gi) else np.zeros(0),
-        "__rmaxy": rb[gi, 3] if len(gi) else np.zeros(0)}))
+    rcells = spark.createDataFrame(pd.DataFrame({
+        out_right: rids[gi], "cell_key": keys,
+        "__rminx": rb[gi, 0], "__rminy": rb[gi, 1],
+        "__rmaxx": rb[gi, 2], "__rmaxy": rb[gi, 3]}))
     l = left.select(F.col(left_id), F.col("minx").alias("__x"),
                     F.col("miny").alias("__y"))
     l = l.withColumn("cell_key", F.expr(

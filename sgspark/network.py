@@ -19,6 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .conf import Route, log_route
 from .geom.wkb import from_wkb
 
 
@@ -235,13 +236,6 @@ def get_connected_components(edges: DataFrame) -> DataFrame:
     return connected_components(e, verts)
 
 
-# Per-call diagnostics of the last shortest_paths invocation (round counts
-# — the scale evidence the VERDICT asks to be logged):
-#   {"shortcut_doublings": d, "shortcut_hops": k, "shortcut_rows": n,
-#    "bf_rounds": r}
-last_run_stats: dict = {}
-
-
 def _min_plus_shortcuts(e: DataFrame, max_rows: int
                         ) -> tuple[DataFrame, int, int]:
     """Repeated min-plus squaring of the (deduped) edge set: returns
@@ -325,33 +319,57 @@ def _plan_maybe_small(df: DataFrame, cap_rows: int) -> bool:
 
 
 def _bounded_rows(df: DataFrame, cap: int) -> list:
-    """limit(cap+1).collect() as ONE job: the default incremental limit
-    executes 1 -> 4 -> 16 -> ... partition jobs, which is pure latency on
-    the small frames these probes target (and each job re-pays the python
-    runner when the frame is a parallelized local list).  Callers treat
-    len(rows) > cap as over-budget."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    try:
-        spark.conf.set(key, "100000")
-        return df.limit(cap + 1).collect()
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    """limit(cap+1).collect() as ONE job and no session-conf change: over
+    one coalesced partition the limit's incremental scan ends in its first
+    job.  Callers treat len(rows) > cap as over-budget."""
+    return df.coalesce(1).limit(cap + 1).collect()
 
 
-def _shortest_paths_local(erows: list, e: DataFrame, origins: DataFrame
-                          ) -> DataFrame | None:
-    """Driver-side Bellman-Ford over a collected (bounded) edge list —
-    the same fixpoint as distributed plain Bellman-Ford (the default
-    distributed path sums costs through min-plus shortcuts, whose float
-    association can differ by an ulp for non-representable weights):
+def _shortest_paths_route(e: DataFrame, origins: DataFrame,
+                          penalties: DataFrame | None) -> Route:
+    """The ONE routing decision of `shortest_paths`: `per_hop` when
+    per-origin `penalties` rule out shared shortcuts; `driver` when the
+    edges fit `_local_graph_max_edges()` (one bounded collect, skipped
+    when Catalyst's size estimate is far over), the origins 100k rows
+    (one bounded collect) and the dense per-origin arrays
+    _LOCAL_ORIGIN_CELLS; else `shortcuts` (distributed min-plus
+    shortcuts).  Driver-route facts: the collected `erows`/`orows`, their
+    distinct `nodes`/`oids`, and the `edges`/`origins` counts."""
+    if penalties is not None:
+        return Route("per_hop", ("penalties are per origin",), {})
+    cap = _local_graph_max_edges()
+    if cap <= 0:
+        return Route("shortcuts", ("SGSPARK_LOCAL_GRAPH_EDGES=0",), {})
+    if not _plan_maybe_small(e, cap):
+        return Route("shortcuts", (f"edge size estimate far over the "
+                                   f"{cap}-edge driver cap",), {})
+    erows = _bounded_rows(e, cap)
+    if len(erows) > cap:
+        return Route("shortcuts", (f"over {cap} edges",), {})
+    facts = {"edges": len(erows)}
+    orows = _bounded_rows(origins.select("oid", "node"), 100_000)
+    if len(orows) > 100_000:
+        return Route("shortcuts", ("over 100000 origin rows",), facts)
+    facts["origins"] = len(orows)
+    nodes = pd.unique(pd.Series([r[0] for r in erows] + [r[1] for r in erows]
+                                + [o[1] for o in orows], dtype=object))
+    oids = pd.unique(pd.Series([o[0] for o in orows], dtype=object))
+    if len(oids) * max(len(nodes), len(erows), 1) > _LOCAL_ORIGIN_CELLS:
+        return Route("shortcuts", (f"origins x max(nodes, edges) over "
+                                   f"{_LOCAL_ORIGIN_CELLS}",), facts)
+    return Route("driver", (f"{len(erows)} edges within the {cap}-edge "
+                            "driver cap",),
+                 {**facts, "erows": erows, "orows": orows, "nodes": nodes,
+                  "oids": oids})
+
+
+def _shortest_paths_local(facts: dict, origins: DataFrame
+                          ) -> tuple[DataFrame, pd.DataFrame, int]:
+    """Driver-side Bellman-Ford over the `driver` route's collected edge
+    and origin rows (`_shortest_paths_route` facts) — the same fixpoint
+    as distributed plain Bellman-Ford (the default distributed path sums
+    costs through min-plus shortcuts, whose float association can differ
+    by an ulp for non-representable weights):
 
       * relaxation arithmetic is the same IEEE ops in the same order
         (cand = cost(u) + w; keep the min), iterated to the fixpoint, so
@@ -361,28 +379,15 @@ def _shortest_paths_local(erows: list, e: DataFrame, origins: DataFrame
         (cost 0, pred NULL) win ties because NULL sorts first in the
         distributed min(struct(cost, pred)).
 
-    Returns None (caller falls back to the distributed path) when the
-    origin set is over-budget for the dense driver arrays: the cost
-    matrix (origins x nodes) or the relaxation temporaries (origins x
-    edges)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = e.sparkSession
-    orows = _bounded_rows(origins.select("oid", "node"), 100_000)
-    if len(orows) > 100_000:
-        return None
+    Returns (result frame, the same table in pandas, rounds run)."""
+    erows, orows = facts["erows"], facts["orows"]
+    nodes, oids = facts["nodes"], facts["oids"]
     src_l = [r[0] for r in erows]
     dst_l = [r[1] for r in erows]
     w = np.array([r[2] for r in erows], dtype=np.float64)
-    nodes = pd.unique(pd.Series(src_l + dst_l + [o[1] for o in orows],
-                                dtype=object))
     nid = pd.Series(np.arange(len(nodes)), index=nodes)
     n_nodes = len(nodes)
-    oids = pd.unique(pd.Series([o[0] for o in orows], dtype=object))
     oidx = pd.Series(np.arange(len(oids)), index=oids)
-    if len(oids) * max(n_nodes, len(erows), 1) > _LOCAL_ORIGIN_CELLS:
-        return None
     src = nid.loc[src_l].to_numpy() if erows else np.zeros(0, dtype=np.int64)
     dst = nid.loc[dst_l].to_numpy() if erows else np.zeros(0, dtype=np.int64)
 
@@ -404,9 +409,6 @@ def _shortest_paths_local(erows: list, e: DataFrame, origins: DataFrame
         raise RuntimeError(
             f"shortest_paths did not converge in {n_nodes + 1} rounds "
             "(negative cycle?)")
-    last_run_stats.clear()
-    last_run_stats.update(shortcut_doublings=0, shortcut_hops=1,
-                          bf_rounds=rounds, local_graph=True)
 
     # phase-3 predecessors on converged costs (vectorized per origin):
     # among edges with cost(p) + w == cost(u), the smallest p; origins
@@ -447,13 +449,8 @@ def _shortest_paths_local(erows: list, e: DataFrame, origins: DataFrame
         StructField("cost", DoubleType()), StructField("pred", node_t)])
     pdf = pd.DataFrame({"oid": out_oid, "u": out_u, "cost": out_cost,
                         "pred": out_pred})
-    sdf = spark.createDataFrame(pdf, schema=schema)
-    # side-channel for od_cost_matrix's local assembly (driver-sequential,
-    # same-call-chain only): the converged table + the collected origin
-    # rows, so the OD assembly re-probes neither
-    sdf._sgspark_local_pdf = pdf
-    sdf._sgspark_local_orows = orows
-    return sdf
+    return origins.sparkSession.createDataFrame(pdf, schema=schema), pdf, \
+        rounds
 
 
 def shortest_paths(edges: DataFrame, origins: DataFrame, *,
@@ -468,9 +465,7 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
     node id among cost-optimal predecessors (the Bellman-Ford
     min-struct(cost, pred) fixpoint).
 
-    Three phases (round-4; VERDICT r3 directive 2 — one Spark job per
-    relaxation round is kept, but rounds no longer equal the graph's hop
-    diameter):
+    Three phases on the distributed `shortcuts` route:
 
       1. min-plus doubling shortcuts (`_min_plus_shortcuts`): O(log
          diameter) self-joins build T = min cost over paths of <= k hops,
@@ -488,15 +483,31 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
     per-origin weights cannot be baked into shared shortcuts, so that path
     keeps the plain per-hop iteration.
 
-    Round counts of the last call are recorded in
-    `sgspark.network.last_run_stats`."""
+    `_shortest_paths_route` picks the driver, shortcut or per-hop route;
+    each call logs it, with its round counts, as one record on the
+    `sgspark.route` logger."""
+    return _shortest_paths_run(edges, origins, weight=weight,
+                               directed=directed, max_iter=max_iter,
+                               penalties=penalties,
+                               shortcut_budget=shortcut_budget)[0]
+
+
+def _shortest_paths_run(edges: DataFrame, origins: DataFrame, *,
+                        weight: str, directed: bool, max_iter: int,
+                        penalties: DataFrame | None = None,
+                        shortcut_budget: int | None = None
+                        ) -> tuple[DataFrame, pd.DataFrame | None,
+                                   list | None]:
+    """`shortest_paths`, plus what `od_cost_matrix` assembles from on the
+    driver route: the result table in pandas and the collected origin
+    rows (None, None on the distributed routes)."""
     e = edges.select(F.col("source").alias("u"), F.col("target").alias("v"),
                      F.col(weight).alias("w"))
     if not directed:
         e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
 
-    cap = _local_graph_max_edges()
-    if penalties is None and cap > 0 and _plan_maybe_small(e, cap):
+    route = _shortest_paths_route(e, origins, penalties)
+    if route.name == "driver":
         # BOUNDED-GRAPH FAST PATH (round 7, guide §3.1/§5): a graph whose
         # edge list fits comfortably on the driver is solved there — the
         # same byte-bounded broadcast trade the spatial joins make.  The
@@ -505,24 +516,17 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
         # relation); the driver twin is exact: plain Bellman-Ford fixpoint
         # with the identical relaxation arithmetic (cost + w, min), then
         # the identical phase-3 predecessor rule min{p: cost(p) + w ==
-        # cost(u)}.  Large graphs (edge count above the cap, env
-        # SGSPARK_LOCAL_GRAPH_EDGES) keep the distributed
-        # shortcut-doubling path unchanged.  ONE bounded probe job: a
-        # limit(cap+1) collect — over-cap graphs stop pulling at the
-        # cap and fall through.
-        erows = _bounded_rows(e, cap)
-        if len(erows) <= cap:
-            fast = _shortest_paths_local(erows, e, origins)
-            if fast is not None:
-                return fast
-        del erows
+        # cost(u)}.
+        sdf, pdf, rounds = _shortest_paths_local(route.facts, origins)
+        log_route("shortest_paths", route, bf_rounds=rounds)
+        return sdf, pdf, route.facts["orows"]
 
     # NULL preds carry the node type, as the driver path's pred does
     node_t = origins.schema["node"].dataType
     e = e.localCheckpoint()
     n_edges = e.count()
 
-    if penalties is None:
+    if route.name == "shortcuts":
         budget = shortcut_budget
         if budget is None:
             # 16x|E| balances shortcut-join density against saved BF
@@ -558,9 +562,9 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
             raise RuntimeError(
                 f"shortest_paths did not converge in {max_iter} rounds over "
                 f"{hops}-hop shortcuts; raise max_iter")
-        last_run_stats.clear()
-        last_run_stats.update(shortcut_doublings=doublings,
-                              shortcut_hops=hops, bf_rounds=rounds)
+        log_route("shortest_paths", route, edges=n_edges,
+                  shortcut_doublings=doublings, shortcut_hops=hops,
+                  bf_rounds=rounds)
         # phase 3: exact predecessor round over ORIGINAL edges
         cand = dist.join(e, "u").select(
             "oid", F.col("v").alias("u"),
@@ -574,24 +578,23 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
                .agg(F.min(F.struct("cost", "pred")).alias("s"))
                .select("oid", "u", F.col("s.cost").alias("cost"),
                        F.col("s.pred").alias("pred")))
-        return fin.localCheckpoint()
+        return fin.localCheckpoint(), None, None
 
     dist = origins.select(F.col("oid"), F.col("node").alias("u"),
                           F.lit(0.0).alias("cost"),
                           F.lit(None).cast(node_t).alias("pred"))
     dist = dist.localCheckpoint()
-    for _ in range(max_iter):
+    p = penalties.select(F.col("oid").alias("__poid"),
+                         F.col("pu").alias("__ppu"),
+                         F.col("pv").alias("__ppv"), "mult")
+    for rounds in range(1, max_iter + 1):
         rel = dist.join(e, "u")
-        if penalties is not None:
-            p = penalties.select(F.col("oid").alias("__poid"),
-                                 F.col("pu").alias("__ppu"),
-                                 F.col("pv").alias("__ppv"), "mult")
-            rel = (rel.join(p, (rel["oid"] == p["__poid"]) &
-                            (rel["u"] == p["__ppu"]) &
-                            (rel["v"] == p["__ppv"]), "left")
-                   .drop("__poid", "__ppu", "__ppv")
-                   .withColumn("w", F.col("w") * F.coalesce("mult", F.lit(1.0)))
-                   .drop("mult"))
+        rel = (rel.join(p, (rel["oid"] == p["__poid"]) &
+                        (rel["u"] == p["__ppu"]) &
+                        (rel["v"] == p["__ppv"]), "left")
+               .drop("__poid", "__ppu", "__ppv")
+               .withColumn("w", F.col("w") * F.coalesce("mult", F.lit(1.0)))
+               .drop("mult"))
         relaxed = rel.select("oid", F.col("v").alias("u"),
                              (F.col("cost") + F.col("w")).alias("cost"),
                              F.col("u").alias("pred"),
@@ -614,15 +617,17 @@ def shortest_paths(edges: DataFrame, origins: DataFrame, *,
         improved = new.where("__imp").count()
         dist = new.drop("__imp")
         if improved == 0:
-            return dist
+            log_route("shortest_paths", route, edges=n_edges,
+                      bf_rounds=rounds)
+            return dist, None, None
     raise RuntimeError(
         f"shortest_paths did not converge in {max_iter} rounds "
         "(graph deeper than max_iter hops); raise max_iter")
 
 
 def _od_matrix_local(spark, dist_pdf, origins: DataFrame,
-                     destinations: DataFrame,
-                     orows: list | None = None) -> DataFrame | None:
+                     destinations: DataFrame, orows: list
+                     ) -> DataFrame | None:
     """Driver-side assembly of the OD matrix when shortest_paths took the
     bounded-graph fast path: replicates the distributed join shape row for
     row (dest rows left-joined on node, then origins x dest-dids
@@ -636,9 +641,7 @@ def _od_matrix_local(spark, dist_pdf, origins: DataFrame,
     dd = _bounded_rows(destinations.select("did", "node"), 1_000_000)
     if len(dd) > 1_000_000:
         return None
-    if orows is None:
-        orows = _bounded_rows(origins.select("oid", "node"), 100_000)
-    if len(orows) > 100_000 or len(orows) * len(dd) > _LOCAL_ORIGIN_CELLS:
+    if len(orows) * len(dd) > _LOCAL_ORIGIN_CELLS:
         return None
     if any(v is None for r in (*orows, *dd) for v in r):
         return None
@@ -675,13 +678,11 @@ def od_cost_matrix(edges: DataFrame, origins: DataFrame,
     point snapped to (compose with point_ops.snap_all for search_tolerance
     semantics).  Unreachable pairs get NULL cost, like the reference.
     """
-    dist = shortest_paths(edges, origins, weight=weight, directed=directed,
-                          max_iter=max_iter)
-    pdf = getattr(dist, "_sgspark_local_pdf", None)
+    dist, pdf, orows = _shortest_paths_run(
+        edges, origins, weight=weight, directed=directed, max_iter=max_iter)
     if pdf is not None:
         out = _od_matrix_local(dist.sparkSession, pdf, origins, destinations,
-                               orows=getattr(dist, "_sgspark_local_orows",
-                                             None))
+                               orows)
         if out is not None:
             return out
     out = destinations.select("did", F.col("node").alias("u")) \

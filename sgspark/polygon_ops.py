@@ -365,9 +365,8 @@ def fix_double_surfaces(df: DataFrame, *, id_col: str,
     update_geometries with a struct rank (no global sort)."""
     from .overlay import update_geometries
     from .io import with_bounds
-    from .cleaning import _with_area
     base = with_bounds(df.select(id_col, "geometry"))
-    ranked = base.join(_with_area(base, id_col), id_col) \
+    ranked = area_col(base, out_col="__area") \
         .withColumn("__rank", F.struct((-F.col("__area")).alias("na"),
                                        F.col(id_col).alias("tid"))) \
         .drop("__area")
@@ -678,7 +677,7 @@ def eliminate_by_largest(df: DataFrame, to_eliminate: DataFrame, *,
     reference's leftover handling).  `fix_double=True` runs the
     duplicate-surface repair pass on the result (reference _eliminate
     fix_double, polygon_operations.py:763-990)."""
-    keep_area = _with_area(df, id_col)
+    keep_area = area_col(df.select(id_col, "geometry"), out_col="__area")
     pairs = sjoin_pairs(to_eliminate, df, "intersects", left_id=id_col,
                         right_id=id_col, gridsize=gridsize,
                         assume_left_points=False)
@@ -821,22 +820,6 @@ def eliminate_by_longest(df: DataFrame, to_eliminate: DataFrame, *,
                                  id_col, "left_anti") \
         .drop("minx", "miny", "maxx", "maxy")
     return out.unionByName(isolated, allowMissingColumns=True)
-
-
-def _with_area(df: DataFrame, id_col: str) -> DataFrame:
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf["geometry"].tolist())
-            out = pdf[[id_col]].copy()
-            out["__area"] = ga.area()
-            yield out
-
-    id_t = [f.dataType.simpleString() for f in df.schema.fields
-            if f.name == id_col][0]
-    return df.select(id_col, "geometry").mapInPandas(
-        kernel, schema=f"{id_col} {id_t}, __area double")
 
 
 def area_col(df: DataFrame, geometry: str = "geometry",

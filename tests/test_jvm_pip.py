@@ -22,7 +22,7 @@ from contextlib import contextmanager
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import types as T
 
 import sgspark.joins as joins
 from sgspark.geom.wkb import from_wkt, to_wkb
@@ -172,67 +172,6 @@ def test_distributed_jvm_plan_is_python_free_on_pairs(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     # one MapInPandas total (rights pack); the join + PIP filter are JVM
     assert plan.count("MapInPandas") == 1
-
-
-def test_size_rule_picks_route(spark, monkeypatch, tmp_path):
-    """Default config: the distributed point x polygon join refines with
-    the Arrow kernel below PIP_COMPILED_MIN_PAIRS estimated pairs, with
-    the compiled PIP above it, and with the compiled PIP when the left's
-    row count is unknown."""
-    import sgspark.joins as J
-    zones, pts = zones_df(spark), points_df(spark)
-
-    def plan(left):
-        out = sjoin_pairs(left, zones, "within", left_id="pid",
-                          right_id="zid", gridsize=7.0,
-                          broadcast_right=False, assume_left_points=True)
-        return out._jdf.queryExecution().executedPlan().toString()
-
-    # small: the row count from Catalyst (local relation) or, for a
-    # parquet scan without statistics, from the count folded into the
-    # stats job
-    pts.write.parquet(str(tmp_path / "pts"))
-    scanned = spark.read.parquet(str(tmp_path / "pts"))
-    assert J._plan_row_count(pts) == 318
-    assert J._plan_row_count(scanned) is None
-    assert "kernel(" in plan(pts)
-    assert "kernel(" in plan(scanned)
-    # large: 10x the constant in rows over a right layer whose bboxes
-    # cover a tenth of its world estimates exactly the constant, which
-    # takes the compiled route; so does a synthetic Catalyst row count of
-    # that size on the fixture
-    st = {"wx0": 0.0, "wx1": 100.0, "wy0": 0.0, "wy1": 100.0,
-          "area": 1000.0}
-    assert J._pip_pairs_estimate(10 * J.PIP_COMPILED_MIN_PAIRS, st) \
-        == J.PIP_COMPILED_MIN_PAIRS
-    monkeypatch.setattr(J, "_plan_row_count",
-                        lambda df: 10 * J.PIP_COMPILED_MIN_PAIRS)
-    assert "kernel(" not in plan(pts)
-    monkeypatch.undo()
-    # unknown: a Python-produced left has no Catalyst count and is not
-    # counted by the probe
-    py_left = pts.mapInPandas(lambda it: it, pts.schema)
-    assert J._plan_row_count(py_left) is None
-    assert "kernel(" not in plan(py_left)
-
-
-def test_declines_on_mixed_or_huge_rights(spark):
-    """Line rights or country-sized rights fall back to the kernel path
-    and still produce correct results."""
-    ga = from_wkt(["LINESTRING (0 0, 5 5)", POLYS[0]])
-    b = ga.bounds()
-    rows = [(i, bytearray(w), float(b[i, 0]), float(b[i, 1]),
-             float(b[i, 2]), float(b[i, 3]))
-            for i, w in enumerate(to_wkb(ga))]
-    zones = spark.createDataFrame(rows, zones_df(spark).schema)
-    pts = points_df(spark)
-    with compiled():
-        out = sjoin_pairs(pts, zones, "intersects", left_id="pid",
-                          right_id="zid", gridsize=7.0,
-                          broadcast_right=False, assume_left_points=True)
-    got = pair_set(out)
-    assert (0, 1) in got          # (1,1) inside the L polygon (zid=1 here)
-    assert (2, 0) in got and (2, 1) in got  # (2,2) on the line AND in L
 
 
 def refines_with_kernel(df) -> bool:

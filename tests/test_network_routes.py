@@ -6,6 +6,7 @@ Both must return the same schema and the same rows, also for non-string
 node ids and for NULL keys.
 """
 
+import logging
 import os
 
 import pandas as pd
@@ -91,11 +92,20 @@ def test_od_matrix_null_keys_match_distributed(spark):
     assert costs[("a", "x")] == 4.0 and costs[("a", "z")] is None
 
 
-def test_origin_edge_cap_falls_back_on_multigraph(spark, monkeypatch):
+def test_origin_edge_cap_falls_back_on_multigraph(spark, monkeypatch,
+                                                   caplog):
     """|origins| x |edges| over the driver cap (|origins| x |nodes| under
     it) sends a parallel-edge multigraph to the distributed route, with
     the driver route's rows and schema."""
     from sgspark import network
+    caplog.set_level(logging.INFO, logger="sgspark.route")
+
+    def route():
+        recs = [r for r in caplog.records if r.name == "sgspark.route"]
+        caplog.clear()
+        assert len(recs) == 1
+        return recs[0]
+
     edges = spark.createDataFrame(pd.DataFrame(
         {"source": ["1", "1", "2", "2", "3", "1"],
          "target": ["2", "2", "3", "3", "4", "4"],
@@ -103,17 +113,40 @@ def test_origin_edge_cap_falls_back_on_multigraph(spark, monkeypatch):
     origins = spark.createDataFrame(pd.DataFrame(
         {"oid": ["a", "b"], "node": ["1", "3"]}))
     local = network.shortest_paths(edges, origins)
-    assert network.last_run_stats.get("local_graph")
+    assert route().route == "driver"
 
-    fast = []
-    real = network._shortest_paths_local
-    monkeypatch.setattr(network, "_shortest_paths_local",
-                        lambda *a: fast.append(real(*a)) or fast[-1])
     # 2 origins x 4 nodes = 8 cells fit; 2 x 12 directed edges do not
     monkeypatch.setattr(network, "_LOCAL_ORIGIN_CELLS", 10)
     capped = network.shortest_paths(edges, origins)
-    assert fast == [None]
-    assert not network.last_run_stats.get("local_graph")
+    rec = route()
+    assert rec.route == "shortcuts"
+    assert "origins x max(nodes, edges)" in rec.reasons[0]
     assert capped.schema == local.schema
     assert _rows(capped) == _rows(local)
     assert ("a", "2", 0.5, "1") in _rows(local)
+
+
+def test_bounded_probes_leave_session_conf_alone(spark, monkeypatch):
+    """The driver route's bounded collects change no session conf, which
+    a concurrent query would see, and still run one job each."""
+    from pyspark.sql.conf import RuntimeConfig
+    from sgspark.network import _bounded_rows, od_cost_matrix
+
+    def refuse(self, key, value):
+        raise AssertionError(f"session conf set: {key}={value}")
+
+    edges, origins = _int_graph(spark)
+    dests = spark.createDataFrame(pd.DataFrame({"did": [7], "node": [4]}))
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    costs = {(r[0], r[1]): r[2]
+             for r in od_cost_matrix(edges, origins, dests).collect()}
+    assert costs == {("a", 7): 4.0, ("b", 7): 3.0}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bounded_rows", "one job")
+    try:
+        rows = _bounded_rows(spark.range(0, 100, numPartitions=8), 1000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 100
+    assert len(sc.statusTracker().getJobIdsForGroup("bounded_rows")) == 1

@@ -3,7 +3,6 @@
 Covers:
   - wkb_gtype_col / wkb_gtype full-uint32 decode (ISO 3D/M codes, EWKB
     flags, big-endian) — ADVICE r4 #1
-  - null-safe polygon-type probe in the JVM edge-pack path — ADVICE r4 #2
   - min-plus shortcut budget honored on the FIRST doubling — ADVICE r4 #3
 """
 import struct
@@ -56,30 +55,6 @@ class TestWkbGtypeDecode:
         vals = [r[0] for r in
                 df.select(wkb_gtype_col("geometry")).collect()]
         assert vals == [1, 1]
-
-
-class TestNullSafeTypeProbe:
-    def test_null_kind_routes_to_kernel(self, spark):
-        """A right row with NULL geom_kind must force the kernel fallback
-        (return None from the edge-pack builder), not silently enter the
-        compiled PIP path."""
-        from test_jvm_pip import zones_df, points_df
-        from sgspark.joins import _points_vs_polygons_distributed
-        zones = zones_df(spark).withColumn(
-            "geom_kind",
-            F.when(F.col("zid") == 0, F.lit(None).cast("string"))
-            .otherwise(F.lit("polygon")))
-        out = _points_vs_polygons_distributed(
-            points_df(spark), zones, left_id="pid", right_id="zid",
-            gridsize=7.0)
-        assert out is None
-        # all-polygon kinds (no NULL) still take the compiled path
-        zones_ok = zones_df(spark).withColumn(
-            "geom_kind", F.lit("polygon"))
-        out2 = _points_vs_polygons_distributed(
-            points_df(spark), zones_ok, left_id="pid", right_id="zid",
-            gridsize=7.0)
-        assert out2 is not None
 
 
 class TestSrpSaltedBuckets:
@@ -313,106 +288,6 @@ class TestNetworkAdditions:
         got = sorted((r["source"], r["target"], r["minutes"]) for r in out)
         assert got == [("A", "B", 1.2), ("A", "C", 3.6),
                        ("B", "A", 1.2), ("B", "C", 2.4)]
-
-
-class TestConfigSeam:
-    def test_pip_route_pinned_by_constant(self, spark, monkeypatch):
-        """The distributed point x polygon route is chosen by the module
-        constant `PIP_COMPILED_MIN_PAIRS` alone, so pinning it at 0 or
-        infinity forces the compiled or the kernel route."""
-        import sgspark.joins as J
-        from test_jvm_pip import zones_df, points_df, pair_set
-        zones, pts = zones_df(spark), points_df(spark)
-
-        def run():
-            return J.sjoin_pairs(
-                pts, zones, "within", left_id="pid", right_id="zid",
-                gridsize=7.0, broadcast_right=False,
-                assume_left_points=True)
-
-        monkeypatch.setattr(J, "PIP_COMPILED_MIN_PAIRS", 0)
-        jvm = run()
-        assert "kernel(" not in \
-            jvm._jdf.queryExecution().executedPlan().toString()
-        jvm = pair_set(jvm)
-        monkeypatch.setattr(J, "PIP_COMPILED_MIN_PAIRS", float("inf"))
-        kern = run()
-        # the constant forced the Arrow kernel: the refine kernel (named
-        # `kernel`) is in the plan, not just the JVM path's edge pack
-        plan = kern._jdf.queryExecution().executedPlan().toString()
-        assert "kernel(" in plan
-        assert pair_set(kern) == jvm
-
-    def test_refine_runner_override(self, spark):
-        """The configured refine_runner is really what executes: an
-        all-False runner empties the join; an all-True runner returns the
-        full candidate set (superset of the real result)."""
-        import numpy as np
-        from sgspark.conf import config_override
-        from test_jvm_pip import zones_df, points_df, pair_set
-        from sgspark.joins import sjoin_pairs
-
-        def none_pass(la, ra, li, ri, pred):
-            return np.zeros(len(li), dtype=bool)
-
-        def all_pass(la, ra, li, ri, pred):
-            return np.ones(len(li), dtype=bool)
-
-        zones, pts = zones_df(spark), points_df(spark)
-
-        def run():
-            return pair_set(sjoin_pairs(
-                pts, zones, "within", left_id="pid", right_id="zid",
-                gridsize=7.0, broadcast_right=False))
-
-        real = run()
-        with config_override(refine_runner=none_pass):
-            assert run() == set()
-        with config_override(refine_runner=all_pass):
-            sup = run()
-        assert real <= sup and len(sup) > len(real)
-
-        # polygon lefts on the default (broadcast) route: the runner is
-        # honoured there too
-        import pandas as pd
-        from sgspark.io import wkt_to_wkb_df
-        from sgspark.joins import PATH_STATS
-        xy = pts.select("pid", "minx", "miny").toPandas()
-        sq = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
-            "pid": xy.pid,
-            "geometry_wkt": [
-                f"POLYGON (({x - .1!r} {y - .1!r}, {x + .1!r} {y - .1!r}, "
-                f"{x + .1!r} {y + .1!r}, {x - .1!r} {y + .1!r}, "
-                f"{x - .1!r} {y - .1!r}))" for x, y in zip(xy.minx, xy.miny)]})))
-
-        def run_polys():
-            return pair_set(sjoin_pairs(
-                sq, zones, "intersects", left_id="pid", right_id="zid",
-                gridsize=7.0))
-
-        before = PATH_STATS["kernel_bcast"]
-        real = run_polys()
-        assert PATH_STATS["kernel_bcast"] == before + 1
-        with config_override(refine_runner=none_pass):
-            assert run_polys() == set()
-        with config_override(refine_runner=all_pass):
-            sup = run_polys()
-        assert real <= sup and len(sup) > len(real)
-
-    def test_union_runner_override(self, spark):
-        """The configured union_runner replaces the dissolve union: a
-        first-blob runner makes multi-row groups dissolve to their first
-        geometry's area."""
-        from sgspark.conf import config_override
-        from sgspark.dissolve import diss
-        df = _poly_df(spark, ["POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))",
-                              "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))"])
-        from sgspark.geom.wkb import from_wkb
-        with config_override(union_runner=lambda blobs: bytes(blobs[0])):
-            out = diss(df.select("geometry")).collect()
-        assert len(out) == 1
-        area = float(from_wkb([out[0]["geometry"]]).area()[0])
-        assert area == pytest.approx(4.0)  # one input square, not union=7
 
 
 class TestSplitAndEliminate:

@@ -1,0 +1,351 @@
+"""Routing decisions of `sjoin_pairs` and `shortest_paths`.
+
+Each call runs one routing decision (`joins._sjoin_route`,
+`network._shortest_paths_route`) and logs it as exactly one record on the
+`sgspark.route` logger; the executors it routes to never decline.  Also
+here: the size rule and the probes that pick the distributed point x
+polygon executor, and the runner seam (`sgspark.conf`) the executors
+resolve their kernels from.
+"""
+import logging
+import re
+
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+import sgspark.joins as J
+from sgspark.geom.wkb import from_wkt, to_wkb
+from sgspark.joins import sjoin_pairs
+from test_jvm_pip import POLYS, compiled, pair_set, points_df, zones_df
+
+RECTS = ["POLYGON ((0 0, 4 0, 4 2, 0 2, 0 0))",
+         "POLYGON ((10 0, 20 0, 20 10, 10 10, 10 0))"]
+
+
+@pytest.fixture
+def routes(caplog):
+    """The `sgspark.route` records logged while the test runs (a callable
+    returning them)."""
+    caplog.set_level(logging.INFO, logger="sgspark.route")
+    return lambda: [r for r in caplog.records if r.name == "sgspark.route"]
+
+
+def one_route(routes, operator):
+    """The single record the call left, checked for its fields."""
+    recs = routes()
+    assert len(recs) == 1, [r.getMessage() for r in recs]
+    rec = recs[0]
+    assert rec.operator == operator and rec.reasons
+    assert all(isinstance(v, (int, float)) for v in rec.stats.values())
+    return rec
+
+
+def pip_route(left, right, **kw):
+    """The route `_sjoin_route` picks for a point `within` join."""
+    args = dict(right_id="zid", distance=None, gridsize=7.0,
+                keep_distance=False, broadcast_right=False,
+                assume_left_points=True)
+    args.update(kw)
+    return J._sjoin_route(left, right, "within", **args)
+
+
+@pytest.mark.parametrize("name,kw", [
+    ("empty", {}),
+    ("rect_bcast", {"assume_left_points": True}),
+    ("rect_bcast", {}),
+    ("kernel_bcast", {"assume_left_points": True}),
+    ("kernel_bcast", {"assume_left_points": False}),
+    ("compiled_dist", {"broadcast_right": False,
+                       "assume_left_points": True}),
+    ("kernel_dist", {"broadcast_right": False}),
+])
+def test_each_sjoin_call_logs_one_route(spark, routes, name, kw):
+    pts = points_df(spark)
+    zones = zones_df(spark, RECTS if name == "rect_bcast" else POLYS)
+    if name == "empty":
+        zones = zones.where("zid < 0")
+    with compiled():
+        out = sjoin_pairs(pts, zones, "within", left_id="pid",
+                          right_id="zid", gridsize=7.0, **kw)
+    rec = one_route(routes, "sjoin_pairs")
+    assert rec.route == name
+    assert name in rec.getMessage()
+    if name == "empty":
+        assert out.collect() == [] and rec.stats["n_right"] == 0
+    else:
+        assert len(pair_set(out)) > 0
+    if name in ("rect_bcast", "kernel_bcast"):
+        assert rec.stats["n_right"] == (2 if name == "rect_bcast" else 6)
+    if name == "compiled_dist":
+        assert rec.stats["n_right"] == 6 and rec.stats["gridsize"] <= 7.0
+
+
+def test_public_operators_log_one_route_each(spark, routes):
+    """sjoin / sfilter wrap one sjoin_pairs call each."""
+    pts, zones = points_df(spark), zones_df(spark)
+    J.sjoin(pts, zones, "within", left_id="pid", right_id="zid")
+    assert one_route(routes, "sjoin_pairs").route == "kernel_bcast"
+
+
+def test_no_route_record_below_info(spark, caplog):
+    caplog.set_level(logging.WARNING, logger="sgspark.route")
+    sjoin_pairs(points_df(spark), zones_df(spark), "within",
+                left_id="pid", right_id="zid", gridsize=7.0)
+    assert not [r for r in caplog.records if r.name == "sgspark.route"]
+
+
+def _chain(spark):
+    edges = spark.createDataFrame(pd.DataFrame(
+        {"source": ["1", "2", "3"], "target": ["2", "3", "4"],
+         "length": [1.0, 2.0, 1.0]}))
+    origins = spark.createDataFrame(pd.DataFrame(
+        {"oid": ["a"], "node": ["1"]}))
+    return edges, origins
+
+
+@pytest.mark.parametrize("name", ["driver", "shortcuts", "per_hop"])
+def test_each_shortest_paths_call_logs_one_route(spark, routes,
+                                                 monkeypatch, name):
+    from sgspark.network import shortest_paths
+    edges, origins = _chain(spark)
+    kw = {}
+    if name == "shortcuts":
+        monkeypatch.setenv("SGSPARK_LOCAL_GRAPH_EDGES", "0")
+    if name == "per_hop":
+        kw["penalties"] = spark.createDataFrame(pd.DataFrame(
+            {"oid": ["a"], "pu": ["1"], "pv": ["2"], "mult": [2.0]}))
+    out = shortest_paths(edges, origins, **kw)
+    rec = one_route(routes, "shortest_paths")
+    assert rec.route == name
+    assert rec.stats["bf_rounds"] >= 1 and rec.stats["edges"] == 6
+    if name == "shortcuts":
+        assert rec.stats["shortcut_hops"] == 1 << rec.stats[
+            "shortcut_doublings"]
+    costs = {r["u"]: r["cost"] for r in out.collect()}
+    assert costs["4"] == (5.0 if name == "per_hop" else 4.0)
+
+
+def test_od_cost_matrix_logs_one_route(spark, routes):
+    from sgspark.network import od_cost_matrix
+    edges, origins = _chain(spark)
+    dests = spark.createDataFrame(pd.DataFrame({"did": ["x"],
+                                                "node": ["4"]}))
+    out = od_cost_matrix(edges, origins, dests).collect()
+    assert [tuple(r) for r in out] == [("a", "x", 4.0)]
+    assert one_route(routes, "shortest_paths").route == "driver"
+
+
+def test_point_dwithin_skips_left_huge_branch(spark):
+    """Point lefts under `dwithin` cover at most (2d/g + 2)^2 cells, so
+    the left huge-geometry branch (a broadcast nested-loop join over a
+    second pass of the left) is not planned when that is under
+    MAX_COVER_CELLS.  The distributed route keeps the right's branch.
+    The left is checkpointed: over a local relation, Catalyst would drop
+    the (empty) branch itself."""
+    pts, zones = points_df(spark).localCheckpoint(), zones_df(spark)
+
+    def nlj(**kw):
+        out = sjoin_pairs(pts, zones, "dwithin", left_id="pid",
+                          right_id="zid", distance=1.25, gridsize=7.0,
+                          assume_left_points=True, **kw)
+        return out._jdf.queryExecution().executedPlan().toString() \
+            .count("BroadcastNestedLoopJoin")
+
+    assert nlj() == 0
+    assert nlj(broadcast_right=False) == 1
+    # a distance whose point cover can exceed the cap keeps the branch:
+    # its join condition widens the left's bbox (bx0 - d)
+    l0 = pts.selectExpr("pid AS __lid", "geometry AS __lg", "minx", "miny",
+                        "maxx", "maxy")
+    r0 = zones.selectExpr("zid AS __rid", "geometry AS __rg", "minx",
+                          "miny", "maxx", "maxy")
+    far = J.cell_candidate_pairs(l0, r0, 1.0, expand=40.0,
+                                 assume_left_points=True)
+    assert re.search(r"\(bx0#\d+ - 40\.0\) <= maxx",
+                     far._jdf.queryExecution().executedPlan().toString())
+
+
+class TestConfigSeam:
+    def test_pip_route_pinned_by_constant(self, spark, monkeypatch):
+        """The distributed point x polygon route is chosen by the module
+        constant `PIP_COMPILED_MIN_PAIRS` alone, so pinning it at 0 or
+        infinity forces the compiled or the kernel route."""
+        zones, pts = zones_df(spark), points_df(spark)
+
+        def run():
+            return J.sjoin_pairs(
+                pts, zones, "within", left_id="pid", right_id="zid",
+                gridsize=7.0, broadcast_right=False,
+                assume_left_points=True)
+
+        monkeypatch.setattr(J, "PIP_COMPILED_MIN_PAIRS", 0)
+        jvm = run()
+        assert "kernel(" not in \
+            jvm._jdf.queryExecution().executedPlan().toString()
+        jvm = pair_set(jvm)
+        monkeypatch.setattr(J, "PIP_COMPILED_MIN_PAIRS", float("inf"))
+        kern = run()
+        # the constant forced the Arrow kernel: the refine kernel (named
+        # `kernel`) is in the plan, not just the JVM path's edge pack
+        plan = kern._jdf.queryExecution().executedPlan().toString()
+        assert "kernel(" in plan
+        assert pair_set(kern) == jvm
+
+    def test_refine_runner_override(self, spark, routes):
+        """The configured refine_runner is really what executes: an
+        all-False runner empties the join; an all-True runner returns the
+        full candidate set (superset of the real result)."""
+        from sgspark.conf import config_override
+
+        def none_pass(la, ra, li, ri, pred):
+            return np.zeros(len(li), dtype=bool)
+
+        def all_pass(la, ra, li, ri, pred):
+            return np.ones(len(li), dtype=bool)
+
+        zones, pts = zones_df(spark), points_df(spark)
+
+        def run():
+            return pair_set(sjoin_pairs(
+                pts, zones, "within", left_id="pid", right_id="zid",
+                gridsize=7.0, broadcast_right=False))
+
+        real = run()
+        with config_override(refine_runner=none_pass):
+            assert run() == set()
+        with config_override(refine_runner=all_pass):
+            sup = run()
+        assert real <= sup and len(sup) > len(real)
+
+        # polygon lefts on the default (broadcast) route: the runner is
+        # honoured there too
+        from sgspark.io import wkt_to_wkb_df
+        xy = pts.select("pid", "minx", "miny").toPandas()
+        sq = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
+            "pid": xy.pid,
+            "geometry_wkt": [
+                f"POLYGON (({x - .1!r} {y - .1!r}, {x + .1!r} {y - .1!r}, "
+                f"{x + .1!r} {y + .1!r}, {x - .1!r} {y + .1!r}, "
+                f"{x - .1!r} {y - .1!r}))" for x, y in zip(xy.minx, xy.miny)]})))
+
+        def run_polys():
+            return pair_set(sjoin_pairs(
+                sq, zones, "intersects", left_id="pid", right_id="zid",
+                gridsize=7.0))
+
+        before = len(routes())
+        real = run_polys()
+        assert [r.route for r in routes()[before:]] == ["kernel_bcast"]
+        with config_override(refine_runner=none_pass):
+            assert run_polys() == set()
+        with config_override(refine_runner=all_pass):
+            sup = run_polys()
+        assert real <= sup and len(sup) > len(real)
+
+    def test_union_runner_override(self, spark):
+        """The configured union_runner replaces the dissolve union: a
+        first-blob runner makes multi-row groups dissolve to their first
+        geometry's area."""
+        from sgspark.conf import config_override
+        from sgspark.dissolve import diss
+        from test_round5_fixes import _poly_df
+        df = _poly_df(spark, ["POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))",
+                              "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))"])
+        from sgspark.geom.wkb import from_wkb
+        with config_override(union_runner=lambda blobs: bytes(blobs[0])):
+            out = diss(df.select("geometry")).collect()
+        assert len(out) == 1
+        area = float(from_wkb([out[0]["geometry"]]).area()[0])
+        assert area == pytest.approx(4.0)  # one input square, not union=7
+
+
+class TestNullSafeTypeProbe:
+    def test_null_kind_routes_to_kernel(self, spark):
+        """A right row with NULL geom_kind must route the join to the
+        kernel, not silently into the compiled PIP executor."""
+        zones = zones_df(spark).withColumn(
+            "geom_kind",
+            F.when(F.col("zid") == 0, F.lit(None).cast("string"))
+            .otherwise(F.lit("polygon")))
+        with compiled():
+            out = pip_route(points_df(spark), zones)
+        assert out.name == "kernel_dist"
+        # all-polygon kinds (no NULL) still take the compiled path
+        zones_ok = zones_df(spark).withColumn(
+            "geom_kind", F.lit("polygon"))
+        with compiled():
+            out2 = pip_route(points_df(spark), zones_ok)
+        assert out2.name == "compiled_dist"
+
+
+def test_size_rule_picks_route(spark, monkeypatch, tmp_path):
+    """Default config: the distributed point x polygon join refines with
+    the Arrow kernel below PIP_COMPILED_MIN_PAIRS estimated pairs, with
+    the compiled PIP above it, and with the compiled PIP when the left's
+    row count is unknown."""
+    zones, pts = zones_df(spark), points_df(spark)
+
+    def plan(left):
+        out = sjoin_pairs(left, zones, "within", left_id="pid",
+                          right_id="zid", gridsize=7.0,
+                          broadcast_right=False, assume_left_points=True)
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    # small: the row count from Catalyst (local relation) or, for a
+    # parquet scan without statistics, from the count folded into the
+    # stats job
+    pts.write.parquet(str(tmp_path / "pts"))
+    scanned = spark.read.parquet(str(tmp_path / "pts"))
+    assert J._plan_row_count(pts) == 318
+    assert J._plan_row_count(scanned) is None
+    assert "kernel(" in plan(pts)
+    assert "kernel(" in plan(scanned)
+    assert pip_route(scanned, zones).facts["n_left"] == 318
+    # large: 10x the constant in rows over a right layer whose bboxes
+    # cover a tenth of its world estimates exactly the constant, which
+    # takes the compiled route; so does a synthetic Catalyst row count of
+    # that size on the fixture
+    st = {"wx0": 0.0, "wx1": 100.0, "wy0": 0.0, "wy1": 100.0,
+          "area": 1000.0}
+    assert J._pip_pairs_estimate(10 * J.PIP_COMPILED_MIN_PAIRS, st) \
+        == J.PIP_COMPILED_MIN_PAIRS
+    monkeypatch.setattr(J, "_plan_row_count",
+                        lambda df: 10 * J.PIP_COMPILED_MIN_PAIRS)
+    assert "kernel(" not in plan(pts)
+    assert pip_route(pts, zones).name == "compiled_dist"
+    monkeypatch.undo()
+    # unknown: a Python-produced left has no Catalyst count and is not
+    # counted by the probe
+    py_left = pts.mapInPandas(lambda it: it, pts.schema)
+    assert J._plan_row_count(py_left) is None
+    assert "kernel(" not in plan(py_left)
+    assert pip_route(py_left, zones).facts["n_left"] is None
+
+
+def test_declines_on_mixed_or_huge_rights(spark):
+    """Line rights or country-sized rights route to the kernel and still
+    produce correct results."""
+    ga = from_wkt(["LINESTRING (0 0, 5 5)", POLYS[0]])
+    b = ga.bounds()
+    rows = [(i, bytearray(w), float(b[i, 0]), float(b[i, 1]),
+             float(b[i, 2]), float(b[i, 3]))
+            for i, w in enumerate(to_wkb(ga))]
+    zones = spark.createDataFrame(rows, zones_df(spark).schema)
+    pts = points_df(spark)
+    with compiled():
+        assert pip_route(pts, zones).name == "kernel_dist"
+        out = sjoin_pairs(pts, zones, "intersects", left_id="pid",
+                          right_id="zid", gridsize=7.0,
+                          broadcast_right=False, assume_left_points=True)
+    got = pair_set(out)
+    assert (0, 1) in got          # (1,1) inside the L polygon (zid=1 here)
+    assert (2, 0) in got and (2, 1) in got  # (2,2) on the line AND in L
+    # a country-sized right: its cover at the grid exceeds MAX_COVER_CELLS
+    big = zones_df(spark, ["POLYGON ((0 0, 1000 0, 1000 1000, 0 0))",
+                           POLYS[0]])
+    with compiled():
+        r = pip_route(pts, big, gridsize=1.0)
+        assert r.name == "kernel_dist"
+        assert any("covers over" in w for w in r.reasons)
