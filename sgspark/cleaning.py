@@ -18,81 +18,11 @@ emptiness.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .io import with_bounds
-from .overlay import _parts_of, update_geometries
-from .polygon_ops import (close_thin_holes, eliminate_by_longest, get_gaps,
-                          remove_spikes)
-
-
-def _thin_flag(df: DataFrame, tolerance: float,
-               geometry: str = "geometry") -> DataFrame:
-    """Adds `__thin` = max inscribed diameter < tolerance."""
-    from .geom.measure import parts_thin
-    from .geom.wkb import from_wkb
-    pitch = float(tolerance) / 8.0
-    thr = float(tolerance) / 2.0
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + ", __thin boolean"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            # vectorized sound prefilters over the whole batch (round 4):
-            # any disk inside the geometry fits its bbox (r <= min(w,h)/2)
-            # and its area (pi r^2 <= area) — geometry-level bounds, so a
-            # hit proves EVERY part thin.  Only undecided rows run the
-            # per-geometry offset/erosion kernel.
-            b = ga.bounds()
-            w = b[:, 2] - b[:, 0]
-            h = b[:, 3] - b[:, 1]
-            area = ga.area()
-            thin = (np.minimum(w, h) / 2.0 < thr) | \
-                (area <= np.pi * thr * thr)
-            thin |= ~np.isfinite(w)  # empty geoms: vacuously thin
-            flags = thin.copy()
-            for g in np.nonzero(~thin)[0].tolist():
-                flags[g] = parts_thin(_parts_of(ga, g), pitch, thr)
-            out = pdf.copy()
-            out["__thin"] = flags
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
-
-
-def _bounds_and_area(df: DataFrame) -> DataFrame:
-    """bbox columns + `__area` in ONE Arrow pass: joining a bounds pass
-    to an area pass would run the upstream plan twice and pay a join
-    exchange just to glue two per-row columns back together."""
-    from .geom.wkb import from_wkb
-    base = df.drop("minx", "miny", "maxx", "maxy")
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in base.schema.fields) \
-        + ", minx double, miny double, maxx double, maxy double, " \
-          "__area double"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf["geometry"].tolist())
-            b = ga.bounds()
-            out = pdf.copy()
-            out["minx"] = b[:, 0]
-            out["miny"] = b[:, 1]
-            out["maxx"] = b[:, 2]
-            out["maxy"] = b[:, 3]
-            out["__area"] = ga.area()
-            yield out
-
-    return base.mapInPandas(kernel, schema=schema)
+from .polygon_ops import (_update_by_area, close_thin_holes,
+                          eliminate_by_longest, get_gaps, remove_spikes)
 
 
 def split_and_eliminate_by_longest(df: DataFrame, to_eliminate: DataFrame,
@@ -128,15 +58,11 @@ def split_and_eliminate_by_longest(df: DataFrame, to_eliminate: DataFrame,
     splitted = split_by_neighbors(slivers, df, id_col=id_col,
                                   neighbor_id=id_col, tolerance=tolerance,
                                   gridsize=gridsize)
-    # one fused bounds+area kernel, materialized once for the probes the
-    # dedup stage runs (round 6 — same shape as coverage_clean's ranked)
-    ranked = _bounds_and_area(splitted.withColumn(id_col, neg_id)) \
-        .withColumn("__rank", F.struct(F.col("__area").alias("a"),
-                                       F.col(id_col).alias("tid"))) \
-        .drop("__area").localCheckpoint()
-    deduped = with_bounds(
-        update_geometries(ranked, id_col=id_col, rank_col="__rank",
-                          gridsize=gridsize).drop("__rank")).localCheckpoint()
+    # dedup smallest-first: one bounds+area pass, materialized once for
+    # the probes the dedup stage runs
+    deduped = with_bounds(_update_by_area(
+        splitted.withColumn(id_col, neg_id), id_col=id_col,
+        gridsize=gridsize, largest=False)).localCheckpoint()
     merged = eliminate_by_longest(df, deduped, id_col=id_col,
                                   gridsize=gridsize)
     merged = with_bounds(merged.where(F.col(id_col) >= 0)).localCheckpoint()
@@ -191,22 +117,13 @@ def coverage_clean(df: DataFrame, tolerance: float, *, id_col: str,
         filled = cur
 
     # 3. double surfaces: priority = largest area first (reference runs
-    # sort_large_first before update_geometries)
-    # rank = (-area, id) struct compared lexicographically — a TOTAL order
-    # without a global row_number window (which would be a single-partition
-    # sort bottleneck at scale)
-    #
-    # Bounds + area come from ONE fused kernel and `ranked` is the single
-    # materialization barrier for the eliminate stage (round 6): the old
-    # shape checkpointed `filled`, then executed with_bounds(filled) twice
-    # more through a glue join; update_geometries' plan-time probes over
-    # the non-materialized chain each fanned out into several AQE jobs.
-    ranked = _bounds_and_area(filled.select(id_col, *attrs, "geometry")) \
-        .withColumn("__rank", F.struct((-F.col("__area")).alias("na"),
-                                       F.col(id_col).alias("tid"))) \
-        .drop("__area").localCheckpoint()
-    deduped = update_geometries(ranked, id_col=id_col, rank_col="__rank",
-                                gridsize=gridsize).drop("__rank") \
+    # sort_large_first before update_geometries); the rank is the
+    # (-area, id) struct, a TOTAL order without a global row_number
+    # window (a single-partition sort bottleneck at scale).  Bounds and
+    # area come from ONE fused kernel and `ranked` is the single
+    # materialization barrier for the eliminate stage (round 6).
+    deduped = _update_by_area(filled.select(id_col, *attrs, "geometry"),
+                              id_col=id_col, gridsize=gridsize) \
         .localCheckpoint()
 
     # 4. spikes

@@ -18,15 +18,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .geom.array import POLYGON, from_rings, points as make_points
-from .geom.wkb import from_wkb, to_wkb
+from .geom.array import from_rings, points as make_points
+from .geom.wkb import from_wkb, rect_polygon_wkb, to_wkb
+from .io import map_geoms, with_bounds, wkt_to_wkb_df
 from .synth import _splitmix64
 
 
 def df_from_wkt(spark: SparkSession, wkts: list[str],
                 ids: list | None = None) -> DataFrame:
     """to_gdf analogue for WKT lists (conversion.py:255-528)."""
-    from .io import wkt_to_wkb_df
     pdf = pd.DataFrame({"row_id": ids if ids is not None
                         else list(range(len(wkts))),
                         "geometry_wkt": wkts})
@@ -61,7 +61,6 @@ def to_gdf(spark: SparkSession, data, ids=None) -> DataFrame:
     if isinstance(first, str):
         return df_from_wkt(spark, data, ids)
     if isinstance(first, (bytes, bytearray)):
-        from .io import with_bounds
         pdf = pd.DataFrame({"row_id": ids if ids is not None
                             else list(range(len(data))),
                             "geometry": data})
@@ -96,24 +95,16 @@ def bounds_to_points(df: DataFrame) -> DataFrame:
     """Replace geometry by the 4-corner MULTIPOINT of its bbox
     (bounds_to_points, bounds.py:653-679)."""
     from .geom.array import MULTIPOINT
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            parts_all = []
-            for x0, y0, x1, y1 in zip(pdf.minx, pdf.miny, pdf.maxx,
-                                      pdf.maxy):
-                parts_all.append([np.array([[x0, y0]]), np.array([[x1, y0]]),
-                                  np.array([[x1, y1]]), np.array([[x0, y1]])])
-            ga = from_rings(parts_all, [MULTIPOINT] * len(pdf))
-            out = pdf.copy()
-            out["geometry"] = to_wkb(ga)
-            yield out
+    def corners(_, pdf):
+        parts_all = [[np.array([[x0, y0]]), np.array([[x1, y0]]),
+                      np.array([[x1, y1]]), np.array([[x0, y1]])]
+                     for x0, y0, x1, y1 in zip(pdf.minx, pdf.miny, pdf.maxx,
+                                               pdf.maxy)]
+        ga = from_rings(parts_all, [MULTIPOINT] * len(pdf))
+        return None, {"geometry": to_wkb(ga)}
 
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, corners, geometry=None)
 
 
 def get_line_segments(df: DataFrame, geometry: str = "geometry"
@@ -121,30 +112,20 @@ def get_line_segments(df: DataFrame, geometry: str = "geometry"
     """Explode every LineString into its 2-point segments (reference
     get_line_segments helper); adds `segment_idx`."""
     from .geom.array import LINESTRING
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + ", segment_idx int"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            src, blobs, sidx = [], [], []
-            for g in range(len(ga)):
-                for chain in ga.rings_of_geom(g):
-                    for i in range(len(chain) - 1):
-                        src.append(g)
-                        blobs.append(to_wkb(from_rings(
-                            [[chain[i:i + 2]]], [LINESTRING]))[0])
-                        sidx.append(i)
-            if not src:
-                continue
-            out = pdf.iloc[src].copy()
-            out[geometry] = blobs
-            out["segment_idx"] = sidx
-            yield out
+    def segments(ga, pdf):
+        src, blobs, sidx = [], [], []
+        for g in range(len(ga)):
+            for chain in ga.rings_of_geom(g):
+                for i in range(len(chain) - 1):
+                    src.append(g)
+                    blobs.append(to_wkb(from_rings(
+                        [[chain[i:i + 2]]], [LINESTRING]))[0])
+                    sidx.append(i)
+        return src, {geometry: blobs, "segment_idx": sidx}
 
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, segments, {"segment_idx": "int"},
+                     geometry=geometry)
 
 
 def make_lines_between_points(a: DataFrame, b: DataFrame, *,
@@ -249,47 +230,16 @@ def clean_geoms(df: DataFrame, geometry: str = "geometry") -> DataFrame:
     """Drop null/empty geometries, close unclosed rings (clean_geoms,
     general.py:161-250; full GEOS make_valid is out of scope — the boolean
     kernels apply their own perturbation ladder instead)."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep, blobs = [], []
-            ga = from_wkb(pdf[geometry].tolist())
-            counts = ga.coords_count_per_geom()
-            for g in range(len(ga)):
-                if pdf[geometry].iloc[g] is None or counts[g] == 0:
-                    continue
-                keep.append(g)
-                blobs.append(pdf[geometry].iloc[g])
-            out = pdf.iloc[keep].copy()
-            out[geometry] = blobs
-            yield out
-
-    return df.where(F.col(geometry).isNotNull()).mapInPandas(kernel, schema=schema)
+    return map_geoms(df.where(F.col(geometry).isNotNull()),
+                     lambda ga, pdf: (ga.coords_count_per_geom() > 0, {}),
+                     geometry=geometry)
 
 
 def bounds_to_polygon(df: DataFrame) -> DataFrame:
     """Replace geometry by its bbox polygon (bounds.py:610-650)."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rings = []
-            for x0, y0, x1, y1 in zip(pdf.minx, pdf.miny, pdf.maxx, pdf.maxy):
-                rings.append([[np.array([[x0, y0], [x1, y0], [x1, y1],
-                                         [x0, y1], [x0, y0]])]])
-            ga = from_rings(rings, [POLYGON] * len(pdf))
-            out = pdf.copy()
-            out["geometry"] = to_wkb(ga)
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, lambda _, pdf: (None, {"geometry": rect_polygon_wkb(
+        pdf.minx.to_numpy(), pdf.miny.to_numpy(), pdf.maxx.to_numpy(),
+        pdf.maxy.to_numpy())}), geometry=None)
 
 
 def get_total_bounds(df: DataFrame) -> tuple:
@@ -301,22 +251,12 @@ def get_total_bounds(df: DataFrame) -> tuple:
 def with_centroid(df: DataFrame, geometry: str = "geometry",
                   x_col: str = "cx", y_col: str = "cy") -> DataFrame:
     """Attach centroid coordinate columns (vectorized kernel)."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + \
-        f", {x_col} double, {y_col} double"
+    def centroid(ga, pdf):
+        c = ga.centroid()
+        return None, {x_col: c[:, 0], y_col: c[:, 1]}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            c = ga.centroid()
-            out = pdf.copy()
-            out[x_col] = c[:, 0]
-            out[y_col] = c[:, 1]
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, centroid, {x_col: "double", y_col: "double"},
+                     geometry=geometry)
 
 
 def get_grouped_centroids(df: DataFrame, by: list[str], *,
@@ -365,7 +305,6 @@ def points_in_polygons(polys: DataFrame, spacing: float, *,
     """Point grid clipped to polygons (points_in_polygons,
     general.py:1124-1148): grid over total bounds, then the PIP join."""
     from .joins import sjoin_pairs
-    from .io import with_bounds
     spark = polys.sparkSession
     b = get_total_bounds(polys)
     # pt_id from the INTEGER grid indices (ix * (ny+1) + iy) — collision-free
@@ -382,23 +321,10 @@ def points_in_polygons(polys: DataFrame, spacing: float, *,
     pts_g = pts.selectExpr("pt_id", "x AS minx", "y AS miny",
                            "x AS maxx", "y AS maxy")
     # point rows need WKB geometry for the refine kernel
-    from .geom.array import points as make_points
-    from .geom.wkb import to_wkb as _to_wkb
-    from typing import Iterator as _It
-
-    def pk(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xy = np.stack([pdf["minx"].to_numpy(),
-                           pdf["miny"].to_numpy()], axis=1)
-            out = pdf.copy()
-            out["geometry"] = _to_wkb(make_points(xy))
-            yield out
-
-    pts_g = pts_g.mapInPandas(
-        pk, schema="pt_id bigint, minx double, miny double, maxx double, "
-                   "maxy double, geometry binary")
+    pts_g = map_geoms(pts_g, lambda _, pdf: (None, {"geometry": to_wkb(
+        make_points(np.stack([pdf["minx"].to_numpy(),
+                              pdf["miny"].to_numpy()], axis=1)))}),
+        {"geometry": "binary"}, geometry=None)
     pairs = sjoin_pairs(pts_g, polys, "within", left_id="pt_id",
                         right_id=id_col, gridsize=gridsize)
     return pts.join(pairs, "pt_id").select("x", "y", id_col)
@@ -408,19 +334,8 @@ def sort_long_first(df: DataFrame, geometry: str = "geometry",
                     ascending: bool = False) -> DataFrame:
     """orderBy line length (sort_long_first / sort_short_first,
     general.py:287-393): adds `length_col` then sorts."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + ", length_col double"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            out = pdf.copy()
-            out["length_col"] = ga.length()
-            yield out
-
-    out = df.mapInPandas(kernel, schema=schema)
+    out = map_geoms(df, lambda ga, pdf: (None, {"length_col": ga.length()}),
+                    {"length_col": "double"}, geometry=geometry)
     order = F.col("length_col").asc() if ascending \
         else F.col("length_col").desc()
     return out.orderBy(order)
@@ -464,7 +379,6 @@ def random_points_norway(spark: SparkSession, size: int, *,
     `random_points_in_polygons`, then keeps exactly `size` rows by a
     deterministic hash order (the reference's uniform .sample(size) over
     the 3x pool, made reproducible).  Output: (row_id, pt_idx, x, y)."""
-    from .io import wkt_to_wkb_df
     polys = wkt_to_wkb_df(
         spark.createDataFrame(
             [(i, w) for i, w in enumerate(_NORWAY_WKT)],

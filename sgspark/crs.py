@@ -15,13 +15,11 @@ re-project coordinates with the exact Transverse Mercator kernel
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from .geom.wkb import from_wkb, to_wkb
+from .geom.wkb import to_wkb
+from .io import BOUNDS_DDL, bounds_cols, map_geoms
 
 
 def set_crs(df: DataFrame, epsg: int, geometry: str = "geometry"
@@ -48,31 +46,12 @@ def require_same_crs(a: DataFrame, b: DataFrame,
 
 def _transform_df(df: DataFrame, fwd, geometry: str, epsg_out: int
                   ) -> DataFrame:
-    cols = [f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if f.name not in ("minx", "miny", "maxx", "maxy")]
-    schema = ", ".join(cols + ["minx double", "miny double",
-                               "maxx double", "maxy double"])
+    def transform(ga, pdf):
+        ga.coords = np.stack(fwd(ga.coords[:, 0], ga.coords[:, 1]), axis=1)
+        return None, {geometry: to_wkb(ga), **bounds_cols(ga)}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            nx, ny = fwd(ga.coords[:, 0], ga.coords[:, 1])
-            ga.coords = np.stack([nx, ny], axis=1)
-            b = ga.bounds()
-            out = pdf.drop(columns=[c for c in
-                                    ("minx", "miny", "maxx", "maxy")
-                                    if c in pdf.columns]).copy()
-            out[geometry] = to_wkb(ga)
-            out["minx"] = b[:, 0]
-            out["miny"] = b[:, 1]
-            out["maxx"] = b[:, 2]
-            out["maxy"] = b[:, 3]
-            yield out
-
-    return set_crs(df.mapInPandas(kernel, schema=schema), epsg_out, geometry)
+    return set_crs(map_geoms(df, transform, BOUNDS_DDL, geometry=geometry),
+                   epsg_out, geometry)
 
 
 def to_4326(df: DataFrame, zone: int = 33, geometry: str = "geometry"

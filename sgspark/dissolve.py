@@ -19,41 +19,30 @@ union ever forms; asserted equal to plain dissexp
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .geom.array import MULTIPOLYGON, POLYGON, from_rings
 from .geom.buffer import buffer as buffer_kernel
-from .geom.clip import ring_area, union_many
+from .geom.clip import union_many
 from .geom.wkb import from_wkb, to_wkb
+from .io import BOUNDS, bounds_cols, map_geoms
 
 
 def buff(df: DataFrame, distance: float, *, quad_segs: int = 30,
          geometry: str = "geometry") -> DataFrame:
     """Vectorized buffer (`buff`, buffer_dissolve_explode.py:523-558).
     Updates geometry and bbox columns in one Arrow pass."""
-    cols = df.columns
+    has_bounds = [c for c in BOUNDS if c in df.columns]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            out_ga = buffer_kernel(ga, distance, quad_segs=quad_segs)
-            out = pdf.copy()
-            out[geometry] = to_wkb(out_ga)
-            b = out_ga.bounds()
-            for i, c in enumerate(("minx", "miny", "maxx", "maxy")):
-                if c in out.columns:
-                    out[c] = b[:, i]
-            yield out
+    def buffer(ga, pdf):
+        out_ga = buffer_kernel(ga, distance, quad_segs=quad_segs)
+        b = bounds_cols(out_ga)
+        return None, {geometry: to_wkb(out_ga),
+                      **{c: b[c] for c in has_bounds}}
 
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, buffer, geometry=geometry)
 
 
 def _union_group_wkb(blobs: list[bytes]) -> bytes:
@@ -160,37 +149,29 @@ def explode_parts(df: DataFrame, geometry: str = "geometry") -> DataFrame:
     becomes its own geometry by substituting geom_offsets = arange — no
     per-row Python, no coordinate copies."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def explode(_, pdf):
         from .geom.array import GeomArray
         from .geom.wkb import flatten_collections, wkb_gtype
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            blobs = pdf[geometry].tolist()
-            if any(wkb_gtype(b) == 7 for b in blobs):
-                src0, flat = [], []
-                for i, b in enumerate(blobs):
-                    for c in flatten_collections(b):
-                        src0.append(i)
-                        flat.append(c)
-                pdf = pdf.iloc[src0]
-                blobs = flat
-            ga = from_wkb(blobs)
-            counts = np.diff(ga.geom_offsets)
-            src = np.repeat(np.arange(len(ga)), counts)
-            if len(src) == 0:
-                continue
-            sub = GeomArray(
-                _SINGLE_OF[ga.kinds][src],
-                ga.coords, ga.ring_offsets, ga.part_offsets,
-                np.arange(len(src) + 1, dtype=np.int64))
-            out = pdf.iloc[src].copy()
-            out[geometry] = to_wkb(sub)
-            yield out
+        blobs = pdf[geometry].tolist()
+        src0 = None
+        if any(wkb_gtype(b) == 7 for b in blobs):
+            src0, flat = [], []
+            for i, b in enumerate(blobs):
+                for c in flatten_collections(b):
+                    src0.append(i)
+                    flat.append(c)
+            blobs = flat
+        ga = from_wkb(blobs)
+        src = np.repeat(np.arange(len(ga)), np.diff(ga.geom_offsets))
+        sub = GeomArray(
+            _SINGLE_OF[ga.kinds][src],
+            ga.coords, ga.ring_offsets, ga.part_offsets,
+            np.arange(len(src) + 1, dtype=np.int64))
+        if src0 is not None:
+            src = np.asarray(src0, dtype=np.int64)[src]
+        return src, {geometry: to_wkb(sub)}
 
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, explode, geometry=None)
 
 
 def dissexp(df: DataFrame, by: list[str] | None = None, **kw) -> DataFrame:

@@ -76,59 +76,83 @@ def extract_geometries(docs: DataFrame) -> DataFrame:
     return exploded.mapInPandas(kernel, schema=out_schema)
 
 
-def with_bounds(df: DataFrame, geometry: str = "geometry") -> DataFrame:
-    """Attach (minx,miny,maxx,maxy) computed from a WKB column in one
-    Arrow-batched pass — the engine's bbox stats used for cell cover,
-    short-circuits, and Parquet min/max pruning at rest."""
-    cols = df.columns
+BOUNDS = ("minx", "miny", "maxx", "maxy")
+BOUNDS_DDL = dict.fromkeys(BOUNDS, "double")
+
+
+def map_geoms(df: DataFrame, fn, add: dict | None = None, *,
+              geometry: str | None = "geometry", drop=()) -> DataFrame:
+    """The engine's one row-wise Arrow mapper.  Per non-empty batch it
+    decodes the `geometry` WKB column once (`geometry=None`: no decode,
+    `fn` gets None) and calls `fn(ga, pdf) -> (idx, cols)`:
+
+      idx   None keeps every row; a boolean mask drops rows; an integer
+            array selects source rows, repeats exploding them;
+      cols  {name: values aligned with the output rows}: a pass-through
+            name is replaced in place, a name in `add` is appended.
+
+    Output DDL = the input schema minus `drop` and minus the names in
+    `add` (which move to the end), plus `add` ({name: Spark type}).  Kept
+    rows are gathered by numpy indexing; batches that keep no row emit
+    nothing."""
+    add = dict(add or {})
+    keep = [f for f in df.schema.fields
+            if f.name not in add and f.name not in drop]
+    names = [f.name for f in keep] + list(add)
+    schema = ", ".join([f"`{f.name}` {f.dataType.simpleString()}"
+                        for f in keep] + [f"`{c}` {t}" for c, t in add.items()])
+    gone = [c for c in df.columns if c in add or c in drop]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .geom.wkb import from_wkb
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ga = from_wkb(pdf[geometry].tolist())
-            b = ga.bounds()
-            out = pdf.copy()
-            out["minx"] = b[:, 0]
-            out["miny"] = b[:, 1]
-            out["maxx"] = b[:, 2]
-            out["maxy"] = b[:, 3]
-            yield out
+            ga = from_wkb(pdf[geometry].tolist()) if geometry else None
+            idx, cols = fn(ga, pdf)
+            out = pdf.drop(columns=gone) if gone else pdf
+            if idx is not None:
+                idx = np.asarray(idx)
+                out = out.take(np.flatnonzero(idx) if idx.dtype == bool
+                               else idx.astype(np.int64))
+                if len(out) == 0:
+                    continue
+            for c, v in cols.items():
+                out[c] = v.to_numpy() if isinstance(v, pd.Series) else v
+            yield out if list(out.columns) == names else out[names]
 
-    schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-    schema = ", ".join(schema_parts + ["minx double", "miny double",
-                                       "maxx double", "maxy double"])
+    kernel.__name__ = getattr(fn, "__name__", "kernel")
     return df.mapInPandas(kernel, schema=schema)
+
+
+def bounds_cols(ga) -> dict:
+    """{minx, miny, maxx, maxy: arrays} of a GeomArray's bboxes."""
+    return dict(zip(BOUNDS, ga.bounds().T))
+
+
+def _bounds(ga, pdf):
+    return None, bounds_cols(ga)
+
+
+def with_bounds(df: DataFrame, geometry: str = "geometry") -> DataFrame:
+    """Attach (minx,miny,maxx,maxy) computed from a WKB column in one
+    Arrow-batched pass — the engine's bbox stats used for cell cover,
+    short-circuits, and Parquet min/max pruning at rest."""
+    return map_geoms(df, _bounds, BOUNDS_DDL, geometry=geometry)
 
 
 def wkt_to_wkb_df(df: DataFrame, wkt_col: str = "geometry_wkt",
                   out_col: str = "geometry", drop_wkt: bool = True,
                   bounds: bool = True) -> DataFrame:
     """Parse a WKT column into WKB (+ bbox columns)."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkt(pdf[wkt_col].tolist())
-            out = pdf.copy()
-            out[out_col] = to_wkb(ga)
-            if bounds:
-                b = ga.bounds()
-                out["minx"] = b[:, 0]
-                out["miny"] = b[:, 1]
-                out["maxx"] = b[:, 2]
-                out["maxy"] = b[:, 3]
-            if drop_wkt:
-                out = out.drop(columns=[wkt_col])
-            yield out
+    def parse_wkt(_, pdf):
+        ga = from_wkt(pdf[wkt_col].tolist())
+        return None, {out_col: to_wkb(ga),
+                      **(bounds_cols(ga) if bounds else {})}
 
-    fields = [f for f in df.schema.fields if not (drop_wkt and f.name == wkt_col)]
-    schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
-    schema_parts.append(f"{out_col} binary")
-    if bounds:
-        schema_parts += ["minx double", "miny double", "maxx double", "maxy double"]
-    return df.mapInPandas(kernel, schema=", ".join(schema_parts))
+    return map_geoms(df, parse_wkt,
+                     {out_col: "binary", **(BOUNDS_DDL if bounds else {})},
+                     geometry=None, drop=(wkt_col,) if drop_wkt else ())
 
 
 def total_bounds(df: DataFrame) -> tuple[float, float, float, float]:

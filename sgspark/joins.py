@@ -70,6 +70,17 @@ BROADCAST_RIGHT_MAX_BYTES = 64 << 20  # byte cap for driver-side right layer
 MAX_COVER_CELLS = 4096  # bbox cover above this routes to the bbox-join branch
 
 
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of `df`'s optimized plan in bytes (no
+    job), or None when the plan has no usable estimate."""
+    try:
+        v = int(df._jdf.queryExecution().optimizedPlan()
+                .stats().sizeInBytes())
+    except Exception:
+        return None
+    return v if 0 < v < (1 << 62) else None
+
+
 def _collect_bounded(df: DataFrame, max_bytes: int) -> list | None:
     """Collect rows IF the `geometry` payload stays under a BYTE cap,
     else None.
@@ -84,13 +95,9 @@ def _collect_bounded(df: DataFrame, max_bytes: int) -> list | None:
          latency made every broadcast probe on a small checkpointed
          layer cost ~1.5s vs ~0.1s for agg+collect; driver memory never
          sees a row of an over-cap frame either way.)"""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-        if 0 < est < (1 << 62) and est > 4 * max_bytes:
-            return None
-    except Exception:
-        pass
+    est = plan_size_bytes(df)
+    if est is not None and est > 4 * max_bytes:
+        return None
     from pyspark.storagelevel import StorageLevel
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -140,8 +147,8 @@ def plan_is_python_free(df: DataFrame) -> bool:
 def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
                          expand: float = 0.0,
                          assume_left_points: bool | None = None,
-                         probe_big: bool | None = False,
-                         right_bounds: np.ndarray | None = None
+                         right_bounds: np.ndarray | None = None,
+                         right_max_cells: float | None = None
                          ) -> DataFrame:
     """Shared candidate generator for every cell-join kernel (sjoin_pairs and
     the fused clean_overlay path): cover-cells equi-join with the bbox
@@ -164,7 +171,9 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
     `right_bounds` (n x 4 minx/miny/maxx/maxy of r0's rows) marks r0 as a
     small driver-local frame: it joins under F.broadcast, the left keeps
     its partitioning (no pin, no Exchange), and the huge-right split is
-    read from these bounds instead of a probe."""
+    read from these bounds instead of a probe.  `right_max_cells`, a
+    bound on every r0 row's cover already known to the caller (the
+    route probe's widest right), does the same for a distributed right."""
     g = float(gridsize)
     e = float(expand)
     bcast = right_bounds is not None
@@ -175,32 +184,36 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
                 f" * (cast(floor((maxy + {pre_e}) / {g}) as bigint)"
                 f" - cast(floor((miny - {pre_e}) / {g}) as bigint) + 1))")
 
-    # Optional plan-time probe (`probe_big`): ONE tiny job (two columns-only
-    # aggregate stages, 2 rows collected) that finds each side's max cell
-    # cover.  When a side has no oversized rows — the overwhelmingly common
-    # case — its big-branch scan, filter, and empty broadcast build are
-    # dropped from the plan entirely instead of costing a fixed ~0.7s per
-    # overlay.  Sides with kernel-derived inputs pay one extra upstream
-    # pass, so call-sites choose (overlay probes; point sjoins skip).
-    l_has_big, r_has_big = True, True
+    # Each side's huge-geometry branch is planned only when that side may
+    # hold an oversized row, decided per side without a job where
+    # possible: the right from `right_bounds` or `right_max_cells`, a
+    # point left from its cover bound (at most 2e/g + 2 cells per axis).
+    # Otherwise a side whose plan runs no Python gets a max-cover probe
+    # (both sides in ONE tiny job, 2 rows collected); a Python-built side
+    # keeps its branch, since probing it would run its kernels one more
+    # time.  Beside a broadcast right the left is not probed: its branch
+    # is a cross join against the driver-local right, which runs no job
+    # of its own, so a probe would only add one.
+    l_has_big = not (assume_left_points
+                     and (2 * e / g + 2) ** 2 <= MAX_COVER_CELLS)
+    r_has_big = right_max_cells is None or right_max_cells > MAX_COVER_CELLS
     if bcast:
         rb = right_bounds
         ncells_r = ((np.floor((rb[:, 2] + FALSE_EASTING) / g)
                      - np.floor((rb[:, 0] + FALSE_EASTING) / g) + 1)
                     * (np.floor(rb[:, 3] / g) - np.floor(rb[:, 1] / g) + 1))
         r_has_big = bool((ncells_r > MAX_COVER_CELLS).any())
-    elif probe_big is None:  # auto: probe iff the extra pass runs no Python
-        probe_big = plan_is_python_free(l0) and plan_is_python_free(r0)
-    if probe_big:
-        stats = (l0.select(F.max(F.expr(_ncells(e))).alias("m"))
-                 .unionAll(r0.select(F.max(F.expr(_ncells(0.0))).alias("m")))
-                 .collect())
-        l_has_big = (stats[0]["m"] or 0) > MAX_COVER_CELLS
-        r_has_big = (stats[1]["m"] or 0) > MAX_COVER_CELLS
-    if (assume_left_points and (2 * e / g + 2) ** 2 <= MAX_COVER_CELLS) \
-            or not l_has_big:
-        # a point's cover spans at most 2e/g + 2 cells per axis: under the
-        # cap no left row is huge, so the branch is skipped without a probe
+    probe_l = l_has_big and not bcast and plan_is_python_free(l0)
+    probe_r = r_has_big and not bcast and plan_is_python_free(r0)
+    if probe_l or probe_r:
+        q = [side.select(F.max(F.expr(_ncells(pe))).alias("m"))
+             for side, pe, on in ((l0, e, probe_l), (r0, 0.0, probe_r)) if on]
+        stats = iter((q[0] if len(q) == 1 else q[0].unionAll(q[1])).collect())
+        if probe_l:
+            l_has_big = (next(stats)["m"] or 0) > MAX_COVER_CELLS
+        if probe_r:
+            r_has_big = (next(stats)["m"] or 0) > MAX_COVER_CELLS
+    if not l_has_big:
         l_small, l_big = l0, None
     else:
         l_small = l0.where(F.expr(f"{_ncells(e)} <= {MAX_COVER_CELLS}"))
@@ -237,17 +250,10 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
     # trustworthy (Spark propagates the child's bytes through
     # MapInPandas), so any python-producing side pins regardless.
     # A broadcast right needs no shuffle at all.
-    def _est(df):
-        try:
-            v = int(df._jdf.queryExecution().optimizedPlan()
-                    .stats().sizeInBytes())
-            return v if 0 < v < (1 << 62) else None
-        except Exception:
-            return None
     if bcast:
         r = F.broadcast(r)
     else:
-        el, er = _est(l0), _est(r0)
+        el, er = plan_size_bytes(l0), plan_size_bytes(r0)
         tiny = (el is not None and er is not None
                 and el < (4 << 20) and er < (4 << 20)
                 and plan_is_python_free(l0) and plan_is_python_free(r0))
@@ -394,9 +400,10 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
         right_geoms = spark.sparkContext.broadcast(
             (pd.Series(np.arange(len(rids)), index=rids), ra))
     expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
-    cand = cell_candidate_pairs(l0, r0, gridsize, expand=expand,
-                                assume_left_points=assume_left_points,
-                                right_bounds=rb)
+    cand = cell_candidate_pairs(
+        l0, r0, gridsize, expand=expand,
+        assume_left_points=assume_left_points, right_bounds=rb,
+        right_max_cells=facts.get("right_cover_max"))
     return _refine_kernel(cand, left, right, predicate, left_id=left_id,
                           right_id=right_id, distance=distance,
                           keep_distance=keep_distance,
@@ -423,8 +430,9 @@ def _sjoin_route(left: DataFrame, right: DataFrame, predicate: str, *,
       3. else `kernel_dist`.
 
     Facts: `right` = (ids, GeomArray, n x 4 bounds) of a collected right;
-    from step 2's probe `st` (its right-layer row), `n_left`, `pairs_est`
-    and the tuned `gridsize`; `n_right` where known."""
+    from step 2's probe `st` (its right-layer row), `n_left`, `pairs_est`,
+    the tuned `gridsize` and `right_cover_max` (a bound on any right
+    row's cover cells at the caller's gridsize); `n_right` where known."""
     why: list[str] = []
     if broadcast_right is False:
         why.append("broadcast_right=False")
@@ -523,6 +531,9 @@ def _sjoin_route(left: DataFrame, right: DataFrame, predicate: str, *,
     if count_left:
         n_left = rows[1]["n"]
     facts = {"n_right": st["n"], "n_left": n_left}
+    if st["n"]:  # a row covers at most (extent/g + 2) cells per axis
+        g = float(gridsize)
+        facts["right_cover_max"] = (st["mex"] / g + 2) * (st["mey"] / g + 2)
     if not st["n"] or st["bad"]:
         return Route("kernel_dist", (*why, "right empty or not all "
                                      "polygons"), facts)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .geom.array import LINESTRING, from_rings
 from .geom.wkb import from_wkb, to_wkb
+from .io import map_geoms
 
 
 def _cut_chain(chain: np.ndarray, max_len: float) -> list[np.ndarray]:
@@ -57,35 +58,22 @@ def cut_lines(df: DataFrame, max_length: float, *,
               geometry: str = "geometry") -> DataFrame:
     """Segment every line into pieces of at most max_length
     (cut_lines, cutting_lines.py:22-141).  Output adds `piece_idx`."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + ", piece_idx int"
+    def cut(ga, pdf):
+        src, blobs, pidx = [], [], []
+        for g in range(len(ga)):
+            k = 0
+            for c in ga.rings_of_geom(g):
+                if len(c) < 2:
+                    continue
+                for piece in _cut_chain(c, float(max_length)):
+                    src.append(g)
+                    blobs.append(to_wkb(from_rings([[piece]],
+                                                   [LINESTRING]))[0])
+                    pidx.append(k)
+                    k += 1
+        return src, {geometry: blobs, "piece_idx": pidx}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            src, blobs, pidx = [], [], []
-            for g in range(len(ga)):
-                chains = ga.rings_of_geom(g)
-                k = 0
-                for c in chains:
-                    if len(c) < 2:
-                        continue
-                    for piece in _cut_chain(c, float(max_length)):
-                        src.append(g)
-                        blobs.append(to_wkb(from_rings([[piece]],
-                                                       [LINESTRING]))[0])
-                        pidx.append(k)
-                        k += 1
-            if not src:
-                continue
-            out = pdf.iloc[src].copy()
-            out[geometry] = blobs
-            out["piece_idx"] = pidx
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, cut, {"piece_idx": "int"}, geometry=geometry)
 
 
 def _split_chain_at_params(chain: np.ndarray,
@@ -135,54 +123,46 @@ def split_lines_by_nearest_point(lines: DataFrame, points: DataFrame, *,
     withg = nearest.join(pg, point_id) \
         .groupBy(rid).agg(F.collect_list("__pg").alias("__pts")) \
         .withColumnRenamed(rid, line_id)
-    src = lines.join(withg, line_id, "left")
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in lines.schema.fields) + ", piece_idx int"
+    # the join puts line_id first: restore the lines' column order
+    src = lines.join(withg, line_id, "left").select(*lines.columns, "__pts")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+    def split(ga, pdf):
+        srcs, blobs, pidx = [], [], []
+        for g in range(len(pdf)):
+            chain = ga.rings_of_geom(g)[0]
+            pts = pdf["__pts"].iloc[g]
+            if pts is None or len(pts) == 0 or len(chain) < 2:
+                srcs.append(g)
+                blobs.append(pdf["geometry"].iloc[g])
+                pidx.append(0)
                 continue
-            ga = from_wkb(pdf["geometry"].tolist())
-            srcs, blobs, pidx = [], [], []
-            for g in range(len(pdf)):
-                chain = ga.rings_of_geom(g)[0]
-                pts = pdf["__pts"].iloc[g]
-                if pts is None or len(pts) == 0 or len(chain) < 2:
-                    srcs.append(g)
-                    blobs.append(pdf["geometry"].iloc[g])
-                    pidx.append(0)
-                    continue
-                pa = from_wkb(list(pts))
-                pstart = pa.coords_start_per_geom()
-                P = pa.coords[pstart]
-                # arc-length parameter of each point's projection
-                seg = np.diff(chain, axis=0)
-                ll = (seg * seg).sum(axis=1)
-                cum = np.concatenate([[0.0], np.cumsum(np.sqrt(ll))])
-                params = []
-                for p in P:
-                    r = p[None, :] - chain[:-1]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        t = np.clip(np.where(ll > 0,
-                                             (r * seg).sum(axis=1) / ll,
-                                             0.0), 0, 1)
-                    c = chain[:-1] + t[:, None] * seg
-                    d2 = ((p[None, :] - c) ** 2).sum(axis=1)
-                    j = int(np.argmin(d2))
-                    params.append(float(cum[j] + t[j] * np.sqrt(ll[j])))
-                for k, piece in enumerate(
-                        _split_chain_at_params(chain, params)):
-                    srcs.append(g)
-                    blobs.append(to_wkb(from_rings([[piece]],
-                                                   [LINESTRING]))[0])
-                    pidx.append(k)
-            out = pdf.iloc[srcs].drop(columns=["__pts"]).copy()
-            out["geometry"] = blobs
-            out["piece_idx"] = pidx
-            yield out
+            pa = from_wkb(list(pts))
+            pstart = pa.coords_start_per_geom()
+            P = pa.coords[pstart]
+            # arc-length parameter of each point's projection
+            seg = np.diff(chain, axis=0)
+            ll = (seg * seg).sum(axis=1)
+            cum = np.concatenate([[0.0], np.cumsum(np.sqrt(ll))])
+            params = []
+            for p in P:
+                r = p[None, :] - chain[:-1]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    t = np.clip(np.where(ll > 0,
+                                         (r * seg).sum(axis=1) / ll,
+                                         0.0), 0, 1)
+                c = chain[:-1] + t[:, None] * seg
+                d2 = ((p[None, :] - c) ** 2).sum(axis=1)
+                j = int(np.argmin(d2))
+                params.append(float(cum[j] + t[j] * np.sqrt(ll[j])))
+            for k, piece in enumerate(
+                    _split_chain_at_params(chain, params)):
+                srcs.append(g)
+                blobs.append(to_wkb(from_rings([[piece]],
+                                               [LINESTRING]))[0])
+                pidx.append(k)
+        return srcs, {"geometry": blobs, "piece_idx": pidx}
 
-    return src.mapInPandas(kernel, schema=schema)
+    return map_geoms(src, split, {"piece_idx": "int"}, drop=("__pts",))
 
 
 def clip_lines_by_polygons(lines: DataFrame, polys: DataFrame, *,
@@ -266,67 +246,49 @@ def extend_lines(df: DataFrame, distance: float, *,
     end-segment directions (reference cleaning/`extend_lines` helper used
     by split_by_neighbors)."""
     d = float(distance)
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            blobs = []
-            for g in range(len(ga)):
-                c = ga.rings_of_geom(g)[0].astype(float)
-                if len(c) >= 2:
-                    u0 = c[0] - c[1]
-                    n0 = np.hypot(*u0)
-                    u1 = c[-1] - c[-2]
-                    n1 = np.hypot(*u1)
-                    c = c.copy()
-                    if n0 > 0:
-                        c[0] = c[0] + u0 / n0 * d
-                    if n1 > 0:
-                        c[-1] = c[-1] + u1 / n1 * d
-                blobs.append(to_wkb(from_rings([[c]], [LINESTRING]))[0])
-            out = pdf.copy()
-            out[geometry] = blobs
-            yield out
+    def extend(ga, pdf):
+        blobs = []
+        for g in range(len(ga)):
+            c = ga.rings_of_geom(g)[0].astype(float)
+            if len(c) >= 2:
+                u0 = c[0] - c[1]
+                n0 = np.hypot(*u0)
+                u1 = c[-1] - c[-2]
+                n1 = np.hypot(*u1)
+                c = c.copy()
+                if n0 > 0:
+                    c[0] = c[0] + u0 / n0 * d
+                if n1 > 0:
+                    c[-1] = c[-1] + u1 / n1 * d
+            blobs.append(to_wkb(from_rings([[c]], [LINESTRING]))[0])
+        return None, {geometry: blobs}
 
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, extend, geometry=geometry)
 
 
 def cut_lines_once(df: DataFrame, fraction: float = 0.5, *,
                    geometry: str = "geometry") -> DataFrame:
     """Split each line once at `fraction` of its length
     (cut_lines_once, cutting_lines.py:143-214)."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + ", piece_idx int"
+    def cut_once(ga, pdf):
+        lens = ga.length()
+        src, blobs, pidx = [], [], []
+        for g in range(len(ga)):
+            c = ga.rings_of_geom(g)[0]
+            pieces = _cut_chain(c, max(float(lens[g]) * fraction, 1e-12))
+            # keep first piece + remainder merged
+            if len(pieces) <= 1:
+                parts = pieces
+            else:
+                rest = np.vstack([pieces[1][:1]] +
+                                 [p[1:] for p in pieces[1:]])
+                parts = [pieces[0], rest]
+            for k, piece in enumerate(parts):
+                src.append(g)
+                blobs.append(to_wkb(from_rings([[piece]],
+                                               [LINESTRING]))[0])
+                pidx.append(k)
+        return src, {geometry: blobs, "piece_idx": pidx}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            lens = ga.length()
-            src, blobs, pidx = [], [], []
-            for g in range(len(ga)):
-                c = ga.rings_of_geom(g)[0]
-                pieces = _cut_chain(c, max(float(lens[g]) * fraction, 1e-12))
-                # keep first piece + remainder merged
-                if len(pieces) <= 1:
-                    parts = pieces
-                else:
-                    rest = np.vstack([pieces[1][:1]] +
-                                     [p[1:] for p in pieces[1:]])
-                    parts = [pieces[0], rest]
-                for k, piece in enumerate(parts):
-                    src.append(g)
-                    blobs.append(to_wkb(from_rings([[piece]],
-                                                   [LINESTRING]))[0])
-                    pidx.append(k)
-            out = pdf.iloc[src].copy()
-            out[geometry] = blobs
-            out["piece_idx"] = pidx
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, cut_once, {"piece_idx": "int"}, geometry=geometry)

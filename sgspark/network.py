@@ -21,76 +21,55 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .conf import Route, log_route
 from .geom.wkb import from_wkb
+from .io import map_geoms
+
+
+def _xy_str(a: np.ndarray, prefix: str = "", sep: str = "_",
+            suffix: str = "") -> np.ndarray:
+    """Per-row strings of (x, y) coordinates.  pandas astype(str)
+    renders float64 exactly like f"{x!r}" (shortest roundtrip repr):
+    vectorized, no per-row Python, and equal points give equal text."""
+    return (prefix + pd.Series(a[:, 0]).astype(str) + sep +
+            pd.Series(a[:, 1]).astype(str) + suffix).to_numpy()
+
+
+def _endpoints(ga):
+    starts = ga.coords_start_per_geom()
+    ends = starts + ga.coords_count_per_geom() - 1
+    return ga.coords[starts], ga.coords[ends]
 
 
 def make_node_ids(lines: DataFrame, geometry: str = "geometry") -> DataFrame:
     """Edges with string node ids minted from endpoint coordinates
     (make_node_ids, nodes.py:19-86): source/target = "x_y" of the line's
     first/last vertex; length as the default weight."""
-    cols = [f"`{f.name}` {f.dataType.simpleString()}"
-            for f in lines.schema.fields]
-    schema = ", ".join(cols) + \
-        ", source string, target string, length double"
+    def node_ids(ga, pdf):
+        a, b = _endpoints(ga)
+        return None, {"source": _xy_str(a), "target": _xy_str(b),
+                      "length": ga.length()}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            starts = ga.coords_start_per_geom()
-            ends = starts + ga.coords_count_per_geom() - 1
-            a = ga.coords[starts]
-            b = ga.coords[ends]
-            # pandas astype(str) renders float64 exactly like f"{x!r}"
-            # (shortest roundtrip repr) — vectorized, no per-row Python
-            out = pdf.copy()
-            out["source"] = (pd.Series(a[:, 0]).astype(str) + "_" +
-                             pd.Series(a[:, 1]).astype(str)).to_numpy()
-            out["target"] = (pd.Series(b[:, 0]).astype(str) + "_" +
-                             pd.Series(b[:, 1]).astype(str)).to_numpy()
-            out["length"] = ga.length()
-            yield out
-
-    return lines.mapInPandas(kernel, schema=schema)
+    return map_geoms(lines, node_ids, {"source": "string",
+                                       "target": "string",
+                                       "length": "double"},
+                     geometry=geometry)
 
 
 def _endpoint_cols_kernel(lines: DataFrame, geometry: str, wkt: bool
                           ) -> DataFrame:
     """Shared endpoint extractor for make_edge_coords_cols /
     make_edge_wkt_cols: first/last vertex per line in one Arrow pass."""
-    if wkt:
-        extra = ", source_wkt string, target_wkt string"
-    else:
-        extra = ", source_coords array<double>, target_coords array<double>"
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in lines.schema.fields) + extra
+    def endpoint_cols(ga, pdf):
+        a, b = _endpoints(ga)
+        if wkt:
+            return None, {"source_wkt": _xy_str(a, "POINT (", " ", ")"),
+                          "target_wkt": _xy_str(b, "POINT (", " ", ")")}
+        return None, {"source_coords": list(a), "target_coords": list(b)}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            starts = ga.coords_start_per_geom()
-            ends = starts + ga.coords_count_per_geom() - 1
-            a, b = ga.coords[starts], ga.coords[ends]
-            out = pdf.copy()
-            if wkt:
-                # astype(str) = shortest-roundtrip repr (same encoding the
-                # minted node ids use), so WKT of equal points is equal
-                out["source_wkt"] = ("POINT (" +
-                                     pd.Series(a[:, 0]).astype(str) + " " +
-                                     pd.Series(a[:, 1]).astype(str) +
-                                     ")").to_numpy()
-                out["target_wkt"] = ("POINT (" +
-                                     pd.Series(b[:, 0]).astype(str) + " " +
-                                     pd.Series(b[:, 1]).astype(str) +
-                                     ")").to_numpy()
-            else:
-                out["source_coords"] = list(a)
-                out["target_coords"] = list(b)
-            yield out
-
-    return lines.mapInPandas(kernel, schema=schema)
+    t = "string" if wkt else "array<double>"
+    names = ("source_wkt", "target_wkt") if wkt \
+        else ("source_coords", "target_coords")
+    return map_geoms(lines, endpoint_cols, dict.fromkeys(names, t),
+                     geometry=geometry)
 
 
 def make_edge_coords_cols(lines: DataFrame,
@@ -308,14 +287,9 @@ def _plan_maybe_small(df: DataFrame, cap_rows: int) -> bool:
     estimate already proves the edge list is far over the cap, skip the
     limit-collect probe entirely (no job).  Estimates are unreliable after
     joins, so only an estimate > 64x the cap's worst-case bytes says no."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-        if 0 < est < (1 << 62) and est > 64 * 40 * cap_rows:
-            return False
-    except Exception:
-        pass
-    return True
+    from .joins import plan_size_bytes
+    est = plan_size_bytes(df)
+    return est is None or est <= 64 * 40 * cap_rows
 
 
 def _bounded_rows(df: DataFrame, cap: int) -> list:

@@ -243,7 +243,7 @@ def _intersection_rows(df1, df2, id1, id2, gridsize) -> DataFrame:
                     F.col("geometry").alias("__lg"), *_BBOX)
     r0 = df2.select(F.col(id2).alias("__rid"),
                     F.col("geometry").alias("__rg"), *_BBOX)
-    cand = cell_candidate_pairs(l0, r0, gridsize, probe_big=None)
+    cand = cell_candidate_pairs(l0, r0, gridsize)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # anchor dedup already happened JVM-side (cell_candidate_pairs);

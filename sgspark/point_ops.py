@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 from .geom.array import GeomArray
 from .geom.wkb import from_wkb, to_wkb
 from .geom import points as make_points
+from .io import map_geoms
 from .joins import _cover_cells
-from .cells import FALSE_EASTING, Y_BITS
 
 
 def _nearest_on_pairs(la: GeomArray, ra: GeomArray, li, ri):
@@ -125,23 +125,18 @@ def snap_within_distance(points: DataFrame, targets: DataFrame,
     best = near.withColumn("__rk", F.row_number().over(w)) \
                .where("__rk = 1").drop("__rk")
 
-    def replace(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf.copy()
-            snapped = ~pdf["__nx"].isna()
-            xy = np.stack([np.where(snapped, pdf["__nx"], pdf["__sx"]),
-                           np.where(snapped, pdf["__ny"], pdf["__sy"])], axis=1)
-            out["geometry"] = to_wkb(make_points(xy.astype(float)))
-            out[distance_col] = pdf["__d"]
-            yield out.drop(columns=["__nx", "__ny", "__d", "__sx", "__sy"])
+    def replace(_, pdf):
+        snapped = ~pdf["__nx"].isna()
+        xy = np.stack([np.where(snapped, pdf["__nx"], pdf["minx"]),
+                       np.where(snapped, pdf["__ny"], pdf["miny"])], axis=1)
+        return None, {"geometry": to_wkb(make_points(xy.astype(float))),
+                      distance_col: pdf["__d"]}
 
-    src = points.withColumn("__sx", F.col("minx")).withColumn("__sy", F.col("miny")) \
-                .join(best, left_id, "left")
-    fields = [f"`{f.name}` {f.dataType.simpleString()}"
-              for f in points.schema.fields] + [f"{distance_col} double"]
-    return src.mapInPandas(replace, schema=", ".join(fields))
+    # the join puts left_id first: restore the points' column order
+    src = points.join(best, left_id, "left") \
+        .select(*points.columns, "__d", "__nx", "__ny")
+    return map_geoms(src, replace, {distance_col: "double"}, geometry=None,
+                     drop=("__nx", "__ny", "__d"))
 
 
 def shortest_lines(points: DataFrame, targets: DataFrame, *, left_id: str,

@@ -17,91 +17,69 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .geom.array import (LINESTRING, POLYGON, from_rings)
+from .geom.array import (LINESTRING, MULTILINESTRING, MULTIPOINT,
+                         MULTIPOLYGON, POINT, POLYGON, from_rings)
 from .geom.clip import ring_area
 from .geom.measure import dp_simplify as _dp_simplify
 from .geom.wkb import from_wkb, to_wkb
+from .io import BOUNDS, BOUNDS_DDL, bounds_cols, map_geoms, with_bounds
 from .joins import sjoin_pairs
-from .overlay import clean_overlay, _difference_rows
+from .overlay import clean_overlay
 
 
-def _map_geoms(df: DataFrame, fn, extra_schema: str = "",
-               geometry: str = "geometry") -> DataFrame:
-    """Apply fn(GeomArray, pdf) -> (list[wkb or None], dict extra_cols);
-    None drops the row."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    if extra_schema:
-        schema += ", " + extra_schema
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            blobs, extra = fn(ga, pdf)
-            keep = [i for i, b in enumerate(blobs) if b is not None]
-            out = pdf.iloc[keep].copy()
-            out[geometry] = [blobs[i] for i in keep]
-            for k, v in (extra or {}).items():
-                out[k] = [v[i] for i in keep]
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
+def _kept(blobs: list, geometry: str):
+    """map_geoms result of per-row WKB where None drops the row."""
+    keep = np.array([b is not None for b in blobs], dtype=bool)
+    return keep, {geometry: [b for b in blobs if b is not None]}
 
 
 def get_holes(df: DataFrame, geometry: str = "geometry") -> DataFrame:
     """Interior rings as polygon rows (polygon_operations.py:1366-1399)."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
+    def holes(ga, pdf):
+        rows, blobs = [], []
+        for g in range(len(ga)):
+            p0, p1 = ga.geom_offsets[g], ga.geom_offsets[g + 1]
+            for p in range(p0, p1):
+                r0, r1 = ga.part_offsets[p], ga.part_offsets[p + 1]
+                for r in range(r0 + 1, r1):
+                    hole = ga.coords[ga.ring_offsets[r]:ga.ring_offsets[r + 1]]
+                    sub = from_rings([[[hole[::-1]]]], [POLYGON])
+                    rows.append(g)
+                    blobs.append(to_wkb(sub)[0])
+        return rows, {geometry: blobs}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            rows, blobs = [], []
-            for g in range(len(ga)):
-                p0, p1 = ga.geom_offsets[g], ga.geom_offsets[g + 1]
-                for p in range(p0, p1):
-                    r0, r1 = ga.part_offsets[p], ga.part_offsets[p + 1]
-                    for r in range(r0 + 1, r1):
-                        hole = ga.coords[ga.ring_offsets[r]:ga.ring_offsets[r + 1]]
-                        sub = from_rings([[[hole[::-1]]]], [POLYGON])
-                        rows.append(g)
-                        blobs.append(to_wkb(sub)[0])
-            if not rows:
-                continue
-            out = pdf.iloc[rows].copy()
-            out[geometry] = blobs
-            yield out
+    return map_geoms(df, holes, geometry=geometry)
 
-    return df.mapInPandas(kernel, schema=schema)
+
+def _map_rings(df: DataFrame, ring_fn, geometry: str) -> DataFrame:
+    """Rebuild every polygon ring by ring: ring_fn(coords, is_hole)
+    returns the new ring, or None to drop it."""
+    def rebuild(ga, pdf):
+        blobs = []
+        for g in range(len(ga)):
+            parts = []
+            for p in range(ga.geom_offsets[g], ga.geom_offsets[g + 1]):
+                r0, r1 = ga.part_offsets[p], ga.part_offsets[p + 1]
+                rings = (ring_fn(ga.coords[ga.ring_offsets[r]:
+                                           ga.ring_offsets[r + 1]], r > r0)
+                         for r in range(r0, r1))
+                parts.append([c for c in rings if c is not None])
+            kind = POLYGON if len(parts) == 1 else MULTIPOLYGON
+            sub = from_rings([[parts[0]]] if kind == POLYGON else [parts],
+                             [kind])
+            blobs.append(to_wkb(sub)[0])
+        return None, {geometry: blobs}
+
+    return map_geoms(df, rebuild, geometry=geometry)
 
 
 def close_small_holes(df: DataFrame, max_area: float,
                       geometry: str = "geometry") -> DataFrame:
     """Fill interior rings with |area| <= max_area
     (close_small_holes, polygon_operations.py:1134-1322)."""
-    def fn(ga, pdf):
-        blobs = []
-        for g in range(len(ga)):
-            parts = []
-            p0, p1 = ga.geom_offsets[g], ga.geom_offsets[g + 1]
-            for p in range(p0, p1):
-                r0, r1 = ga.part_offsets[p], ga.part_offsets[p + 1]
-                rings = [ga.coords[ga.ring_offsets[r0]:ga.ring_offsets[r0 + 1]]]
-                for r in range(r0 + 1, r1):
-                    hole = ga.coords[ga.ring_offsets[r]:ga.ring_offsets[r + 1]]
-                    if abs(ring_area(hole)) > max_area:
-                        rings.append(hole)
-                parts.append(rings)
-            kind = POLYGON if len(parts) == 1 else 6
-            sub = from_rings([[parts[0]]] if kind == POLYGON else [parts], [kind])
-            blobs.append(to_wkb(sub)[0])
-        return blobs, {}
-
-    return _map_geoms(df, fn, geometry=geometry)
+    return _map_rings(
+        df, lambda c, hole: c if not hole or abs(ring_area(c)) > max_area
+        else None, geometry)
 
 
 def close_all_holes(df: DataFrame, geometry: str = "geometry") -> DataFrame:
@@ -120,27 +98,9 @@ def close_thin_holes(df: DataFrame, tolerance: float,
     from .geom.measure import ring_thin
     pitch = float(tolerance) / 8.0
     thr = float(tolerance) / 2.0
-
-    def fn(ga, pdf):
-        blobs = []
-        for g in range(len(ga)):
-            parts = []
-            p0, p1 = ga.geom_offsets[g], ga.geom_offsets[g + 1]
-            for p in range(p0, p1):
-                r0, r1 = ga.part_offsets[p], ga.part_offsets[p + 1]
-                rings = [ga.coords[ga.ring_offsets[r0]:ga.ring_offsets[r0 + 1]]]
-                for r in range(r0 + 1, r1):
-                    hole = ga.coords[ga.ring_offsets[r]:ga.ring_offsets[r + 1]]
-                    if not ring_thin(hole, pitch, thr):
-                        rings.append(hole)
-                parts.append(rings)
-            kind = POLYGON if len(parts) == 1 else 6
-            sub = from_rings([[parts[0]]] if kind == POLYGON else [parts],
-                             [kind])
-            blobs.append(to_wkb(sub)[0])
-        return blobs, {}
-
-    return _map_geoms(df, fn, geometry=geometry)
+    return _map_rings(
+        df, lambda c, hole: c if not hole or not ring_thin(c, pitch, thr)
+        else None, geometry)
 
 
 def remove_spikes(df: DataFrame, tolerance: float,
@@ -152,7 +112,7 @@ def remove_spikes(df: DataFrame, tolerance: float,
     re-expressed vertex-wise)."""
     tol = float(tolerance)
 
-    def clean_ring(ring: np.ndarray) -> np.ndarray:
+    def clean_ring(ring: np.ndarray, _hole: bool) -> np.ndarray:
         r = ring[:-1]
         changed = True
         while changed and len(r) > 3:
@@ -170,24 +130,7 @@ def remove_spikes(df: DataFrame, tolerance: float,
             r = r[keep]
         return np.vstack([r, r[:1]])
 
-    def fn(ga, pdf):
-        blobs = []
-        for g in range(len(ga)):
-            parts = []
-            p0, p1 = ga.geom_offsets[g], ga.geom_offsets[g + 1]
-            for p in range(p0, p1):
-                r0, r1 = ga.part_offsets[p], ga.part_offsets[p + 1]
-                rings = [clean_ring(
-                    ga.coords[ga.ring_offsets[r]:ga.ring_offsets[r + 1]])
-                    for r in range(r0, r1)]
-                parts.append(rings)
-            kind = POLYGON if len(parts) == 1 else 6
-            sub = from_rings([[parts[0]]] if kind == POLYGON else [parts],
-                             [kind])
-            blobs.append(to_wkb(sub)[0])
-        return blobs, {}
-
-    return _map_geoms(df, fn, geometry=geometry)
+    return _map_rings(df, clean_ring, geometry)
 
 
 def simplify(df: DataFrame, tolerance: float,
@@ -198,13 +141,11 @@ def simplify(df: DataFrame, tolerance: float,
     tol = float(tolerance)
 
     def fn(ga, pdf):
-        from .geom.array import LINESTRING as _LS, POINT as _PT
         blobs = []
         for g in range(len(ga)):
             kind = int(ga.kinds[g])
-            if kind == _PT:
-                blobs.append(None if pdf is None else
-                             to_wkb(ga.take([g]))[0])
+            if kind == POINT:
+                blobs.append(to_wkb(ga.take([g]))[0])
                 continue
             parts = []
             p0, p1 = ga.geom_offsets[g], ga.geom_offsets[g + 1]
@@ -219,30 +160,28 @@ def simplify(df: DataFrame, tolerance: float,
                         continue  # ring collapsed
                     rings.append(s)
                 if rings:
-                    parts.append(rings if kind in (POLYGON, 6)
+                    parts.append(rings if kind in (POLYGON, MULTIPOLYGON)
                                  else rings[0])
             if not parts:
                 blobs.append(None)
                 continue
-            if kind in (POLYGON, 6):
-                k = POLYGON if len(parts) == 1 else 6
+            if kind in (POLYGON, MULTIPOLYGON):
+                k = POLYGON if len(parts) == 1 else MULTIPOLYGON
                 sub = from_rings([[parts[0]]] if k == POLYGON else [parts],
                                  [k])
             else:
-                k = LINESTRING if len(parts) == 1 else 5
+                k = LINESTRING if len(parts) == 1 else MULTILINESTRING
                 sub = from_rings([parts], [k])
             blobs.append(to_wkb(sub)[0])
-        return blobs, {}
+        return _kept(blobs, geometry)
 
-    return _map_geoms(df, fn, geometry=geometry)
+    return map_geoms(df, fn, geometry=geometry)
 
 
 def extract_unique_points(df: DataFrame,
                           geometry: str = "geometry") -> DataFrame:
     """MULTIPOINT of each geometry's distinct vertices (reference
     `extract_unique_points`, bounds.py:677)."""
-    from .geom.array import MULTIPOINT
-
     def fn(ga, pdf):
         blobs = []
         for g in range(len(ga)):
@@ -257,9 +196,9 @@ def extract_unique_points(df: DataFrame,
             sub = from_rings([[uniq[i:i + 1] for i in range(len(uniq))]],
                              [MULTIPOINT])
             blobs.append(to_wkb(sub)[0])
-        return blobs, {}
+        return _kept(blobs, geometry)
 
-    return _map_geoms(df, fn, geometry=geometry)
+    return map_geoms(df, fn, geometry=geometry)
 
 
 def _chain_crossing_params(a: np.ndarray, b: np.ndarray) -> list[float]:
@@ -294,7 +233,6 @@ def polygons_to_lines(dfs: list[DataFrame], *, id_col: str,
     their mutual intersections — the reference's full to_lines contract
     (general.py:543-676: boundaries + split-by-points where lines from
     different frames cross).  Output adds `frame_idx` and `piece_idx`."""
-    from .io import with_bounds
     from .line_ops import _split_chain_at_params
     from .geom.array import LINESTRING
     frames = []
@@ -363,18 +301,10 @@ def fix_double_surfaces(df: DataFrame, *, id_col: str,
     polygon_operations.py:763-990): pairwise overlaps among rows are
     assigned to exactly one owner — largest area first, id tiebreak — via
     update_geometries with a struct rank (no global sort)."""
-    from .overlay import update_geometries
-    from .io import with_bounds
-    base = with_bounds(df.select(id_col, "geometry"))
-    ranked = area_col(base, out_col="__area") \
-        .withColumn("__rank", F.struct((-F.col("__area")).alias("na"),
-                                       F.col(id_col).alias("tid"))) \
-        .drop("__area")
-    out = update_geometries(ranked, id_col=id_col, rank_col="__rank",
-                            gridsize=gridsize).drop("__rank")
-    attrs = df.drop("geometry", "minx", "miny", "maxx", "maxy") \
-        if "minx" in df.columns else df.drop("geometry")
-    return attrs.join(out.select(id_col, "geometry"), id_col, "inner")
+    out = _update_by_area(df.select(id_col, "geometry"), id_col=id_col,
+                          gridsize=gridsize)
+    return df.drop("geometry", *BOUNDS).join(out.select(id_col, "geometry"),
+                                             id_col, "inner")
 
 
 def split_by_neighbors(df: DataFrame, neighbors: DataFrame, *,
@@ -387,7 +317,6 @@ def split_by_neighbors(df: DataFrame, neighbors: DataFrame, *,
     split_polygons_by_lines."""
     from .conversion import get_line_segments
     from .line_ops import extend_lines
-    from .io import with_bounds
     segs = get_line_segments(
         to_lines(neighbors.select(neighbor_id, "geometry")))
     segs = extend_lines(segs, float(tolerance))
@@ -454,9 +383,9 @@ def get_rough_centerlines(df: DataFrame, *, id_col: str,
             order = traveling_salesman_problem(spine, return_to_start=False)
             line = spine[order]
             blobs.append(to_wkb(from_rings([[line]], [LINESTRING]))[0])
-        return blobs, {}
+        return _kept(blobs, geometry)
 
-    return _map_geoms(df.select(id_col, geometry), fn, geometry=geometry)
+    return map_geoms(df.select(id_col, geometry), fn, geometry=geometry)
 
 
 def split_polygons_by_lines(polys: DataFrame, lines: DataFrame, *,
@@ -608,8 +537,9 @@ def get_gaps(df: DataFrame, *, id_col: str,
                         row += (float(bx0), float(by0),
                                 float(bx1), float(by1))
                     if want_thin:
-                        # same sound prefilters as cleaning._thin_flag:
-                        # an inscribed disk fits the bbox and the area
+                        # sound prefilters: an inscribed disk fits the
+                        # bbox (r <= min(w,h)/2) and the area (pi r^2 <=
+                        # area), so a hit proves the part thin
                         area = abs(ring_area(ext)) - sum(
                             abs(ring_area(r)) for r in part[1:])
                         thin = (min(bx1 - bx0, by1 - by0) / 2.0 < thr or
@@ -640,27 +570,15 @@ def clean_clip(df: DataFrame, mask: DataFrame, *, id_col: str,
 def to_lines(df: DataFrame, geometry: str = "geometry") -> DataFrame:
     """Polygon boundaries as LineString rows (to_lines, general.py:543-676;
     ring splitting at intersections not applied — each ring one line)."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
+    def rings(ga, pdf):
+        rows, blobs = [], []
+        for g in range(len(ga)):
+            for ring in ga.rings_of_geom(g):
+                rows.append(g)
+                blobs.append(to_wkb(from_rings([[ring]], [LINESTRING]))[0])
+        return rows, {geometry: blobs}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            rows, blobs = [], []
-            for g in range(len(ga)):
-                for ring in ga.rings_of_geom(g):
-                    sub = from_rings([[ring]], [LINESTRING])
-                    rows.append(g)
-                    blobs.append(to_wkb(sub)[0])
-            if not rows:
-                continue
-            out = pdf.iloc[rows].copy()
-            out[geometry] = blobs
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, rings, geometry=geometry)
 
 
 def eliminate_by_largest(df: DataFrame, to_eliminate: DataFrame, *,
@@ -689,9 +607,22 @@ def eliminate_by_largest(df: DataFrame, to_eliminate: DataFrame, *,
     chosen = (pr.withColumn("__rk", F.row_number().over(w))
               .where(F.col("__rk") == 1).select(sliver_id, keeper_id))
 
-    sliver_geoms = to_eliminate.select(F.col(id_col).alias(sliver_id),
-                                       F.col("geometry").alias("__sg"))
-    host_extra = chosen.join(sliver_geoms, sliver_id) \
+    res = _absorb(df, to_eliminate, chosen, id_col)
+    if fix_double:
+        res = fix_double_surfaces(res, id_col=id_col, gridsize=gridsize)
+    return res
+
+
+def _absorb(df: DataFrame, to_eliminate: DataFrame, chosen: DataFrame,
+            id_col: str) -> DataFrame:
+    """The shared tail of the eliminate operators: each sliver of
+    `chosen` (sliver id, keeper id) is unioned into its keeper
+    (attributes from the keeper); slivers that touched no keeper are
+    kept unchanged (isolated, like the reference's leftover handling)."""
+    sliver_id, keeper_id = chosen.columns
+    host_extra = chosen.join(
+        to_eliminate.select(F.col(id_col).alias(sliver_id),
+                            F.col("geometry").alias("__sg")), sliver_id) \
         .select(F.col(keeper_id).alias(id_col), F.col("__sg").alias("geometry"))
     # only keepers that actually RECEIVE a sliver enter the dissolve
     # (round 6): untouched keepers previously rode the groupBy shuffle
@@ -708,15 +639,10 @@ def eliminate_by_largest(df: DataFrame, to_eliminate: DataFrame, *,
     from .dissolve import diss
     merged = diss(union_in, [id_col]) \
         .unionByName(keep_geo.join(touched, id_col, "left_anti"))
-    attrs = df.drop("geometry", "minx", "miny", "maxx", "maxy")
-    out = attrs.join(merged, id_col, "inner")
+    out = df.drop("geometry", *BOUNDS).join(merged, id_col, "inner")
     isolated = to_eliminate.join(chosen.select(F.col(sliver_id).alias(id_col)),
-                                 id_col, "left_anti") \
-        .drop("minx", "miny", "maxx", "maxy")
-    res = out.unionByName(isolated, allowMissingColumns=True)
-    if fix_double:
-        res = fix_double_surfaces(res, id_col=id_col, gridsize=gridsize)
-    return res
+                                 id_col, "left_anti").drop(*BOUNDS)
+    return out.unionByName(isolated, allowMissingColumns=True)
 
 
 def eliminate_by_smallest(df: DataFrame, to_eliminate: DataFrame, **kw):
@@ -802,40 +728,35 @@ def eliminate_by_longest(df: DataFrame, to_eliminate: DataFrame, *,
     chosen = (borders.where(F.col("border") > 0)
               .withColumn("__rk", F.row_number().over(w))
               .where(F.col("__rk") == 1).select(sliver_id, keeper_id))
-    host_extra = chosen.join(
-        to_eliminate.select(F.col(id_col).alias(sliver_id),
-                            F.col("geometry").alias("__sg")), sliver_id) \
-        .select(F.col(keeper_id).alias(id_col), F.col("__sg").alias("geometry"))
-    # dissolve touched keepers only (round 6) — see eliminate_by_largest
-    touched = F.broadcast(
-        chosen.select(F.col(keeper_id).alias(id_col)).distinct())
-    keep_geo = df.select(id_col, "geometry")
-    union_in = keep_geo.join(touched, id_col).unionByName(host_extra)
-    from .dissolve import diss
-    merged = diss(union_in, [id_col]) \
-        .unionByName(keep_geo.join(touched, id_col, "left_anti"))
-    attrs = df.drop("geometry", "minx", "miny", "maxx", "maxy")
-    out = attrs.join(merged, id_col, "inner")
-    isolated = to_eliminate.join(chosen.select(F.col(sliver_id).alias(id_col)),
-                                 id_col, "left_anti") \
-        .drop("minx", "miny", "maxx", "maxy")
-    return out.unionByName(isolated, allowMissingColumns=True)
+    return _absorb(df, to_eliminate, chosen, id_col)
 
 
 def area_col(df: DataFrame, geometry: str = "geometry",
              out_col: str = "area") -> DataFrame:
     """Attach shoelace area (the `sort_large_first` enabler,
     general.py:287-393 — sorting is then a plain orderBy)."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + f", {out_col} double"
+    return map_geoms(df, lambda ga, pdf: (None, {out_col: ga.area()}),
+                     {out_col: "double"}, geometry=geometry)
 
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf[geometry].tolist())
-            out = pdf.copy()
-            out[out_col] = ga.area()
-            yield out
 
-    return df.mapInPandas(kernel, schema=schema)
+def _bounds_and_area(ga, pdf):
+    return None, {**bounds_cols(ga), "__area": ga.area()}
+
+
+def _update_by_area(df: DataFrame, *, id_col: str, gridsize: float,
+                largest: bool = True) -> DataFrame:
+    """Assign pairwise overlaps to exactly one owner: rank = (area, id),
+    largest area first (or smallest), then update_geometries.  Bounds and
+    area come from ONE Arrow pass and `ranked` is materialized once:
+    update_geometries plans several probes and joins over it, and each
+    would otherwise re-run the whole upstream chain."""
+    from .overlay import update_geometries
+    area = F.col("__area")
+    ranked = map_geoms(df.drop(*BOUNDS), _bounds_and_area,
+                       {**BOUNDS_DDL, "__area": "double"}) \
+        .withColumn("__rank", F.struct((-area if largest else area)
+                                       .alias("a"),
+                                       F.col(id_col).alias("tid"))) \
+        .drop("__area").localCheckpoint()
+    return update_geometries(ranked, id_col=id_col, rank_col="__rank",
+                             gridsize=gridsize).drop("__rank")

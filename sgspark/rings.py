@@ -17,10 +17,11 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .geom.array import LINESTRING, MULTIPOLYGON, POLYGON, from_rings
 from .geom.wkb import from_wkb, to_wkb
+from .io import map_geoms
 
 
 def polygons_to_rings(df: DataFrame, *, id_col: str,
@@ -55,26 +56,16 @@ def polygons_to_rings(df: DataFrame, *, id_col: str,
 def apply_to_rings(rings: DataFrame,
                    fn: Callable[[np.ndarray], np.ndarray]) -> DataFrame:
     """Apply a coords->coords function to every ring (Arrow-batched)."""
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in rings.schema.fields)
+    def apply(ga, pdf):
+        blobs = []
+        for g in range(len(ga)):
+            new = np.asarray(fn(ga.rings_of_geom(g)[0]), dtype=np.float64)
+            if len(new) and not np.array_equal(new[0], new[-1]):
+                new = np.vstack([new, new[:1]])
+            blobs.append(to_wkb(from_rings([[new]], [LINESTRING]))[0])
+        return None, {"ring": blobs}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ga = from_wkb(pdf["ring"].tolist())
-            out_blobs = []
-            for g in range(len(ga)):
-                coords = ga.rings_of_geom(g)[0]
-                new = np.asarray(fn(coords), dtype=np.float64)
-                if len(new) and not np.array_equal(new[0], new[-1]):
-                    new = np.vstack([new, new[:1]])
-                out_blobs.append(to_wkb(from_rings([[new]], [LINESTRING]))[0])
-            out = pdf.copy()
-            out["ring"] = out_blobs
-            yield out
-
-    return rings.mapInPandas(kernel, schema=schema)
+    return map_geoms(rings, apply, geometry="ring")
 
 
 def rings_to_polygons_df(rings: DataFrame, *, id_col: str) -> DataFrame:

@@ -21,9 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .cells import FALSE_EASTING, Y_BITS
-from . import cells as _cells
-from .geom.wkb import to_wkb
-from .geom.array import from_rings, POLYGON
+from .geom.wkb import rect_polygon_wkb
+from .io import map_geoms
 
 
 # ---------------------------------------------------------------------- #
@@ -87,22 +86,10 @@ def make_grid_from_bbox(spark: SparkSession, minx: float, miny: float,
     grid = grid.withColumn("cell_key",
                            F.expr(cell_key_expr("x0 + 0.5", "y0 + 0.5", gridsize)))
 
-    def mk_poly(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rings = []
-            for x0, y0, x1, y1 in zip(pdf.x0, pdf.y0, pdf.x1, pdf.y1):
-                rings.append([[np.array([[x0, y0], [x1, y0], [x1, y1],
-                                         [x0, y1], [x0, y0]])]])
-            ga = from_rings(rings, [POLYGON] * len(pdf))
-            out = pdf.copy()
-            out["geometry"] = to_wkb(ga)
-            yield out
-
-    schema = ("x0 double, y0 double, x1 double, y1 double, SSB_ID string, "
-              "cell_key long, geometry binary")
-    return grid.mapInPandas(mk_poly, schema=schema)
+    return map_geoms(grid, lambda _, pdf: (None, {
+        "geometry": rect_polygon_wkb(pdf.x0.to_numpy(), pdf.y0.to_numpy(),
+                                     pdf.x1.to_numpy(), pdf.y1.to_numpy())}),
+        {"geometry": "binary"}, geometry=None)
 
 
 def make_grid(spark: SparkSession, bounds: tuple, gridsize: float) -> DataFrame:

@@ -285,3 +285,25 @@ def test_cells_arithmetic():
     ak = anchor_cell_key(np.array([100.0]), np.array([100.0]),
                          np.array([50.0]), np.array([150.0]), 1000.0)
     assert ak[0] == point_cell_key(np.array([100.0]), np.array([150.0]), 1000.0)[0]
+
+
+def test_rect_polygon_wkb_matches_generic_writer():
+    """The vectorized rectangle writer emits the same bytes as the
+    generic `to_wkb(from_rings(...))` path it replaces in
+    `bounds_to_polygon` and `make_grid_from_bbox`, for random rectangles
+    over both signs, integral corners, zero extents and -0.0."""
+    from sgspark.geom.array import POLYGON, from_rings
+    from sgspark.geom.wkb import rect_polygon_wkb
+    rng = np.random.default_rng(11)
+    n = 300
+    x0 = rng.uniform(-1e6, 1e6, n)
+    y0 = rng.uniform(-1e7, 1e7, n)
+    x1 = x0 + rng.uniform(0, 5e3, n)
+    y1 = y0 + rng.uniform(0, 5e3, n)
+    x0[:40] = np.round(x0[:40])          # integral corners
+    x1[40:60] = x0[40:60]                # zero width
+    y0[60:70], y1[60:70] = -0.0, 0.0     # signed zero
+    rings = [[[np.array([[a, b], [c, b], [c, d], [a, d], [a, b]])]]
+             for a, b, c, d in zip(x0, y0, x1, y1)]
+    assert rect_polygon_wkb(x0, y0, x1, y1) == \
+        to_wkb(from_rings(rings, [POLYGON] * n))

@@ -10,9 +10,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sgspark.io import (check_files, get_bounds_series, read_geopandas,
-                        read_parquet_url, wkt_to_wkb_df, write_geoparquet,
-                        with_bounds)
+from sgspark.io import (check_files, get_bounds_series, map_geoms,
+                        read_geopandas, read_parquet_url, wkt_to_wkb_df,
+                        write_geoparquet, with_bounds)
 
 
 @pytest.fixture(scope="module")
@@ -79,6 +79,53 @@ def test_read_parquet_url_file_scheme(spark, geo_dataset):
 
 
 # ----------------------------------------------------------------- lines
+def test_map_geoms_contract(spark):
+    """The row-wise mapper over a 3-partition frame whose middle
+    partition is empty: an integer index drops (count 0) and repeats
+    (count 2) source rows, a mask drops rows, a replaced column keeps its
+    place, added columns come last, and the pass-through columns keep
+    their order, types and values."""
+    from sgspark.geom.wkb import from_wkt, to_wkb
+    wkts = ["POINT (1 2)", "LINESTRING (0 0, 3 4)", "POINT (-5 7)",
+            "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"]
+    blobs = to_wkb(from_wkt(wkts))
+    rows = [(k, f"r{i}", bytearray(b), float(i) / 2, [i, i + 1])
+            for i, (k, b) in enumerate(zip([2, 0, 1, 3], blobs))]
+    ddl = "k int, name string, geometry binary, w double, tags array<int>"
+    rdd = spark.sparkContext.parallelize(
+        [rows[:2], [], rows[2:]], 3).flatMap(lambda part: part)
+    df = spark.createDataFrame(rdd, ddl)
+    assert df.rdd.glom().map(len).collect() == [2, 0, 2]
+
+    def explode(ga, pdf):
+        n = pdf["k"].to_numpy()
+        idx = np.repeat(np.arange(len(pdf)), n)
+        rep = np.concatenate([np.arange(c) for c in n])
+        return idx, {"name": pdf["name"].str.upper().to_numpy()[idx],
+                     "rep": rep, "minx": ga.bounds()[idx, 0]}
+
+    out = map_geoms(df, explode, {"rep": "int", "minx": "double"})
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == \
+        [(f.name, f.dataType.simpleString()) for f in df.schema] + \
+        [("rep", "int"), ("minx", "double")]
+    got = sorted(tuple(r) for r in out.collect())
+    want = sorted((k, f"R{i}", b, float(i) / 2, [i, i + 1], j, x)
+                  for i, (k, b, x) in enumerate(zip(
+                      [2, 0, 1, 3], blobs, [1.0, 0.0, -5.0, 0.0]))
+                  for j in range(k))
+    assert [(r[0], r[1], bytes(r[2]), *r[3:]) for r in got] == want
+
+    kept = map_geoms(df, lambda ga, pdf: (pdf["k"].to_numpy() > 1, {}),
+                     drop=("tags",))
+    assert kept.columns == ["k", "name", "geometry", "w"]
+    assert sorted(r["name"] for r in kept.collect()) == ["r0", "r3"]
+
+    moved = map_geoms(df, lambda _, pdf: (None, {"k": pdf["k"] * 10}),
+                      {"k": "bigint"}, geometry=None)
+    assert moved.columns == ["name", "geometry", "w", "tags", "k"]
+    assert sorted(r["k"] for r in moved.collect()) == [0, 10, 20, 30]
+
+
 def test_split_lines_by_nearest_point(spark):
     from sgspark.line_ops import split_lines_by_nearest_point
     lines = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({

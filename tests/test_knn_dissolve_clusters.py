@@ -150,3 +150,22 @@ def test_cluster_mapper_and_by_cluster_dissolve(spark, zones50):
     a2 = np.sort(from_wkb(list(byc.geometry)).area())
     assert len(a1) == len(a2)
     assert np.allclose(a1, a2, rtol=1e-9)
+
+
+def test_knn_checkpoint_invariance(spark):
+    # results identical across gridsizes (forces multi-round ring
+    # expansion through the checkpointed top-k)
+    rng = np.random.RandomState(7)
+    lp = pd.DataFrame({"lid": np.arange(50),
+                       "x": rng.uniform(0, 100, 50),
+                       "y": rng.uniform(0, 100, 50)})
+    rp = pd.DataFrame({"rid": np.arange(20),
+                       "x": rng.uniform(0, 100, 20),
+                       "y": rng.uniform(0, 100, 20)})
+    l = spark.createDataFrame(lp)
+    r = spark.createDataFrame(rp)
+    a = sorted(map(tuple, get_k_nearest_neighbors(
+        l, r, 3, left_id="lid", right_id="rid", gridsize=5.0).collect()))
+    b = sorted(map(tuple, get_k_nearest_neighbors(
+        l, r, 3, left_id="lid", right_id="rid", gridsize=80.0).collect()))
+    assert a == b

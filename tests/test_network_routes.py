@@ -150,3 +150,42 @@ def test_bounded_probes_leave_session_conf_alone(spark, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 100
     assert len(sc.statusTracker().getJobIdsForGroup("bounded_rows")) == 1
+
+
+def _edges(spark, rows):
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["source", "target", "length"]))
+
+
+def test_local_bf_equals_distributed(spark):
+    # chain 1-2-3-4 + shortcut 1-4, isolated island 9-10, dangling dest 99
+    rows = [("1", "2", 1.0), ("2", "3", 2.0), ("3", "4", 1.0),
+            ("1", "4", 5.0), ("9", "10", 1.0)]
+    e = _edges(spark, rows)
+    orig = spark.createDataFrame(
+        pd.DataFrame({"oid": ["a", "a", "b"],       # duplicate oid = multi
+                      "node": ["1", "9", "2"]}))    # source origin "a"
+    dests = spark.createDataFrame(
+        pd.DataFrame({"did": [1, 2, 2, 3, 99],      # duplicate did rows
+                      "node": ["4", "10", "10", "3", "nope"]}))
+    from sgspark.network import od_cost_matrix
+    a, b = _both_routes(lambda: sorted(map(tuple, od_cost_matrix(
+        e, orig, dests).collect())))
+    assert a == b
+    # sanity: multi-node origin "a" reaches both components
+    costs = {(r[0], r[1]): r[2] for r in a}
+    assert costs[("a", 1)] == 4.0 and costs[("a", 2)] == 1.0
+    assert costs[("b", 3)] == 2.0 and costs[("b", 99)] is None
+
+
+def test_local_bf_pred_matches_distributed_routes(spark):
+    # parallel tie paths exercise the phase-3 min-pred rule
+    rows = [("1", "2", 1.0), ("1", "3", 1.0), ("2", "4", 1.0),
+            ("3", "4", 1.0), ("4", "5", 1.0)]
+    e = _edges(spark, rows)
+    orig = spark.createDataFrame(pd.DataFrame({"oid": ["o"], "node": ["1"]}))
+    dest = spark.createDataFrame(pd.DataFrame({"did": ["d"], "node": ["5"]}))
+    from sgspark.network import get_route
+    a, b = _both_routes(lambda: sorted(map(tuple, get_route(
+        e, orig, dest).collect())))
+    assert a == b and len(a) == 3  # 1->2->4->5 (pred tie broken to "2")

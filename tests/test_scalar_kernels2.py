@@ -88,6 +88,32 @@ def test_fix_double_surfaces(spark):
     assert total == pytest.approx(149.5, abs=1e-6)
 
 
+def test_fix_double_surfaces_one_bounds_area_pass(spark):
+    """`fix_double_surfaces` ranks by bounds and area from ONE Arrow pass,
+    materialized once: across every SQL execution the call and its
+    collect run, a single MapInPandas produces `__area`.  Unmaterialized,
+    each plan reference re-ran the pass."""
+    import re
+    from sgspark.polygon_ops import fix_double_surfaces
+    df = W(spark, ["POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",
+                   "POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))"]).localCheckpoint()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        rows = store.executionsList()
+        return [rows.apply(i) for i in range(rows.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    out = fix_double_surfaces(df, id_col="pid")
+    rows = out.collect()
+    nodes = [b for e in executions() if e.executionId() > seen
+             for b in re.findall(r"\(\d+\) MapInPandas\nInput .*\n"
+                                 r"Arguments: .*", e.physicalPlanDescription())]
+    assert sum("__area#" in b for b in nodes) == 1
+    assert sorted(float(a) for a in
+                  from_wkb([r.geometry for r in rows]).area()) == [12.0, 16.0]
+
+
 def test_get_rough_centerlines(spark):
     from sgspark.polygon_ops import get_rough_centerlines
     # long thin horizontal rectangle -> centerline roughly along y=5

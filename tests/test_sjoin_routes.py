@@ -154,7 +154,9 @@ def test_point_dwithin_skips_left_huge_branch(spark):
             .count("BroadcastNestedLoopJoin")
 
     assert nlj() == 0
-    assert nlj(broadcast_right=False) == 1
+    # the zones are a local relation (no Python): a max-cover probe shows
+    # no right row is huge, so the right's branch is not planned either
+    assert nlj(broadcast_right=False) == 0
     # a distance whose point cover can exceed the cap keeps the branch:
     # its join condition widens the left's bbox (bx0 - d)
     l0 = pts.selectExpr("pid AS __lid", "geometry AS __lg", "minx", "miny",
@@ -165,6 +167,55 @@ def test_point_dwithin_skips_left_huge_branch(spark):
                                  assume_left_points=True)
     assert re.search(r"\(bx0#\d+ - 40\.0\) <= maxx",
                      far._jdf.queryExecution().executedPlan().toString())
+
+
+def test_kernel_dist_python_left_plans_no_nested_loop(spark, docs500):
+    """The distributed kernel route decides each huge-geometry branch per
+    side: an extract-derived point left (its plan runs Python, so it is
+    never probed) needs no branch by its point-cover bound, and the
+    local-relation zones are probed.  The plan then holds no
+    BroadcastNestedLoopJoin, and with it no second pass over the left's
+    upstream extract kernel."""
+    from sgspark.io import extract_geometries
+    pts = extract_geometries(docs500).where("geom_kind = 'point'") \
+        .withColumn("pid", F.xxhash64("doc_id", "span_pos"))
+    assert not J.plan_is_python_free(pts)
+    out = sjoin_pairs(pts, zones_df(spark), "dwithin", left_id="pid",
+                      right_id="zid", distance=1.25, gridsize=7.0,
+                      assume_left_points=True, broadcast_right=False)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_cell_join_pin_decision(spark):
+    """The cell-join width pin engages for python-built inputs and stands
+    down for provably-tiny python-free ones (plan-level check)."""
+    from sgspark.io import wkt_to_wkb_df
+
+    def plan_of(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    # python-built side (wkt kernel): must pin regardless of tiny size
+    wk = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
+        "zid": [1, 2],
+        "geometry_wkt": ["POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))",
+                         "POLYGON ((5 5, 15 5, 15 15, 5 15, 5 5))"]})))
+    side = wk.selectExpr("zid AS __lid", "geometry AS __lg",
+                         "minx", "miny", "maxx", "maxy")
+    other = wk.selectExpr("zid AS __rid", "geometry AS __rg",
+                          "minx", "miny", "maxx", "maxy")
+    pinned = J.cell_candidate_pairs(side, other, 2000.0)
+    assert "RepartitionByExpression" in plan_of(pinned)
+
+    # tiny python-free side (materialized local relation): must NOT pin
+    lc = wk.localCheckpoint()
+    lc.count()
+    side2 = lc.selectExpr("zid AS __lid", "geometry AS __lg",
+                          "minx", "miny", "maxx", "maxy")
+    other2 = lc.selectExpr("zid AS __rid", "geometry AS __rg",
+                           "minx", "miny", "maxx", "maxy")
+    unpinned = J.cell_candidate_pairs(side2, other2, 2000.0)
+    assert "RepartitionByExpression" not in plan_of(unpinned)
 
 
 class TestConfigSeam:

@@ -158,3 +158,19 @@ def test_cosine_topk_ivf_recall(spark):
                for r in cosine_topk_ivf(vecs, 3, n_centroids=8,
                                         n_probe=8).collect()}
     assert got_all == truth
+
+
+def test_shingle_shape_equals_transform_lambda(spark):
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": ["a", "b", "c", "d"],
+        "text": ["abcdefghijklmnop", "abcdefghijklmnop",
+                 "zyxwvutsrqponmlkjihg", "short"]}))
+    from sgspark.textops import shingles
+    w = 12
+    new = shingles(docs, width=w, distinct=False)
+    old = (docs.where(F.length("text") >= w)
+           .select("doc_id", F.explode(F.expr(
+               f"transform(sequence(1, length(text) - {w - 1}), "
+               f"i -> substring(text, i, {w}))")).alias("sh")))
+    assert sorted(map(tuple, new.collect())) == \
+        sorted(map(tuple, old.collect()))
