@@ -109,14 +109,12 @@ def main():
         assert a[0]["n"] >= 0 and t is not None
 
     def spatial_pipeline_ngon():
-        # high-vertex pack path (VERDICT r5 #5): 64-vertex star zones
-        # force the per-cover-cell edge-subset machinery through the
-        # fully-distributed join, so pack-path regressions are
-        # machine-tracked per round (PATH_SHARE should show jvm_polys_*;
-        # the square-zone spatial_pipeline rides jvm_rects instead).
+        # 64-vertex star zones through the fully-distributed point route
+        # (`points_dist`, one Arrow cogroup per cell bucket; the
+        # square-zone spatial_pipeline rides rect_bcast instead).
         # Doc side is a FIXED 200k synthetic points (like knn's cap) so
-        # the measured seconds are dominated by per-pair PIP evaluation
-        # over packed subsets, not by plan compile / pack fixed costs.
+        # the measured seconds are dominated by per-pair PIP evaluation,
+        # not by plan or probe fixed costs.
         from sgspark.synth import synth_documents
         zn = wkt_to_wkb_df(
             zones_from_customer(spark, sf_dir, shape="ngon64")

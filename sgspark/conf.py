@@ -10,10 +10,12 @@ DataFrames built after the change, like the reference's runner objects
 apply to calls made after assignment.
 
 Routes are not keys here: `sjoin_pairs` and `shortest_paths` pick their
-executor from the inputs alone (the distributed point x polygon join by
-its estimated pair count against the module constant
-`joins.PIP_COMPILED_MIN_PAIRS`), and log the choice as one record on the
+executor from the inputs alone, and log the choice as one record on the
 `sgspark.route` logger (`log_route`; README.md, "Which route ran").
+
+`config` is a `ContextVar` holding a read-only mapping, so an override
+is scoped to the thread or asyncio task that makes it: two threads that
+build plans at once each see their own runners.
 
 Keys:
   refine_runner    callable(la, ra, li, ri, predicate) -> bool ndarray —
@@ -28,28 +30,31 @@ from __future__ import annotations
 
 import logging
 from contextlib import contextmanager
-from typing import Any, Callable, Iterator, NamedTuple
+from contextvars import ContextVar
+from types import MappingProxyType
+from typing import Any, Callable, Iterator, Mapping, NamedTuple
 
-config: dict[str, Any] = {
-    "refine_runner": None,
-    "union_runner": None,
-}
+config: ContextVar[Mapping[str, Any]] = ContextVar(
+    "sgspark_config", default=MappingProxyType({
+        "refine_runner": None,
+        "union_runner": None,
+    }))
 
 
 def get_runner(key: str, default: Callable) -> Callable:
     """Resolve a runner callable: the configured override or `default`."""
-    return config.get(key) or default
+    return config.get().get(key) or default
 
 
 @contextmanager
-def config_override(**kw) -> Iterator[dict]:
-    """Temporarily override config keys (test/bench harness helper)."""
-    old = {k: config.get(k) for k in kw}
-    config.update(kw)
+def config_override(**kw) -> Iterator[Mapping[str, Any]]:
+    """Override config keys for the calling thread or task until the block
+    exits (test/bench harness helper)."""
+    token = config.set(MappingProxyType({**config.get(), **kw}))
     try:
-        yield config
+        yield config.get()
     finally:
-        config.update(old)
+        config.reset(token)
 
 
 ROUTE_LOG = logging.getLogger("sgspark.route")

@@ -155,30 +155,52 @@ def pip_pairs_vectorized(px: np.ndarray, py: np.ndarray, ra: GeomArray,
     return inside | on
 
 
+# Banded PIP: edges per horizontal band of a polygon's y-range, the most
+# bands one polygon gets (an edge is listed once per band it spans, so
+# this bounds the index at _BAND_MAX slots per edge), and the average pair
+# tests per polygon edge from which banding pays for its index (few
+# points per polygon keep the plain expansion)
+_BAND_EDGES = 2
+_BAND_MAX = 64
+_BAND_MIN_TESTS = 8
+
+
 def _pip_parity_and_edge(px, py, ra, ri) -> tuple[np.ndarray, np.ndarray]:
-    """(odd crossing parity, on some edge) for point[k] vs ra[ri[k]]."""
+    """(odd crossing parity, on some edge) for point[k] vs ra[ri[k]].
+
+    Each pair tests the edges of ra[ri[k]] whose y-range could hold
+    py[k].  With many points per polygon, each polygon's y-range splits
+    into bands of about _BAND_EDGES edges and a pair tests its band's
+    edges only.  An edge left out has py[k] outside its y-range by more
+    than a rounding margin, so it adds no crossing (both ends lie on one
+    side of the ray) and cannot hold the point; the kept edges run the
+    same IEEE operations either way, so the result is bit-identical."""
     ri = np.asarray(ri, dtype=np.int64)
     # per-geometry contiguous coordinate span (geoms store rings contiguously)
     gstart = ra.coords_start_per_geom()
     gcount = ra.coords_count_per_geom()
-    cstart = gstart[ri]
-    cend = cstart + gcount[ri]
-    flat, owner = expand_ranges(cstart, cend - 1)  # edge = coord pair
+    # ring ends are where flat+1 is a ring start: an edge there would
+    # join the last vertex of one ring to the first of the next
+    is_ring_start = np.zeros(len(ra.coords) + 1, dtype=bool)
+    is_ring_start[ra.ring_offsets[:-1]] = True
+    used, inv = np.unique(ri, return_inverse=True)
+    if gcount[ri].sum() >= _BAND_MIN_TESTS * gcount[used].sum():
+        flat, owner = _banded_edges(py, ra, used, inv, gstart, gcount,
+                                    is_ring_start)
+    else:
+        cstart = gstart[ri]
+        flat, owner = expand_ranges(cstart, cstart + gcount[ri] - 1)
+        valid = ~is_ring_start[flat + 1]
+        flat, owner = flat[valid], owner[valid]
     if len(flat) == 0:
         return np.zeros(len(ri), dtype=bool), np.zeros(len(ri), dtype=bool)
     x1 = ra.coords[flat, 0]
     y1 = ra.coords[flat, 1]
     x2 = ra.coords[flat + 1, 0]
     y2 = ra.coords[flat + 1, 1]
-    # mask out edges that cross ring boundaries (last->first of next ring):
-    # ring ends are where flat+1 is a ring start
-    ring_starts = ra.ring_offsets[:-1]
-    is_ring_start = np.zeros(len(ra.coords) + 1, dtype=bool)
-    is_ring_start[ring_starts] = True
-    valid = ~is_ring_start[flat + 1]
     PX = px[owner]
     PY = py[owner]
-    cond = ((y1 > PY) != (y2 > PY)) & valid
+    cond = (y1 > PY) != (y2 > PY)
     with np.errstate(divide="ignore", invalid="ignore"):
         xint = (x2 - x1) * (PY - y1) / (y2 - y1) + x1
     crossing = cond & (PX < xint)
@@ -194,8 +216,53 @@ def _pip_parity_and_edge(px, py, ra, ri) -> tuple[np.ndarray, np.ndarray]:
     ll = dx * dx + dy * dy
     # a zero-length edge (a repeated vertex) would pass the first three
     # tests for every point; its vertex is on the ring's next edge
-    on = (cross == 0) & (dot >= 0) & (dot <= ll) & (ll > 0) & valid
+    on = (cross == 0) & (dot >= 0) & (dot <= ll) & (ll > 0)
     return inside, np.bincount(owner[on], minlength=len(ri)) > 0
+
+
+def _banded_edges(py, ra, used, inv, gstart, gcount, is_ring_start):
+    """(flat, owner): for pair k (polygon used[inv[k]]), the start
+    coordinate of every edge in the band holding py[k]."""
+    flat, zone = expand_ranges(gstart[used], gstart[used] + gcount[used] - 1)
+    keep = ~is_ring_start[flat + 1]
+    flat, zone = flat[keep], zone[keep]
+    nu = len(used)
+    y1 = ra.coords[flat, 1]
+    y2 = ra.coords[flat + 1, 1]
+    ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
+    zy0 = np.full(nu, np.inf)
+    zy1 = np.full(nu, -np.inf)
+    np.minimum.at(zy0, zone, ylo)
+    np.maximum.at(zy1, zone, yhi)
+    nb = np.clip(np.bincount(zone, minlength=nu) // _BAND_EDGES, 1,
+                 _BAND_MAX)
+    h = (zy1 - zy0) / nb
+    flat_band = ~(h > 0)  # no edge, or a y-range of width 0
+    nb[flat_band], h[flat_band], zy0[flat_band] = 1, 1.0, 0.0
+    # margin well above the rounding of the band arithmetic below, so an
+    # edge whose y-range holds a point always lands in that point's band
+    m = 1e-9 * (h + np.maximum(np.abs(zy0), np.abs(zy1)))
+    m[flat_band] = 0.0
+    top = nb - 1
+    with np.errstate(invalid="ignore"):
+        b0 = np.clip(np.floor((ylo - m[zone] - zy0[zone]) / h[zone]),
+                     0, top[zone]).astype(np.int64)
+        b1 = np.clip(np.floor((yhi + m[zone] - zy0[zone]) / h[zone]),
+                     0, top[zone]).astype(np.int64)
+        pb = np.nan_to_num(np.floor((py - zy0[inv]) / h[inv]), nan=0.0)
+    pb = np.clip(pb, 0, top[inv]).astype(np.int64)
+    band0 = np.cumsum(nb) - nb
+    # one slot per (edge, band it spans), grouped by band
+    span, edge = expand_ranges(np.zeros(len(flat), dtype=np.int64),
+                               b1 - b0 + 1)
+    key = band0[zone[edge]] + b0[edge] + span
+    order = np.argsort(key, kind="stable")
+    slot_flat = flat[edge[order]]
+    bounds = np.zeros(int(nb.sum()) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(key, minlength=len(bounds) - 1), out=bounds[1:])
+    pk = band0[inv] + pb
+    pos, owner = expand_ranges(bounds[pk], bounds[pk + 1])
+    return slot_flat[pos], owner
 
 
 def point_geom_distance_vectorized(px: np.ndarray, py: np.ndarray,

@@ -102,3 +102,60 @@ def test_wkb_roundtrip_exact(a):
     back = from_wkb(to_wkb(ga))
     assert np.array_equal(back.coords, ga.coords)
     assert back.area()[0] == pytest.approx(ring_area(a), abs=0)
+
+
+@st.composite
+def star_wkt(draw):
+    """Star polygon WKT (integer vertices when `snap`), plain, holed or
+    a two-part multipolygon; many vertices put many edges in one band."""
+    cx = draw(st.integers(-20, 20))
+    cy = draw(st.integers(-20, 20))
+    radii = draw(st.lists(st.integers(2, 12), min_size=3, max_size=60))
+    phase = draw(st.floats(0, 1))
+    snap = draw(st.booleans())
+
+    def ring(x0, scale):
+        a = phase + 2 * np.pi * np.arange(len(radii)) / len(radii)
+        xs = x0 + scale * np.array(radii) * np.cos(a)
+        ys = cy + scale * np.array(radii) * np.sin(a)
+        if snap:
+            xs, ys = np.round(xs), np.round(ys)
+        pts = [f"{x!r} {y!r}" for x, y in zip(xs, ys)]
+        return "(" + ", ".join(pts + pts[:1]) + ")"
+
+    kind = draw(st.sampled_from(["plain", "hole", "multi"]))
+    if kind == "hole":
+        return f"POLYGON ({ring(cx, 1.0)}, {ring(cx, 0.3)})"
+    if kind == "multi":
+        return f"MULTIPOLYGON (({ring(cx, 1.0)}), ({ring(cx + 30, 0.7)}))"
+    return f"POLYGON {ring(cx, 1.0)}"
+
+
+@settings(max_examples=60, deadline=None)
+@given(wkts=st.lists(star_wkt(), min_size=1, max_size=5),
+       seed=st.integers(0, 2 ** 31))
+def test_banded_pip_equals_full_edge_pip(wkts, seed):
+    """The banded point-in-polygon expansion (each pair tests its band's
+    edges) returns bit-identical parity and on-edge flags to testing
+    every edge, on lattice points (on vertices and edges) and random
+    ones."""
+    from sgspark.geom import predicates as P
+    from sgspark.geom.wkb import from_wkt
+    rng = np.random.default_rng(seed)
+    ra = from_wkt(wkts)
+    n = 600
+    px = np.r_[rng.integers(-35, 65, n // 2),
+               rng.uniform(-35, 65, n - n // 2)].astype(np.float64)
+    py = np.r_[rng.integers(-35, 35, n // 2),
+               rng.uniform(-35, 35, n - n // 2)].astype(np.float64)
+    ri = rng.integers(0, len(wkts), n)
+    old = P._BAND_MIN_TESTS
+    try:
+        P._BAND_MIN_TESTS = float("inf")
+        full = P._pip_parity_and_edge(px, py, ra, ri)
+        P._BAND_MIN_TESTS = 0
+        banded = P._pip_parity_and_edge(px, py, ra, ri)
+    finally:
+        P._BAND_MIN_TESTS = old
+    assert np.array_equal(full[0], banded[0])
+    assert np.array_equal(full[1], banded[1])

@@ -330,44 +330,3 @@ class TestShortcutBudgetFirstDoubling:
         assert hops == 1
         # relation unchanged: same row count as input
         assert T.count() == 20
-
-
-class TestTunedGridsize:
-    """Adaptive cell gridsize for the distributed cell join (round 5:
-    low-key-cardinality worlds degenerate the 64-partition shuffle into
-    a few hot hash buckets; the tuner shrinks g to restore balance)."""
-
-    @staticmethod
-    def _st(wx=20_000.0, wy=18_000.0, aex=2200.0, aey=2200.0,
-            mex=4000.0, mey=4000.0):
-        return {"wx0": 0.0, "wx1": wx, "wy0": 0.0, "wy1": wy,
-                "aex": aex, "aey": aey, "mex": mex, "mey": mey}
-
-    def test_small_world_tunes_down(self, spark):
-        from sgspark.joins import _tuned_gridsize, _CELLS_PER_PARTITION
-        g = _tuned_gridsize(spark, 2000.0, self._st())
-        assert g < 2000.0
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        cells = (20_000.0 / g) * (18_000.0 / g)
-        # hits the cardinality target (within floor rounding)
-        assert cells >= 0.5 * _CELLS_PER_PARTITION * nparts
-
-    def test_country_world_untouched(self, spark):
-        from sgspark.joins import _tuned_gridsize
-        st = self._st(wx=1.5e6, wy=1.5e6)
-        assert _tuned_gridsize(spark, 2000.0, st) == 2000.0
-
-    def test_never_grows_and_respects_floors(self, spark):
-        from sgspark.joins import _tuned_gridsize
-        # huge average zones in a small world: pack floor must win
-        st = self._st(aex=16_000.0, aey=16_000.0, mex=19_000.0,
-                      mey=17_000.0)
-        g = _tuned_gridsize(spark, 2000.0, st)
-        assert g == 2000.0  # floor (16000/8=2000) == caller value
-        st2 = self._st(aex=17_600.0, aey=17_600.0)
-        assert _tuned_gridsize(spark, 2000.0, st2) == 2000.0  # capped
-
-    def test_degenerate_stats_keep_caller_value(self, spark):
-        from sgspark.joins import _tuned_gridsize
-        st = self._st(wx=0.0, wy=0.0, aex=0.0, aey=0.0, mex=0.0, mey=0.0)
-        assert _tuned_gridsize(spark, 2000.0, st) == 2000.0

@@ -202,103 +202,6 @@ class TestRealImageDecode:
         assert fb.media_kind == "fake" and fb.channels == 0
 
 
-class TestChainedPackConnectors:
-    """The chained-vertex pack's skip mask, probed at its adversarial
-    corner: a point EXACTLY ON the connector segment between two arcs
-    must not read as on-boundary (crossing and on-edge must both ignore
-    connector slots) — in the unrolled codegen tiers AND the interpreted
-    lambda fallback."""
-
-    def _df(self, spark, vx, vy, skip_words):
-        probes = [(10.0, 5.0, False), (5.0, 0.0, True), (3.0, 7.0, False)]
-        sk0 = skip_words[0] if skip_words else 0
-        rows = [(px, py, False, 0, False, vx, vy, skip_words, sk0, want)
-                for px, py, want in probes]
-        return spark.createDataFrame(
-            rows, "__px double, __py double, __isrect boolean, __base int,"
-                  " __vert boolean, __evx array<double>,"
-                  " __evy array<double>, __eskip array<bigint>,"
-                  " __esk0 bigint, want boolean")
-
-    @staticmethod
-    def _words(skip_slots, n_slots):
-        from sgspark.joins import _skip_words
-        return _skip_words(skip_slots, n_slots)
-
-    def test_unrolled_tier_skips_connectors(self, spark):
-        from pyspark.sql import functions as F
-        from sgspark.joins import _pip_dispatch_sql
-        # two horizontal edges of the unit-10 square, vertical sides NOT
-        # packed: (0,0)-(10,0), connector slot 1, (10,10)-(0,10).  Probe
-        # (10,5) lies exactly ON the connector segment.
-        vx, vy = [0.0, 10.0, 10.0, 0.0], [0.0, 0.0, 10.0, 10.0]
-        df = self._df(spark, vx, vy, self._words([1], 3))
-        got = df.withColumn("pip", F.expr(_pip_dispatch_sql(
-            "__e", "__px", "__py", "__isrect", "__base"))).collect()
-        for r in got:
-            assert r["pip"] == r["want"], (r["__px"], r["__py"])
-
-    def test_interpreted_fallback_skips_connectors(self, spark):
-        from pyspark.sql import functions as F
-        from sgspark.joins import _pip_sql
-        # same shape padded with 18 far-away single-edge arcs so slots
-        # exceed the 32-term tier -> the interpreted lambda evaluates;
-        # connectors land on the odd 0-based slots
-        vx, vy, skip = [0.0, 10.0], [0.0, 0.0], []
-        for k in range(18):
-            skip.append(len(vx) - 1)
-            vx += [1000.0 + k, 1001.0 + k]
-            vy += [1000.0, 1001.0]
-        skip.append(len(vx) - 1)
-        vx += [10.0, 0.0]
-        vy += [10.0, 10.0]
-        slots = len(vx) - 1
-        assert slots > 32
-        df = self._df(spark, vx, vy, self._words(skip, slots))
-        got = df.withColumn("pip", F.expr(
-            "(" + _pip_sql("__e", "__px", "__py", "__base") + ")")).collect()
-        for r in got:
-            assert r["pip"] == r["want"], (r["__px"], r["__py"])
-
-    @pytest.mark.parametrize("pad", [0, 18])
-    def test_zero_length_edge_holds_only_its_vertex(self, spark, pad):
-        """`POLYGON ((0 0, 10 0, 10 0, 0 10, 0 0))` repeats (10 0): the
-        compiled PIP over its packed edges (unrolled tier, pad=0;
-        interpreted lambda, pad=18 far arcs) and the Arrow kernel agree,
-        and (9 9) is outside."""
-        import numpy as np
-        from sgspark.geom import from_wkt, refine_pairs
-        from sgspark.joins import _edge_rows_of, _pip_dispatch_sql
-        probes = [(9.0, 9.0), (10.0, 0.0), (2.0, 2.0), (5.0, 5.0),
-                  (10.0, 1.0), (11.0, 0.0)]
-        ga = from_wkt(["POLYGON ((0 0, 10 0, 10 0, 0 10, 0 0))"]
-                      + [f"POINT ({x} {y})" for x, y in probes])
-        es = _edge_rows_of(ga)[0]  # one ring: consecutive edges chain
-        vx = [es[0][0]] + [e[2] for e in es]
-        vy = [es[0][1]] + [e[3] for e in es]
-        skip = []
-        for k in range(pad):
-            skip.append(len(vx) - 1)
-            vx += [1000.0 + k, 1001.0 + k]
-            vy += [1000.0, 1001.0]
-        n = len(probes)
-        want = refine_pairs(ga, ga, np.arange(1, n + 1), np.zeros(n, int),
-                            "within").tolist()
-        assert want == [False, True, True, True, False, False]
-        words = self._words(skip, len(vx) - 1)
-        rows = [(x, y, False, 0, False, vx, vy, words,
-                 words[0] if words else 0, w)
-                for (x, y), w in zip(probes, want)]
-        df = spark.createDataFrame(
-            rows, "__px double, __py double, __isrect boolean, __base int,"
-                  " __vert boolean, __evx array<double>,"
-                  " __evy array<double>, __eskip array<bigint>,"
-                  " __esk0 bigint, want boolean")
-        got = df.withColumn("pip", F.expr(_pip_dispatch_sql(
-            "__e", "__px", "__py", "__isrect", "__base"))).collect()
-        assert [r["pip"] for r in got] == want
-
-
 class TestPngVariantDecodes:
     """Color types the synth/roundtrip tests don't reach: palette (3,
     with and without tRNS) and gray+alpha (4) — PNG bytes handcrafted

@@ -3,9 +3,9 @@
 Each call runs one routing decision (`joins._sjoin_route`,
 `network._shortest_paths_route`) and logs it as exactly one record on the
 `sgspark.route` logger; the executors it routes to never decline.  Also
-here: the size rule and the probes that pick the distributed point x
-polygon executor, and the runner seam (`sgspark.conf`) the executors
-resolve their kernels from.
+here: the probes that pick the distributed point x polygon executor, and
+the runner seam (`sgspark.conf`) the executors resolve their kernels
+from.
 """
 import logging
 import re
@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 import sgspark.joins as J
 from sgspark.geom.wkb import from_wkt, to_wkb
 from sgspark.joins import sjoin_pairs
-from test_jvm_pip import POLYS, compiled, pair_set, points_df, zones_df
+from test_point_join_routes import POLYS, pair_set, points_df, zones_df
 
 RECTS = ["POLYGON ((0 0, 4 0, 4 2, 0 2, 0 0))",
          "POLYGON ((10 0, 20 0, 20 10, 10 10, 10 0))"]
@@ -57,8 +57,8 @@ def pip_route(left, right, **kw):
     ("rect_bcast", {}),
     ("kernel_bcast", {"assume_left_points": True}),
     ("kernel_bcast", {"assume_left_points": False}),
-    ("compiled_dist", {"broadcast_right": False,
-                       "assume_left_points": True}),
+    ("points_dist", {"broadcast_right": False,
+                     "assume_left_points": True}),
     ("kernel_dist", {"broadcast_right": False}),
 ])
 def test_each_sjoin_call_logs_one_route(spark, routes, name, kw):
@@ -66,9 +66,8 @@ def test_each_sjoin_call_logs_one_route(spark, routes, name, kw):
     zones = zones_df(spark, RECTS if name == "rect_bcast" else POLYS)
     if name == "empty":
         zones = zones.where("zid < 0")
-    with compiled():
-        out = sjoin_pairs(pts, zones, "within", left_id="pid",
-                          right_id="zid", gridsize=7.0, **kw)
+    out = sjoin_pairs(pts, zones, "within", left_id="pid",
+                      right_id="zid", gridsize=7.0, **kw)
     rec = one_route(routes, "sjoin_pairs")
     assert rec.route == name
     assert name in rec.getMessage()
@@ -78,8 +77,10 @@ def test_each_sjoin_call_logs_one_route(spark, routes, name, kw):
         assert len(pair_set(out)) > 0
     if name in ("rect_bcast", "kernel_bcast"):
         assert rec.stats["n_right"] == (2 if name == "rect_bcast" else 6)
-    if name == "compiled_dist":
-        assert rec.stats["n_right"] == 6 and rec.stats["gridsize"] <= 7.0
+    if name == "points_dist":
+        assert rec.stats["n_right"] == 6
+        assert rec.stats["buckets"] >= int(
+            spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def test_public_operators_log_one_route_each(spark, routes):
@@ -219,31 +220,6 @@ def test_cell_join_pin_decision(spark):
 
 
 class TestConfigSeam:
-    def test_pip_route_pinned_by_constant(self, spark, monkeypatch):
-        """The distributed point x polygon route is chosen by the module
-        constant `PIP_COMPILED_MIN_PAIRS` alone, so pinning it at 0 or
-        infinity forces the compiled or the kernel route."""
-        zones, pts = zones_df(spark), points_df(spark)
-
-        def run():
-            return J.sjoin_pairs(
-                pts, zones, "within", left_id="pid", right_id="zid",
-                gridsize=7.0, broadcast_right=False,
-                assume_left_points=True)
-
-        monkeypatch.setattr(J, "PIP_COMPILED_MIN_PAIRS", 0)
-        jvm = run()
-        assert "kernel(" not in \
-            jvm._jdf.queryExecution().executedPlan().toString()
-        jvm = pair_set(jvm)
-        monkeypatch.setattr(J, "PIP_COMPILED_MIN_PAIRS", float("inf"))
-        kern = run()
-        # the constant forced the Arrow kernel: the refine kernel (named
-        # `kernel`) is in the plan, not just the JVM path's edge pack
-        plan = kern._jdf.queryExecution().executedPlan().toString()
-        assert "kernel(" in plan
-        assert pair_set(kern) == jvm
-
     def test_refine_runner_override(self, spark, routes):
         """The configured refine_runner is really what executes: an
         all-False runner empties the join; an all-True runner returns the
@@ -312,71 +288,61 @@ class TestConfigSeam:
         assert area == pytest.approx(4.0)  # one input square, not union=7
 
 
+    def test_config_override_is_thread_local(self):
+        """An override holds in the thread that makes it and in no
+        other thread running at the same time."""
+        import threading
+        from sgspark.conf import config_override, get_runner
+
+        def default(*a):
+            return None
+
+        entered, release = threading.Event(), threading.Event()
+        seen = {}
+
+        def overriding():
+            with config_override(refine_runner=np.zeros):
+                entered.set()
+                release.wait(10)
+                seen["a"] = get_runner("refine_runner", default)
+            seen["a_after"] = get_runner("refine_runner", default)
+
+        def plain():
+            entered.wait(10)
+            seen["b"] = get_runner("refine_runner", default)
+            release.set()
+
+        ts = [threading.Thread(target=f) for f in (overriding, plain)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(20)
+        assert seen == {"a": np.zeros, "b": default, "a_after": default}
+        assert get_runner("refine_runner", default) is default
+
+
 class TestNullSafeTypeProbe:
     def test_null_kind_routes_to_kernel(self, spark):
-        """A right row with NULL geom_kind must route the join to the
-        kernel, not silently into the compiled PIP executor."""
-        zones = zones_df(spark).withColumn(
-            "geom_kind",
-            F.when(F.col("zid") == 0, F.lit(None).cast("string"))
-            .otherwise(F.lit("polygon")))
-        with compiled():
-            out = pip_route(points_df(spark), zones)
-        assert out.name == "kernel_dist"
-        # all-polygon kinds (no NULL) still take the compiled path
-        zones_ok = zones_df(spark).withColumn(
-            "geom_kind", F.lit("polygon"))
-        with compiled():
-            out2 = pip_route(points_df(spark), zones_ok)
-        assert out2.name == "compiled_dist"
-
-
-def test_size_rule_picks_route(spark, monkeypatch, tmp_path):
-    """Default config: the distributed point x polygon join refines with
-    the Arrow kernel below PIP_COMPILED_MIN_PAIRS estimated pairs, with
-    the compiled PIP above it, and with the compiled PIP when the left's
-    row count is unknown."""
-    zones, pts = zones_df(spark), points_df(spark)
-
-    def plan(left):
-        out = sjoin_pairs(left, zones, "within", left_id="pid",
-                          right_id="zid", gridsize=7.0,
-                          broadcast_right=False, assume_left_points=True)
-        return out._jdf.queryExecution().executedPlan().toString()
-
-    # small: the row count from Catalyst (local relation) or, for a
-    # parquet scan without statistics, from the count folded into the
-    # stats job
-    pts.write.parquet(str(tmp_path / "pts"))
-    scanned = spark.read.parquet(str(tmp_path / "pts"))
-    assert J._plan_row_count(pts) == 318
-    assert J._plan_row_count(scanned) is None
-    assert "kernel(" in plan(pts)
-    assert "kernel(" in plan(scanned)
-    assert pip_route(scanned, zones).facts["n_left"] == 318
-    # large: 10x the constant in rows over a right layer whose bboxes
-    # cover a tenth of its world estimates exactly the constant, which
-    # takes the compiled route; so does a synthetic Catalyst row count of
-    # that size on the fixture
-    st = {"wx0": 0.0, "wx1": 100.0, "wy0": 0.0, "wy1": 100.0,
-          "area": 1000.0}
-    assert J._pip_pairs_estimate(10 * J.PIP_COMPILED_MIN_PAIRS, st) \
-        == J.PIP_COMPILED_MIN_PAIRS
-    monkeypatch.setattr(J, "_plan_row_count",
-                        lambda df: 10 * J.PIP_COMPILED_MIN_PAIRS)
-    assert "kernel(" not in plan(pts)
-    assert pip_route(pts, zones).name == "compiled_dist"
-    monkeypatch.undo()
-    # unknown: a Python-produced left has no Catalyst count and is not
-    # counted by the probe
-    py_left = pts.mapInPandas(lambda it: it, pts.schema)
-    assert J._plan_row_count(py_left) is None
-    assert "kernel(" not in plan(py_left)
-    assert pip_route(py_left, zones).facts["n_left"] is None
+        """A right row with NULL geom_kind joins like any other: the
+        distributed point route reads geometries, not `geom_kind`, and
+        its pairs equal the broadcast kernel's."""
+        pts = points_df(spark)
+        want = pair_set(sjoin_pairs(pts, zones_df(spark), "within",
+                                    left_id="pid", right_id="zid",
+                                    gridsize=7.0))
+        for kind in (F.when(F.col("zid") == 0, F.lit(None).cast("string"))
+                     .otherwise(F.lit("polygon")), F.lit("polygon")):
+            zones = zones_df(spark).withColumn("geom_kind", kind)
+            assert pip_route(pts, zones).name == "points_dist"
+            assert pair_set(sjoin_pairs(
+                pts, zones, "within", left_id="pid", right_id="zid",
+                gridsize=7.0, broadcast_right=False,
+                assume_left_points=True)) == want
 
 
 def test_declines_on_mixed_or_huge_rights(spark):
-    """Line rights or country-sized rights route to the kernel and still
+    """Line rights take the distributed point route (its refine handles
+    any right type); country-sized rights route to the kernel.  Both
     produce correct results."""
     ga = from_wkt(["LINESTRING (0 0, 5 5)", POLYS[0]])
     b = ga.bounds()
@@ -385,18 +351,19 @@ def test_declines_on_mixed_or_huge_rights(spark):
             for i, w in enumerate(to_wkb(ga))]
     zones = spark.createDataFrame(rows, zones_df(spark).schema)
     pts = points_df(spark)
-    with compiled():
-        assert pip_route(pts, zones).name == "kernel_dist"
-        out = sjoin_pairs(pts, zones, "intersects", left_id="pid",
-                          right_id="zid", gridsize=7.0,
-                          broadcast_right=False, assume_left_points=True)
+    assert pip_route(pts, zones).name == "points_dist"
+    out = sjoin_pairs(pts, zones, "intersects", left_id="pid",
+                      right_id="zid", gridsize=7.0,
+                      broadcast_right=False, assume_left_points=True)
     got = pair_set(out)
     assert (0, 1) in got          # (1,1) inside the L polygon (zid=1 here)
     assert (2, 0) in got and (2, 1) in got  # (2,2) on the line AND in L
+    assert got == pair_set(sjoin_pairs(pts, zones, "intersects",
+                                       left_id="pid", right_id="zid",
+                                       gridsize=7.0))
     # a country-sized right: its cover at the grid exceeds MAX_COVER_CELLS
     big = zones_df(spark, ["POLYGON ((0 0, 1000 0, 1000 1000, 0 0))",
                            POLYS[0]])
-    with compiled():
-        r = pip_route(pts, big, gridsize=1.0)
-        assert r.name == "kernel_dist"
-        assert any("covers over" in w for w in r.reasons)
+    r = pip_route(pts, big, gridsize=1.0)
+    assert r.name == "kernel_dist"
+    assert any("covers over" in w for w in r.reasons)

@@ -58,31 +58,28 @@ def main():
                      "explode, shuffle equi-join, Arrow refine kernel)",
                      cap(pip_kernel)))
 
-    # high-vertex pack path (round 6): ngon zones through the fully
-    # distributed join — the plan should show the chained-vertex pack
-    # columns (__evx/__evy/__eskip) flowing into the compiled PIP
-    # residual, with the AQE-exempt repartition on both sides
-    # sf0.1 world: at sf0.01 the tuned cell grid is so fine relative to
-    # the 2000-unit star radii that the cover cap routes to the kernel
-    # (correct, just not the plan under audit)
+    # ngon zones through the distributed point route: the plan should
+    # show each side's Scan chain once, the JVM cover explode and bucket
+    # expression, the AQE-exempt repartition on both sides and ONE
+    # FlatMapCoGroupsInArrow on the pair path
     SF1 = "/root/testdata/sf0.1"
     pts1 = extract_geometries(documents_with_spans(spark, SF1)) \
         .where("geom_kind = 'point' AND span_pos = 1")
-    # right side materialized (like bench's cached zones): the
-    # distributed path's type probe only runs over python-free plans
+    # right side materialized (like bench's cached zones): the point
+    # route takes Python-free rights only
     ngon = wkt_to_wkb_df(zones_from_customer(spark, SF1, shape="ngon64")) \
         .localCheckpoint()
     pip_ngon = sjoin_pairs(pts1, ngon, "within", left_id="doc_index",
                            right_id="zone_id", broadcast_right=False,
                            assume_left_points=True)
-    sections.append(("PIP sjoin — 64-gon rights, distributed pack path: "
-                     "O(|right|) Arrow pack pass -> pinned repartition "
-                     "both sides -> cell equi-join with the compiled "
-                     "chained-vertex PIP residual (no Python on the "
-                     "pair path)", cap(pip_ngon)))
+    sections.append(("PIP sjoin — 64-gon rights, distributed point route: "
+                     "point cells and zone cover cells hashed into buckets "
+                     "-> pinned repartition both sides -> ONE Arrow "
+                     "cogroup per bucket (cell + bbox pairing, banded "
+                     "PIP refine)", cap(pip_ngon)))
 
-    # the same inputs under dwithin: distance has no compiled executor,
-    # so the distance-expanded point covers take the shared cell join and
+    # the same inputs under dwithin: distance has no point executor, so
+    # the distance-expanded point covers take the shared cell join and
     # the Arrow refine kernel at any size
     dw_ngon = sjoin_pairs(pts1, ngon, "dwithin", left_id="doc_index",
                           right_id="zone_id", distance=100.0,
@@ -90,7 +87,7 @@ def main():
     sections.append(("point x polygon dwithin, distributed route — "
                      "distance-expanded point covers, shuffle equi-join "
                      "on cell_key, JVM anchor dedup, ONE MapInPandas "
-                     "refine (no edge pack)", cap(dw_ngon)))
+                     "refine", cap(dw_ngon)))
 
     # point lefts x a small general-polygon right: the broadcast route
     # has no compiled executor for non-rectangles, so the points take the

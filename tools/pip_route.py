@@ -1,26 +1,28 @@
-"""Compiled PIP vs Arrow-kernel refine of the point x polygon join: CPU
-seconds per call across input sizes, the evidence behind
-`joins.PIP_COMPILED_MIN_PAIRS` (BENCH/PIP_ROUTE.md).
+"""The distributed point x polygon join's two executors side by side:
+CPU seconds per call across input sizes (BENCH/PIP_ROUTE.md).
 
-A cell is one (size, route) pair measured in its own fresh process on
-local[4]: N synthetic document points (the first point of docs 0..N-1,
-cached and materialized, as the pip_tile pipeline leaves them) joined to
-M ngon64 zones through `sjoin_pairs(..., assume_left_points=True)`.
+`sjoin_pairs(..., broadcast_right=False)` on a Python-free right runs
+`points_dist` (the bucketed Arrow cogroup) when the caller vouches for
+point lefts with `assume_left_points=True`, and `kernel_dist` (the cell
+join feeding the Arrow refine) without it.  A cell is one (size, side)
+pair measured in its own fresh process: N synthetic document points (the
+first point of docs 0..N-1, cached and materialized, as the pip_tile
+pipeline leaves them) joined `within` M ngon64 zones.
 
-- Distributed cells (the default) pass `broadcast_right=False`.  The route
-  is pinned through `joins.PIP_COMPILED_MIN_PAIRS`: "compiled" sets it to
-  0, "kernel" to infinity, and "default" leaves it, so the size rule
-  chooses.
-- `--broadcast` cells leave `broadcast_right` unset, so the auto
-  broadcast route runs; only "default" applies there.
-- `--predicate dwithin` (at `--distance`, default 100) refines these
-  polygon zones with the Arrow kernel only, so only "default" applies to
-  it too.
-- With `--base DIR` each size is measured with route "default" on this
-  checkout and on the one at DIR (its `sgspark` and `perfbench`), and
-  the table sets the two side by side.  Without it, distributed `within`
-  cells set the pinned compiled and kernel routes side by side, and every
-  other table has the one default column.
+- Sides: `points` passes `assume_left_points=True`, `kernel` leaves it
+  unset.  Both pass `broadcast_right=False`.
+- Zones: up to 1800, every (1800 // M)-th key of range(1800), so the
+  90-zone layer is the pip_tile ngon layer's density; above 1800, keys
+  0..M-1 (100,000 zones hold ~110 MB of WKB, over the 64 MiB broadcast
+  cap).
+- With `--base DIR`, each size runs the `points` side on this checkout and
+  on the one at DIR (its `sgspark` and `perfbench`), and the table shows
+  the route each ran, as logged on `sgspark.route` (`points_dist` with
+  its cogroup bucket count B).  Sizes alternate which checkout runs
+  first.
+- `--cores N` runs every cell on local[N] and adds the wall seconds and
+  the pure-Spark control (`perfbench/run.py:control_seconds`) to the
+  table, for the N -> 4N scaling check.
 
 The first call is "cold"; "warm" is the cheaper of the next two.  CPU is
 that of the driver, the Spark JVM and its Python workers, read from /proc
@@ -28,30 +30,29 @@ that of the driver, the Spark JVM and its Python workers, read from /proc
 output (pair count + XOR checksum), and both sides of a row must give
 the same.
 
-    python tools/pip_route.py                     # all cells -> markdown
-    python tools/pip_route.py 64000x900 128000x1800   # chosen sizes
-    python tools/pip_route.py --cell 8000 90 kernel   # one cell -> JSON
-    python tools/pip_route.py --broadcast --base ../parent 8000x90
-    python tools/pip_route.py --base ../parent --predicate dwithin \
-        --distance 1 64000x1800
+    python tools/pip_route.py                       # all sizes -> markdown
+    python tools/pip_route.py 64000x1800 8000x100000  # chosen sizes
+    python tools/pip_route.py --cell 8000 90 points   # one cell -> JSON
+    python tools/pip_route.py --base ../parent 8000x90
+    python tools/pip_route.py --cores 1 64000x1800
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import shutil
 import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# (docs, zones): zones are every (1800 // M)-th key of range(1800), so the
-# 90-zone layer is the pip_tile ngon layer's density
-SIZES = [(8_000, 90), (64_000, 90), (64_000, 450), (64_000, 900),
-         (64_000, 1800), (256_000, 1800)]
-ROUTES = {"compiled": 0, "kernel": float("inf"), "default": None}
+SIZES = [(8_000, 90), (64_000, 90), (64_000, 1800), (256_000, 1800),
+         (8_000, 100_000)]
+SIDES = {"points": True, "kernel": None}  # -> assume_left_points
 
 
 def point_frame(n_docs: int):
@@ -71,127 +72,138 @@ def point_frame(n_docs: int):
 
 
 def zone_frame(n_zones: int):
-    """Zone frame (pandas) plus the zone bbox stats the size rule
-    reads."""
+    """Zone frame (pandas) of n_zones ngon64 zones."""
     import numpy as np
     import pandas as pd
     from sgspark.geom.wkb import from_wkt, to_wkb
     from sgspark.synth import zone_ngon_wkt, zone_params
 
-    keys = np.arange(0, 1800, 1800 // n_zones, dtype=np.int64)
+    keys = np.arange(0, 1800, 1800 // n_zones, dtype=np.int64) \
+        if n_zones <= 1800 else np.arange(n_zones, dtype=np.int64)
     cx, cy, r = zone_params(keys)
     ga = from_wkt([zone_ngon_wkt(a, b, c) for a, b, c in zip(cx, cy, r)])
     b = ga.bounds()
-    zones = pd.DataFrame({"zone_id": keys, "geometry": to_wkb(ga),
-                          "minx": b[:, 0], "miny": b[:, 1],
-                          "maxx": b[:, 2], "maxy": b[:, 3]})
-    st = {"wx0": b[:, 0].min(), "wx1": b[:, 2].max(),
-          "wy0": b[:, 1].min(), "wy1": b[:, 3].max(),
-          "area": float(((b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])).sum())}
-    return zones, st
+    return pd.DataFrame({"zone_id": keys, "geometry": to_wkb(ga),
+                         "minx": b[:, 0], "miny": b[:, 1],
+                         "maxx": b[:, 2], "maxy": b[:, 3]})
 
 
-def cell(n_docs: int, n_zones: int, route: str, *, broadcast: bool,
-         predicate: str, distance: float) -> dict:
+class _Routes(logging.Handler):
+    def __init__(self):
+        super().__init__()
+        self.names = []
+
+    def emit(self, record):  # points_dist also shows its bucket count
+        b = record.stats.get("buckets")
+        self.names.append(record.route + (f" (B={b})" if b else ""))
+
+
+def cell(n_docs: int, n_zones: int, side: str, cores: int | None) -> dict:
     from inputs import KEY_MULT
-    from run import configure_env, stop_session, tree_cpu_s
+    from run import configure_env, control_seconds, stop_session, tree_cpu_s
 
     work = os.path.join(REPO, ".perfbench_work",
                         f"pip_route-{os.getpid()}")
     configure_env(work, trace=False)
+    routes = _Routes()
+    log = logging.getLogger("sgspark.route")
+    log.addHandler(routes)
+    log.setLevel(logging.INFO)
     try:
         from pyspark.sql import functions as F
         from sgspark import joins
         from sgspark.session import get_spark
 
-        if ROUTES[route] is not None:
-            joins.PIP_COMPILED_MIN_PAIRS = ROUTES[route]
-        pts_pdf, (zones_pdf, _) = point_frame(n_docs), zone_frame(n_zones)
-        spark = get_spark("pip_route", cores=4)
+        pts_pdf, zones_pdf = point_frame(n_docs), zone_frame(n_zones)
+        spark = get_spark("pip_route", cores=cores or 4)
         spark.sparkContext.setLogLevel("ERROR")
         try:
             pts = spark.createDataFrame(pts_pdf).cache()
             pts.count()
             zones = spark.createDataFrame(zones_pdf)
-            dist = distance if predicate == "dwithin" else None
 
             def call():
                 out = joins.sjoin_pairs(
-                    pts, zones, predicate, left_id="doc_index",
-                    right_id="zone_id", distance=dist,
-                    broadcast_right=None if broadcast else False,
-                    assume_left_points=True)
+                    pts, zones, "within", left_id="doc_index",
+                    right_id="zone_id", broadcast_right=False,
+                    assume_left_points=SIDES[side])
                 r = out.agg(F.count("*"), F.expr(
                     f"coalesce(bit_xor(doc_index * {KEY_MULT} + zone_id),"
                     f" 0)")).first()
                 return int(r[0]), int(r[1])
 
-            cpu, res = [], set()
+            cpu, wall, res = [], [], set()
             for _ in range(3):
-                c0 = tree_cpu_s()
+                c0, t0 = tree_cpu_s(), time.perf_counter()
                 res.add(call())
                 cpu.append(tree_cpu_s() - c0)
+                wall.append(time.perf_counter() - t0)
+            control = control_seconds(spark) if cores else None
         finally:
             stop_session(spark)
     finally:
+        log.removeHandler(routes)
         shutil.rmtree(work, ignore_errors=True)
     assert len(res) == 1, res
     (pairs, xor), = res
-    return {"docs": n_docs, "zones": n_zones, "route": route,
-            "broadcast": broadcast, "predicate": predicate,
-            "distance": dist, "pairs": pairs, "xor": xor,
-            "cold_cpu_s": cpu[0], "warm_cpu_s": min(cpu[1:])}
+    return {"docs": n_docs, "zones": n_zones, "side": side,
+            "route": sorted(set(routes.names)), "cores": cores or 4,
+            "pairs": pairs, "xor": xor,
+            "cold_cpu_s": cpu[0], "warm_cpu_s": min(cpu[1:]),
+            "cold_wall_s": wall[0], "warm_wall_s": min(wall[1:]),
+            "control_s": control}
 
 
-def run_cell(src: str, n: int, m: int, route: str, a) -> dict:
+def run_cell(src: str, n: int, m: int, side: str, a) -> dict:
     """One cell in a fresh process on the checkout at `src`, started in
     `src`: the Python workers run `python -m`, which puts their working
     directory first on sys.path, so they import that checkout's
     `sgspark` like the driver does."""
-    cmd = [sys.executable, __file__, "--cell", str(n), str(m), route,
-           "--src", src, "--predicate", a.predicate,
-           "--distance", repr(a.distance)]
-    if a.broadcast:
-        cmd.append("--broadcast")
-    p = subprocess.run(cmd, capture_output=True, text=True, check=True,
-                       cwd=src)
+    cmd = [sys.executable, __file__, "--cell", str(n), str(m), side,
+           "--src", src]
+    if a.cores:
+        cmd += ["--cores", str(a.cores)]
+    p = subprocess.run(cmd, capture_output=True, text=True, cwd=src)
+    if p.returncode:  # the table reports the cell as failed
+        print(f"{cmd} failed:\n{p.stderr[-3000:]}", file=sys.stderr,
+              flush=True)
+        return None
     got = json.loads(p.stdout.strip().splitlines()[-1])
     print(json.dumps(got), file=sys.stderr, flush=True)
     return got
 
 
 def table(sizes, a) -> str:
-    from sgspark.joins import PIP_COMPILED_MIN_PAIRS, _pip_pairs_estimate
-    pinned = not (a.base or a.broadcast or a.predicate == "dwithin")
-    if pinned:
-        sides = {"compiled": REPO, "kernel": REPO}
-        route = {k: k for k in sides}
-        head = ("compiled cold / warm CPU-s | kernel cold / warm CPU-s | "
-                "size rule picks")
+    if a.base:
+        sides = {"base": (a.base, "points"), "change": (REPO, "points")}
     else:
-        # side by side: the base checkout's default vs this one's
-        sides = {"base": a.base, "change": REPO} if a.base \
-            else {"change": REPO}
-        route = {k: "default" for k in sides}
-        head = " | ".join(f"{k} default cold / warm CPU-s" for k in sides)
-    lines = [f"| docs × zones | pairs | estimate | {head} |",
-             "|---" * (3 + len(sides) + pinned) + "|"]
+        sides = {k: (REPO, k) for k in SIDES}
+    head = " | ".join(f"{k} route | {k} cold / warm CPU-s"
+                      + (f" | {k} cold / warm wall-s | {k} control-s"
+                         if a.cores else "") for k in sides)
+    ncols = 2 + len(sides) * (4 if a.cores else 2)
+    lines = [f"| docs × zones | pairs | {head} |", "|---" * ncols + "|"]
     for i, (n, m) in enumerate(sizes):
-        estimate = _pip_pairs_estimate(n, zone_frame(m)[1])
-        # alternate which side runs first from size to size
         order = list(sides)[::1 if i % 2 == 0 else -1]
-        got = {k: run_cell(sides[k], n, m, route[k], a) for k in order}
-        first, *rest = got.values()
+        got = {k: run_cell(sides[k][0], n, m, sides[k][1], a)
+               for k in order}
+        first, *rest = [g for g in got.values() if g]
         for o in rest:
             assert (first["pairs"], first["xor"]) == (o["pairs"], o["xor"]), \
                 (first, o)
-        cols = [f"{got[k]['cold_cpu_s']:.1f} / {got[k]['warm_cpu_s']:.1f}"
-                for k in sides]
-        if pinned:
-            cols.append("compiled" if estimate >= PIP_COMPILED_MIN_PAIRS
-                        else "kernel")
+        cols = []
+        for k in sides:
+            g = got[k]
+            if g is None:
+                cols += ["failed", "–"] + (["–", "–"] if a.cores else [])
+                continue
+            cols += [", ".join(g["route"]),
+                     f"{g['cold_cpu_s']:.1f} / {g['warm_cpu_s']:.1f}"]
+            if a.cores:
+                cols += [f"{g['cold_wall_s']:.1f} / {g['warm_wall_s']:.1f}",
+                         f"{g['control_s']:.2f}"]
         lines.append(f"| {n:,} × {m:,} | {first['pairs']:,} | "
-                     f"{estimate:,.0f} | " + " | ".join(cols) + " |")
+                     + " | ".join(cols) + " |")
     return "\n".join(lines)
 
 
@@ -199,29 +211,21 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("sizes", nargs="*", metavar="DOCSxZONES",
                    help=f"default: {' '.join(f'{n}x{m}' for n, m in SIZES)}")
-    p.add_argument("--cell", nargs=3, metavar=("DOCS", "ZONES", "ROUTE"))
-    p.add_argument("--broadcast", action="store_true",
-                   help="auto broadcast route instead of the distributed one")
-    p.add_argument("--predicate", choices=("within", "dwithin"),
-                   default="within")
-    p.add_argument("--distance", type=float, default=100.0,
-                   help="dwithin distance (default: %(default)g)")
+    p.add_argument("--cell", nargs=3, metavar=("DOCS", "ZONES", "SIDE"))
     p.add_argument("--base", metavar="DIR",
-                   help="also measure the checkout at DIR, both on the "
-                        "default route")
+                   help="run the points side on the checkout at DIR too")
+    p.add_argument("--cores", type=int,
+                   help="local[N] (default 4), with wall and control "
+                        "seconds in the table")
     p.add_argument("--src", default=REPO, help=argparse.SUPPRESS)
     a = p.parse_args(argv)
     src = os.path.abspath(a.src)
     sys.path[:0] = [src, os.path.join(src, "perfbench")]
     if a.cell:
-        n, m, route = int(a.cell[0]), int(a.cell[1]), a.cell[2]
-        if route not in ROUTES or route != "default" and (
-                a.broadcast or a.predicate == "dwithin"):
-            p.error("ROUTE must be default with --broadcast or --predicate "
-                    f"dwithin, else one of {sorted(ROUTES)}")
-        print(json.dumps(cell(n, m, route, broadcast=a.broadcast,
-                              predicate=a.predicate, distance=a.distance)),
-              flush=True)
+        n, m, side = int(a.cell[0]), int(a.cell[1]), a.cell[2]
+        if side not in SIDES:
+            p.error(f"SIDE must be one of {sorted(SIDES)}")
+        print(json.dumps(cell(n, m, side, a.cores)), flush=True)
     else:
         a.base = a.base and os.path.abspath(a.base)
         sizes = [tuple(int(v) for v in s.split("x")) for s in a.sizes]
