@@ -171,8 +171,7 @@ def plan_is_python_free(df: DataFrame) -> bool:
 def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
                          expand: float = 0.0,
                          assume_left_points: bool | None = None,
-                         right_bounds: np.ndarray | None = None,
-                         right_max_cells: float | None = None
+                         right_bounds: np.ndarray | None = None
                          ) -> DataFrame:
     """Shared candidate generator for every cell-join kernel (sjoin_pairs and
     the fused clean_overlay path): cover-cells equi-join with the bbox
@@ -195,17 +194,15 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
     `right_bounds` (n x 4 minx/miny/maxx/maxy of r0's rows) marks r0 as a
     small driver-local frame: it joins under F.broadcast, the left keeps
     its partitioning (no pin, no Exchange), and the huge-right split is
-    read from these bounds instead of a probe.  `right_max_cells`, a
-    bound on every r0 row's cover already known to the caller (the
-    route probe's widest right), does the same for a distributed right."""
+    read from these bounds instead of a probe."""
     g = float(gridsize)
     e = float(expand)
     bcast = right_bounds is not None
 
     # Each side's huge-geometry branch is planned only when that side may
     # hold an oversized row, decided per side without a job where
-    # possible: the right from `right_bounds` or `right_max_cells`, a
-    # point left from its cover bound (at most 2e/g + 2 cells per axis).
+    # possible: the right from `right_bounds`, a point left from its cover
+    # bound (at most 2e/g + 2 cells per axis).
     # Otherwise a side whose plan runs no Python gets a max-cover probe
     # (both sides in ONE tiny job, 2 rows collected); a Python-built side
     # keeps its branch, since probing it would run its kernels one more
@@ -214,7 +211,7 @@ def cell_candidate_pairs(l0: DataFrame, r0: DataFrame, gridsize: float,
     # of its own, so a probe would only add one.
     l_has_big = not (assume_left_points
                      and (2 * e / g + 2) ** 2 <= MAX_COVER_CELLS)
-    r_has_big = right_max_cells is None or right_max_cells > MAX_COVER_CELLS
+    r_has_big = True
     if bcast:
         rb = right_bounds
         ncells_r = ((np.floor((rb[:, 2] + FALSE_EASTING) / g)
@@ -407,8 +404,7 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, predicate: str = "intersects"
     expand = float(distance or 0.0) if predicate == "dwithin" else 0.0
     cand = cell_candidate_pairs(
         l0, r0, gridsize, expand=expand,
-        assume_left_points=assume_left_points, right_bounds=rb,
-        right_max_cells=facts.get("right_cover_max"))
+        assume_left_points=assume_left_points, right_bounds=rb)
     return _refine_kernel(cand, left, right, predicate, left_id=left_id,
                           right_id=right_id, distance=distance,
                           keep_distance=keep_distance,

@@ -6,11 +6,11 @@ operators `get_intersections` (duplicates.py:189-404) and
 `update_geometries` (duplicates.py:28-186).
 
 Spark plan:
-  pairs   = cell-join candidates + intersects refine      (sgspark.joins)
-  inter   = per-pair boolean kernel (mapInPandas)         -> suffixed schema
-  diff    = groupBy(left) erase-by-all-partners kernel    (applyInPandas,
-            one-hit groups skip aggregation — reference O7)
-            + anti-join pass-through of untouched lefts
+  pairs   = cell-join candidates with both WKBs           (sgspark.joins)
+  inter   = per-pair tiered boolean kernel (mapInPandas)  -> suffixed schema
+  diff    = intersects refine (mapInPandas) -> ONE grouped Arrow erase per
+            left id (one-hit groups skip the union — reference O7)
+            + left outer join: lefts without partners stay in the JVM
   others  = compositions:  identity = inter ∪ diff(df1)
                            union    = inter ∪ diff(df1) ∪ diff(df2)
                            symmetric_difference = diff(df1) ∪ diff(df2)
@@ -37,7 +37,7 @@ from .geom.clip import (clip_rings_by_rects_batch, padded_ring_areas,
                         padded_rings_have_repeats, polygon_boolean, ring_area)
 from .geom.array import MULTIPOLYGON, POLYGON, GeomArray, from_rings
 from .geom.wkb import from_wkb, single_ring_polygons_wkb, to_wkb
-from .joins import cell_candidate_pairs, sjoin_pairs
+from .joins import cell_candidate_pairs
 
 HOWS = ("intersection", "union", "identity", "symmetric_difference",
         "difference", "update")
@@ -265,129 +265,96 @@ def _is_rect(ga: GeomArray) -> tuple[np.ndarray, np.ndarray]:
     return rect_flags(ga)
 
 
-def _erase_rows(left_geoms: DataFrame, pairs: DataFrame,
-                right_geoms: DataFrame, id1: str, rid: str,
-                id1_t: str, rid_t: str) -> DataFrame:
-    """Two-phase erase with PARTNER-SET DEDUP (reference O8,
-    overlay.py:628-676):
+def _erase_one(left_wkb: bytes, partner_wkbs: list) -> bytes | None:
+    """One left minus the union of its partners (given in id order), with
+    the arithmetic of the reference's erase (overlay.py:628-676):
 
-      phase 1  pairs -> per-left sorted partner-set; each DISTINCT set's
-               union computed ONCE (groupBy(pset) applyInPandas; singleton
-               sets skip union entirely — reference O7 one-hit fast path);
-      phase 2  left rows join their set's precomputed union; a batched
-               mapInPandas does ONE difference per left row (per unique
-               (geom, union) value pair) — no per-left sequential partner
-               loop, so a left with thousands of partners is no longer a
-               single straggler task.
+      one partner     -> one polygon_boolean difference (reference O7);
+      all rectangles  -> exact rectilinear erase (rect_minus_rects, or the
+                         clipped rect union then one difference);
+      otherwise       -> union_many, through WKB, then one difference.
 
-    Returns (id1, geometry) for lefts that HAVE partners; empty results
-    (fully erased) are dropped."""
-    psets = pairs.groupBy(id1).agg(
-        F.sort_array(F.collect_set(rid)).alias("__pset"))
-    memb = (psets.select("__pset").distinct()
-            .withColumn(rid, F.explode("__pset")))
-    memb = memb.join(right_geoms, rid)
-    union_schema = f"__pset array<{rid_t}>, __ug binary"
+    Partners that union to nothing leave the left as it is (A − ∅ = A).
+    None when nothing remains."""
+    la = from_wkb([left_wkb])
+    ra = from_wkb(partner_wkbs)
+    if len(partner_wkbs) == 1:
+        return _parts_to_wkb(polygon_boolean(_parts_of(la, 0),
+                                             _parts_of(ra, 0), "difference"))
+    rect, rb = _is_rect(ra)
+    if bool(rect.all()):
+        from .geom.rectops import rect_minus_rects, rects_union_parts
+        lrect, lb = _is_rect(la)
+        if lrect[0]:
+            res = rect_minus_rects(tuple(lb[0]), rb)
+            return _parts_to_wkb(res) if res else None
+        u = rects_union_parts(tuple(la.bounds()[0]), rb)
+        return _parts_to_wkb(polygon_boolean(_parts_of(la, 0), u,
+                                             "difference"))
+    from .geom.clip import union_many
+    u = _parts_to_wkb(union_many(
+        [p for k in range(len(partner_wkbs)) for p in _parts_of(ra, k)]))
+    if u is None:
+        return left_wkb
+    return _parts_to_wkb(polygon_boolean(_parts_of(la, 0),
+                                         _parts_of(from_wkb([u]), 0),
+                                         "difference"))
 
-    def union_group(key, pdf):
-        pset = list(key[0])
-        if len(pdf) == 1:  # O7: singleton set -> partner geometry as-is
-            return pd.DataFrame({"__pset": [pset],
-                                 "__ug": [pdf["__g2"].iloc[0]]})
-        ra = from_wkb(pdf["__g2"].tolist())
-        rect, rb = _is_rect(ra)
-        if bool(rect.all()):
-            # ALL-RECT partner set: defer to the rectilinear erase in the
-            # diff kernel (exact coordinate-compression difference, no
-            # O(k^2) union) — ship the packed rects, marker 'R'
-            packed = b"R" + rb.astype("<f8").tobytes()
-            return pd.DataFrame({"__pset": [pset], "__ug": [packed]})
-        from .geom.clip import union_many
-        parts = [p for k in range(len(pdf)) for p in _parts_of(ra, k)]
-        u = union_many(parts)
-        wkb = _parts_to_wkb(u)
-        if wkb is None:
-            return pd.DataFrame({"__pset": [], "__ug": []})
-        return pd.DataFrame({"__pset": [pset], "__ug": [wkb]})
 
-    unions = memb.groupBy("__pset").applyInPandas(union_group,
-                                                  schema=union_schema)
-    todo = (left_geoms.join(psets, id1).join(unions, "__pset")
-            .select(id1, "__g1", "__ug"))
-    schema = f"{id1} {id1_t}, geometry binary"
+def _erase_rows(df1: DataFrame, df2: DataFrame, id1: str, id2: str,
+                gridsize: float, rank_col: str | None = None) -> DataFrame:
+    """df1's rows (bbox columns dropped), each geometry minus the union of
+    the df2 geometries it intersects; fully erased rows are dropped.  With
+    `rank_col` only partners of lower rank erase, a JVM predicate, so
+    Spark's struct ordering decides.
 
-    def diff_kernel(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
+    Plan: the cell join of `_intersection_rows` (bbox candidates with
+    both WKBs) -> the configured `refine_runner` (default `refine_pairs`)
+    in Arrow batches keeps the pairs that intersect -> ONE grouped Arrow
+    call per left id runs `_erase_one` on the left and its partners,
+    sorted by id -> one left outer join of df1 with the erased rows.  A
+    left with no partner never reaches the grouped call and keeps its
+    geometry through the join."""
+    import pyarrow as pa
+    from .conf import get_runner
+    from .geom.predicates import refine_pairs
+
+    lrank = [F.col(rank_col).alias("__lrank")] if rank_col else []
+    rrank = [F.col(rank_col).alias("__rrank")] if rank_col else []
+    cand = cell_candidate_pairs(
+        df1.select(F.col(id1).alias("__lid"), F.col("geometry").alias("__lg"),
+                   *lrank, *_BBOX),
+        df2.select(F.col(id2).alias("__rid"), F.col("geometry").alias("__rg"),
+                   *rrank, *_BBOX), gridsize)
+    if rank_col:
+        cand = cand.where(F.col("__lrank") > F.col("__rrank"))
+    cand = cand.select("__lid", "__lg", "__rid", "__rg")
+    refine = get_runner("refine_runner", refine_pairs)  # driver-resolved
+
+    def intersecting(batches: Iterator[pd.DataFrame]
+                     ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lcodes, lu = pd.factorize(pdf["__g1"], use_na_sentinel=False)
-            ucodes, uu = pd.factorize(pdf["__ug"], use_na_sentinel=False)
-            la = from_wkb(list(lu))
-            # 'R'-marked blobs are packed rect sets, not WKB — decode only
-            # the true geometries and remap indices
-            is_wkb = [not (isinstance(b, (bytes, bytearray))
-                           and b[:1] == b"R") for b in uu]
-            wkb_pos = np.cumsum(is_wkb) - 1
-            ua = from_wkb([b for b, w in zip(uu, is_wkb) if w])
-            li = np.asarray(lcodes, dtype=np.int64)
-            ui = np.asarray(ucodes, dtype=np.int64)
-            pair_code = li * np.int64(len(uu)) + ui
-            uniq, inv = np.unique(pair_code, return_inverse=True)
-            lrect_u, lb_u = _is_rect(la)
-            lbounds = la.bounds()
-            wkb_u: list[bytes | None] = []
-            for code in uniq.tolist():
-                lg, ug = code // len(uu), code % len(uu)
-                blob = uu[ug]
-                if isinstance(blob, (bytes, bytearray)) and blob[:1] == b"R":
-                    # packed all-rect partner set -> exact rectilinear erase
-                    from .geom.rectops import rect_minus_rects, \
-                        rects_union_parts
-                    rects = np.frombuffer(blob, dtype="<f8",
-                                          offset=1).reshape(-1, 4)
-                    if lrect_u[lg]:
-                        res = rect_minus_rects(tuple(lb_u[lg]), rects)
-                        wkb_u.append(_parts_to_wkb(res) if res else None)
-                    else:
-                        u_parts = rects_union_parts(tuple(lbounds[lg]), rects)
-                        res = polygon_boolean(_parts_of(la, lg), u_parts,
-                                              "difference")
-                        wkb_u.append(_parts_to_wkb(res))
-                    continue
-                res = polygon_boolean(_parts_of(la, lg),
-                                      _parts_of(ua, int(wkb_pos[ug])),
-                                      "difference")
-                wkb_u.append(_parts_to_wkb(res))
-            wkbs = [wkb_u[v] for v in inv]
-            keep = [k for k, w in enumerate(wkbs) if w is not None]
-            if keep:
-                yield pd.DataFrame({
-                    id1: pdf[id1].to_numpy()[keep],
-                    "geometry": [wkbs[k] for k in keep]})
+            lc, lu = pd.factorize(pdf["__lg"], use_na_sentinel=False)
+            rc, ru = pd.factorize(pdf["__rg"], use_na_sentinel=False)
+            yield pdf[refine(from_wkb(list(lu)), from_wkb(list(ru)),
+                             lc, rc, "intersects")]
 
-    return todo.mapInPandas(diff_kernel, schema=schema)
+    def erase(t: pa.Table) -> pa.Table:
+        t = t.sort_by("__rid")
+        return pa.table({"__eid": t.column("__lid").slice(0, 1),
+                         "__eg": pa.array([_erase_one(
+                             t.column("__lg")[0].as_py(),
+                             t.column("__rg").to_pylist())], pa.binary())})
 
-
-def _difference_rows(df1, df2, id1, id2, gridsize) -> DataFrame:
-    """(id1, geometry) = each df1 geometry minus the union of its partners,
-    plus untouched df1 rows.  Partner unions are deduped across identical
-    partner sets (O8) and the per-left erase is batched (see _erase_rows)."""
-    pairs = sjoin_pairs(df1, df2, "intersects", left_id=id1, right_id=id2,
-                        gridsize=gridsize, assume_left_points=False)
-    rid = pairs.columns[1]
-    id1_t = [f.dataType.simpleString() for f in df1.schema.fields
-             if f.name == id1][0]
-    rid_t = [f.dataType.simpleString() for f in df2.schema.fields
-             if f.name == id2][0]
-    left_geoms = df1.select(F.col(id1), F.col("geometry").alias("__g1"))
-    right_geoms = df2.select(F.col(id2).alias(rid),
-                             F.col("geometry").alias("__g2"))
-    erased = _erase_rows(left_geoms, pairs, right_geoms, id1, rid,
-                         id1_t, rid_t)
-    untouched = df1.join(pairs.select(id1).distinct(), id1, "left_anti") \
-                   .select(id1, "geometry")
-    return erased.unionByName(untouched)
+    id1_t = df1.schema[id1].dataType.simpleString()
+    erased = cand.mapInPandas(intersecting, cand.schema) \
+        .groupBy("__lid").applyInArrow(erase, f"__eid {id1_t}, __eg binary")
+    cols = [c for c in df1.columns if c not in (id1, "geometry", *_BBOX)]
+    return df1.join(erased, df1[id1] == erased["__eid"], "left") \
+        .where(F.col("__eid").isNull() | F.col("__eg").isNotNull()) \
+        .select(id1, *cols, F.coalesce("__eg", "geometry").alias("geometry"))
 
 
 def _suffix_attrs(df: DataFrame, id_col: str, collided: set[str],
@@ -417,44 +384,42 @@ def clean_overlay(df1: DataFrame, df2: DataFrame, how: str = "intersection", *,
     collided = set(a1) & set(a2)
 
     if how == "difference":
-        geo = _difference_rows(df1, df2, id1, id2, gridsize)
-        return df1.drop("geometry", *_BBOX).join(geo, id1, "inner")
+        return _erase_rows(df1, df2, id1, id2, gridsize)
 
     d1s = _suffix_attrs(df1.drop("geometry", *_BBOX), id1, collided, lsuffix)
     d2s = _suffix_attrs(df2.drop("geometry", *_BBOX), id2, collided, rsuffix)
 
-    def with_attrs_inter(rows):
+    def inter():
+        rows = _intersection_rows(df1, df2, id1, id2, gridsize)
         rid = rows.columns[1]
         out = rows.join(d1s, id1, "inner")
         d2j = d2s.withColumnRenamed(id2, rid) if rid != id2 else d2s
         return out.join(d2j, rid, "inner")
 
-    def with_attrs_left(rows):
-        return rows.join(d1s, id1, "inner")
-
-    def with_attrs_right(rows):
-        return rows.join(d2s, id2, "inner")
+    def diff(a, b, ida, idb, suffix):
+        # (id, geometry, suffixed attributes): the order symmetric
+        # difference's output takes from its first side
+        d = _suffix_attrs(_erase_rows(a, b, ida, idb, gridsize), ida,
+                          collided, suffix)
+        return d.select(ida, "geometry",
+                        *[c for c in d.columns if c not in (ida, "geometry")])
 
     if how == "intersection":
-        return with_attrs_inter(_intersection_rows(df1, df2, id1, id2, gridsize))
+        return inter()
     if how == "identity":
-        inter = with_attrs_inter(_intersection_rows(df1, df2, id1, id2, gridsize))
-        diff = with_attrs_left(_difference_rows(df1, df2, id1, id2, gridsize))
-        return inter.unionByName(diff, allowMissingColumns=True)
+        return inter().unionByName(diff(df1, df2, id1, id2, lsuffix),
+                                   allowMissingColumns=True)
     if how == "symmetric_difference":
-        dl = with_attrs_left(_difference_rows(df1, df2, id1, id2, gridsize))
-        dr = with_attrs_right(_difference_rows(df2, df1, id2, id1, gridsize))
-        return dl.unionByName(dr, allowMissingColumns=True)
+        return diff(df1, df2, id1, id2, lsuffix).unionByName(
+            diff(df2, df1, id2, id1, rsuffix), allowMissingColumns=True)
     if how == "union":
-        inter = with_attrs_inter(_intersection_rows(df1, df2, id1, id2, gridsize))
-        dl = with_attrs_left(_difference_rows(df1, df2, id1, id2, gridsize))
-        dr = with_attrs_right(_difference_rows(df2, df1, id2, id1, gridsize))
-        return inter.unionByName(dl, allowMissingColumns=True) \
-                    .unionByName(dr, allowMissingColumns=True)
+        return inter().unionByName(diff(df1, df2, id1, id2, lsuffix),
+                                   allowMissingColumns=True) \
+                      .unionByName(diff(df2, df1, id2, id1, rsuffix),
+                                   allowMissingColumns=True)
     # update (overlay.py:371-391): df1 erased by df2, then all of df2
-    diff = df1.drop("geometry", *_BBOX).join(
-        _difference_rows(df1, df2, id1, id2, gridsize), id1, "inner")
-    return diff.unionByName(df2.drop(*_BBOX), allowMissingColumns=True)
+    return _erase_rows(df1, df2, id1, id2, gridsize).unionByName(
+        df2.drop(*_BBOX), allowMissingColumns=True)
 
 
 def get_intersections(df: DataFrame, *, id_col: str,
@@ -472,25 +437,6 @@ def update_geometries(df: DataFrame, *, id_col: str, rank_col: str,
     union of all higher-priority (lower rank) intersecting geometries.
     Rank must be an explicit column — Spark has no row order (SURVEY §7.4.2);
     sort_large_first = rank by area desc before calling."""
-    pairs = sjoin_pairs(df, df, "intersects", left_id=id_col, right_id=id_col,
-                        gridsize=gridsize, assume_left_points=False)
-    rid = pairs.columns[1]
-    ranks = df.select(F.col(id_col), F.col(rank_col))
-    pr = pairs.join(ranks.withColumnRenamed(rank_col, "__lrank"), id_col) \
-              .join(ranks.withColumnRenamed(id_col, rid)
-                    .withColumnRenamed(rank_col, "__rrank"), rid) \
-              .where(F.col("__lrank") > F.col("__rrank"))
     # erase-by-union is order-free (A − B1 − B2 = A − (B1 ∪ B2)), so the
-    # rank-filtered pairs feed the same O8 two-phase erase as difference
-    id_t = [f.dataType.simpleString() for f in df.schema.fields
-            if f.name == id_col][0]
-    left_geoms = df.select(F.col(id_col), F.col("geometry").alias("__g1"))
-    right_geoms = df.select(F.col(id_col).alias(rid),
-                            F.col("geometry").alias("__g2"))
-    rank_pairs = pr.select(id_col, rid)
-    erased = _erase_rows(left_geoms, rank_pairs, right_geoms, id_col, rid,
-                         id_t, id_t)
-    untouched = df.join(rank_pairs.select(id_col).distinct(), id_col,
-                        "left_anti").select(id_col, "geometry")
-    geo = erased.unionByName(untouched)
-    return df.drop("geometry", *_BBOX).join(geo, id_col, "inner")
+    # rank-filtered partners feed the same grouped erase as difference
+    return _erase_rows(df, df, id_col, id_col, gridsize, rank_col=rank_col)

@@ -3,8 +3,7 @@
 1. cell-key encoding: numpy kernels vs Spark-SQL twins must agree for
    NEGATIVE y (southern data) — previously (cx<<25)|cy vs cx*2^25+cy
    silently dropped join pairs.
-2. polygon_boolean difference: a subtrahend hole must re-add only the
-   CURRENT residual, not resurrect regions erased by earlier B parts.
+2. (moved to test_overlay.py: difference holes)
 3. connected_components: pointer jumping converges on a long chain in
    O(log n) rounds and raises (not silently splits) on exhaustion.
 4. buffer: polygons with interior rings raise instead of silently
@@ -19,7 +18,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from sgspark.cells import point_cell_key, cover_cell_keys, neighbor_keys
-from sgspark.geom.clip import polygon_boolean, ring_area
 from sgspark.geom.buffer import buffer, convex_ring_erode
 from sgspark.geom.array import from_rings, POLYGON
 from sgspark.clusters import connected_components
@@ -29,10 +27,6 @@ from sgspark.io import wkt_to_wkb_df
 
 def rect(x0, y0, x1, y1):
     return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], float)
-
-
-def total_area(parts):
-    return sum(ring_area(r) for p in parts for r in p)
 
 
 # ------------------------------------------------------------------ 1. keys
@@ -88,20 +82,6 @@ def test_sjoin_negative_y(spark):
                                right_id="zid", gridsize=1000.0,
                                broadcast_right=True).collect())
     assert got_b == [(0, 0), (1, 1), (2, 0)]
-
-
-# ------------------------------------------------------- 2. difference holes
-def test_difference_hole_not_resurrected():
-    A = [[rect(0, 0, 10, 10)]]
-    P1 = [rect(0, 0, 6, 10)]
-    hole = rect(5, 4, 7, 6)[::-1]  # CW
-    P2 = [rect(4, 0, 10, 10), hole]
-    res = polygon_boolean(A, [P1, P2], "difference")
-    # only the part of the hole NOT already erased by P1 comes back
-    assert total_area(res) == pytest.approx(2.0, abs=1e-6)
-    # single hole-bearing subtrahend still correct
-    res2 = polygon_boolean(A, [P2], "difference")
-    assert total_area(res2) == pytest.approx(100 - 60 + 4, abs=1e-6)
 
 
 # --------------------------------------------------------------- 3. CC chain

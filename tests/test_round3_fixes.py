@@ -4,9 +4,9 @@
    sub-unit spacing no longer collides ids and cross-attaches results.
 2. tier-2 / convex-clip pinched rings: a rect clip that splits a concave
    subject into disconnected pieces yields a valid MULTI-piece result
-   (split at repeated vertices), not one self-touching ring.
-3. clean_overlay intersection routes huge-bbox geometries through the
-   broadcast branch (no sequence() cell-cover explosion).
+   (split at repeated vertices), not one self-touching ring (the Spark
+   end-to-end case is in test_overlay.py).
+3. (moved to test_overlay.py: overlay huge-bbox routing)
 4. get_route with directed=True reports the cost of the direction
    actually traveled, not min(FT, TF).
 5. read_geopandas partition_grid accepts a max-extent margin so wide
@@ -20,11 +20,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sgspark.geom import from_wkb
 from sgspark.geom.clip import (polygon_boolean, ring_area, ring_has_repeats,
                                split_pinched_ring)
 from sgspark.io import wkt_to_wkb_df
-from sgspark.overlay import clean_overlay
 
 
 def rect(x0, y0, x1, y1):
@@ -82,44 +80,6 @@ def test_split_pinched_ring_helper_roundtrip():
     assert total == pytest.approx(abs(ring_area(pinched)), abs=1e-12)
 
 
-def test_overlay_concave_split_is_multipart(spark):
-    # Spark end-to-end: concave U x rect -> valid 2-part result, exact area
-    df1 = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
-        "aid": [0],
-        "geometry_wkt": ["POLYGON ((0 0, 9 0, 9 6, 6 6, 6 2, 3 2, 3 6, "
-                         "0 6, 0 0))"]})))
-    df2 = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
-        "bid": [0],
-        "geometry_wkt": [sq_wkt(-1, 3, 12)]})))  # y in [3, 15): cuts the U
-    out = clean_overlay(df1, df2, "intersection",
-                        id1="aid", id2="bid").toPandas()
-    assert len(out) == 1
-    ga = from_wkb(list(out.geometry))
-    assert ga.area()[0] == pytest.approx(18.0)
-    assert int(ga.num_parts()[0]) == 2  # two disconnected prongs
-    # each piece is a simple ring (no repeated vertices)
-    for r in ga.rings_of_geom(0):
-        assert not ring_has_repeats(r)
-
-
-# ------------------------------------------- 3. overlay huge-bbox routing
-def test_overlay_intersection_huge_bbox(spark):
-    # one country-sized polygon (cover would be ~10^8 cells at gridsize 5)
-    # x a small layer: must route through the broadcast branch and still
-    # produce the exact intersection
-    df1 = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
-        "aid": [0],
-        "geometry_wkt": [sq_wkt(-50000, -50000, 100000)]})))
-    df2 = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
-        "bid": [0, 1],
-        "geometry_wkt": [sq_wkt(0, 0, 10), sq_wkt(70000, 0, 10)]})))
-    out = clean_overlay(df1, df2, "intersection", id1="aid", id2="bid",
-                        gridsize=5.0).toPandas()
-    # only b0 overlaps; b1 is outside the big square
-    assert len(out) == 1
-    assert from_wkb(list(out.geometry)).area()[0] == pytest.approx(100.0)
-
-
 # ------------------------------------------------- 4. directed route costs
 def test_get_route_directed_asymmetric_cost(spark):
     from sgspark.network import get_route
@@ -165,57 +125,3 @@ def test_partition_grid_margin(spark, tmp_path):
     got1 = read_geopandas(spark, path, mask=(150, 0, 160, 60),
                           partition_grid=("band", 100, 200)).toPandas()
     assert set(got1.gid) == {0, 1}
-
-
-# --------------------------------------------- tier 2b: convex x convex
-def test_overlay_convex_nonrect_tier(spark):
-    """Octagon x hexagon layers exercise the batched convex x convex
-    half-plane tier; differential oracle = the scalar polygon_boolean on
-    the same WKB pairs."""
-    import itertools
-    from sgspark.geom.clip import polygon_boolean
-    from sgspark.geom.wkb import from_wkb as _fw
-
-    def ngon_wkt(cx, cy, r, n, rot):
-        pts = [(cx + r * np.cos(rot + 2 * np.pi * i / n),
-                cy + r * np.sin(rot + 2 * np.pi * i / n)) for i in range(n)]
-        pts.append(pts[0])
-        return "POLYGON ((" + ", ".join(f"{x:.6f} {y:.6f}"
-                                        for x, y in pts) + "))"
-
-    a_rows = [(i, ngon_wkt(i * 7.0, 0.0, 5.0, 8, 0.1)) for i in range(6)]
-    b_rows = [(j, ngon_wkt(j * 7.0 + 3.0, 1.5, 4.0, 6, 0.4))
-              for j in range(6)]
-    df1 = wkt_to_wkb_df(spark.createDataFrame(
-        pd.DataFrame(a_rows, columns=["aid", "geometry_wkt"])))
-    df2 = wkt_to_wkb_df(spark.createDataFrame(
-        pd.DataFrame(b_rows, columns=["bid", "geometry_wkt"])))
-    out = clean_overlay(df1, df2, "intersection", id1="aid", id2="bid",
-                        gridsize=10.0).toPandas()
-    got = {(r.aid, r.bid): from_wkb([r.geometry]).area()[0]
-           for r in out.itertuples()}
-    # scalar differential oracle over every pair
-    ga = _fw([r[1] for r in
-              wkt_to_wkb_df(spark.createDataFrame(
-                  pd.DataFrame(a_rows, columns=["aid", "geometry_wkt"])))
-              .orderBy("aid").select("aid", "geometry").collect()])
-    gb = _fw([r[1] for r in
-              wkt_to_wkb_df(spark.createDataFrame(
-                  pd.DataFrame(b_rows, columns=["bid", "geometry_wkt"])))
-              .orderBy("bid").select("bid", "geometry").collect()])
-    from sgspark.geom.clip import ring_area as _ra
-    n_hits = 0
-    for i, j in itertools.product(range(6), range(6)):
-        pa = [ga.coords[ga.ring_offsets[k]:ga.ring_offsets[k + 1]]
-              for k in range(ga.part_offsets[ga.geom_offsets[i]],
-                             ga.part_offsets[ga.geom_offsets[i] + 1])]
-        pb = [gb.coords[gb.ring_offsets[k]:gb.ring_offsets[k + 1]]
-              for k in range(gb.part_offsets[gb.geom_offsets[j]],
-                             gb.part_offsets[gb.geom_offsets[j] + 1])]
-        res = polygon_boolean([pa], [pb], "intersection")
-        area = sum(_ra(r[0]) for r in res)
-        if area > 1e-9:
-            n_hits += 1
-            assert (i, j) in got, (i, j)
-            assert got[(i, j)] == pytest.approx(area, rel=1e-9)
-    assert n_hits == len(got) and n_hits > 0

@@ -198,20 +198,6 @@ def _part_area(p):
     return abs(ring_area(p[0])) - sum(abs(ring_area(r)) for r in p[1:])
 
 
-def test_difference_part_nested_in_hole_is_noop():
-    from sgspark.geom.clip import polygon_boolean
-    bbox = [np.array([[-51., -51.], [556, -51], [556, 556], [-51, 556],
-                      [-51, -51]])]
-    frame = [np.array([[-50., -50.], [555, -50], [555, 555], [-50, 555],
-                       [-50, -50]]),
-             np.array([[-0.5, -0.5], [504.5, -0.5], [504.5, 504.5],
-                       [-0.5, 504.5], [-0.5, -0.5]])]
-    tile = [np.array([[0., 0.], [100, 0], [100, 100], [0, 100], [0, 0]])]
-    res = polygon_boolean([bbox], [frame, tile], "difference")
-    tot = sum(_part_area(p) for p in res)
-    assert tot == (607 * 607 - 605 * 605) + (505 * 505 - 100 * 100)
-
-
 def test_union_keeps_part_nested_in_hole_separate():
     from sgspark.geom.clip import union_many
     frame = [np.array([[-50., -50.], [555, -50], [555, 555], [-50, 555],
@@ -224,23 +210,6 @@ def test_union_keeps_part_nested_in_hole_separate():
     res = union_many([frame, t0, t1])
     assert len(res) == 3
     assert sum(_part_area(p) for p in res) == 111000 + 20000
-
-
-def test_union_gap_fills_hole_rim_exact():
-    """A gap polygon whose exterior IS the partner's hole rim (with its own
-    tile holes) must merge exactly: union holes = the tiles."""
-    from sgspark.geom.clip import union_many
-    H = np.array([[-0.5, -0.5], [504.5, -0.5], [504.5, 504.5],
-                  [-0.5, 504.5], [-0.5, -0.5]])
-    frame = [np.array([[-50., -50.], [555, -50], [555, 555], [-50, 555],
-                       [-50, -50]]), H]
-    t0 = np.array([[0., 0.], [100, 0], [100, 100], [0, 100], [0, 0]])
-    t1 = np.array([[101., 0.], [201, 0], [201, 100], [101, 100], [101, 0]])
-    gap = [H, t0[::-1], t1[::-1]]
-    res = union_many([frame, gap])
-    assert len(res) == 1
-    assert _part_area(res[0]) == 111000 + (505 * 505 - 20000)
-    assert len(res[0]) == 3  # shell + the two tile holes, exactly
 
 
 def test_ring_boolean_nested_fast_paths_exact():

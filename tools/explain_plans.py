@@ -138,6 +138,17 @@ def main():
                      "refine pass, no geometry re-joins",
                      cap(inter)))
 
+    # overlay difference: the same cell join, an Arrow refine, ONE grouped
+    # Arrow erase per left id, and one left outer join back to df1
+    from sgspark.overlay import clean_overlay
+    diff = clean_overlay(a, b, "difference", id1="aid", id2="bid")
+    sections.append(("overlay difference — grouped erase: cover-cell "
+                     "equi-join (JVM, bbox join filter) -> MapInPandas "
+                     "intersects refine -> ONE FlatMapGroupsInArrow per "
+                     "left id (erase by the partners' union) -> left outer "
+                     "join keeps lefts without partners in the JVM",
+                     cap(diff)))
+
     # kNN first block round: explode + equi-join + window, all JVM
     from sgspark.knn import get_k_nearest_neighbors
     p = pts.selectExpr("doc_index AS doc_id", "minx AS x", "miny AS y")
