@@ -118,21 +118,32 @@ def _collect_bounded(df: DataFrame, max_bytes: int) -> list | None:
          this replaced a toLocalIterator stream — per-partition job
          latency made every broadcast probe on a small checkpointed
          layer cost ~1.5s vs ~0.1s for agg+collect; driver memory never
-         sees a row of an over-cap frame either way.)"""
+         sees a row of an over-cap frame either way.)
+    A right built by Python kernels is persisted between the two jobs so
+    they run only once; a Python-free right is re-scanned instead, which
+    saves the cache's own job."""
     est = plan_size_bytes(df)
     if est is not None and est > 4 * max_bytes:
         return None
-    from pyspark.storagelevel import StorageLevel
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    src = df
+    cached = not plan_is_python_free(df)
+    if cached:
+        from pyspark.storagelevel import StorageLevel
+        src.persist(StorageLevel.MEMORY_AND_DISK)
+        # a new Dataset: `src`'s own plan was optimized by the probes
+        # above, before the cache existed, so collecting it would run its
+        # kernels again
+        df = src.select("*")
     try:
         total = df.agg(F.sum(
             F.coalesce(F.length(F.col("geometry")), F.lit(0))
             + F.lit(48))).first()[0]
         if int(total or 0) > max_bytes:
             return None
-        return df.collect()  # reads the persisted blocks, no recompute
+        return df.collect()
     finally:
-        df.unpersist()
+        if cached:
+            src.unpersist()
 
 
 _PY_PLAN_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "PythonMapInArrow",

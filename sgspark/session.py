@@ -12,13 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-# HotSpot's tier-4 (C2) thresholds raised 10x: Spark's planner runs a long,
-# flat profile of lukewarm methods that C1 code serves well, and compiling
-# them with C2 cost over a third of a warm pass's CPU; hot data loops still
-# cross these thresholds within milliseconds (ARCHITECTURE.md, BENCH/JIT.md)
-JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=50000 "
-               "-XX:Tier4CompileThreshold=150000 "
-               "-XX:Tier4BackEdgeThreshold=400000")
+# C1 only in the driver JVM: Spark's planner runs a long, flat profile of
+# lukewarm methods, and C2 compiling them cost more CPU per pass than it
+# saved; the price is C1-compiled data loops for calls of millions of
+# pairs on a local[N] master (ARCHITECTURE.md, BENCH/JIT.md)
+JIT_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
 def get_spark(app: str = "sgspark", cores: int | None = None,
@@ -57,7 +55,7 @@ def get_spark(app: str = "sgspark", cores: int | None = None,
         # defaultJavaOptions, not extraJavaOptions: Spark puts them first
         # on the JVM command line and SGSPARK_EXTRA_CONF users set
         # extraJavaOptions, which would otherwise overwrite them.  Driver
-        # only: the planner runs there; executor JVMs keep stock thresholds
+        # only: the planner runs there; executor JVMs keep stock tiering
         .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -94,6 +94,76 @@ def test_coverage_clean_pipeline(spark):
     assert total_area(inter) == pytest.approx(0.0, abs=1e-6)
 
 
+def test_coverage_clean_partitioning_invariant(spark, tmp_path):
+    """The correctness gate's coverage fixture (25 tiles at pitch 101, a
+    hole-bearing frame and a half-offset overlapper; tolerance 3,
+    gridsize 300) cleans to the same pids and the same geometries, as
+    point sets, whatever the input's partitioning or row order.  The
+    frame absorbs the whole thin-gap network under every layout: its ring
+    605^2 - 505^2 plus the hole minus tiles minus the overlapper's 199.
+    (The frame's WKB is not byte-identical across layouts: the order of
+    its holes and where a ring starts vary.)"""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from sgspark.cleaning import coverage_clean
+    from sgspark.geom.buffer import _parts_of
+    from sgspark.geom.clip import ring_area
+    from sgspark.geom.wkb import from_wkt, to_wkb
+
+    def table(pids, wkts):
+        ga = from_wkt(wkts)
+        b = ga.bounds()
+        return pa.table({"pid": pa.array(pids, pa.int64()),
+                         "geometry": pa.array(to_wkb(ga), pa.binary()),
+                         "minx": b[:, 0], "miny": b[:, 1],
+                         "maxx": b[:, 2], "maxy": b[:, 3]})
+
+    t = np.arange(25)
+    pq.write_table(table(t, [poly_wkt(x, y, x + 100, y + 100) for x, y in
+                             zip((t % 5) * 101, (t // 5) * 101)]),
+                   tmp_path / "part-0.parquet")
+    pq.write_table(table([1000, 1001], [
+        "POLYGON ((-50 -50, 555 -50, 555 555, -50 555, -50 -50), "
+        "(-0.5 -0.5, -0.5 504.5, 504.5 504.5, 504.5 -0.5, -0.5 -0.5))",
+        poly_wkt(50.5, 49.5, 150.5, 149.5)]), tmp_path / "part-1.parquet")
+    cov = spark.read.parquet(str(tmp_path))
+    assert cov.rdd.getNumPartitions() == 2
+    layouts = {"two files": cov, "coalesce(1)": cov.coalesce(1),
+               "repartition(8)": cov.repartition(8),
+               "repartition(3, pid)": cov.repartition(3, "pid"),
+               "reversed": cov.orderBy(F.desc("pid"))}
+    got = {name: dict(coverage_clean(df, 3.0, id_col="pid",
+                                     gridsize=300.0)
+                      .select("pid", "geometry").collect())
+           for name, df in layouts.items()}
+    want = got.pop("two files")
+
+    def ring(r):
+        """A ring as a tuple: no closing vertex, no collinear vertex,
+        counter-clockwise, starting at its smallest vertex."""
+        r = [tuple(v) for v in r[:-1]]
+        r = [v for i, v in enumerate(r) if
+             (v[0] - r[i - 1][0]) * (r[(i + 1) % len(r)][1] - v[1])
+             != (v[1] - r[i - 1][1]) * (r[(i + 1) % len(r)][0] - v[0])]
+        if ring_area(np.array(r + r[:1])) < 0:
+            r = r[::-1]
+        i = r.index(min(r))
+        return tuple(r[i:] + r[:i])
+
+    def canon(wkb):
+        return sorted((ring(p[0]), sorted(map(ring, p[1:])))
+                      for p in _parts_of(from_wkb([wkb]), 0))
+
+    for name, rows in got.items():
+        assert sorted(rows) == sorted(want), name
+        for pid, g in rows.items():
+            assert canon(g) == canon(want[pid]), (name, pid)
+    area = dict(zip(want, from_wkb(list(want.values())).area()))
+    assert area[1000] == pytest.approx(
+        605 ** 2 - 505 ** 2 + 505 ** 2 - 25 * 100 ** 2 - 199, abs=1e-6)
+    assert area[1001] == pytest.approx(199, abs=1e-6)
+
+
 # ------------------------------------------------------------------ routes
 @pytest.fixture()
 def road_graph(spark):

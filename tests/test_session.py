@@ -1,6 +1,6 @@
 """Session set-up: the worker daemon's zip-directory guard
 (sgspark/_pydaemon.py) and the conf in `get_spark` that installs it, and
-the driver JVM's raised C2 thresholds (`session.JIT_OPTIONS`)."""
+the driver JVM's C1-only JIT (`session.JIT_OPTIONS`)."""
 
 import importlib.util
 import os
@@ -74,28 +74,29 @@ def test_workers_run_the_guard(spark):
         assert len(files) == 1 and files.pop().endswith("_pydaemon.py")
 
 
-def _tier4_invocation_threshold(spark) -> str:
+def _vm_option(spark, name: str) -> str:
+    """The driver JVM's value of HotSpot option `name`."""
     jvm = spark.sparkContext._jvm
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName(
             "com.sun.management.HotSpotDiagnosticMXBean"))
-    return bean.getVMOption("Tier4InvocationThreshold").getValue()
+    return bean.getVMOption(name).getValue()
 
 
-def test_driver_jvm_defers_c2(spark):
-    assert _tier4_invocation_threshold(spark) == "50000"
+def test_driver_jvm_is_c1_only(spark):
+    assert _vm_option(spark, "TieredStopAtLevel") == "1"
 
 
-def test_extra_java_options_keep_the_c2_thresholds(tmp_path):
+def test_extra_java_options_keep_c1_only(tmp_path):
     """A session whose SGSPARK_EXTRA_CONF sets
-    spark.driver.extraJavaOptions (as perfbench/run.py does) keeps the
-    thresholds, which get_spark sets under defaultJavaOptions."""
+    spark.driver.extraJavaOptions (as perfbench/run.py does) stays C1
+    only: get_spark sets the flag under defaultJavaOptions."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = textwrap.dedent("""
         from sgspark.session import get_spark
-        from test_session import _tier4_invocation_threshold
-        spark = get_spark("c2-probe", cores=1)
-        print("TIER4", _tier4_invocation_threshold(spark))
+        from test_session import _vm_option
+        spark = get_spark("jit-probe", cores=1)
+        print("TIER", _vm_option(spark, "TieredStopAtLevel"))
         spark.stop()
     """)
     env = dict(os.environ,
@@ -107,4 +108,4 @@ def test_extra_java_options_keep_the_c2_thresholds(tmp_path):
     out = subprocess.run([sys.executable, "-c", script], env=env,
                          cwd=tmp_path, capture_output=True, text=True,
                          timeout=300)
-    assert "TIER4 50000" in out.stdout, out.stderr[-2000:]
+    assert "TIER 1" in out.stdout, out.stderr[-2000:]

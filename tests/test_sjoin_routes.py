@@ -367,3 +367,37 @@ def test_declines_on_mixed_or_huge_rights(spark):
     r = pip_route(pts, big, gridsize=1.0)
     assert r.name == "kernel_dist"
     assert any("covers over" in w for w in r.reasons)
+
+
+def _probe(spark, right):
+    """`_collect_bounded`'s rows and the Spark jobs it ran."""
+    sc, group = spark.sparkContext, f"collect_bounded-{id(right)}"
+    sc.setJobGroup(group, "broadcast probe")
+    try:
+        rows = J._collect_bounded(right, J.BROADCAST_RIGHT_MAX_BYTES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_collect_bounded_caches_only_python_rights(spark, tmp_path):
+    """The broadcast probe sums the right's WKB bytes, then collects it.
+    A Python-free right (parquet) is scanned twice rather than cached,
+    which would cost a job of its own; a right built by a Python kernel
+    is cached, so the kernel runs once."""
+    zones = zones_df(spark)
+    zones.write.parquet(str(tmp_path / "zones"))
+    rows, jobs = _probe(spark, spark.read.parquet(str(tmp_path / "zones")))
+    assert sorted(r.zid for r in rows) == list(range(len(POLYS)))
+    assert jobs == 3
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def kernel(batches):
+        for pdf in batches:
+            calls.add(len(pdf))
+            yield pdf
+
+    rows, _ = _probe(spark, zones.mapInPandas(kernel, zones.schema))
+    assert sorted(r.zid for r in rows) == list(range(len(POLYS)))
+    assert calls.value == len(POLYS)
