@@ -9,11 +9,36 @@ warm trivial task's worker CPU (BENCH/PY_TASK_FLOOR.md).  The guard
 below re-reads an archive only when its (inode, size, mtime) changed since
 it was last read; 3.13 made the stock method lazy, so it is left alone
 there.  Workers forked from this daemon inherit the guard.
+
+Before it forks, the daemon also imports the kernel stack (`PRELOAD`) and
+calls `gc.freeze()`.  pyspark's daemon runs a full `gc.collect()` after
+every task of a reused worker.  When each worker imported pandas, pyarrow
+and the kernels for itself, that collection walked their ~73k objects
+after every task, and the imports cost each new worker 0.4-0.6 CPU-s.
+Forked after the preload, workers share those modules
+copy-on-write, and their collections skip the frozen objects
+(BENCH/PY_TASK_FLOOR.md).
 """
 
+import gc
+import importlib
 import os
 import sys
 import zipimport
+
+# The modules a warm worker held, beyond the stock daemon's, after the
+# benchmark workloads' kernels ran: pandas and pyarrow (with their own
+# dependencies; pandas_compat converts every Arrow batch), and the sgspark
+# modules the kernels' pickles reference.
+PRELOAD = (
+    "numpy", "pandas", "pyarrow", "pyarrow.pandas_compat",
+    "sgspark.geom", "sgspark.geom.array", "sgspark.geom.buffer",
+    "sgspark.geom.clip", "sgspark.geom.crs", "sgspark.geom.measure",
+    "sgspark.geom.offset", "sgspark.geom.predicates", "sgspark.geom.rectops",
+    "sgspark.geom.wkb",
+    "sgspark.cells", "sgspark.conf", "sgspark.dissolve", "sgspark.io",
+    "sgspark.joins", "sgspark.overlay",
+)
 
 
 def _stat_key(path):
@@ -51,10 +76,12 @@ def install():
 
 
 if __name__ == "__main__":
-    import importlib
-
     from pyspark.daemon import manager
 
     install()
     importlib.invalidate_caches()  # read each archive once, before the fork
+    for name in PRELOAD:
+        importlib.import_module(name)
+    gc.collect()
+    gc.freeze()  # no collection in a forked worker scans what is held now
     manager()

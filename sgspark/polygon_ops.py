@@ -51,19 +51,33 @@ def get_holes(df: DataFrame, geometry: str = "geometry") -> DataFrame:
     return map_geoms(df, holes, geometry=geometry)
 
 
+def _start_at_min(ring: np.ndarray) -> np.ndarray:
+    """The closed ring rotated to start at its lexicographically smallest
+    vertex (first of equals), orientation kept."""
+    r = ring[:-1]
+    i = int(np.lexsort((r[:, 1], r[:, 0]))[0]) if len(r) else 0
+    return ring if i == 0 else np.vstack([r[i:], r[:i + 1]])
+
+
 def _map_rings(df: DataFrame, ring_fn, geometry: str) -> DataFrame:
     """Rebuild every polygon ring by ring: ring_fn(coords, is_hole)
-    returns the new ring, or None to drop it."""
+    returns the new ring, or None to drop it.  Rings go in and come out
+    starting at their smallest vertex, and holes are sorted by it, so the
+    output bytes do not depend on where upstream operators (unions,
+    partition order) started a ring or put a hole."""
     def rebuild(ga, pdf):
         blobs = []
         for g in range(len(ga)):
             parts = []
             for p in range(ga.geom_offsets[g], ga.geom_offsets[g + 1]):
                 r0, r1 = ga.part_offsets[p], ga.part_offsets[p + 1]
-                rings = (ring_fn(ga.coords[ga.ring_offsets[r]:
-                                           ga.ring_offsets[r + 1]], r > r0)
-                         for r in range(r0, r1))
-                parts.append([c for c in rings if c is not None])
+                rings = (ring_fn(_start_at_min(
+                    ga.coords[ga.ring_offsets[r]:ga.ring_offsets[r + 1]]),
+                    r > r0) for r in range(r0, r1))
+                kept = [_start_at_min(c) for c in rings if c is not None]
+                # by smallest vertex; holes touching there, by the next
+                parts.append(kept[:1] + sorted(
+                    kept[1:], key=lambda c: c[:2].ravel().tolist()))
             kind = POLYGON if len(parts) == 1 else MULTIPOLYGON
             sub = from_rings([[parts[0]]] if kind == POLYGON else [parts],
                              [kind])

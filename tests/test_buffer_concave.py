@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 from sgspark.geom.array import POLYGON, from_rings
-from sgspark.geom.buffer import buffer
+from sgspark.geom.buffer import buffer, convex_ring_erode
 from sgspark.geom.clip import ring_area
 from sgspark.geom.offset import (_pts_in_ring, _pts_to_segments_dist,
                                  buffer_polygon, dilate_line, dilate_ring,
@@ -198,3 +198,28 @@ def test_buffdissexp_raises_no_user_warning(spark):
         warnings.simplefilter("error", UserWarning)
         out = buffdissexp(df, 0.5, by=["grp"], quad_segs=QS).toPandas()
     assert len(out) == 1
+
+
+def rect(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], float)
+
+
+def test_buffer_handles_holes():
+    """Round 2 raised on interior rings; round 3's trimmed-offset kernel
+    buffers them: the exterior dilates, the hole erodes independently."""
+    sq = rect(0, 0, 10, 10)
+    hole = rect(3, 3, 7, 7)[::-1]
+    ga = from_rings([[[sq, hole]]], [POLYGON])
+    out = buffer(ga, 1.0, quad_segs=8)
+    # exterior: 100 + 40 + discretized pi; hole erodes 4x4 -> 2x2
+    sector = 0.5 * np.sin((np.pi / 2) / 8) * 8 * 4
+    assert out.area()[0] == pytest.approx(100 + 40 + sector - 4.0)
+
+
+def test_negative_buffer_convex_exact():
+    sq = rect(0, 0, 10, 10)
+    ga = from_rings([[[sq]]], [POLYGON])
+    out = buffer(ga, -2.0)
+    assert out.area()[0] == pytest.approx(36.0)
+    # thinner than 2*dist -> empty
+    assert convex_ring_erode(rect(0, 0, 10, 3), 2.0) is None

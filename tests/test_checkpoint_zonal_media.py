@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sgspark.checkpoint import (metrics, read_result, run_checkpointed)
+from sgspark.io import wkt_to_wkb_df
 from sgspark.media import decode_and_featurize, fetch_media, media_refs
 from sgspark.zonal import raster_to_points, synth_raster_tiles, zonal_stats
 
@@ -60,7 +61,6 @@ def test_zonal_stats_matches_numpy(spark):
     tiles = synth_raster_tiles(spark, 0.0, 0.0, 3000.0, 3000.0,
                                tile_size=1000.0, res=50.0).cache()
     # rectangle zone spanning multiple tiles
-    from sgspark.io import wkt_to_wkb_df
     zones = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
         "zone_id": [0, 1],
         "geometry_wkt": [
@@ -127,3 +127,29 @@ def test_frame_sample_and_audio_windows(spark, docs500):
     aw = audio_windows(media, n_windows=4).collect()
     assert len(aw) == 4 * media.count()
     assert all(0.0 <= r.energy <= 1.0 for r in aw)
+
+
+def test_zonal_misaligned_tiles(spark):
+    """A tile larger than the zonal gridsize and not grid-aligned must still
+    contribute pixels that fall in a polygon overlapping only its far
+    corner."""
+    # one 2000x2000 tile anchored at (250, 250), res 100 -> 400 pixels
+    n = 20
+    vals = np.ones(n * n)
+    tiles = spark.createDataFrame(pd.DataFrame({
+        "tile_id": ["t0"], "x0": [250.0], "y0": [250.0], "res": [100.0],
+        "nx": [n], "ny": [n], "values": [vals.tolist()]}))
+    # polygon over the tile's FAR corner (around (2250, 2250)), far from the
+    # tile's centre cell under gridsize=1000
+    poly = pd.DataFrame({
+        "zone_id": [7],
+        "geometry_wkt": ["POLYGON ((2000 2000, 2260 2000, 2260 2260, 2000 2260, "
+                "2000 2000))"]})
+    p = wkt_to_wkb_df(spark.createDataFrame(poly))
+    got = zonal_stats(p, tiles, id_col="zone_id", gridsize=1000.0).collect()
+    assert len(got) == 1
+    # oracle: pixel centers at 250 + (i+0.5)*100 inside [2000, 2260]
+    px = 250 + (np.arange(n) + 0.5) * 100
+    inside = (px >= 2000) & (px <= 2260)
+    want = int(inside.sum()) ** 2
+    assert got[0]["count"] == want

@@ -169,3 +169,26 @@ def test_knn_checkpoint_invariance(spark):
     b = sorted(map(tuple, get_k_nearest_neighbors(
         l, r, 3, left_id="lid", right_id="rid", gridsize=80.0).collect()))
     assert a == b
+
+
+# ------------------------------------------- connected components chain
+# pointer jumping converges on a long chain in O(log n) rounds and raises
+# (not silently splits) on exhaustion
+def test_cc_chain_pointer_jumping(spark):
+    n = 200
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": range(n - 1), "dst": range(1, n)}))
+    verts = spark.createDataFrame(pd.DataFrame({"id": range(n)}))
+    # plain propagation needs ~n rounds; pointer jumping must do it well
+    # under 20
+    labels = connected_components(edges, verts, max_iter=20).toPandas()
+    assert (labels["cluster"] == 0).all()
+
+
+def test_cc_raises_on_exhaustion(spark):
+    n = 64
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": range(n - 1), "dst": range(1, n)}))
+    verts = spark.createDataFrame(pd.DataFrame({"id": range(n)}))
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, verts, max_iter=1)

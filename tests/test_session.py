@@ -1,8 +1,10 @@
-"""Session set-up: the worker daemon's zip-directory guard
-(sgspark/_pydaemon.py) and the conf in `get_spark` that installs it, and
-the driver JVM's C1-only JIT (`session.JIT_OPTIONS`)."""
+"""Session set-up: the worker daemon (sgspark/_pydaemon.py), its
+zip-directory guard and its preloaded, GC-frozen kernel stack, the conf
+in `get_spark` that installs it, and the driver JVM's C1-only JIT
+(`session.JIT_OPTIONS`)."""
 
 import importlib.util
+import json
 import os
 import subprocess
 import sys
@@ -74,6 +76,74 @@ def test_workers_run_the_guard(spark):
         assert len(files) == 1 and files.pop().endswith("_pydaemon.py")
 
 
+def test_workers_fork_from_a_frozen_daemon(spark):
+    def probe(batches):
+        import gc
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()]})
+
+    got = spark.range(4, numPartitions=2).mapInPandas(
+        probe, "frozen long").collect()
+    assert got and all(r.frozen > 0 for r in got)
+
+
+def _fresh_session(script: str, cwd, **env) -> str:
+    """stdout of `script` run in a new Python process, which can start
+    its own session (with its own worker daemon) through get_spark."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, **env, PYTHONPATH=os.pathsep.join(
+        [os.path.join(repo, "tests"), repo, os.environ.get("PYTHONPATH", "")]))
+    out = subprocess.run([sys.executable, "-c", textwrap.dedent(script)],
+                         env=env, cwd=cwd, capture_output=True, text=True,
+                         timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    return out.stdout
+
+
+@pytest.fixture(scope="module")
+def fresh_worker(tmp_path_factory):
+    """A fresh session's only worker: the modules a plain Python task
+    that references no sgspark code finds loaded, then its frozen and
+    tracked object counts, read by an Arrow task after an Arrow task."""
+    out = _fresh_session("""
+        import json, sys
+        import pandas as pd
+        from sgspark.session import get_spark
+
+        def counts(batches):
+            import gc
+            for _ in batches:
+                pass
+            yield pd.DataFrame({"frozen": [gc.get_freeze_count()],
+                                "tracked": [len(gc.get_objects())]})
+
+        spark = get_spark("daemon-probe", cores=1)
+        modules = spark.sparkContext.parallelize([0], 1).map(
+            lambda _: sorted(sys.modules)).first()
+        df = spark.range(100, numPartitions=1)
+        df.mapInPandas(lambda it: it, df.schema).write.format(
+            "noop").mode("overwrite").save()
+        row = df.mapInPandas(counts, "frozen long, tracked long").first()
+        print("PROBE", json.dumps({"modules": modules, "frozen": row.frozen,
+                                   "tracked": row.tracked}))
+        spark.stop()
+    """, tmp_path_factory.mktemp("daemon-probe"))
+    line = next(x for x in out.splitlines() if x.startswith("PROBE "))
+    return json.loads(line[len("PROBE "):])
+
+
+def test_workers_inherit_the_kernel_stack(fresh_worker):
+    loaded = set(fresh_worker["modules"])
+    for name in ("numpy", "pandas", "pyarrow", "sgspark.geom.predicates"):
+        assert name in loaded, name
+
+
+def test_worker_collections_skip_the_frozen_stack(fresh_worker):
+    assert fresh_worker["frozen"] > 0
+    assert fresh_worker["tracked"] < fresh_worker["frozen"] / 10, fresh_worker
+
+
 def _vm_option(spark, name: str) -> str:
     """The driver JVM's value of HotSpot option `name`."""
     jvm = spark.sparkContext._jvm
@@ -91,21 +161,12 @@ def test_extra_java_options_keep_c1_only(tmp_path):
     """A session whose SGSPARK_EXTRA_CONF sets
     spark.driver.extraJavaOptions (as perfbench/run.py does) stays C1
     only: get_spark sets the flag under defaultJavaOptions."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = textwrap.dedent("""
+    out = _fresh_session("""
         from sgspark.session import get_spark
         from test_session import _vm_option
         spark = get_spark("jit-probe", cores=1)
         print("TIER", _vm_option(spark, "TieredStopAtLevel"))
         spark.stop()
-    """)
-    env = dict(os.environ,
-               SGSPARK_EXTRA_CONF="spark.driver.extraJavaOptions="
-                                  "-XX:-UsePerfData",
-               PYTHONPATH=os.pathsep.join(
-                   [os.path.join(repo, "tests"), repo,
-                    os.environ.get("PYTHONPATH", "")]))
-    out = subprocess.run([sys.executable, "-c", script], env=env,
-                         cwd=tmp_path, capture_output=True, text=True,
-                         timeout=300)
-    assert "TIER 1" in out.stdout, out.stderr[-2000:]
+    """, tmp_path, SGSPARK_EXTRA_CONF="spark.driver.extraJavaOptions="
+                                      "-XX:-UsePerfData")
+    assert "TIER 1" in out

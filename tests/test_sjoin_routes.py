@@ -16,7 +16,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import sgspark.joins as J
+from sgspark.cells import cover_cell_keys, neighbor_keys, point_cell_key
 from sgspark.geom.wkb import from_wkt, to_wkb
+from sgspark.io import wkt_to_wkb_df
 from sgspark.joins import sjoin_pairs
 from test_point_join_routes import POLYS, pair_set, points_df, zones_df
 
@@ -191,8 +193,6 @@ def test_kernel_dist_python_left_plans_no_nested_loop(spark, docs500):
 def test_cell_join_pin_decision(spark):
     """The cell-join width pin engages for python-built inputs and stands
     down for provably-tiny python-free ones (plan-level check)."""
-    from sgspark.io import wkt_to_wkb_df
-
     def plan_of(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
@@ -248,7 +248,6 @@ class TestConfigSeam:
 
         # polygon lefts on the default (broadcast) route: the runner is
         # honoured there too
-        from sgspark.io import wkt_to_wkb_df
         xy = pts.select("pid", "minx", "miny").toPandas()
         sq = wkt_to_wkb_df(spark.createDataFrame(pd.DataFrame({
             "pid": xy.pid,
@@ -401,3 +400,92 @@ def test_collect_bounded_caches_only_python_rights(spark, tmp_path):
     rows, _ = _probe(spark, zones.mapInPandas(kernel, zones.schema))
     assert sorted(r.zid for r in rows) == list(range(len(POLYS)))
     assert calls.value == len(POLYS)
+
+
+# ------------------------------------------- cell keys and huge bboxes
+# The numpy cell keys and their Spark-SQL twins agree for negative y (an
+# earlier (cx<<25)|cy vs cx*2^25+cy encoding dropped southern pairs), and
+# rows whose bbox covers too many cells still join exactly.
+def test_cell_key_negative_y_matches_sql_twin(spark):
+    g = 1000.0
+    x = np.array([100.0, 5000.0, -100.0])
+    y = np.array([-1.0, -2500.0, 150.0])
+    np_keys = point_cell_key(x, y, g)
+    pdf = pd.DataFrame({"x": x, "y": y})
+    sql_keys = (spark.createDataFrame(pdf)
+                .withColumn("k", F.expr(
+                    f"cast(floor((x + 2000000) / {g}) as bigint) * {2**25}"
+                    f" + cast(floor(y / {g}) as bigint)"))
+                .orderBy("x").select("k").toPandas())
+    got = dict(zip(x, np_keys))
+    want = dict(zip(sorted(x), sql_keys["k"].tolist()))
+    for xi in x:
+        assert got[xi] == want[xi]
+
+
+def test_cover_and_neighbors_consistent_negative_y():
+    g = 1000.0
+    # bbox straddling y=0
+    gi, keys = cover_cell_keys(np.array([0.0]), np.array([-500.0]),
+                               np.array([10.0]), np.array([500.0]), g)
+    assert len(keys) == 2
+    k_lo = point_cell_key(np.array([5.0]), np.array([-500.0]), g)[0]
+    k_hi = point_cell_key(np.array([5.0]), np.array([500.0]), g)[0]
+    assert set(keys) == {k_lo, k_hi}
+    # neighbor arithmetic crosses y=0 correctly
+    nbrs = neighbor_keys(np.array([k_lo]), ring=1)[0]
+    assert k_hi in nbrs
+
+
+def test_sjoin_negative_y(spark):
+    """Join pairs must not be dropped for y < 0 (previous encoding bug)."""
+    pts = pd.DataFrame({
+        "pid": [0, 1, 2],
+        "geometry_wkt": ["POINT (100 -100)", "POINT (150 -2400)", "POINT (100 100)"]})
+    polys = pd.DataFrame({
+        "zid": [0, 1],
+        "geometry_wkt": ["POLYGON ((0 -500, 300 -500, 300 300, 0 300, 0 -500))",
+                "POLYGON ((0 -2500, 300 -2500, 300 -2300, 0 -2300, 0 -2500))"]})
+    l = wkt_to_wkb_df(spark.createDataFrame(pts))
+    r = wkt_to_wkb_df(spark.createDataFrame(polys))
+    got = sorted((x.pid, x.zid) for x in
+                 sjoin_pairs(l, r, "intersects", left_id="pid",
+                             right_id="zid", gridsize=1000.0,
+                             broadcast_right=False).collect())
+    assert got == [(0, 0), (1, 1), (2, 0)]
+    got_b = sorted((x.pid, x.zid) for x in
+                   sjoin_pairs(l, r, "intersects", left_id="pid",
+                               right_id="zid", gridsize=1000.0,
+                               broadcast_right=True).collect())
+    assert got_b == [(0, 0), (1, 1), (2, 0)]
+
+
+def test_huge_bbox_rows_routed(spark):
+    """Geometries whose bbox covers > MAX_COVER_CELLS cells must not
+    explode the cover table — they take the broadcast bbox-join branch
+    (both paths) and still produce exact pairs."""
+    pts = pd.DataFrame({
+        "pid": [0, 1, 2],
+        "geometry_wkt": ["POINT (5 5)", "POINT (7777 8888)",
+                         "POINT (999999 999999)"]})
+    polys = pd.DataFrame({
+        "zid": [0, 1],
+        # zid 0: country-sized (1e8 cells at gridsize 1)
+        "geometry_wkt": ["POLYGON ((0 0, 10000 0, 10000 10000, 0 10000, 0 0))",
+                         "POLYGON ((4 4, 6 4, 6 6, 4 6, 4 4))"]})
+    l = wkt_to_wkb_df(spark.createDataFrame(pts))
+    r = wkt_to_wkb_df(spark.createDataFrame(polys))
+    want = [(0, 0), (0, 1), (1, 0)]
+    for bcast in (False, True):
+        got = sorted((x.pid, x.zid) for x in
+                     sjoin_pairs(l, r, "intersects", left_id="pid",
+                                 right_id="zid", gridsize=1.0,
+                                 broadcast_right=bcast).collect())
+        assert got == want, (bcast, got)
+    # huge LEFT geometry too
+    for bcast in (False, True):
+        got2 = sorted((x.zid, x.pid) for x in
+                      sjoin_pairs(r, l, "intersects", left_id="zid",
+                                  right_id="pid", gridsize=1.0,
+                                  broadcast_right=bcast).collect())
+        assert got2 == [(0, 0), (0, 1), (1, 0)], (bcast, got2)
