@@ -18,12 +18,20 @@ after every task, and the imports cost each new worker 0.4-0.6 CPU-s.
 Forked after the preload, workers share those modules
 copy-on-write, and their collections skip the frozen objects
 (BENCH/PY_TASK_FLOOR.md).
+
+Spark puts `$SPARK_HOME/python/lib/pyspark.zip` (and py4j's zip) first on
+the daemon's path.  The zip holds sources only, so every daemon compiled
+pyspark afresh: 0.6-1.1 CPU-s per session.  When the same release is
+installed further down the path, `bytecode_path` drops the zip, and
+pyspark imports from the installed copy's bytecode instead
+(BENCH/COLD_START.md).
 """
 
 import gc
 import importlib
 import os
 import sys
+import zipfile
 import zipimport
 
 # The modules a warm worker held, beyond the stock daemon's, after the
@@ -47,6 +55,40 @@ def _stat_key(path):
     except OSError:
         return None
     return st.st_ino, st.st_size, st.st_mtime_ns
+
+
+def _installed_twin(archive, path):
+    """Whether every top-level package in zip `archive` has a version.py,
+    and the copy that `path` (directories only) would import instead has
+    the same one."""
+    try:
+        with zipfile.ZipFile(archive) as z:
+            versions = {n.split("/")[0]: z.read(n) for n in z.namelist()
+                        if n.count("/") == 1 and n.endswith("/version.py")}
+        for pkg, text in versions.items():
+            found = next((os.path.join(d or ".", pkg) for d in path
+                          if os.path.isdir(os.path.join(d or ".", pkg))),
+                         None)
+            if found is None:
+                return False
+            with open(os.path.join(found, "version.py"), "rb") as f:
+                if f.read() != text:
+                    return False
+    except (OSError, zipfile.BadZipFile):
+        return False
+    return bool(versions)
+
+
+def bytecode_path(path, lib):
+    """`path` without its zips in directory `lib` whose packages an entry
+    left on `path` installs at the same version (the text of
+    `<package>/version.py`); a zip with no such twin stays."""
+    lib = os.path.realpath(lib)
+    zips = [p for p in path if p.endswith(".zip")
+            and os.path.dirname(os.path.realpath(p)) == lib]
+    rest = [p for p in path if p not in zips]
+    return [p for p in path
+            if p not in zips or not _installed_twin(p, rest)]
 
 
 def install():
@@ -76,6 +118,12 @@ def install():
 
 
 if __name__ == "__main__":
+    if os.environ.get("SPARK_HOME"):
+        keep = bytecode_path(sys.path, os.path.join(
+            os.environ["SPARK_HOME"], "python", "lib"))
+        for p in set(sys.path) - set(keep):
+            sys.path_importer_cache.pop(p, None)
+        sys.path[:] = keep
     from pyspark.daemon import manager
 
     install()

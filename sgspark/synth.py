@@ -293,8 +293,9 @@ def zone_lshape_wkt(cx: float, cy: float, r: float) -> str:
 def zone_ngon_wkt(cx: float, cy: float, r: float, n: int = 64) -> str:
     """High-vertex star-ngon zone on the (cx, cy, r) footprint: n vertices
     alternating between radius r and 0.72r — concave (every other vertex
-    reflex) AND far above the 32-edge unroll tier.  Exercises the round-5
-    cell-subset pack in the scaling bench (SGSPARK_NGON_ZONES=n)."""
+    reflex) AND far above the 32-edge unroll tier.  Exercises the banded
+    PIP refine of the distributed point x polygon route (`points_dist`) in
+    the scaling bench (SGSPARK_NGON_ZONES=n) and perfbench's ngon join."""
     import math
     pts = []
     for i in range(n):
